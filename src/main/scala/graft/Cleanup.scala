@@ -38,76 +38,4 @@ object Cleanup {
     registered.forEach(p => b += p)
     b.result()
   }
-
-  /** Bounded LRU memo for the session-checkpointed arm retrievals
-    * ([[graft.operators.Experiment]] / the std-text arms): each entry
-    * pins one localCheckpoint'ed frame's blocks, so an UNBOUNDED map
-    * keyed on (k, nq, dim)-style shapes grows pinned blocks for the
-    * life of any session whose callers sweep parameters. Eviction
-    * (capacity or predicate) drops the entry's only reference; Spark's
-    * ContextCleaner reference-tracks persisted RDDs — localCheckpoint
-    * blocks included — and unpersists them once the frame is GC'd, so
-    * reference-drop IS the reclaim. Builds run OUTSIDE the map lock
-    * under a per-key latch (ADVICE r14): arm builds execute eager
-    * localCheckpoint Spark jobs, so two callers building DIFFERENT
-    * arms must not queue behind one global lock — only same-key
-    * callers wait (on the first builder's future), keeping the
-    * build-at-most-once contract without cross-key serialization. */
-  final class BoundedMemo[K, V](max: Int) {
-    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-        size() > max
-    }
-    private val inflight =
-      new java.util.concurrent.ConcurrentHashMap[K, java.util.concurrent.CompletableFuture[V]]()
-    def getOrElseUpdate(key: K)(build: => V): V = {
-      val hit = m.synchronized(m.get(key))
-      if (hit != null) return hit
-      val fresh = new java.util.concurrent.CompletableFuture[V]()
-      val prior = inflight.putIfAbsent(key, fresh)
-      if (prior != null)
-        // another caller owns this key's build — wait on it, not the map
-        try prior.join()
-        catch { case e: java.util.concurrent.CompletionException => throw e.getCause }
-      else
-        try {
-          // the owner re-checks under the lock (a racing builder may
-          // have completed between our miss and the putIfAbsent)
-          val cur = m.synchronized(m.get(key))
-          val v = if (cur != null) cur else {
-            val built = build
-            m.synchronized(m.put(key, built))
-            built
-          }
-          fresh.complete(v)
-          v
-        } catch {
-          case t: Throwable => fresh.completeExceptionally(t); throw t
-        } finally inflight.remove(key)
-    }
-    def evictWhere(p: K => Boolean): Unit = m.synchronized {
-      val it = m.keySet.iterator
-      while (it.hasNext) if (p(it.next())) it.remove()
-    }
-    def clear(): Unit = m.synchronized(m.clear())
-  }
-
-  /** Memoized per-(applicationId, key) scratch BUILD — the one
-    * serving-index contract shared by the postings / TF-IDF / chunk /
-    * IVF scratch layouts: entries of stopped applications are evicted
-    * (one SparkContext per JVM, so a foreign applicationId can never
-    * be read again), the build runs at most once per live key, and
-    * the scratch base is swept at JVM exit. Returns the built path. */
-  def memoizedBuild[K](cache: scala.collection.concurrent.TrieMap[(String, K), String],
-                       spark: org.apache.spark.sql.SparkSession,
-                       key: K, prefix: String)(build: String => Unit): String = {
-    val app = spark.sparkContext.applicationId
-    cache.keySet.filter(_._1 != app).foreach(cache.remove)
-    cache.getOrElseUpdate((app, key), {
-      val base = onExit(java.nio.file.Files.createTempDirectory(prefix))
-      val p = base.resolve("index").toString
-      build(p)
-      p
-    })
-  }
 }

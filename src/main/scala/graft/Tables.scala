@@ -15,25 +15,18 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Inferred parquet schema per (session, path) — METADATA memo, not
-    * result caching: `spark.read.parquet` with no schema runs a footer
+  /** Inferred parquet schema per path — METADATA memo, not result
+    * caching: `spark.read.parquet` with no schema runs a footer
     * -inference job (~30 ms) on EVERY call, and a single query calls
     * these loaders up to 8 times (JobProbe r17: ann_ivf_pq paid 8 such
     * jobs before its first real stage). The schema of a static table
-    * file is a constant; inferring it once per session and passing it
-    * explicitly removes the repeated jobs while the scan itself (file
-    * listing, pruning, pushdown) stays exactly as before. Keyed on the
-    * session like Encoders.vocabCache — stopped sessions are evicted,
-    * and a different session (e.g. a fresh bench child) re-infers. */
-  private val schemaCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.types.StructType]
-
+    * file is a constant; inferring it once per application
+    * ([[graft.Memo]]) and passing it explicitly removes the repeated
+    * jobs while the scan itself (file listing, pruning, pushdown) stays
+    * exactly as before. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    schemaCache.keySet.filter(_._1.sparkContext.isStopped)
-      .foreach(schemaCache.remove)
-    val schema = schemaCache.getOrElseUpdate((spark, path),
-      spark.read.parquet(path).schema)
+    val schema = Memo(spark, "schema", path)(spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 

@@ -327,17 +327,12 @@ object Ann {
     sq8Score(spark, dir, spark.read.parquet(indexPath),
       spark.read.parquet(s"$indexPath/_fit"), k)
 
-  // SQ8 scratch builds memoized per (app, dir) — the
-  // graft.Cleanup.memoizedBuild contract shared by all scratch indexes
-  private val sq8ScratchCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-
   /** [[sq8Indexed]] over a memoized scratch build — the verified-query
     * form (`ann_sq8_indexed`). */
   def sq8ViaIndex(spark: SparkSession, dir: String, k: Int = K): DataFrame =
     sq8Indexed(spark, dir,
-      graft.Cleanup.memoizedBuild(sq8ScratchCache, spark, dir,
-        "graft-sq8idx")(writeSq8Index(spark, dir, _)), k)
+      graft.Memo.scratch(spark, "graft-sq8idx", dir)(
+        writeSq8Index(spark, dir, _)), k)
 
   /** PQ codes of an arbitrary (doc_id, doc_vec) frame under a given
     * codebook — the batch-general encode behind [[writePqIndex]] and
@@ -393,17 +388,12 @@ object Ann {
   private[graft] def pqEncodeForTest(vecs: DataFrame, cb: DataFrame): DataFrame =
     pqEncodeOf(vecs, cb)
 
-  // PQ scratch builds memoized per (app, dir) — the
-  // graft.Cleanup.memoizedBuild contract shared by all scratch indexes
-  private val pqScratchCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-
   /** [[pqIndexed]] over a memoized scratch build — the verified-query
     * form (`ann_pq_indexed`). */
   def pqViaIndex(spark: SparkSession, dir: String, k: Int = K): DataFrame =
     pqIndexed(spark, dir,
-      graft.Cleanup.memoizedBuild(pqScratchCache, spark, dir,
-        "graft-pqidx")(writePqIndex(spark, dir, _)), k)
+      graft.Memo.scratch(spark, "graft-pqidx", dir)(
+        writePqIndex(spark, dir, _)), k)
 
   /** IVF+PQ composed search — the standard billion-scale ANN
     * architecture (FAISS IndexIVFPQ): the coarse quantizer prunes the
@@ -581,17 +571,12 @@ object Ann {
       .orderBy("q_id", "rank")
   }
 
-  // IVF+PQ scratch builds memoized per (app, dir) — the
-  // graft.Cleanup.memoizedBuild contract shared by all scratch indexes
-  private val ivfPqScratchCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-
   /** [[ivfPqIndexed]] over a memoized scratch build — the verified-
     * query form (`ann_ivf_pq_indexed`; shares [[ivfPq]]'s oracle). */
   def ivfPqViaIndex(spark: SparkSession, dir: String, k: Int = K): DataFrame =
     ivfPqIndexed(spark, dir,
-      graft.Cleanup.memoizedBuild(ivfPqScratchCache, spark, dir,
-        "graft-ivfpqidx")(writeIvfPqIndex(spark, dir, _)), k)
+      graft.Memo.scratch(spark, "graft-ivfpqidx", dir)(
+        writeIvfPqIndex(spark, dir, _)), k)
 
   /** Materializes the IVF index in the layout a 100 TB deployment
     * serves from: the corpus stored ONCE as a `c_id`-partitioned
@@ -738,7 +723,10 @@ object Ann {
     // a pre-_cent layout falls back to the corpus-fixed seeds)
     val cent = centroids.getOrElse(indexCentroids(spark, dir, indexPath))
     val np = if (nProbe > 0) nProbe else sqrtProbeCount(cent.count().toInt)
-    val idx = spark.read.parquet(indexPath)
+    // read with the layout's own schema: over an empty doc set the
+    // partitioned write leaves no data file to infer it from
+    val idx = spark.read.schema("doc_id BIGINT, doc_vec ARRAY<FLOAT>, c_id BIGINT")
+      .parquet(indexPath)
     val qs = Knn.querySet(spark, dir).crossJoin(broadcast(cent))
       .groupBy("q_id")
       .agg(
@@ -755,11 +743,6 @@ object Ann {
       .orderBy("q_id", "rank")
   }
 
-  // IVF scratch-layout builds memoized per (app, dir) — the
-  // graft.Cleanup.memoizedBuild contract shared by all scratch indexes
-  private val ivfScratchCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-
   /** [[ivfIndexed]] over a memoized scratch [[writeIvfIndex]] layout —
     * the verified-query form (`ann_ivf_indexed`): first call builds
     * the partitioned index, every later call is the DPP-pruned probe
@@ -767,8 +750,8 @@ object Ann {
     * shares the ivf oracle. */
   def ivfViaIndex(spark: SparkSession, dir: String, k: Int = K): DataFrame =
     ivfIndexed(spark, dir,
-      graft.Cleanup.memoizedBuild(ivfScratchCache, spark, dir,
-        "graft-ivfidx")(writeIvfIndex(spark, dir, _)), k)
+      graft.Memo.scratch(spark, "graft-ivfidx", dir)(
+        writeIvfIndex(spark, dir, _)), k)
 
   /** Centroid count for the √N deployment configuration (the FAISS
     * sizing rule: nlist ≈ √N balances cell scan cost N/nlist against
@@ -827,11 +810,6 @@ object Ann {
     writeIvfIndex(spark, dir, out, centroids = Some(cent))
   }
 
-  // trained √N layouts memoized per (app, dir) — the
-  // graft.Cleanup.memoizedBuild contract shared by all scratch indexes
-  private val trainedIvfCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-
   /** [[ivfIndexed]] with [[AutoProbe]] over a memoized
     * [[writeTrainedIvfIndex]] layout — the registered `ann_ivf_sqrtn`
     * query shape (rows-only; the iterative fit has no SQL oracle):
@@ -841,8 +819,8 @@ object Ann {
     * (Round13Spec: same sampled fit, same grid, same probe count). */
   def ivfSqrtNViaIndex(spark: SparkSession, dir: String, k: Int = K): DataFrame =
     ivfIndexed(spark, dir,
-      graft.Cleanup.memoizedBuild(trainedIvfCache, spark, dir,
-        "graft-trainedivf")(writeTrainedIvfIndex(spark, dir, _)),
+      graft.Memo.scratch(spark, "graft-trainedivf", dir)(
+        writeTrainedIvfIndex(spark, dir, _)),
       k, nProbe = AutoProbe)
 
   /** Lloyd k-means fit over an embedding frame: each iteration is one
@@ -962,25 +940,16 @@ object Ann {
     } finally pool.shutdown()
   }
 
-  // trained PQ codebooks memoized per (app, dir) as driver-side rows —
-  // the vocabulary-fit contract: the registered query and the Verify
-  // oracle overlay must share ONE fit (the literals ARE the codebook)
-  private val trainedPqCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Seq[(Long, Int, Seq[Float])]]
-
   /** The [[fitPqCodebook]] fit collected driver-side (≤ PqM·PqCodes
-    * rows — broadcast-scale by construction), memoized per (app, dir).
-    * These rows are BOTH the Spark plan's codebook (a LocalRelation)
-    * and the oracle's literal table, so the two engines cannot see
-    * different fits. */
-  def trainedPqRows(spark: SparkSession, dir: String): Seq[(Long, Int, Seq[Float])] = {
-    val app = spark.sparkContext.applicationId
-    trainedPqCache.keySet.filter(_._1 != app).foreach(trainedPqCache.remove)
-    trainedPqCache.getOrElseUpdate((app, dir),
+    * rows — broadcast-scale by construction), memoized per dir. These
+    * rows are BOTH the Spark plan's codebook (a LocalRelation) and the
+    * oracle's literal table, so the registered query and the Verify
+    * oracle overlay cannot see different fits. */
+  def trainedPqRows(spark: SparkSession, dir: String): Seq[(Long, Int, Seq[Float])] =
+    graft.Memo(spark, "pq-trained", dir)(
       fitPqCodebook(Tables.embeddings(spark, dir), iters = 2)
         .collect().toIndexedSeq
         .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2))))
-  }
 
   private def trainedPqCodebookDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

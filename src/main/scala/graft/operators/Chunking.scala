@@ -179,18 +179,13 @@ object Chunking {
     chunkScorePool(cn, qc, k)
   }
 
-  // chunk-index builds memoized per (app, dir, dim, w, s) — the
-  // graft.Cleanup.memoizedBuild contract shared by all scratch indexes
-  private val chunkIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(String, (String, Int, Int, Int)), String]
-
   /** [[chunkSearchIndexed]] over memoized scratch builds of BOTH
     * layouts — the verified-query form (`pipeline_chunk_indexed`). */
   def chunkSearchViaIndex(spark: SparkSession, dir: String, k: Int = 10,
                           nq: Int = 5, dim: Int = Encoders.Dim,
                           w: Int = W, s: Int = Stride): DataFrame = {
-    val cPath = graft.Cleanup.memoizedBuild(chunkIndexCache, spark,
-      (dir, dim, w, s), "graft-cidx")(writeChunkIndex(spark, dir, _, dim, w, s))
+    val cPath = graft.Memo.scratch(spark, "graft-cidx", dir, dim, w, s)(
+      writeChunkIndex(spark, dir, _, dim, w, s))
     chunkSearchIndexed(spark, cPath,
       Encoders.hashingIndexPath(spark, dir, dim), k, nq)
   }

@@ -350,32 +350,23 @@ object Encoders {
     hashingSearchDense(
       spark.read.parquet(gatheredIndexPath(spark, dir, dim)), k, nq, dim)
 
-  private val gatheredIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(String, (String, Int)), String]
-
   /** Path of the memoized per-(app, dir, dim) scratch GATHERED layout
     * ([[writeGatheredIndex]] over [[hashingIndexPath]]'s postings),
     * building both on first use. */
   def gatheredIndexPath(spark: SparkSession, dir: String,
                         dim: Int = Dim): String =
-    graft.Cleanup.memoizedBuild(gatheredIndexCache, spark, (dir, dim),
-      "graft-hgat")(out =>
+    graft.Memo.scratch(spark, "graft-hgat", dir, dim)(out =>
       writeGatheredIndex(spark, hashingIndexPath(spark, dir, dim), out))
 
   // an index build is a BUILD (same contract as the vocabulary fit):
-  // one corpus pass whose on-disk result every later query shares —
-  // the graft.Cleanup.memoizedBuild contract (stopped-app eviction,
-  // JVM-exit scratch sweep)
-  private val indexCache = scala.collection.concurrent.TrieMap
-    .empty[(String, (String, Int)), String]
-
+  // one corpus pass whose on-disk result every later query shares
   /** Path of the memoized per-(app, dir, dim) scratch hashing index,
     * building it on first use — shared by [[hashingSearchViaIndex]]
     * and the chunk-index query side ([[Chunking.chunkSearchViaIndex]]
     * reads its whole-document query vectors from this same layout). */
   def hashingIndexPath(spark: SparkSession, dir: String,
                        dim: Int = Dim): String =
-    graft.Cleanup.memoizedBuild(indexCache, spark, (dir, dim), "graft-hidx")(
+    graft.Memo.scratch(spark, "graft-hidx", dir, dim)(
       writeHashingIndex(spark, dir, _, dim))
 
   /** [[hashingSearchIndexed]] over the memoized scratch index — the
@@ -458,26 +449,6 @@ object Encoders {
       fitVocab(spark, dir, dim, maxDoc).map { case (tok, _, idf) => (tok, idf) })
       .toDF("tok", "idf")
 
-  // keyed on the application id, not the session object: the fit is a
-  // pure function of (data dir, dim, cap), so any session of the app
-  // shares it, and a stopped session is never pinned by the cache
-  // (values are plain driver-side Seqs)
-  private val vocabCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int, Option[Long]), (Long, Seq[(String, Long, Long)])]
-
-  /** Drops every memoized fit (all sessions). Call after mutating a
-    * corpus in place — a fit is a FIT (the fitted-vectorizer
-    * contract: one pass, then reuse), so in-place corpus changes need
-    * an explicit refit signal, exactly like re-fitting a persisted
-    * vectorizer. */
-  def invalidateFits(): Unit = {
-    vocabCache.clear()
-    corpusStatsCache.clear()
-    // retrieval arms memoized over these fits must refresh with them
-    Experiment.invalidateArms()
-    textArmCache.clear()
-  }
-
   /** The ONE vocabulary-fit contract (ordering, tie-break), collected
     * driver-side: (corpus doc count, rows (tok, popularity index
     * 1..dim, document frequency)). Every fitted derivation —
@@ -485,27 +456,15 @@ object Encoders {
     * literal tables the Verify overlay embeds in oracle SQL — reads
     * this, so the fit can never diverge between them.
     *
-    * Memoized per (session, dir, dim, cap) — the fit is a FIT: one
-    * eager corpus pass whose tiny (dim-row) result every consumer
-    * shares, the in-session analog of a persisted vectorizer. Without
-    * the cache each tfidf/hybrid/keyword/BM25 query construction
-    * re-ran the pass (the experiment grids paid it up to 6× per
-    * call). Deterministic and immutable, so caching is safe; if a
-    * corpus is rewritten in place at the same path, call
-    * [[invalidateFits]] (the refit signal a persisted vectorizer
-    * would need too). */
+    * Memoized per (dir, dim, cap) — the fit is a FIT: one eager
+    * corpus pass whose tiny (dim-row) result every consumer shares,
+    * the in-session analog of a persisted vectorizer. Without the
+    * memo each tfidf/hybrid/keyword/BM25 query construction re-ran
+    * the pass (the experiment grids paid it up to 6× per call). */
   def fitVocabRaw(spark: SparkSession, dir: String, dim: Int,
-                  maxDoc: Option[Long] = None): (Long, Seq[(String, Long, Long)]) = {
-    val app = spark.sparkContext.applicationId
-    // one SparkContext per JVM: any key under a different applicationId
-    // belongs to a STOPPED app and can never be read again — evict, so
-    // a JVM hosting successive apps (repeated test runs, notebook
-    // restarts) doesn't accumulate dead fits
-    vocabCache.keySet.filter(_._1 != app).foreach(vocabCache.remove)
-    vocabCache.getOrElseUpdate(
-      (app, dir, dim, maxDoc),
+                  maxDoc: Option[Long] = None): (Long, Seq[(String, Long, Long)]) =
+    graft.Memo(spark, "vocab", dir, dim, maxDoc)(
       fitVocabUncached(spark, dir, dim, maxDoc))
-  }
 
   private def fitVocabUncached(spark: SparkSession, dir: String, dim: Int,
                                maxDoc: Option[Long]): (Long, Seq[(String, Long, Long)]) = {
@@ -737,11 +696,8 @@ object Encoders {
   def tfIdfSearchViaIndex(spark: SparkSession, dir: String, k: Int = 10,
                           nq: Int = 5, dim: Int = Dim): DataFrame =
     tfIdfSearchIndexed(spark,
-      graft.Cleanup.memoizedBuild(tfidfIndexCache, spark, (dir, dim),
-        "graft-tidx")(writeTfidfIndex(spark, dir, _, dim)), k, nq)
-
-  private val tfidfIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(String, (String, Int)), String]
+      graft.Memo.scratch(spark, "graft-tidx", dir, dim)(
+        writeTfidfIndex(spark, dir, _, dim)), k, nq)
 
   /** BM25 top-k keyword retrieval — the keyword half of [[hybridSearch]]
     * and a standalone scorer (the standard Okapi/Lucene formulation the
@@ -772,32 +728,26 @@ object Encoders {
     bm25Rank(cq.filter(col("doc_id") >= nq), q, k)
   }
 
+  /** (total token count, doc count) of the (capped) corpus — the BM25
+    * avgdl fit, one memoized corpus pass. Corpus stats are a FIT
+    * (Lucene keeps them in index stats): memoized per (dir, cap)
+    * exactly like fitVocabRaw, so a warm BM25 plan carries them as
+    * literals instead of re-running a second docTerm pass + a
+    * documents count per call. */
+  private[operators] def corpusStats(spark: SparkSession, dir: String,
+                                     maxDoc: Option[Long] = None): (Long, Long) =
+    graft.Memo(spark, "corpus-stats", dir, maxDoc) {
+      val r = capped(Tables.documents(spark, dir), maxDoc)
+        .agg(count(lit(1)), sum(size(tokens(col("text"))))).head
+      (if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(0))
+    }
+
   /** The per-(doc, term) quantized BM25 contribution relation over the
     * whole (capped) corpus — the ONE scoring table behind the
     * corpus-prefix query form ([[bm25TopK]]) and the free-text form
     * ([[bm25TopKText]]). `fit` lets a caller that needs the keyword
     * arm more than once (Experiment.matrix's two hybrid legs) pay the
     * eager fit job once. */
-  // corpus stats are a FIT (Lucene keeps total token count / doc count
-  // in index stats): memoized per (app, dir, cap) exactly like
-  // fitVocabRaw, so a warm BM25 plan carries them as literals instead
-  // of re-running a second docTerm pass + a documents count per call
-  private val corpusStatsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Option[Long]), (Long, Long)]
-
-  /** (total token count, doc count) of the (capped) corpus — the BM25
-    * avgdl fit, one memoized corpus pass. */
-  private[operators] def corpusStats(spark: SparkSession, dir: String,
-                                     maxDoc: Option[Long] = None): (Long, Long) = {
-    val app = spark.sparkContext.applicationId
-    corpusStatsCache.keySet.filter(_._1 != app).foreach(corpusStatsCache.remove)
-    corpusStatsCache.getOrElseUpdate((app, dir, maxDoc), {
-      val r = capped(Tables.documents(spark, dir), maxDoc)
-        .agg(count(lit(1)), sum(size(tokens(col("text"))))).head
-      (if (r.isNullAt(1)) 0L else r.getLong(1), r.getLong(0))
-    })
-  }
-
   private def bm25DocScores(spark: SparkSession, dir: String, dim: Int,
                             maxDoc: Option[Long] = None,
                             fit: Option[Seq[(String, Long, Long)]] = None): DataFrame = {
@@ -854,20 +804,13 @@ object Encoders {
   // and bm25 retrievals the standalone queries already computed, and
   // without memoization each re-runs queryGen plus a corpus-side
   // scoring pass another query already paid for.
-  // bounded LRU like Experiment.armCache — evicted entries' checkpoint
-  // blocks are ContextCleaner-reclaimed once unreferenced
-  private val textArmCache = new graft.Cleanup.BoundedMemo[
-    (SparkSession, String, String), DataFrame](64)
-
   private def textArm(spark: SparkSession, dir: String,
-                      which: String): DataFrame = {
-    textArmCache.evictWhere(_._1.sparkContext.isStopped)
-    textArmCache.getOrElseUpdate((spark, dir, which))((which match {
+                      which: String): DataFrame =
+    graft.Memo(spark, "text-arm", dir, which)((which match {
       case "hashing" => hashingSearchText(spark, dir, stdTextQueries(spark, dir))
       case "tfidf" => tfIdfSearchText(spark, dir, stdTextQueries(spark, dir))
       case "bm25" => bm25TopKText(spark, dir, stdTextQueries(spark, dir))
     }).localCheckpoint(true))
-  }
 
   /** Registered std-query forms: the memoized arm, re-ordered for
     * presentation (the checkpoint drops the total order). Bit-equal to

@@ -34,24 +34,12 @@ object Experiment {
     * computed. Each arm is localCheckpoint'ed (materialized blocks,
     * tiny by construction) — the in-session mirror of a persisted
     * retrieval-run artifact, same contract as [[KnnGraph.docGraph]]
-    * and the memoized vocabulary fits. Stopped sessions are evicted;
-    * [[invalidateArms]] is the re-run signal (wired into
-    * [[Encoders.invalidateFits]]). BOUNDED (r14): each entry pins its
-    * checkpoint blocks, so the cache is a capacity-capped LRU —
-    * evicted entries' blocks are reclaimed by ContextCleaner once
-    * unreferenced ([[graft.Cleanup.BoundedMemo]]) — rather than a map
-    * that grows with every distinct (k, nq, dim) a caller sweeps. */
-  private val armCache = new graft.Cleanup.BoundedMemo[
-    (SparkSession, String, String, Int, Int, Int), DataFrame](64)
-
-  def invalidateArms(): Unit = armCache.clear()
-
+    * and the memoized vocabulary fits. */
   private[operators] def arm(spark: SparkSession, dir: String, which: String,
-                             k: Int, nq: Int, dim: Int): DataFrame = {
-    armCache.evictWhere(_._1.sparkContext.isStopped)
+                             k: Int, nq: Int, dim: Int): DataFrame =
     // scores ride along (r13): the alpha-fusion hybrid needs each
     // arm's scores, not just ranks — consumers project their columns
-    armCache.getOrElseUpdate((spark, dir, which, k, nq, dim))((which match {
+    graft.Memo(spark, "arm", dir, which, k, nq, dim)((which match {
       case "hashing" => Encoders.hashingSearch(spark, dir, k, nq, dim)
         .select(col("q_id"), col("rank"), col("doc_id"), col("score"))
       case "tfidf" => Encoders.tfIdfSearch(spark, dir, k, nq, dim)
@@ -64,7 +52,6 @@ object Experiment {
           fit = Some(Encoders.bm25IdfRows(spark, dir, dim)))
         .select(col("q_id"), col("doc_id"), col("rank").as("rk"), col("score"))
     }).localCheckpoint(true))
-  }
 
   /** One verified summary row: model, dim, corpus/query counts, mean
     * p@5 / p@10 / MAP of hashing-TF retrieval (the auto_test summary

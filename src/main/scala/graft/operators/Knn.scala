@@ -99,26 +99,17 @@ object Knn {
         rnd(col("score"), 4).as("score"))
       .orderBy("q_id", "rank")
 
-  // The exact top-k is an eval FIXTURE: every recall/precision metric
-  // in a session compares a different approximate retrieval against
-  // the SAME ground-truth set, so it is computed once per (dir, k,
-  // metric) and reused — the docGraph memoization contract (keyed on
-  // the session too; stopped sessions' entries evicted on next use,
-  // their checkpoint blocks died with the context).
-  private val exactCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Boolean), DataFrame]
-
   /** The (q_id, doc_id) ground-truth rows of [[bruteForce]] (dot) or
-    * [[cosineTopK]] (cosine), memoized per session. Row order is NOT
-    * part of the contract — consumers join on the set. */
+    * [[cosineTopK]] (cosine), memoized per (dir, k, metric): the exact
+    * top-k is an eval FIXTURE — every recall/precision metric compares
+    * a different approximate retrieval against the SAME ground-truth
+    * set. Row order is NOT part of the contract — consumers join on the
+    * set. */
   def exactSet(spark: SparkSession, dir: String, k: Int = K,
-               byCosine: Boolean = false): DataFrame = {
-    exactCache.keySet.filter(_._1.sparkContext.isStopped)
-      .foreach(exactCache.remove)
-    exactCache.getOrElseUpdate((spark, dir, k, byCosine),
+               byCosine: Boolean = false): DataFrame =
+    graft.Memo(spark, "exact", dir, k, byCosine)(
       (if (byCosine) cosineTopK(spark, dir, k) else bruteForce(spark, dir, k))
         .select(col("q_id"), col("doc_id")).localCheckpoint(true))
-  }
 
   /** Range search: every doc whose similarity clears a threshold (the
     * score-cutoff companion to top-k; no per-query limit). Same

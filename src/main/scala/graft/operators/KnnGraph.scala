@@ -677,14 +677,6 @@ object KnnGraph {
 
   // ---------- dataset-shaped entrypoints (testdata embeddings) ----------
 
-  // keyed on the session too: a cached frame belongs to the session
-  // that built it and must not leak into a later one in the same JVM.
-  // Entries of STOPPED sessions are evicted on the next build (their
-  // checkpoint blocks died with the context; the map must not pin the
-  // session objects either — the vocabCache lesson, ADVICE r8)
-  private val graphCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), DataFrame]
-
   /** kNN graph over the doc half of the embeddings table, memoized per
     * (dir, k): the graph is an INDEX — built once, reused by every
     * consumer in the session (beam search, recall eval, semantic
@@ -692,13 +684,10 @@ object KnnGraph {
     * build-once contract. Safe to cache: the build is deterministic
     * and the returned edges are localCheckpoint'ed (materialized
     * blocks, not a growing lineage). */
-  def docGraph(spark: SparkSession, dir: String, k: Int = K): DataFrame = {
-    graphCache.keySet.filter(_._1.sparkContext.isStopped)
-      .foreach(graphCache.remove)
-    graphCache.getOrElseUpdate((spark, dir, k),
+  def docGraph(spark: SparkSession, dir: String, k: Int = K): DataFrame =
+    graft.Memo(spark, "doc-graph", dir, k)(
       buildGraph(Knn.docSet(spark, dir)
         .select(col("doc_id").as("id"), col("doc_vec").as("vec")), k))
-  }
 
   /** Graph-ANN search for the standard query set: build (or reuse) the
     * doc graph, beam-search all queries, exact cosine scores. */

@@ -104,21 +104,14 @@ object Opq {
     (Array.tabulate(n)(i => a(i)(i)), v)
   }
 
-  // rotation fits memoized per (applicationId, dir) — one Gram pass
-  // per corpus per session, shared by the eval query and the Verify
-  // oracle overlay (the vocabulary-fit contract)
-  private val rotCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Array[Array[Double]]]
-
-  def invalidateRotations(): Unit = rotCache.clear()
-
+  // rotation fits memoized per dir — one Gram pass per corpus per
+  // session, shared by the eval query and the Verify oracle overlay
+  // (the vocabulary-fit contract)
   /** The fitted rotation: rows are the permuted unit eigenvectors of
     * the corpus second moment, so y = R·x expresses x in the
     * (variance-balanced) eigenbasis. Identity on an empty corpus. */
-  def rotation(spark: SparkSession, dir: String): Array[Array[Double]] = {
-    val app = spark.sparkContext.applicationId
-    rotCache.keySet.filter(_._1 != app).foreach(rotCache.remove)
-    rotCache.getOrElseUpdate((app, dir), {
+  def rotation(spark: SparkSession, dir: String): Array[Array[Double]] =
+    graft.Memo(spark, "opq-rotation", dir) {
       val row = Tables.embeddings(spark, dir)
         .agg(graft.functions.GramAgg.gramTriangle(col("embedding"), Dim).as("g"),
           count(lit(1)).as("n"))
@@ -164,8 +157,7 @@ object Opq {
         (0 until Ann.PqM).flatMap(s => members(s).reverse.map(cols))
           .toArray
       }
-    })
-  }
+    }
 
   /** y = R·x applied per row (codegen'd; output array<float> like the
     * embedding column, so the PQ machinery applies unchanged). */
@@ -198,23 +190,17 @@ object Opq {
       .select(col("vec_id"),
         rotate(col("embedding"), rotation(spark, dir)).as("embedding"))
 
-  // trained-in-rotated-space codebooks memoized per (app, dir) — the
+  // trained-in-rotated-space codebooks memoized per dir — the
   // trainedPqRows contract: the collected rows are BOTH the plan's
   // codebook and the oracle's literal table
-  private val trainedCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Seq[(Long, Int, Seq[Float])]]
-
   /** Lloyd-trained per-subspace codebooks fit in the ROTATED space —
     * the full OPQ configuration (rotate, then train where the
     * variance is balanced). Driver-side rows, memoized. */
-  def trainedOpqRows(spark: SparkSession, dir: String): Seq[(Long, Int, Seq[Float])] = {
-    val app = spark.sparkContext.applicationId
-    trainedCache.keySet.filter(_._1 != app).foreach(trainedCache.remove)
-    trainedCache.getOrElseUpdate((app, dir),
+  def trainedOpqRows(spark: SparkSession, dir: String): Seq[(Long, Int, Seq[Float])] =
+    graft.Memo(spark, "opq-trained", dir)(
       Ann.fitPqCodebook(rotatedEmbeddings(spark, dir), iters = 2)
         .collect().toIndexedSeq
         .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2))))
-  }
 
   /** FULL OPQ: the fitted rotation AND codebooks trained in the
     * rotated space, at the same code budget — the fourth corner of
@@ -273,11 +259,8 @@ object Opq {
 
   // ---------- non-parametric refinement (VERDICT r14 §next-4) ----------
 
-  // refined (rotation, codebook) fits memoized per (app, dir) — the
-  // same literals-are-the-fit contract as trainedOpqRows
-  private val refinedCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Array[Array[Double]], Seq[(Long, Int, Seq[Float])])]
-
+  // refined (rotation, codebook) fits memoized per dir — the same
+  // literals-are-the-fit contract as trainedOpqRows
   /** ONE alternating refinement round of Ge et al.'s NON-PARAMETRIC
     * OPQ (CVPR 2013 §4, Algorithm 1 — the loop FAISS's OPQMatrix
     * runs after its PCA init), starting from the parametric rotation
@@ -304,10 +287,8 @@ object Opq {
     * distributed training path. Empty corpus: the parametric fit is
     * returned unchanged. */
   def refinedFit(spark: SparkSession, dir: String)
-      : (Array[Array[Double]], Seq[(Long, Int, Seq[Float])]) = {
-    val app = spark.sparkContext.applicationId
-    refinedCache.keySet.filter(_._1 != app).foreach(refinedCache.remove)
-    refinedCache.getOrElseUpdate((app, dir), {
+      : (Array[Array[Double]], Seq[(Long, Int, Seq[Float])]) =
+    graft.Memo(spark, "opq-refined", dir) {
       val r0 = rotation(spark, dir)
       val c0 = trainedOpqRows(spark, dir)
       val embAll = Tables.embeddings(spark, dir)
@@ -388,8 +369,7 @@ object Opq {
           .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2)))
         (r1, c1)
       }
-    })
-  }
+    }
 
   /** FULL OPQ after one non-parametric alternation — the FIFTH cell
     * of the PQ recall table, read beside [[opqTrainedSearch]]'s 2×2.

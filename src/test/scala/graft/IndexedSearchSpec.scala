@@ -240,6 +240,45 @@ class IndexedSearchSpec extends AnyFunSuite with Matchers with SharedSpark {
       .collect().map(_.toString).sorted
   }
 
+  test("racing hashingIndexPath callers share one build and one scratch root") {
+    import java.nio.file.{Files, Paths}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    // a fresh copy of the corpus: a key no earlier test has built
+    val src = Paths.get(sfDir)
+    val dir = tempDir("graft-race-corpus")
+    val walk = Files.walk(src)
+    try walk.iterator.forEachRemaining { p =>
+      if (p != src) Files.copy(p, Paths.get(dir).resolve(src.relativize(p).toString))
+    } finally walk.close()
+    val roots0 = Cleanup.registeredPaths.toSet
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val calls = (1 to 4).map(_ => Future {
+        start.await()
+        Encoders.hashingIndexPath(spark, dir)
+      })
+      start.countDown()
+      val paths = calls.map(Await.result(_, 5.minutes))
+      paths.distinct should have size 1
+      (Cleanup.registeredPaths.toSet -- roots0) should have size 1
+    } finally pool.shutdown()
+  }
+
+  test("an empty doc set gives every IVF and indexed ANN query 0 rows") {
+    // 20 embeddings = Knn.NQueries: the query half takes them all, so
+    // the doc half (and every index layout built over it) is empty
+    val dir = tempDir("graft-empty-docs")
+    graft.sources.DataGen.writeSfDataset(spark, dir, 0.001, 7L)
+    Tables.embeddings(spark, dir).count() shouldBe operators.Knn.NQueries
+    Seq("ann_ivf", "ann_ivf_indexed", "ann_ivf_sqrtn", "ann_pq_indexed",
+      "ann_ivf_pq_indexed", "ann_sq8_indexed").foreach { q =>
+      withClue(s"$q: ") { SparkEntry.queries(q)(spark, dir).count() shouldBe 0 }
+    }
+  }
+
   test("indexed SQ8 search is bit-identical to the in-plan search") {
     val idx = s"${tempDir("graft-sq8-spec")}/codes"
     operators.Ann.writeSq8Index(spark, sfDir, idx)

@@ -6,8 +6,8 @@ import org.scalatest.matchers.should.Matchers
 import graft.operators.{Ann, Compaction, Encoders, Knn, KnnGraph}
 
 /** Round-14 pins: `_bands` entry-table compaction, staged (atomic)
-  * fit-carrying index builds, the hybridTextStd arm-depth guard, the
-  * bands-without-split loud failure, and the bounded arm memo. */
+  * fit-carrying index builds, the hybridTextStd arm-depth guard, and the
+  * bands-without-split loud failure. */
 class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
 
   private def dropGraph(name: String): Unit =
@@ -260,29 +260,6 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
       .collect().map(_.toString).sorted shouldBe o1
     val opqT = mean(Eval.annRecallOpqTrained(spark, sfDir))
     withClue(s"opq_trained $opqT: ") { opqT should be >= 0.3 }
-  }
-
-  test("BoundedMemo: LRU capacity eviction, predicate eviction, clear") {
-    val m = new Cleanup.BoundedMemo[Int, Int](2)
-    var builds = 0
-    def get(k: Int): Int = m.getOrElseUpdate(k) { builds += 1; k * 10 }
-    get(1) shouldBe 10
-    get(2) shouldBe 20
-    builds shouldBe 2
-    get(1) shouldBe 10 // hit
-    builds shouldBe 2
-    get(3) shouldBe 30 // evicts 2 (LRU — 1 was just touched)
-    builds shouldBe 3
-    get(1) shouldBe 10 // still resident
-    builds shouldBe 3
-    get(2) shouldBe 20 // was evicted → rebuilds
-    builds shouldBe 4
-    m.evictWhere(_ == 1)
-    get(1)
-    builds shouldBe 5
-    m.clear()
-    get(1)
-    builds shouldBe 6
   }
 
   test("reclaimOrphanedLocation refuses qualified names and non-default databases") {
