@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import graft.operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §2 (coverage checklist)
@@ -72,8 +71,7 @@ object SparkEntry {
     // split: memoized trained-layout build, stored-grid AutoProbe
     // search (bit-identical to the in-plan Ann.ivfSqrtN, spec'd). The
     // fit is iterative, so no SQL oracle (rows-only driver check);
-    // Round13Spec pins determinism/shape/recall/equality, IvfProbe
-    // the decade-scale recall + pruning numbers.
+    // Round13Spec pins determinism/shape/recall/equality.
     "ann_ivf_sqrtn" -> ((s, d) => Ann.ivfSqrtNViaIndex(s, d)),
     // NN-Descent graph ANN: iterative build — not SQL-expressible, so
     // no oracleSql entry; the driver records the weaker rows-only

@@ -42,7 +42,7 @@ object Tables {
     * distinct parquet encodings so far, all normalized here:
     *   - TIMESTAMP(NANOS): Spark only reads it as a raw long
     *     (`spark.sql.legacy.parquet.nanosAsLong=true`, set in
-    *     Verify/Bench/tests) → truncate ns→µs, same as DuckDB's cast;
+    *     Verify and tests) → truncate ns→µs, same as DuckDB's cast;
     *   - TIMESTAMP_NTZ (isAdjustedToUTC=false, the 2026-08 refresh):
     *     cast to TIMESTAMP — the session zone is pinned UTC everywhere,
     *     so the wall-clock reinterpretation preserves the instant;

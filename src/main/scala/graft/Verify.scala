@@ -2,132 +2,130 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB compare (tools/crosscheck.py).
+  *
+  * args: sfDir outDir [query...] — with query names, only that slice is
+  * dumped (seconds instead of minutes per query while iterating). */
 object Verify {
-  /** The oracle map actually dumped to oracle_sql.json: the static
-    * [[SparkEntry.oracleSql]] contract plus per-SF literal overlays for
-    * the queries whose oracles embed driver-computed quantized idf
-    * values (the NDCG-discount-table technique, parameterized by the
-    * corpus's (N, df) integer stats at dump time — see
-    * [[operators.Encoders.idfLiterals]]). Every key still comes from
-    * the static map; overlays only swap the idf *computation* for the
-    * fitted values, leaving vocabulary selection derived in SQL. */
-  def oracleSqlFor(spark: SparkSession, sfDir: String): Map[String, String] = {
-    val overlays =
-      try {
-        // one fit job feeds both idf tables (they differ only in the
-        // driver-side idf formula over the same (nDocs, df) rows)
-        val (idfT, idfB) = operators.Encoders.idfLiteralsBoth(spark, sfDir)
-        val qlp = operators.TextAnalysis.bigramQlpLiterals(spark, sfDir)
-        Map(
-          "text_keyword_extract" ->
-            operators.Encoders.SqlOracle.keywordExtract(idf = Some(idfT)),
-          "text_bigram_lm" ->
-            operators.TextAnalysis.SqlOracle.bigramLmScore(Some(qlp)),
-          "text_bm25_topk" ->
-            operators.Encoders.SqlOracle.bm25TopK(idf = Some(idfB)),
-          "pipeline_hybrid_search" ->
-            operators.Encoders.SqlOracle.hybridSearch(idf = Some(idfB)),
-          "pipeline_bm25_text_search" ->
-            operators.Encoders.SqlOracle.bm25TextTopK(idf = Some(idfB)),
-          "pipeline_hybrid_text_search" ->
-            operators.Encoders.SqlOracle.hybridTextSearch(idf = Some(idfB)),
-          "pipeline_experiment_matrix" ->
-            operators.Experiment.SqlOracle.matrix(idf = Some(idfB)),
-          "report_mode_lift" ->
-            operators.Report.SqlOracle.modeLift(idf = Some(idfB)))
-      } catch { case e: Throwable =>
-        // overlay literals come from small fit jobs; if one fails, the
-        // static self-contained oracles are still a complete contract
-        System.err.println(s"[verify] literal overlay failed (static oracles kept): ${e.getMessage}")
-        Map.empty[String, String]
-      }
-    // the OPQ eval's oracle exists ONLY as an overlay: the Jacobi
-    // eigenfit has no SQL form, but its output is a constant matrix,
-    // so the FROZEN rotation rides into the oracle as literals (the
-    // idf technique) and the rest is plain PQ SQL. Its own try block:
-    // a rotation-fit failure must not take the 8 idf overlays with it,
-    // and vice versa — on failure this query degrades to the driver's
-    // rows-only check instead of losing its verdict entirely.
-    val opqOverlay =
-      try Map("eval_ann_recall_opq" -> operators.Eval.SqlOracle.annRecall(
-        operators.Opq.SqlOracle.opqSearch(
-          operators.Opq.rotation(spark, sfDir))))
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] opq overlay failed (rows-only): ${e.getMessage}")
-        Map.empty[String, String]
-      }
-    // trained-PQ oracles: same frozen-fit-as-literals technique — the
-    // memoized driver-side codebook rows ARE both the Spark plan's
-    // codebook and the oracle's literal table. Own try block, same
-    // rows-only degradation contract as the opq overlay.
-    val pqTrainedOverlay =
-      try {
-        val rows = operators.Ann.trainedPqRows(spark, sfDir)
-        if (rows.isEmpty) Map.empty[String, String]
-        else {
-          val searchSql = operators.Ann.SqlOracle.pqSearchTrainedSql(rows)
-          Map("ann_pq_trained" -> searchSql,
-            "eval_ann_recall_pq_trained" ->
-              operators.Eval.SqlOracle.annRecall(searchSql))
+  private val Usage = "usage: Verify <sfDir> <outDir> [query...]"
+
+  /** The oracle map actually dumped to oracle_sql.json, restricted to
+    * `names`: the static [[SparkEntry.oracleSql]] contract plus per-SF
+    * literal overlays for the queries whose oracles embed Spark-fitted
+    * values, and the overlays' failures as query name → message.
+    *
+    * The idf overlay embeds the corpus's quantized idf values (the
+    * NDCG-discount-table technique, parameterized by the (N, df)
+    * integer stats at dump time — see [[operators.Encoders.idfLiterals]]);
+    * it only swaps the idf *computation* for the fitted values, leaving
+    * vocabulary selection derived in SQL. The OPQ and trained-PQ
+    * oracles exist ONLY as overlays: the Jacobi eigenfit and the Lloyd
+    * codebook fit have no SQL form, but their outputs are constant
+    * matrices, so the FROZEN fits ride into the oracle as literals and
+    * the rest is plain PQ SQL.
+    *
+    * Each overlay fails alone: a failed fit keeps the static oracles
+    * (idf) or leaves its queries rows-only (OPQ/PQ), and is recorded
+    * under every query of `names` it covers. Overlays covering none of
+    * `names` are not fitted. */
+  def oracleSqlFor(spark: SparkSession, sfDir: String,
+                   names: Set[String]): (Map[String, String], Map[String, String]) = {
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def overlay(label: String, covers: String*)(
+        build: => Map[String, String]): Map[String, String] =
+      if (!covers.exists(names)) Map.empty
+      else try build catch { case e: Throwable =>
+        System.err.println(s"[verify] $label overlay failed: ${e.getMessage}")
+        covers.filter(names).foreach { n =>
+          val kept = if (SparkEntry.oracleSql.contains(n)) "static oracle kept" else "rows-only"
+          errors(n) = s"$label overlay failed ($kept): ${describe(e)}"
         }
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] pq-trained overlay failed (rows-only): ${e.getMessage}")
-        Map.empty[String, String]
+        Map.empty
       }
+    val idf = overlay("idf literal", "text_keyword_extract", "text_bigram_lm",
+        "text_bm25_topk", "pipeline_hybrid_search", "pipeline_bm25_text_search",
+        "pipeline_hybrid_text_search", "pipeline_experiment_matrix",
+        "report_mode_lift") {
+      // one fit job feeds both idf tables (they differ only in the
+      // idf formula over the same collected (nDocs, df) rows)
+      val (idfT, idfB) = operators.Encoders.idfLiteralsBoth(spark, sfDir)
+      val qlp = operators.TextAnalysis.bigramQlpLiterals(spark, sfDir)
+      Map(
+        "text_keyword_extract" ->
+          operators.Encoders.SqlOracle.keywordExtract(idf = Some(idfT)),
+        "text_bigram_lm" ->
+          operators.TextAnalysis.SqlOracle.bigramLmScore(Some(qlp)),
+        "text_bm25_topk" ->
+          operators.Encoders.SqlOracle.bm25TopK(idf = Some(idfB)),
+        "pipeline_hybrid_search" ->
+          operators.Encoders.SqlOracle.hybridSearch(idf = Some(idfB)),
+        "pipeline_bm25_text_search" ->
+          operators.Encoders.SqlOracle.bm25TextTopK(idf = Some(idfB)),
+        "pipeline_hybrid_text_search" ->
+          operators.Encoders.SqlOracle.hybridTextSearch(idf = Some(idfB)),
+        "pipeline_experiment_matrix" ->
+          operators.Experiment.SqlOracle.matrix(idf = Some(idfB)),
+        "report_mode_lift" ->
+          operators.Report.SqlOracle.modeLift(idf = Some(idfB)))
+    }
+    val opq = overlay("opq", "eval_ann_recall_opq") {
+      Map("eval_ann_recall_opq" -> operators.Eval.SqlOracle.annRecall(
+        operators.Opq.SqlOracle.opqSearch(operators.Opq.rotation(spark, sfDir))))
+    }
+    // the memoized collected codebook rows ARE both the Spark plan's
+    // codebook and the oracle's literal table
+    val pqTrained = overlay("pq-trained", "ann_pq_trained", "eval_ann_recall_pq_trained") {
+      val rows = operators.Ann.trainedPqRows(spark, sfDir)
+      if (rows.isEmpty) Map.empty
+      else {
+        val searchSql = operators.Ann.SqlOracle.pqSearchTrainedSql(rows)
+        Map("ann_pq_trained" -> searchSql,
+          "eval_ann_recall_pq_trained" -> operators.Eval.SqlOracle.annRecall(searchSql))
+      }
+    }
     // full OPQ: both frozen fits composed (rotation matrix + rotated-
     // space codebook literals)
-    val opqTrainedOverlay =
-      try {
-        val rows = operators.Opq.trainedOpqRows(spark, sfDir)
-        if (rows.isEmpty) Map.empty[String, String]
-        else Map("eval_ann_recall_opq_trained" ->
-          operators.Eval.SqlOracle.annRecall(
-            operators.Opq.SqlOracle.opqTrainedSearch(
-              operators.Opq.rotation(spark, sfDir), rows)))
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] opq-trained overlay failed (rows-only): ${e.getMessage}")
-        Map.empty[String, String]
-      }
+    val opqTrained = overlay("opq-trained", "eval_ann_recall_opq_trained") {
+      val rows = operators.Opq.trainedOpqRows(spark, sfDir)
+      if (rows.isEmpty) Map.empty
+      else Map("eval_ann_recall_opq_trained" ->
+        operators.Eval.SqlOracle.annRecall(
+          operators.Opq.SqlOracle.opqTrainedSearch(operators.Opq.rotation(spark, sfDir), rows)))
+    }
     // refined OPQ (one non-parametric alternation): the SAME composed
     // overlay shape as opq_trained, parameterized by the refined pair
-    val opqRefinedOverlay =
-      try {
-        val (r1, rows) = operators.Opq.refinedFit(spark, sfDir)
-        if (rows.isEmpty) Map.empty[String, String]
-        else Map("eval_ann_recall_opq_refined" ->
-          operators.Eval.SqlOracle.annRecall(
-            operators.Opq.SqlOracle.opqTrainedSearch(r1, rows)))
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] opq-refined overlay failed (rows-only): ${e.getMessage}")
-        Map.empty[String, String]
-      }
-    SparkEntry.oracleSql ++ overlays ++ opqOverlay ++ pqTrainedOverlay ++
-      opqTrainedOverlay ++ opqRefinedOverlay
+    val opqRefined = overlay("opq-refined", "eval_ann_recall_opq_refined") {
+      val (r1, rows) = operators.Opq.refinedFit(spark, sfDir)
+      if (rows.isEmpty) Map.empty
+      else Map("eval_ann_recall_opq_refined" ->
+        operators.Eval.SqlOracle.annRecall(operators.Opq.SqlOracle.opqTrainedSearch(r1, rows)))
+    }
+    val oracles = (SparkEntry.oracleSql ++ idf ++ opq ++ pqTrained ++ opqTrained ++ opqRefined)
+      .filter { case (n, _) => names(n) }
+    (oracles, errors.toMap)
   }
 
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** Writes each of `names` (default: every declared query) to
+    * `<outDir>/<name>` as parquet, then `oracle_sql.json` with those
+    * names' oracles and `_errors.json` (query name → failure, `{}` when
+    * none), and returns the errors. An unknown name throws before
+    * anything is written. */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+          names: Seq[String] = SparkEntry.queries.keys.toSeq): Map[String, String] = {
+    val queries = SparkEntry.queries
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown query: ${unknown.mkString(", ")}; $Usage")
     new java.io.File(outDir).mkdirs()
     // A thrown query must be LOUD in the artifact: r7 proved that
     // stderr-only reporting lets 6 broken queries silently vanish from
     // the correctness inventory (101 green entries looked complete
     // against 107 registered). Every failure lands in _errors.json.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    names.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        errors(name) = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
+        errors(name) = describe(e)
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
@@ -145,9 +143,47 @@ object Verify {
     } catch { case e: Throwable =>
       System.err.println(s"[verify] block-cap check failed: ${e.getMessage}")
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    val (oracles, overlayErrors) = oracleSqlFor(spark, sfDir, names.toSet)
+    // a query that threw keeps its own error; an overlay failure is
+    // appended to it
+    overlayErrors.foreach { case (n, e) => errors(n) = errors.get(n).fold(e)(_ + "; " + e) }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonObject(oracles))
+    // Written even when empty so "no file" can never be confused with
+    // "no errors" by a consumer of the out dir.
+    Files.writeString(Paths.get(s"$outDir/_errors.json"), jsonObject(errors))
+    if (errors.nonEmpty)
+      System.err.println(s"[verify] ${errors.size} queries FAILED: ${errors.keys.mkString(", ")}")
+    errors.toMap
+  }
+
+  def main(args: Array[String]): Unit = {
+    if (args.length < 2) {
+      System.err.println(Usage)
+      sys.exit(2)
+    }
+    val names = if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // No non-zero exit on query failures: the DuckDB compare must
+    // still run on the queries that DID dump; the artifact (not the
+    // exit code) carries failure. An unknown query name throws.
+    try run(spark, args(0), args(1), names) finally spark.stop()
+  }
+
+  private def describe(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
+
+  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+  // — a tab or CR in oracle SQL would otherwise make a reader's
+  // json.load fail and silently drop every verdict.
+  private def jsonObject(m: scala.collection.Map[String, String]): String = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -157,18 +193,6 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = oracleSqlFor(spark, sfDir)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Written even when empty so "no file" can never be confused with
-    // "no errors" by a consumer of the out dir.
-    val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
-    // No non-zero exit: the driver must still DuckDB-compare the
-    // queries that DID dump; the artifact (not the rc) carries failure.
-    if (errors.nonEmpty)
-      System.err.println(s"[verify] ${errors.size} queries FAILED: ${errors.keys.mkString(", ")}")
-    spark.stop()
+    m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
   }
 }

@@ -523,8 +523,8 @@ object Ann {
                    rerank: Int = -1): DataFrame = {
     // defaults reproduce the verified fixed-fit query bit-identically;
     // the deployment path passes AutoProbe (√nlist against the stored
-    // grid) and a scaled re-rank pool (VERDICT r14 §next-3: PqProbe
-    // localized the 200k flat-PQ saturation to the fixed 3k pool)
+    // grid) and a scaled re-rank pool (VERDICT r14 §next-3: the 200k
+    // flat-PQ saturation was localized to the fixed 3k pool)
     val cent = spark.read.parquet(s"$indexPath/_cent")
     val cb = spark.read.parquet(s"$indexPath/_fit")
     val np = if (nProbe > 0) nProbe else sqrtProbeCount(cent.count().toInt)
@@ -589,7 +589,7 @@ object Ann {
     * the full index build and the incremental append. */
   private def assignToIndex(spark: SparkSession, dir: String,
                             docs: DataFrame,
-                            centroids: Option[DataFrame] = None): DataFrame = {
+                            centroids: Option[DataFrame]): DataFrame = {
     val cent = centroids.getOrElse(
       Tables.embeddings(spark, dir).filter(col("vec_id") < NCentroids)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_vec")))
@@ -773,10 +773,9 @@ object Ann {
     * per-probe cell is N/16 of the corpus. Registered rows-only
     * (`ann_ivf_sqrtn`): the Lloyd fit is iterative, so no SQL oracle —
     * Round13Spec pins determinism, shape, and recall vs the exact
-    * scan; tools.IvfProbe records the decade-scale numbers. The
-    * expensive leg is the fit (N·√N per iteration — the measured
-    * ~N^1.5 exponent in the bench scale subset is the fit, not the
-    * probe; a deployment amortizes it across every later search via
+    * scan. The expensive leg is the fit (N·√N per iteration — the
+    * measured ~N^1.5 scaling exponent is the fit, not the probe; a
+    * deployment amortizes it across every later search via
     * [[writeIvfIndex]](centroids)). */
   def ivfSqrtN(spark: SparkSession, dir: String, k: Int = K,
                iters: Int = 2): DataFrame = {
@@ -797,8 +796,7 @@ object Ann {
     * stores them as `_cent`), and every later [[ivfIndexed]] call
     * with `nProbe = AutoProbe` probes √nlist cells of the stored
     * grid — fit and full-corpus assignment paid once, measured at
-    * 200 k as recall 1.000 at a 4.9% per-query scan fraction
-    * (tools.IvfProbe). */
+    * 200 k as recall 1.000 at a 4.9% per-query scan fraction. */
   def writeTrainedIvfIndex(spark: SparkSession, dir: String, out: String,
                            iters: Int = 2): Unit = {
     val docsEmb = Tables.embeddings(spark, dir)
@@ -834,7 +832,7 @@ object Ann {
     * cluster's mean keeps its norm, a loose one's collapses), and
     * max-dot assignment/probing then systematically misranks cells —
     * measured at the 200 k decade corpus as the difference between an
-    * unusable and a >0.9-recall trained grid (tools.IvfProbe). */
+    * unusable and a >0.9-recall trained grid. */
   /** Training-sample cap per centroid (FAISS's max_points_per_centroid
     * default): the fit's per-iteration cost is |train|·k, so capping
     * the training set at 256·k makes it O(k²) — INDEPENDENT of corpus

@@ -151,7 +151,7 @@ object Dedup {
     * both prefixes, else the overlap can't reach ⌈t·max(|a|,|b|)⌉).
     * Ordering rarest-first (ascending doc frequency, then hash) makes
     * the per-key posting lists small, so the candidate join is
-    * output-bound instead of Σ block² — the r6 NgramProbe measured the
+    * output-bound instead of Σ block² — r6 measured the
     * old within-block cross join at 130 M candidates for 500 k docs
     * (quadratic once the ~16.5 k (lang, t0) blocks saturate) vs 10× in
     * docs for this plan. Result-identical: prefix filtering and the
@@ -176,7 +176,7 @@ object Dedup {
     * a join exchange and a Window sort over the fully exploded shingle
     * stream). The old (df, h) rarest-first order made posting lists
     * smaller; measured on the probe corpora the hash-order candidate
-    * growth is a small constant factor (NgramProbe before/after in
+    * growth is a small constant factor (before/after in
     * OPTIMIZATION_r17.md) while three exchanges disappear — and the
     * verify join already bounds per-candidate cost. Result-identical:
     * prefix filtering only drops pairs that provably cannot reach the
@@ -224,20 +224,6 @@ object Dedup {
       .filter(col("j") >= threshold)
       .select(col("id_a"), col("id_b"), rnd(col("j"), 4).as("j"))
       .orderBy("id_a", "id_b")
-  }
-
-  /** MinHash signature columns mh_0..mh_15 (min over shingles of
-    * (a·h(s)+b) mod P — min is duplicate-insensitive so shingles need
-    * no distinct pass). Shingle hashes are computed once into an
-    * array&lt;long&gt;, so the 16 permutation folds are cheap integer
-    * arithmetic instead of 16 re-hashes of every shingle. */
-  def withMinhash(d: DataFrame): DataFrame = {
-    val hashed = d.withColumn("_shh", transform(col("sh"), s => polyHash(s)))
-    perms.zipWithIndex.foldLeft(hashed) { case (df, ((a, b), i)) =>
-      df.withColumn(s"mh_$i",
-        aggregate(col("_shh"), lit(Long.MaxValue),
-          (m, h) => least(m, (h * a + b) % P)))
-    }.drop("_shh")
   }
 
   /** MinHash + LSH near-dup pairs: 8 bands × 2 rows; docs sharing any
@@ -426,8 +412,7 @@ object Dedup {
       .orderBy("id_a", "id_b")
   }
 
-  /** The banded-bucket candidate-pair stage of [[embeddingLsh]],
-    * exposed for the occupancy diagnostics ([[graft.tools.LshProbe]]).
+  /** The banded-bucket candidate-pair stage of [[embeddingLsh]].
     *
     * Buckets within `maxBucket` enumerate all within-bucket pairs
     * (the oracle's semantics — bit-identical while nothing is capped,
@@ -505,7 +490,7 @@ object Dedup {
     // (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is
     // false by default), so the cached LSH+verify pipeline lost its
     // runtime broadcast conversions and ran once per cache partition —
-    // CcProbe2 measured 12.1 s task time materializing the cache and
+    // r16 measured 12.1 s task time materializing the cache and
     // 8.5 s for the first groupBy over it, vs 0.05 s + 0.10 s for the
     // identical frame via localCheckpoint. Same semantics (edge rows
     // materialized once, loop reuses blocks), ~100× less CPU.
@@ -877,11 +862,6 @@ object Dedup {
   }
 
   object SqlOracle {
-    /** Shingle list in SQL (empty when < 3 tokens). */
-    def shinglesSql(toksExpr: String): String =
-      s"[t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t) - 1)]"
-        .replace("t[", s"($toksExpr)[").replace("len(t)", s"len($toksExpr)")
-
     private val docShingles =
       s"""(SELECT doc_id, lang, toks[1] AS t0,
          |   [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] for i in range(1, len(toks) - 1)] AS sh

@@ -142,7 +142,7 @@ object Drift {
     * `vocabDim` defaults to 4096 here (not the serving default 64):
     * the vocab alarm needs a fit with CAPACITY — at 64 the OOV
     * baseline is saturated (~0.69 on iid data) and absolute mass
-    * cannot move enough to discriminate (measured, tools.DriftProbe).
+    * cannot move enough to discriminate (measured).
     *
     * The rebuild column names the library call that re-derives the
     * layout's fit from the CURRENT corpus and rewrites the serving

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -170,7 +170,7 @@ object Encoders {
     * the ref's query loop memmaps the vector file ONCE and every query
     * reads it page-cache-warm (auto_run_tests.py:150-160); a serving
     * process holding the postings in Spark storage memory is the same
-    * discipline, and is what the H2 bench leg measures. */
+    * discipline. */
   def hashingSearchIndexedFrame(idx: DataFrame, k: Int = 10,
                                 nq: Int = 5): DataFrame = {
     val qc = idx.filter(col("doc_id") < nq)
@@ -749,8 +749,8 @@ object Encoders {
     * arm more than once (Experiment.matrix's two hybrid legs) pay the
     * eager fit job once. */
   private def bm25DocScores(spark: SparkSession, dir: String, dim: Int,
-                            maxDoc: Option[Long] = None,
-                            fit: Option[Seq[(String, Long, Long)]] = None): DataFrame = {
+                            maxDoc: Option[Long],
+                            fit: Option[Seq[(String, Long, Long)]]): DataFrame = {
     val vocab = spark.createDataFrame(fit.getOrElse(bm25IdfRows(spark, dir, dim, maxDoc)))
       .toDF("tok", "idx", "idf6").drop("idx")
     val byDoc = Window.partitionBy("doc_id")

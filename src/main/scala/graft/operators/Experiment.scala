@@ -353,20 +353,6 @@ object Experiment {
 
   val SizeCaps: Seq[Long] = Seq(20L, 100L, 400L)
 
-  /** One (model, cap) leg of [[sizes]] in isolation — probe/bench
-    * decomposition surface. */
-  def summaryLeg(spark: SparkSession, dir: String, model: String,
-                 maxDoc: Option[Long], k: Int = K, nq: Int = NQ,
-                 dim: Int = Encoders.Dim): DataFrame = {
-    val ret = model match {
-      case "hashing_tf" => Encoders.hashingSearch(spark, dir, k, nq, dim, maxDoc)
-      case "tfidf" => Encoders.tfIdfSearch(spark, dir, k, nq, dim, maxDoc)
-      case other => throw new IllegalArgumentException(
-        s"unknown model '$other' (expected hashing_tf or tfidf)")
-    }
-    summaryFor(spark, dir, ret, model, k, nq, dim, maxDoc)
-  }
-
   private def summaryFor(spark: SparkSession, dir: String, retrieval: DataFrame,
                          model: String, k: Int, nq: Int, dim: Int,
                          maxDoc: Option[Long] = None): DataFrame = {

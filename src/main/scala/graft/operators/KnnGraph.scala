@@ -52,7 +52,7 @@ import graft.functions._
   * low intrinsic dimension (real text/image embedding manifolds). On
   * the synthetic near-random 64-dim test vectors the premise is weak:
   * neighbor recall reaches ≈0.74 at 480 nodes and ≈0.43 at 2 k
-  * (tools.GraphProbe shows the plateau is the descent fixed point —
+  * (measured: the plateau is the descent fixed point —
   * <4% of missed true edges lie within 2 hops — not an implementation
   * artifact). The USER-FACING metric is beam-search recall, and that
   * is governed by entry quality and walk reach, not neighbor recall
@@ -141,7 +141,7 @@ object KnnGraph {
     * vectors arrive by one keyed join (O(N·r) rows), and the prune
     * itself is per-group local — no pair join, no window. */
   private def diversifyEdges(cands: DataFrame, emb: DataFrame, k: Int,
-                             r: Int, alpha: Double = Alpha): DataFrame =
+                             r: Int, alpha: Double): DataFrame =
     cands.groupBy("src")
       .agg(TopKAgg.topKByDistinct(col("score"), col("dst"), r).as("tk"))
       .select(col("src"), explode(col("tk")).as("e"))
@@ -281,7 +281,7 @@ object KnnGraph {
   /** Refinement rounds that RobustPrune-diversify their keep (the
     * rest keep a plain nearest top-k). Default: every round — the
     * DiskANN shape, where each pass prunes with the α rule. Measured
-    * at the 200 k clustered decade corpus (GraphProbe sweep2, r13):
+    * at the 200 k clustered decade corpus (r13 sweep):
     * search recall@10 at unchanged walk defaults is 0.850 (dr=1) →
     * 0.870 (2) → 0.890 (3) → **0.910 (4)** with build wall and
     * per-search cost UNCHANGED (the prune replaces the top-k

@@ -133,8 +133,8 @@ object Sources {
   // round-trip scratch is removed at JVM exit (graft.Cleanup): the
   // path is deterministic per (JVM, input dir) — stable within a JVM
   // so re-runs overwrite rather than accumulate, but pid-qualified so
-  // two JVMs sharing one input dir (a parent and a ScaleRun/bench
-  // child) never share a base one's shutdown sweep could delete out
+  // two JVMs sharing one input dir (say, a parent and a child
+  // JVM) never share a base one's shutdown sweep could delete out
   // from under the other mid-round-trip
   // a crashed JVM (no shutdown hook) would leak its pid-qualified dirs
   // forever; the first scratch use of each JVM sweeps siblings whose

@@ -44,8 +44,8 @@ object JobProbe {
         val j = jobs.get(e.jobId); if (j != null) j.end = e.time
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val jid = stageToJob.get(e.stageInfo.stageId)
-        val j = if (jid != null) jobs.get(jid) else null
+        val sid = e.stageInfo.stageId
+        val j = if (stageToJob.containsKey(sid)) jobs.get(stageToJob.get(sid)) else null
         if (j != null) {
           j.stages += 1
           j.tasks += e.stageInfo.numTasks

@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.debug._
 
 /** Dev-only measurement probe for the optimization rounds (guide §1):
   * for each named query, dump `.explain("formatted")` to

@@ -110,7 +110,6 @@ class SourcesSpec extends AnyFunSuite with Matchers with SharedSpark {
 class ApproxSpec extends AnyFunSuite with Matchers with SharedSpark {
 
   test("approx sketches land within tolerance of exact values") {
-    import spark.implicits._
     val approx = graft.operators.PerfStats.approxSummary(spark, sfDir)
     val exact = Tables.events(spark, sfDir).groupBy("event_type")
       .agg(countDistinct("user_id").as("exact_users"),
@@ -147,7 +146,6 @@ class DataGenSpec extends AnyFunSuite with Matchers with SharedSpark {
   }
 
   test("qrels pairs share the query's lang") {
-    import spark.implicits._
     val docs = sources.DataGen.documents(spark, 500L)
     val qr = sources.DataGen.qrels(docs, 5)
     qr.count() should be > 0L
@@ -161,7 +159,6 @@ class DataGenSpec extends AnyFunSuite with Matchers with SharedSpark {
 class SkewSpec extends AnyFunSuite with Matchers with SharedSpark {
 
   test("saltedAgg equals plain aggregation") {
-    import spark.implicits._
     val li = Tables.lineitem(spark, sfDir)
     val salted = Skew.saltedAgg(li, col("l_returnflag"), col("l_orderkey"), 8,
       col("l_quantity"), sum, sum)
@@ -539,7 +536,6 @@ class EmptyCorpusSpec extends AnyFunSuite with Matchers with SharedSpark {
 
   test("null text rows propagate as nulls, never executor exceptions") {
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     val tmp = tempDir("graft-nulls")
     val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
     val rows = java.util.Arrays.asList(

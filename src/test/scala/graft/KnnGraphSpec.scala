@@ -54,7 +54,7 @@ class KnnGraphSpec extends AnyFunSuite with Matchers with SharedSpark {
     val total = exact.count()
     val recall = hits.toDouble / total
     // Thresholds are the measured fixed point on THIS corpus with
-    // margin, not aspirations: tools.GraphProbe shows descent is at
+    // margin, not aspirations: descent was measured at
     // its fixed point here (of the missed true edges, <4% lie within
     // 2 undirected hops — there is no local information left), and
     // the synthetic embeddings are weakly clustered (near-random
@@ -112,7 +112,7 @@ class KnnGraphSpec extends AnyFunSuite with Matchers with SharedSpark {
 
   test("auto-beam (√N) beats the fixed minimum beam on a clustered 10k corpus") {
     // The regression pin for the RobustPrune + √N auto-beam recall
-    // claim (0.715@200k was measured off-CI by GraphProbe; VERDICT r11
+    // claim (0.715@200k was measured off-CI; VERDICT r11
     // §next-5 asks for a CI-sized assertion). 400 clusters × 25 nodes,
     // noise high enough that clusters blur — the regime where beam
     // width buys recall. Every stage (seeded data, buildGraph,

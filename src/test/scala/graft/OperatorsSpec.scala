@@ -171,7 +171,6 @@ class EncodersSpec extends AnyFunSuite with Matchers with SharedSpark {
     dense.select(Fn.size(col("vector"))).distinct().collect()
       .map(_.getInt(0)).toSet shouldBe Set(Encoders.Dim)
     // spot check: non-zero count matches exploded row count per doc
-    import spark.implicits._
     val nz = dense.select(col("doc_id"),
       Fn.size(Fn.filter(col("vector"), (v: org.apache.spark.sql.Column) => v =!= 0.0)).as("nz"))
     val ex = exploded.groupBy("doc_id").count()
@@ -251,7 +250,6 @@ class EncodersSpec extends AnyFunSuite with Matchers with SharedSpark {
 class MultimodalSpec extends AnyFunSuite with Matchers with SharedSpark {
 
   test("batched feature extraction: checksum equals driver-side recompute") {
-    import spark.implicits._
     val sample = Multimodal.mediaFrame(spark, sfDir).limit(5).collect()
     val feats = Multimodal.extractFeatures(Multimodal.mediaFrame(spark, sfDir).limit(5))
       .collect().map(f => f.media_id -> f.checksum).toMap

@@ -76,7 +76,7 @@ class Round15Spec extends AnyFunSuite with Matchers with SharedSpark {
     // vocabDim 4096 ≈ the generator's tail-vocabulary size: at the
     // verified default (64) the fit is ~69% OOV on IID data — a
     // saturated denominator that moves only 0.69→0.74 under injection
-    // (measured, DriftProbe); the vocab alarm needs a fit with
+    // (measured); the vocab alarm needs a fit with
     // capacity, so the tfidf leg is pinned on ABSOLUTE OOV mass at a
     // realistic vocab size
     def stats(dir: String): Map[String, (Double, Double, Option[Double])] =

@@ -76,13 +76,12 @@ class Round16Spec extends AnyFunSuite with Matchers with SharedSpark {
     // the pre-r16 H2 query passes re-collected ONE pre-planned Dataset,
     // whose materialized shuffle stages the DAGScheduler silently
     // reuses — every timed pass after the first ran the post-shuffle
-    // merge ONLY (1 job / 1 stage), never the corpus scan. H2Run now
-    // builds a fresh Dataset per timed collect. This spec pins BOTH
+    // merge ONLY (1 job / 1 stage), never the corpus scan. A timed pass
+    // must build a fresh Dataset per collect. This spec pins BOTH
     // behaviors with a stage-count listener so a future protocol
     // regression (or a Spark behavior change that silently invalidates
     // the fix) fails loudly.
     import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    import org.apache.spark.sql.functions.col
     import graft.operators.Encoders
     val dir = tempDir("graft-h2shape")
     DataGen.writeDataset(spark, dir, nDocs = 500L, nVecs = 64L)

@@ -10,11 +10,6 @@ import graft.operators._
   * search_mode experiment dimension, and the O(m) paired-test fold. */
 class Round6Spec extends AnyFunSuite with Matchers with SharedSpark {
 
-  private def plan(df: DataFrame): String = {
-    df.collect()
-    df.queryExecution.executedPlan.toString
-  }
-
   test("bm25 top-k equals a driver-side recomputation") {
     // full BM25 recomputed from collected texts with plain Scala —
     // independent of both the Spark plan shape and the SQL oracle
