@@ -189,12 +189,12 @@ object SparkEntry {
     "mm_frame_features" -> ((s, d) => Multimodal.frameFeaturesQ(s, d)),
     "mm_embed_search" -> ((s, d) => Multimodal.embedSearch(s, d)),
     "mm_modality_route" -> ((s, d) => Multimodal.modalityRoute(s, d)),
-    // Streaming (batch-equivalent verified forms)
-    "stream_windowed_agg" -> ((s, d) => graft.streaming.StreamOps.windowedAggBatch(s, d)),
-    "stream_sliding_agg" -> ((s, d) => graft.streaming.StreamOps.slidingAggBatch(s, d)),
-    "stream_sessionize" -> ((s, d) => graft.streaming.StreamOps.sessionizeBatch(s, d)),
-    "stream_topk_trending" -> ((s, d) => graft.streaming.StreamOps.trendingTopKBatch(s, d)),
-    "stream_histogram" -> ((s, d) => graft.streaming.StreamOps.histogramBatch(s, d)),
+    // Windowed event analytics
+    "stream_windowed_agg" -> ((s, d) => EventsAnalytics.windowedAgg(s, d)),
+    "stream_sliding_agg" -> ((s, d) => EventsAnalytics.slidingAgg(s, d)),
+    "stream_sessionize" -> ((s, d) => EventsAnalytics.sessionize(s, d)),
+    "stream_topk_trending" -> ((s, d) => EventsAnalytics.trendingTopK(s, d)),
+    "stream_histogram" -> ((s, d) => EventsAnalytics.windowedHistogram(s, d)),
     // Source round-trips (CSV / JSONL wired through verified plans)
     "source_roundtrip_events_csv" -> ((s, d) => graft.sources.Sources.roundTripEventsCsv(s, d)),
     "source_roundtrip_docs_jsonl" -> ((s, d) => graft.sources.Sources.roundTripDocsJsonl(s, d)),
@@ -351,11 +351,11 @@ object SparkEntry {
     "mm_frame_features" -> Multimodal.SqlOracle.frameFeatures,
     "mm_embed_search" -> Multimodal.SqlOracle.embedSearch,
     "mm_modality_route" -> Multimodal.SqlOracle.modalityRoute,
-    "stream_windowed_agg" -> graft.streaming.StreamOps.SqlOracle.windowedAgg,
-    "stream_sliding_agg" -> graft.streaming.StreamOps.SqlOracle.slidingAgg,
-    "stream_sessionize" -> graft.streaming.StreamOps.SqlOracle.sessionize,
-    "stream_topk_trending" -> graft.streaming.StreamOps.SqlOracle.trendingTopK,
-    "stream_histogram" -> graft.streaming.StreamOps.SqlOracle.histogram,
+    "stream_windowed_agg" -> EventsAnalytics.SqlOracle.windowedAgg,
+    "stream_sliding_agg" -> EventsAnalytics.SqlOracle.slidingAgg,
+    "stream_sessionize" -> EventsAnalytics.SqlOracle.sessionize,
+    "stream_topk_trending" -> EventsAnalytics.SqlOracle.trendingTopK,
+    "stream_histogram" -> EventsAnalytics.SqlOracle.windowedHistogram,
     "source_roundtrip_events_csv" -> graft.sources.Sources.SqlOracle.roundTripEventsCsv,
     "source_roundtrip_docs_jsonl" -> graft.sources.Sources.SqlOracle.roundTripDocsJsonl,
     "source_roundtrip_docs_orc" -> graft.sources.Sources.SqlOracle.roundTripDocsOrc,

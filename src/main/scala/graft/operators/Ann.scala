@@ -246,11 +246,10 @@ object Ann {
   }
 
   /** (doc_id, dim, code) rows of a (doc_id, doc_vec) frame under a
-    * given (dim, lo, hi) fit — the shared encode of the in-plan search,
-    * the index build, and the frozen-fit append. Codes clamp to
-    * [0, 255] (the FAISS QT_8bit encode clip): a frozen-fit append of
-    * vectors outside the trained (lo, hi) range saturates at the grid
-    * edge instead of emitting out-of-byte codes. A NaN component
+    * given (dim, lo, hi) fit — the shared encode of the in-plan search
+    * and the index build. Codes clamp to [0, 255] (the FAISS QT_8bit
+    * encode clip): vectors outside the fit's (lo, hi) range saturate
+    * at the grid edge instead of emitting out-of-byte codes. A NaN component
     * encodes as value 0.0 — NaN compares greatest in Spark, so without
     * the nanvl the clamp would silently saturate garbage at the top
     * grid cell 255 (ADVICE r10). */
@@ -296,8 +295,8 @@ object Ann {
   /** Persisted SQ8 serving layout: the code relation at `out`, the
     * (dim, lo, hi) fit under `out/_fit` (underscore path — invisible
     * to the postings scan, the [[Encoders.writeTfidfIndex]] `_vocab`
-    * convention). The fit travels WITH the index, so later queries and
-    * appends need neither the corpus nor a refit. */
+    * convention). The fit travels WITH the index, so later queries
+    * need neither the corpus nor a refit. */
   def writeSq8Index(spark: SparkSession, dir: String, out: String): Unit =
     Compaction.stagedBuild(spark, out) { tmp =>
       val ranges = sq8Ranges(spark, dir)
@@ -305,18 +304,6 @@ object Ann {
         .write.mode("overwrite").parquet(tmp)
       ranges.coalesce(1).write.mode("overwrite").parquet(s"$tmp/_fit")
     }
-
-  /** Frozen-fit incremental maintenance (the FAISS add-to-trained-
-    * index contract, like [[appendToIvfIndex]]): a new (doc_id,
-    * doc_vec) batch is encoded with the INDEX'S OWN stored fit — the
-    * quantization grid does not move — and appended; only the batch is
-    * scanned. A disjoint append is bit-equal to having encoded those
-    * docs at build time (per-doc codes depend only on the fit).
-    * Refit + rebuild when range drift accumulates. */
-  def appendToSq8Index(spark: SparkSession, newVecs: DataFrame,
-                       indexPath: String): Unit =
-    sq8Encode(newVecs, spark.read.parquet(s"$indexPath/_fit"))
-      .write.mode("append").parquet(indexPath)
 
   /** [[sq8Search]] answered from a persisted [[writeSq8Index]] layout —
     * no encode pass in the hot path: codes and fit read from disk,
@@ -336,7 +323,7 @@ object Ann {
 
   /** PQ codes of an arbitrary (doc_id, doc_vec) frame under a given
     * codebook — the batch-general encode behind [[writePqIndex]] and
-    * [[appendToPqIndex]] (same argmin/tie rule as [[pqEncode]]).
+    * [[writeIvfPqIndex]] (same argmin/tie rule as [[pqEncode]]).
     * Output (doc_id, j, code). */
   private def pqEncodeOf(vecs: DataFrame, cb: DataFrame): DataFrame =
     vecs.select(col("doc_id"), posexplode(array(
@@ -361,18 +348,6 @@ object Ann {
       cb.coalesce(1).write.mode("overwrite").parquet(s"$tmp/_fit")
     }
 
-  /** Frozen-fit incremental maintenance: the batch is encoded under
-    * the INDEX'S OWN stored codebook (the `_cent`/`_fit` lesson — a
-    * re-derived codebook mis-codes silently) and appended; only the
-    * batch is scanned, and a disjoint append is bit-equal to having
-    * encoded those docs at build time (codes depend only on the
-    * fit). Re-train + rebuild when codebook drift accumulates. */
-  def appendToPqIndex(spark: SparkSession, newVecs: DataFrame,
-                      indexPath: String): Unit =
-    pqEncodeOf(newVecs.select(col("doc_id"), col("doc_vec")),
-      spark.read.parquet(s"$indexPath/_fit"))
-      .write.mode("append").parquet(indexPath)
-
   /** [[pqSearch]] answered from a persisted [[writePqIndex]] layout —
     * no encode pass in the hot path: codes and codebook read from
     * disk, ADC scores the stored codes, exact re-rank finishes.
@@ -382,11 +357,6 @@ object Ann {
                 k: Int = K): DataFrame =
     pqScore(spark, dir, spark.read.parquet(indexPath),
       spark.read.parquet(s"$indexPath/_fit"), k)
-
-  /** Test seam for the append≡rebuild spec (a partial build under a
-    * caller-held codebook). */
-  private[graft] def pqEncodeForTest(vecs: DataFrame, cb: DataFrame): DataFrame =
-    pqEncodeOf(vecs, cb)
 
   /** [[pqIndexed]] over a memoized scratch build — the verified-query
     * form (`ann_pq_indexed`). */
@@ -456,9 +426,7 @@ object Ann {
     * reads ONLY its probed cells' code files (DPP) at ~1 byte per
     * doc per subspace; float vectors are touched only by the
     * k-bounded exact re-rank. Built via [[Compaction.stagedBuild]] —
-    * no crash point leaves codes without their fits — and maintained
-    * by [[compactIvfIndex]] unchanged (same `c_id=` partition
-    * geometry). */
+    * no crash point leaves codes without their fits. */
   def writeIvfPqIndex(spark: SparkSession, dir: String, out: String,
                       docs: Option[DataFrame] = None,
                       centroids: Option[DataFrame] = None,
@@ -490,28 +458,6 @@ object Ann {
       cb.coalesce(1).write.mode("overwrite").parquet(s"$tmp/_fit")
     }
 
-  /** Frozen-fit incremental maintenance for a [[writeIvfPqIndex]]
-    * layout: the batch is assigned under the index's OWN `_cent` grid
-    * and encoded under its OWN `_fit` codebook (both frozen — the
-    * FAISS add-to-trained-index contract applied to the composition),
-    * and the append writes only the batch's own cell directories.
-    * Disjoint append ≡ build-time encode (codes and assignment depend
-    * only on the fits); re-train + rebuild when [[
-    * graft.operators.Drift]]'s numbers say the fits drifted. */
-  def appendToIvfPqIndex(spark: SparkSession, newVecs: DataFrame,
-                         indexPath: String): Unit = {
-    val cent = spark.read.parquet(s"$indexPath/_cent")
-    val cb = spark.read.parquet(s"$indexPath/_fit")
-    val vecs = newVecs.select(col("doc_id"), col("doc_vec"))
-    val assign = vecs.crossJoin(broadcast(cent))
-      .groupBy("doc_id")
-      .agg(min_by(col("c_id"),
-        struct(-dot(col("doc_vec"), col("c_vec")), col("c_id"))).as("c_id"))
-    pqEncodeOf(vecs, cb)
-      .join(assign, Seq("doc_id"))
-      .write.mode("append").partitionBy("c_id").parquet(indexPath)
-  }
-
   /** [[ivfPq]] answered from a persisted [[writeIvfPqIndex]] layout:
     * both pruning levels compose against STORED artifacts — the probe
     * join DPP-prunes the code scan to the queries' nprobe cell
@@ -529,10 +475,10 @@ object Ann {
     val cb = spark.read.parquet(s"$indexPath/_fit")
     val np = if (nProbe > 0) nProbe else sqrtProbeCount(cent.count().toInt)
     val pool = if (rerank > 0) rerank else 3 * k
-    // an index built before any data arrived holds its fits but ZERO
+    // an index built over an empty doc set holds its fits but ZERO
     // code files (a partitioned write of no rows emits no parts, so
     // schema inference fails loudly rather than wrongly) — serve the
-    // empty relation instead of throwing (the minusStored arm)
+    // empty relation instead of throwing
     val codes =
       try spark.read.parquet(indexPath)
       catch {
@@ -586,7 +532,7 @@ object Ann {
   /** Centroid assignment of a doc frame against this corpus's fixed
     * centroids (broadcast; min_by argmin — the pqEncode pattern) — or
     * against trained `centroids` (the √N deployment path). Shared by
-    * the full index build and the incremental append. */
+    * the IVF and IVF+PQ index builds. */
   private def assignToIndex(spark: SparkSession, dir: String,
                             docs: DataFrame,
                             centroids: Option[DataFrame]): DataFrame = {
@@ -612,8 +558,7 @@ object Ann {
       // cluster by the layout key before the partitioned write (guide
       // §6, VERDICT r16 §next-3): without it every writer task holding
       // rows of a cell opens a file in that cell's directory — at scale
-      // that is (tasks × cells) small files, the exact debt
-      // compactIvfIndex exists to pay down. One task per cell writes
+      // that is (tasks × cells) small files. One task per cell writes
       // one right-sized file (a √N-trained layout's cells are ~√N rows;
       // for very large cells spark.sql.files.maxRecordsPerFile is the
       // split knob).
@@ -622,8 +567,8 @@ object Ann {
       .write.mode("overwrite").partitionBy("c_id").parquet(out)
     // the centroids travel WITH the index (r13; `_cent`, the `_fit`/
     // `_vocab` underscore convention — invisible to the partitioned
-    // scan): a trained-grid index whose searches or appends derive or
-    // receive DIFFERENT centroids mis-probes/mis-assigns SILENTLY
+    // scan): a trained-grid index whose searches derive or receive
+    // DIFFERENT centroids mis-probes SILENTLY
     // (the lists still exist, the results just degrade), so the
     // layout is self-contained and later calls need neither the
     // corpus's fixed seeds nor a caller-threaded frame.
@@ -639,68 +584,6 @@ object Ann {
     if (fs.exists(p)) spark.read.parquet(p.toString)
     else Tables.embeddings(spark, dir).filter(col("vec_id") < NCentroids)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-  }
-
-  /** Incremental index maintenance — the serving-side ingest path: a
-    * batch of NEW vectors is assigned to the EXISTING centroids and
-    * appended into the partitioned layout. Only the new batch is
-    * scanned/assigned (a rebuild re-reads the whole corpus), the
-    * append writes only into the batch's own c_id directories, and
-    * probe-side dynamic partition pruning keeps working unchanged
-    * because the layout key is stable. Centroids intentionally do NOT
-    * move on append (the FAISS add-to-trained-index contract);
-    * re-train + rebuild when drift accumulates. */
-  def appendToIvfIndex(spark: SparkSession, dir: String,
-                       newDocs: DataFrame, out: String): Unit =
-    // frozen-fit contract done right: the batch is assigned under the
-    // INDEX'S OWN stored centroids (r13) — a trained-grid layout used
-    // to be silently mis-assigned here with the corpus-fixed seeds
-    assignToIndex(spark, dir, newDocs,
-      Some(indexCentroids(spark, dir, out)))
-      .write.mode("append").partitionBy("c_id").parquet(out)
-
-  /** Small-file compaction for a [[writeIvfIndex]] layout — the
-    * maintenance op the streaming/append ingest path accumulates debt
-    * for: each [[appendToIvfIndex]] batch (or micro-batch) adds files
-    * to its partitions, and at serving time many small files cost
-    * listing + open overhead per probe. Selective by design: only
-    * partitions holding more than `maxFilesPerPartition` files are
-    * rewritten (dynamic partition overwrite — untouched partitions
-    * keep their files byte-identical), the repartition on the layout
-    * key lands each hot c_id in exactly one task → one consolidated
-    * file, and the rewrite reads only the hot partitions (partition
-    * pruning on the isin filter). `localCheckpoint` detaches the
-    * rewrite from the source files so Spark permits overwriting the
-    * path being read. Returns the compacted partition keys.
-    *
-    * Concurrency contract: pause appends/streaming ingest into the
-    * partitions being compacted — the rewrite replaces each hot
-    * partition with its read-time snapshot, so a file appended to a
-    * hot partition mid-compaction would be dropped by the overwrite
-    * commit (the same exclusive-maintenance window a FAISS index
-    * rebuild needs). Appends to COLD partitions are unaffected. */
-  def compactIvfIndex(spark: SparkSession, indexPath: String,
-                      maxFilesPerPartition: Int = 4): Seq[Long] = {
-    // enumerate through the path's own Hadoop filesystem, so the op
-    // works on whatever store the layout lives on, not only file://
-    val hPath = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hot = fs.listStatus(hPath)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("c_id="))
-      .filter(st => fs.listStatus(st.getPath)
-        .count(_.getPath.getName.endsWith(".parquet")) > maxFilesPerPartition)
-      .map(_.getPath.getName.stripPrefix("c_id=").toLong).toSeq.sorted
-    if (hot.nonEmpty)
-      spark.read.parquet(indexPath)
-        .filter(col("c_id").isin(hot: _*))
-        .repartition(col("c_id"))
-        .localCheckpoint()
-        .write.mode("overwrite")
-        // writer-scoped option (takes precedence over the session
-        // conf): no session-global mutation, no save/restore race
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("c_id").parquet(indexPath)
-    hot
   }
 
   /** Probe-side search over a [[writeIvfIndex]] layout: queries pick

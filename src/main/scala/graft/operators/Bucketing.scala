@@ -46,117 +46,4 @@ object Bucketing {
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(loc)) fs.delete(loc, true)
     }
-
-  /** In-place compaction of a bucketed table — the maintenance twin of
-    * [[graft.operators.Ann.compactIvfIndex]] for the OTHER serving
-    * layout: every `mode("append").bucketBy(...)` batch (e.g.
-    * [[graft.operators.KnnGraph.appendToGraphIndex]]) adds one sorted
-    * file per touched bucket, and once a bucket spans multiple files
-    * the "single sorted file per bucket" property that elides the
-    * join-side Sort is gone and scan listing cost grows per append.
-    *
-    * Crash-safe ordering (same discipline as compactIvfIndex's dynamic
-    * overwrite): the rewrite lands in a TEMP table first, reading the
-    * original's files in place — until that write commits, the
-    * original table and its data are untouched on disk. Only then is
-    * the original dropped and the temp renamed over it; the DATA is
-    * durable throughout, and a failure inside that final drop→rename
-    * window (the only instant with no table under the serving name)
-    * is self-healing — the next compactBucketed call detects the
-    * orphaned temp and completes the swap. An EXTERNAL
-    * original's data directory is never deleted — the drop leaves it
-    * intact (the compacted replacement is a managed table; reclaiming
-    * the orphaned external directory is the operator's call).
-    * Same exclusive-maintenance-window contract as compactIvfIndex:
-    * pause appends while it runs. This is the single-table local
-    * form; a 100 TB deployment re-runs [[writeBucketed]] from the
-    * source-of-truth corpus instead. */
-  def compactBucketed(spark: SparkSession, table: String, key: String,
-                      nBuckets: Int): Unit = {
-    def clearDir(loc: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    // a managed table's default location is warehouse-relative, with
-    // or without a <db>.db segment depending on the current database —
-    // clear BOTH candidates when a destination directory must be free
-    // (a non-default-LOCATION database is out of this op's scope)
-    def clearDefaultPaths(name: String): Unit = {
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val lc = name.toLowerCase(java.util.Locale.ROOT)
-      clearDir(s"$wh/$lc")
-      clearDir(s"$wh/${spark.catalog.currentDatabase}.db/$lc")
-    }
-    val tmp = table + "__compacting"
-    // recovery: a failure between the swap's DROP and RENAME leaves
-    // the compacted rewrite under the temp name and nothing under the
-    // serving name — complete the swap instead of throwing on the
-    // missing table (the temp IS the finished compaction)
-    if (!spark.catalog.tableExists(table) && spark.catalog.tableExists(tmp)) {
-      clearDefaultPaths(table)
-      spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-      return
-    }
-    val desc = spark.sql(s"DESCRIBE EXTENDED $table").collect()
-    def field(n: String): Option[String] =
-      desc.find(_.getString(0) == n).map(_.getString(1))
-    val external = field("Type").exists(_.equalsIgnoreCase("EXTERNAL"))
-    val location = field("Location")
-    // a crashed prior run can leave the temp table, or just its
-    // managed directory (CTAS validates the location before writing —
-    // LOCATION_ALREADY_EXISTS otherwise): clear both
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    clearDefaultPaths(tmp)
-    // rewrite FIRST, into the temp table, aligning write tasks 1:1
-    // with bucket ids (both are murmur3-pmod on the key) so each
-    // bucket comes out as exactly one sorted file; the original's
-    // files back the read and stay on disk throughout. Read the data
-    // files directly, NOT spark.table: the catalog read carries the
-    // bucketed output partitioning, which lets the planner elide the
-    // repartition shuffle and write one file per INPUT SPLIT instead
-    // of one per bucket (observed: 12 partial-bucket files from a
-    // 4-bucket table).
-    val source = location.map(spark.read.parquet(_))
-      .getOrElse(spark.table(table))
-    writeBucketed(source.repartition(nBuckets,
-      org.apache.spark.sql.functions.col(key)), tmp, key, nBuckets)
-    // swap: the replacement is durable on disk before the original
-    // goes away. Managed drop removes its own data dir; clear any
-    // leftover so the rename's destination directory is free. An
-    // external location is deliberately NOT touched.
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    if (!external) location.foreach(clearDir)
-    // free the rename's destination directory in every case (for an
-    // EXTERNAL original this clears only stale default-path leftovers,
-    // never the external data location)
-    clearDefaultPaths(table)
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-  }
-
-  /** Equi-join of two tables bucketed on `key` — shuffle-free by
-    * construction (asserted in PlanSpec, not assumed). */
-  def join(spark: SparkSession, left: String, right: String,
-           key: String): DataFrame =
-    spark.table(left).join(spark.table(right), key)
-
-  /** Day-partitioned layout for append-only logs: a time-range query
-    * against this layout prunes whole day directories at PLANNING time
-    * (PartitionFilters) — zero IO for out-of-range days, the first
-    * thing a 100 TB event store needs. */
-  def writePartitionedByDay(events: DataFrame, path: String,
-                            tsCol: String = "ts"): Unit =
-    events
-      .withColumn("day", org.apache.spark.sql.functions.date_format(
-        org.apache.spark.sql.functions.col(tsCol), "yyyy-MM-dd"))
-      .write.mode("overwrite").partitionBy("day").parquet(path)
-
-  /** Inclusive day-range read; the range predicate is a partition
-    * filter, never a data filter. */
-  def readDayRange(spark: SparkSession, path: String,
-                   fromDay: String, toDay: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    spark.read.parquet(path)
-      .filter(col("day") >= fromDay && col("day") <= toDay)
-  }
 }

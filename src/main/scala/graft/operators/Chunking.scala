@@ -36,14 +36,11 @@ object Chunking {
   val Stride = 8
 
   /** (doc_id, chunk_id, start_tok, chunk_toks) for ANY frame with
-    * (doc_id, text) — pure narrow ops, so it applies unchanged to a
-    * streaming ingest frame ([[graft.streaming.StreamOps.chunkStream]]).
-    * `chunk_toks` is materialized once per row (a projection, not
+    * (doc_id, text) — pure narrow ops. `chunk_toks` is materialized once per row (a projection, not
     * repeated HOF re-evaluation) so downstream size/join/explode reuse
     * it. */
   def chunkToksOf(docs: DataFrame, w: Int = W, s: Int = Stride): DataFrame = {
-    // every non-text column rides along (e.g. the event-time column a
-    // streaming caller watermarks on)
+    // every non-text column rides along
     val keep = docs.columns.filter(_ != "text").map(col)
     docs
       .select(keep :+ tokens(col("text")).as("_toks"): _*)
@@ -61,7 +58,7 @@ object Chunking {
 
   /** [[chunkToksOf]] plus the rendered window: (…, chunk_id, start_tok,
     * n_tokens, chunk_text) — the shared projection of [[chunkSliding]]
-    * and the streaming chunker. */
+    * and [[chunkDedup]]. */
   def chunkRows(docs: DataFrame, w: Int = W, s: Int = Stride): DataFrame = {
     val ct = chunkToksOf(docs, w, s)
     val keep = ct.columns.filter(_ != "chunk_toks").map(col)
@@ -106,9 +103,9 @@ object Chunking {
     chunkPostingsOf(Tables.documents(spark, dir).select("doc_id", "text"),
       dim, w, s)
 
-  /** Chunk postings of an arbitrary (doc_id, text) frame — shared by
-    * the full build and the append path (norms are per-CHUNK windows,
-    * so they are computable from any batch alone). */
+  /** Chunk postings of an arbitrary (doc_id, text) frame (norms are
+    * per-CHUNK windows, so they are computable from any batch
+    * alone). */
   private def chunkPostingsOf(docs: DataFrame, dim: Int, w: Int,
                               s: Int): DataFrame =
     // map-side encode per chunk row (r16, the Encoders.postingsOf
@@ -132,18 +129,6 @@ object Chunking {
       .filter(col("bc").isNotNull)
       .select(col("doc_id"), col("chunk_id"), col("bc.bucket").as("bucket"),
         col("bc.cnt").as("cnt"), col("norm"))
-
-  /** Incremental maintenance for a [[writeChunkIndex]] layout — the
-    * chunk-granularity sibling of
-    * [[graft.operators.Encoders.appendToHashingIndex]]: postings for
-    * a batch of NEW (doc_id, text) documents, computed from the batch
-    * ALONE (chunk norms are per-chunk, so for batch doc_ids disjoint
-    * from the index's, append ≡ full rebuild bit-identically) and
-    * appended. */
-  def appendToChunkIndex(spark: SparkSession, newDocs: DataFrame,
-                         out: String, dim: Int = Encoders.Dim,
-                         w: Int = W, s: Int = Stride): Unit =
-    chunkPostingsOf(newDocs, dim, w, s).write.mode("append").parquet(out)
 
   /** The shared score-and-pool tail: per-chunk cosine via the shared
     * sparse contract, max-pool per document, ranked top-k. */

@@ -3,25 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Small-file compaction for the FLAT serving layouts — the
-  * maintenance twin of [[Ann.compactIvfIndex]] (partitioned) and
-  * [[Bucketing.compactBucketed]] (bucketed): the hashing-postings,
-  * TF-IDF and SQ8 indexes are plain parquet directories whose
-  * incremental appends ([[Encoders.appendToHashingIndex]] /
-  * [[Encoders.appendToTfidfIndex]] / [[Ann.appendToSq8Index]], and
-  * their streaming ingest forms) land one file batch per call; read
-  * cost degrades with file count until a compaction folds them back.
-  *
-  * Crash-safe ordering (the rewrite-first discipline of the other two
-  * compactors): the consolidated rewrite lands in a `.__compact` TEMP
-  * directory while the original is untouched; underscore metadata
-  * subdirs (`_fit`, `_vocab` — the fit travels WITH the index) are
-  * carried over only after the original has been renamed aside, so no
-  * crash point leaves the fit outside exactly one of the two
-  * directories; the only instant with no layout under the serving
-  * path is between the two renames, and that window is self-healing —
-  * the next call detects the orphaned temp and completes the swap.
-  */
+/** Crash-safe writes of the fit-carrying flat index layouts. */
 object Compaction {
 
   /** Staged build-and-swap for the fit-carrying flat layouts
@@ -32,16 +14,15 @@ object Compaction {
     * build is swapped over the serving path. Closes the
     * codes-without-fit crash window of the naive two-job overwrite
     * (the first job's overwrite wipes the previous `_fit`; a crash
-    * before the second leaves an index whose reads and appends fail
-    * until a full rebuild). Properties: the previous index stays
+    * before the second leaves an index whose reads fail until a full
+    * rebuild). Properties: the previous index stays
     * readable for the entire build; no crash point leaves a PARTIAL
     * layout under the serving path — the only exposed instant is
     * between the delete and the rename, which reads as loud
     * PATH_NOT_FOUND, and the next build call heals it. A leftover
-    * staging dir is always DISCARDED, never promoted: unlike the
-    * compactors' data-identical rewrites, a build's source may have
-    * changed since the orphan was staged, so a fresh build is the
-    * only always-correct recovery. */
+    * staging dir is always DISCARDED, never promoted: a build's source
+    * may have changed since the orphan was staged, so a fresh build is
+    * the only always-correct recovery. */
   def stagedBuild(spark: SparkSession, out: String)(
       build: String => Unit): Unit = {
     val p = new Path(out)
@@ -55,51 +36,5 @@ object Compaction {
     // build sits in a .__building dir the next call discards (ADVICE
     // r14: a silent data-loss window). Fail loudly instead.
     require(fs.rename(tmp, p), s"failed to promote staged build $tmp -> $p")
-  }
-
-  /** Compacts the flat parquet dir at `path` down to `targetFiles`
-    * files when it holds more than `maxFiles`; preserves underscore
-    * metadata subdirs. Returns Some(filesBefore -> filesAfter) when a
-    * rewrite ran, None when below threshold or when the call performed
-    * crash recovery instead (re-invoke for a fresh pass). */
-  def compactFlat(spark: SparkSession, path: String, maxFiles: Int = 8,
-                  targetFiles: Int = 1): Option[(Int, Int)] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path + ".__compact")
-    val old = new Path(path + ".__old")
-    def metaDirs(base: Path) =
-      if (!fs.exists(base)) Array.empty[Path]
-      else fs.listStatus(base)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("_"))
-        .map(_.getPath)
-    // recovery: a crash inside the swap leaves the rewrite at tmp and
-    // nothing at the serving path — finish moving the metadata dirs
-    // out of the set-aside original, complete the rename, clean up
-    if (!fs.exists(p) && fs.exists(tmp)) {
-      metaDirs(old).foreach(d => fs.rename(d, new Path(tmp, d.getName)))
-      fs.rename(tmp, p)
-      if (fs.exists(old)) fs.delete(old, true)
-      return None
-    }
-    // a crashed prior run BEFORE its swap leaves a stale temp (the
-    // original is intact, metadata still inside it) — discard both
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(old)) fs.delete(old, true)
-    val nFiles = fs.listStatus(p)
-      .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    if (nFiles <= maxFiles) return None
-    // rewrite FIRST (underscore dirs are invisible to the scan, so
-    // this is the data rows only); the original is untouched until
-    // the rewrite has fully committed
-    spark.read.parquet(path).repartition(targetFiles)
-      .write.parquet(tmp.toString)
-    // swap: set the original aside, move its metadata dirs into the
-    // replacement, promote, delete
-    fs.rename(p, old)
-    metaDirs(old).foreach(d => fs.rename(d, new Path(tmp, d.getName)))
-    fs.rename(tmp, p)
-    fs.delete(old, true)
-    Some(nFiles -> targetFiles)
   }
 }

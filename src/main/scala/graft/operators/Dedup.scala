@@ -688,9 +688,7 @@ object Dedup {
   }
 
   /** Distinct w-token window hashes of a (doc_id, text) frame — the
-    * span-dedup STORE artifact ([[spanIncremental]]'s corpus side;
-    * maintained incrementally by
-    * [[graft.streaming.StreamOps.spanStoreIngestStream]]). */
+    * span-dedup STORE artifact ([[spanIncremental]]'s corpus side). */
   def windowHashes(docs: DataFrame, w: Int = SpanW): DataFrame =
     spanOcc(docs, w).select("h").distinct()
 
@@ -705,8 +703,7 @@ object Dedup {
     * hash-array) frame is eagerly localCheckpoint'ed once and each
     * consumer re-explodes from blocks (the explode is cheap; the
     * kernel is not). Single-use consumers ([[windowHashes]], the
-    * incremental store side) keep the streaming-friendly
-    * pipeline form. Same fail-fast localCheckpoint trade-off as the
+    * incremental store side) keep the pipelined form. Same fail-fast localCheckpoint trade-off as the
     * CC edge cache. */
   private def spanOcc(docs: DataFrame, w: Int,
                       materialize: Boolean = false): DataFrame = {

@@ -13,7 +13,7 @@ import graft.functions.{Sql => S}
   * drift, so the refit trigger had no number. [[indexDriftStats]]
   * supplies it: the corpus splits into a BUILD half (even ids — the
   * data a fit would have been trained on) and a BATCH half (odd ids —
-  * the appends arriving under the frozen fit), each layout's fit is
+  * new data served under the frozen fit), each layout's fit is
   * derived from the build half alone, and one row per layout compares
   * the batch's fit-quality statistic against build-time:
   *
@@ -146,9 +146,8 @@ object Drift {
     *
     * The rebuild column names the library call that re-derives the
     * layout's fit from the CURRENT corpus and rewrites the serving
-    * artifact ([[graft.operators.Compaction.stagedBuild]] is the
-    * atomic-swap wrapper for all of them): writeTrainedIvfIndex /
-    * writePqIndex / writeSq8Index / writeTfidfIndex. Scale shape:
+    * artifact: writeTrainedIvfIndex / writePqIndex / writeSq8Index /
+    * writeTfidfIndex. Scale shape:
     * inherits [[indexDriftStats]]'s constant 4-row output; the
     * decision layer is pure projection. */
   def refitAdvice(spark: SparkSession, dir: String,

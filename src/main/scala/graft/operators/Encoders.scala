@@ -37,9 +37,7 @@ object Encoders {
                    maxDoc: Option[Long] = None): DataFrame =
     bucketCountsOf(capped(Tables.documents(spark, dir), maxDoc), dim)
 
-  /** [[bucketCounts]] over an arbitrary (doc_id, text) frame — the
-    * form the incremental-ingest path needs (a batch of new docs is
-    * not a corpus directory). */
+  /** [[bucketCounts]] over an arbitrary (doc_id, text) frame. */
   private def bucketCountsOf(docs: DataFrame, dim: Int): DataFrame =
     // explode_OUTER + null filter, not plain explode: the optimizer
     // infers a `size(e) > 0 AND isnotnull(e)` filter below an inner
@@ -55,9 +53,10 @@ object Encoders {
         col("bc.cnt").as("cnt"))
 
   /** The ONE postings derivation — (doc_id, bucket, cnt, norm) with
-    * the exact-integer-squares L2 norm — shared by the index build and
-    * the index append so the two can never diverge. The norm is
-    * per-document, so it is computable from any doc-complete subset.
+    * the exact-integer-squares L2 norm — shared by the in-plan searches,
+    * the query side and the index build so they can never diverge. The
+    * norm is per-document, so it is computable from any doc-complete
+    * subset.
     *
     * MAP-SIDE since r16 (guide §2.4): the per-doc (bucket, cnt) pairs
     * come from the one-pass [[graft.functions.BucketCountsExpr]]
@@ -133,25 +132,12 @@ object Encoders {
     * count and norm the exact-integer-squares L2 norm — so indexed
     * search is bit-identical to [[hashingSearch]] (asserted in
     * IndexedSearchSpec). At 100 TB this is the serving artifact: the
-    * ingest pipeline rebuilds or appends it once, amortized over
-    * every query that follows. */
+    * ingest pipeline builds it once, amortized over every query that
+    * follows. */
   def writeHashingIndex(spark: SparkSession, dir: String, out: String,
                         dim: Int = Dim, maxDoc: Option[Long] = None): Unit =
     postingsOf(capped(Tables.documents(spark, dir), maxDoc), dim)
       .write.mode("overwrite").parquet(out)
-
-  /** Incremental maintenance for a [[writeHashingIndex]] layout — the
-    * serving-side ingest path (same contract as
-    * [[Ann.appendToIvfIndex]]): postings+norm for a batch of NEW
-    * (doc_id, text) documents, computed from the batch ALONE (a
-    * rebuild re-tokenizes the whole corpus) and appended. Hashing-TF
-    * norms are per-document, so for batch doc_ids disjoint from the
-    * index's, append ≡ full rebuild bit-identically (asserted in
-    * IndexedSearchSpec). Append debt (small files) is reclaimed the
-    * usual way: rebuild, or a parquet-dir compaction pass. */
-  def appendToHashingIndex(spark: SparkSession, newDocs: DataFrame,
-                           out: String, dim: Int = Dim): Unit =
-    postingsOf(newDocs, dim).write.mode("append").parquet(out)
 
   /** Cosine top-k against a persisted postings index (ref
     * `measure_offline_query_latency`, auto_run_tests.py:109-160: the
@@ -412,9 +398,7 @@ object Encoders {
                                  maxDoc: Option[Long] = None): DataFrame =
     docTermOf(capped(Tables.documents(spark, dir), maxDoc))
 
-  /** [[docTerm]] over an arbitrary (doc_id, text) frame — shared with
-    * the TF-IDF index append path so build and append can never
-    * diverge. */
+  /** [[docTerm]] over an arbitrary (doc_id, text) frame. */
   private[operators] def docTermOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
         explode_outer(native.tokenCounts(tokens(col("text")))).as("tc"))
@@ -559,8 +543,8 @@ object Encoders {
     tfIdfScore(tfIdfPostings(spark, dir, dim, maxDoc), k, nq)
 
   /** (doc_id, tok, weight, nrm) TF-IDF postings with fixed-point norms
-    * — the ONE weighted-postings derivation behind the in-plan search,
-    * the persisted index and the index append. Norms ride along as a
+    * — the ONE weighted-postings derivation behind the in-plan search
+    * and the persisted index. Norms ride along as a
     * window over the weights frame, so the plan needs no separate norm
     * aggregate and — crucially — no shuffle join of the scored pairs
     * back against a norm table. */
@@ -648,7 +632,7 @@ object Encoders {
     * twice over: weights embed it, and the (tok, idf) table itself is
     * stored under `_vocab/` (an underscore path — invisible to the
     * postings scan, exactly like `_SUCCESS`), which is what lets
-    * [[appendToTfidfIndex]] transform NEW documents under the frozen
+    * [[tfIdfSearchTextIndexed]] transform query texts under the frozen
     * fit without the original corpus. */
   def writeTfidfIndex(spark: SparkSession, dir: String, out: String,
                       dim: Int = Dim, maxDoc: Option[Long] = None): Unit =
@@ -658,28 +642,6 @@ object Encoders {
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/_vocab")
     }
 
-  /** Frozen-fit incremental maintenance for a [[writeTfidfIndex]]
-    * layout — the fitted-TfidfVectorizer TRANSFORM contract (the ref
-    * fits once and transforms every later batch with the same
-    * vectorizer, encoder.py:76-92): a batch of NEW (doc_id, text)
-    * documents is weighted with the INDEX'S OWN stored vocabulary —
-    * idf does not move — and appended. Per-doc norms make a disjoint
-    * append bit-equal to having encoded those docs at build time
-    * under the same fit (spec-asserted). Refit + rebuild when drift
-    * accumulates, exactly like the IVF centroid contract. */
-  def appendToTfidfIndex(spark: SparkSession, newDocs: DataFrame,
-                         indexPath: String): Unit = {
-    val vocab = spark.read.parquet(s"$indexPath/_vocab")
-    val byDoc = Window.partitionBy("doc_id")
-    docTermOf(newDocs)
-      .join(broadcast(vocab), "tok")
-      .select(col("doc_id"), col("tok"), (col("tf") * col("idf")).as("weight"))
-      .withColumn("nrm", sqrt(
-        sum(floor(col("weight") * col("weight") * 1e9 + 0.5).cast("long"))
-          .over(byDoc) / 1e9))
-      .write.mode("append").parquet(indexPath)
-  }
-
   /** Cosine top-k from a persisted [[writeTfidfIndex]] layout — no
     * tokenize, no vocabulary fit, no window in the hot path. */
   def tfIdfSearchIndexed(spark: SparkSession, indexPath: String,
@@ -688,11 +650,7 @@ object Encoders {
 
   /** [[tfIdfSearchIndexed]] over a memoized per-(app, dir, dim)
     * scratch index — the verified-query form, mirroring
-    * [[hashingSearchViaIndex]]. The ingest caveat differs from the
-    * hashing index: TF-IDF weights depend on the corpus-wide fit, so
-    * appending NEW documents is only exact under the FROZEN fit (the
-    * ref's fitted-TfidfVectorizer transform contract); refit + rebuild
-    * when drift accumulates, exactly like the IVF centroid contract. */
+    * [[hashingSearchViaIndex]]. */
   def tfIdfSearchViaIndex(spark: SparkSession, dir: String, k: Int = 10,
                           nq: Int = 5, dim: Int = Dim): DataFrame =
     tfIdfSearchIndexed(spark,
@@ -1042,102 +1000,6 @@ object Encoders {
     }
     base.select(col("doc_id") +: pooled: _*).orderBy("doc_id")
   }
-
-  /** Batched-inference encode plumbing (ref: embeddings/real_encoder.py
-    * — the transformer path encodes texts in fixed-size batches so
-    * model invocation is amortized). The Spark shape: `mapPartitions`
-    * with `iterator.grouped(batchSize)`; a real model is loaded once
-    * per partition (before the iterator is consumed) and fed
-    * length-≤batchSize text arrays — the batch geometry Arrow-based
-    * inference wants. The stub model ships deterministic hash-derived
-    * vectors with EXACTLY [[meanPooling]]'s semantics, so the batched
-    * path is asserted equal to the declarative plan (EncodersSpec) and
-    * a real encoder drops into [[stubModelEncode]] with no plan change. */
-  def encodeBatched(spark: SparkSession, dir: String, batchSize: Int = 64): DataFrame = {
-    import spark.implicits._
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        // per-partition init point: a real implementation constructs /
-        // memory-maps the model here, once, then streams batches
-        it.grouped(batchSize).flatMap { batch =>
-          val vecs = stubModelEncode(batch.map(_._2))
-          batch.iterator.zip(vecs.iterator).map { case ((id, _), v) => (id, v) }
-        }
-      }
-      .toDF("doc_id", "vec")
-  }
-
-  /** [[encodeBatched]] with a REAL model through the same seam —
-    * weights travel as a broadcast (how real weight blobs ship), the
-    * model object is constructed from them ONCE PER PARTITION at the
-    * documented init point, and batches stream through it. The plan
-    * shape is identical to the stub path (mapPartitions over the same
-    * projection — asserted in EncodersSpec), which is the whole claim:
-    * a trained encoder drops into the seam with no plan change,
-    * matching real_encoder.py:1-74's role in the reference. */
-  def encodeBatchedWith(spark: SparkSession, dir: String,
-                        model: LinearProbe.Model,
-                        batchSize: Int = 64): DataFrame =
-    // the probe implements [[BatchModel]], so this IS the generic seam
-    // (one broadcast of the plain-array weights, per-partition fetch) —
-    // kept as the named trained-model entrypoint the specs cite
-    encodeBatchedModel(spark, dir, model, batchSize)
-
-  /** The open batch-model contract for [[encodeBatchedModel]]:
-    * anything serializable that maps a text batch to dense vectors —
-    * a trained [[LinearProbe.Model]], a file-loaded
-    * [[WordVectors.WordVecModel]], or (out of container) an
-    * ONNX/transformer session wrapper whose weights ride in the
-    * object. */
-  trait BatchModel extends Serializable {
-    def encode(texts: Seq[String]): Seq[Array[Double]]
-  }
-
-  /** [[encodeBatched]] with ANY [[BatchModel]] through the same seam —
-    * the model object (weights included) ships as ONE broadcast, is
-    * fetched once per partition at the documented init point, and
-    * batches stream through it. The plan shape is identical to the
-    * stub path (asserted in WordVecSpec), so an external-weights model
-    * — word vectors loaded from a published .vec file, a transformer
-    * session — drops in with no plan change
-    * (ref: embeddings/real_encoder.py:1-74). */
-  def encodeBatchedModel(spark: SparkSession, dir: String,
-                         model: BatchModel,
-                         batchSize: Int = 64): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(model)
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        // per-partition init: one broadcast fetch, then stream batches
-        val m = bc.value
-        it.grouped(batchSize).flatMap { batch =>
-          val vecs = m.encode(batch.map(_._2))
-          batch.iterator.zip(vecs.iterator).map { case ((id, _), v) => (id, v) }
-        }
-      }
-      .toDF("doc_id", "vec")
-  }
-
-  /** The stub batch "model": per-token polynomial-hash vectors,
-    * mean-pooled — bit-identical to [[meanPooling]]'s per-dim folds
-    * (same hash, same left-to-right accumulation). Empty (or null) docs
-    * encode to the zero vector — a null must not NPE inside an executor
-    * when the declarative path degrades gracefully. */
-  def stubModelEncode(texts: Seq[String]): Seq[Array[Double]] =
-    texts.map { t0 =>
-      val t = if (t0 == null) "" else t0
-      val hs = t.split(" ").filter(_.nonEmpty).map(tok =>
-        tok.codePoints().toArray.foldLeft(0L)((h, c) => (h * 31 + c) % HashP))
-      Array.tabulate(8) { j =>
-        if (hs.isEmpty) 0.0
-        else hs.foldLeft(0.0)((acc, h) =>
-          acc + (h * (j + 1) % HashP).toDouble / HashP) / hs.length
-      }
-    }
 
   /** Dense-vector assembly from exploded (doc_id, bucket, weight) —
     * library API used by the search pipeline and tests. */

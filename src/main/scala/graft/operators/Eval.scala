@@ -115,7 +115,8 @@ object Eval {
     import spark.implicits._
     val k = Knn.K
     val maxProbe = probes.max
-    val probesDf = broadcast(probes.map(_.toLong).toDF("nprobe"))
+    val probeKeys = probes.map(_.toLong).toDF("nprobe")
+    val probesDf = broadcast(probeKeys)
     val cent = graft.Tables.embeddings(spark, dir)
       .filter(col("vec_id") < Ann.NCentroids)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
@@ -153,7 +154,9 @@ object Eval {
       .groupBy("nprobe").agg(rnd(fxAvg(col("recall"), 6), 4).as("mean_recall"))
     // empty query set (0-row embeddings): the unioned form's global
     // agg still yields one (nprobe, null) row per setting — re-attach
-    probesDf.join(agg, Seq("nprobe"), "left")
+    // (no broadcast hint: the preserved side of a left join cannot be
+    // the build side, so Spark would drop it with a warning)
+    probeKeys.join(agg, Seq("nprobe"), "left")
       .orderBy("nprobe")
   }
 

@@ -75,9 +75,10 @@ object EventsAnalytics {
   val HistBinWidth = 25.0
   val HistNumBins = 20
 
-  /** THE bin definition — shared by the batch histogram, the streaming
-    * forms, and (as [[SqlOracle.binSql]]) both oracles, so a clamping
-    * change can never drift between the verified queries. */
+  /** THE bin definition — shared by [[histogram]],
+    * [[windowedHistogram]] and (as [[SqlOracle.binSql]]) their oracles,
+    * so a clamping change can never drift between the verified
+    * queries. */
   def binCol(value: Column): Column =
     least(greatest(floor(value / HistBinWidth), lit(0.0)),
       lit((HistNumBins - 1).toDouble)).cast("long")
@@ -149,8 +150,7 @@ object EventsAnalytics {
     * arbitrary-range variant), broadcast back over the log as a pure
     * filter. No shuffle of the log itself. */
   /** Per-type (mean, std) from one fixed-point stats pass — the
-    * "trained baseline" both the batch sweep and the streaming
-    * [[graft.streaming.StreamOps.anomalyStream]] filter against. */
+    * baseline [[anomalies]] filters against. */
   def typeStats(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .groupBy("event_type")
@@ -188,14 +188,88 @@ object EventsAnalytics {
       .orderBy("event_id")
   }
 
+  /** Event-time hourly windowed counts/sums per event_type
+    * (`stream_windowed_agg`). */
+  def windowedAgg(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"), rnd(fxSum(col("value"), 6), 4).as("sum_value"))
+      .select(col("w.start").as("window_start"), col("event_type"),
+        col("n"), col("sum_value"))
+      .orderBy("window_start", "event_type")
+
+  /** Sliding-window counts/sums (1-hour windows, 30-minute slide):
+    * every event contributes to exactly two windows. Spark expands the
+    * window set at the map side; the oracle mirrors the expansion with
+    * an explicit two-start unnest. */
+  def slidingAgg(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"), rnd(fxSum(col("value"), 6), 4).as("sum_value"))
+      .select(col("w.start").as("window_start"), col("event_type"),
+        col("n"), col("sum_value"))
+      .orderBy("window_start", "event_type")
+
+  /** Hourly-window per-type binned value counts (`stream_histogram`):
+    * the [[binCol]] map of [[histogram]] under an hourly window. */
+  def windowedHistogram(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .select(col("ts"), col("event_type"), binCol(col("value")).as("bin"))
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"), col("bin"))
+      .agg(count(lit(1)).as("cnt"))
+      .select(col("w.start").as("window_start"), col("event_type"),
+        col("bin"), col("cnt"))
+      .orderBy("window_start", "event_type", "bin")
+
+  /** Trending detection: the top-3 event types per hourly window by
+    * event count (ties by type name). The rank runs AFTER the windowed
+    * aggregation — the frame is already reduced to (windows × types)
+    * rows, so the partitioned row_number sorts a handful of rows per
+    * window, not the event log; the only full-data shuffle is the
+    * windowed groupBy with map-side partials. */
+  def trendingTopK(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
+    val counts = Tables.events(spark, dir)
+      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+    counts
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("w").orderBy(col("n").desc, col("event_type"))).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("w.start").as("window_start"), col("rank"),
+        col("event_type"), col("n"))
+      .orderBy("window_start", "rank")
+  }
+
+  val SessionGapMin = 30
+
+  /** Sessionization with a [[SessionGapMin]]-minute inactivity gap via
+    * lag + cumulative session starts (single shuffle on user_id). */
+  def sessionize(spark: SparkSession, dir: String): DataFrame = {
+    val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    val cum = Window.partitionBy("user_id").orderBy("ts", "event_id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    Tables.events(spark, dir)
+      .withColumn("prev_ts", lag("ts", 1).over(byUser))
+      .withColumn("new_sess",
+        when(col("prev_ts").isNull ||
+          unix_millis(col("ts")) - unix_millis(col("prev_ts")) > SessionGapMin * 60000L,
+          1L).otherwise(0L))
+      .withColumn("sess_id", sum("new_sess").over(cum))
+      .groupBy("user_id", "sess_id")
+      .agg(min("ts").as("session_start"),
+        count(lit(1)).as("n_events"),
+        (unix_millis(max("ts")) - unix_millis(min("ts"))).as("duration_ms"))
+      .orderBy("user_id", "sess_id")
+  }
+
   /** Session-length distribution: how many sessions have n events, and
     * how long they run — the summary a product team reads off the
-    * sessionizer. Reuses [[graft.streaming.StreamOps.sessionizeBatch]]
+    * sessionizer. Reuses [[sessionize]]
     * (its final sort is eliminated under this aggregate by Catalyst's
     * EliminateSorts); sessions reduce to one row per (n_events) bucket,
     * so the output is bounded by the longest session, not the log. */
   def sessionStats(spark: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamOps.sessionizeBatch(spark, dir)
+    sessionize(spark, dir)
       .groupBy("n_events")
       .agg(count(lit(1)).as("n_sessions"),
         rnd(sum("duration_ms") / count(lit(1)), 2).as("avg_duration_ms"),
@@ -282,16 +356,6 @@ object EventsAnalytics {
          |  ${S.rnd("total", 4)} AS total_value
          |FROM r WHERE rank <= $k ORDER BY rank""".stripMargin
 
-    // LAZY: this reaches into StreamOps.SqlOracle, whose histogram val
-    // reaches back into THIS object's binSql — an eager val here would
-    // run that cycle mid-init and interpolate binSql as null.
-    lazy val sessionStats: String =
-      s"""WITH sess AS (${graft.streaming.StreamOps.SqlOracle.sessionize})
-         |SELECT n_events, count(*) AS n_sessions,
-         |  ${S.rnd("CAST(sum(duration_ms) AS BIGINT) / CAST(count(*) AS DOUBLE)", 2)} AS avg_duration_ms,
-         |  max(duration_ms) AS max_duration_ms
-         |FROM sess GROUP BY n_events ORDER BY n_events""".stripMargin
-
     def movingAvg(w: Int = MovAvgWindow): String =
       s"""WITH e AS (
          |  SELECT event_id, user_id, epoch_us(ts) AS us, value,
@@ -357,7 +421,7 @@ object EventsAnalytics {
          |WHERE std > 0 AND abs(value - mean) > ${z}e0 * std
          |ORDER BY event_id""".stripMargin
 
-    /** Bin expression shared with the stream-histogram oracle. */
+    /** Bin expression shared by the histogram oracles. */
     val binSql: String =
       s"CAST(least(greatest(floor(value / ${HistBinWidth}e0), 0.0e0), " +
         s"${(HistNumBins - 1).toDouble}e0) AS BIGINT)"
@@ -373,5 +437,79 @@ object EventsAnalytics {
          |  ${S.rnd("cnt / CAST(CAST(sum(cnt) OVER (PARTITION BY event_type) AS BIGINT) AS DOUBLE)", 4)} AS share
          |FROM g ORDER BY event_type, bin""".stripMargin
     }
+
+    val windowedAgg: String =
+      s"""SELECT date_trunc('hour', ts) AS window_start, event_type,
+        |  count(*) AS n, (floor((${S.fxSum("value", 6)}) * 1e4 + 0.5e0) / 1e4) AS sum_value
+        |FROM events GROUP BY window_start, event_type
+        |ORDER BY window_start, event_type""".stripMargin
+
+    val slidingAgg: String =
+      s"""WITH ev AS (SELECT * FROM ${S.eventsUs} e),
+         |x AS (
+         |  SELECT event_type, value,
+         |    date_trunc('hour', ts) + CASE WHEN minute(ts) >= 30
+         |      THEN INTERVAL 30 MINUTE ELSE INTERVAL 0 MINUTE END AS b
+         |  FROM ev),
+         |w AS (
+         |  SELECT unnest([b - INTERVAL 30 MINUTE, b]) AS window_start,
+         |    event_type, value
+         |  FROM x)
+         |SELECT window_start, event_type, count(*) AS n,
+         |  (floor((${S.fxSum("value", 6)}) * 1e4 + 0.5e0) / 1e4) AS sum_value
+         |FROM w GROUP BY window_start, event_type
+         |ORDER BY window_start, event_type""".stripMargin
+
+    val windowedHistogram: String =
+      s"""WITH b AS (
+         |  SELECT date_trunc('hour', ts) AS window_start, event_type,
+         |    $binSql AS bin
+         |  FROM events)
+         |SELECT window_start, event_type, bin, count(*) AS cnt
+         |FROM b GROUP BY window_start, event_type, bin
+         |ORDER BY window_start, event_type, bin""".stripMargin
+
+    val trendingTopK: String =
+      s"""WITH counts AS (
+         |  SELECT date_trunc('hour', ts) AS window_start, event_type,
+         |    count(*) AS n
+         |  FROM ${S.eventsUs} e
+         |  GROUP BY window_start, event_type),
+         |ranked AS (
+         |  SELECT window_start, event_type, n,
+         |    row_number() OVER (PARTITION BY window_start
+         |                       ORDER BY n DESC, event_type) AS rank
+         |  FROM counts)
+         |SELECT window_start, CAST(rank AS BIGINT) AS rank, event_type, n
+         |FROM ranked WHERE rank <= 3
+         |ORDER BY window_start, rank""".stripMargin
+
+    val sessionize: String =
+      s"""WITH x AS (
+         |  SELECT user_id, ts, event_id,
+         |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+         |  FROM ${S.eventsUs} events),
+         |y AS (
+         |  SELECT user_id, ts, event_id,
+         |    CASE WHEN prev_ts IS NULL
+         |           OR epoch_ms(ts) - epoch_ms(prev_ts) > ${SessionGapMin * 60000} THEN 1 ELSE 0 END AS new_sess
+         |  FROM x),
+         |z AS (
+         |  SELECT user_id, ts,
+         |    sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
+         |                        ROWS UNBOUNDED PRECEDING) AS sess_id
+         |  FROM y)
+         |SELECT user_id, CAST(sess_id AS BIGINT) AS sess_id, min(ts) AS session_start,
+         |  count(*) AS n_events,
+         |  CAST(epoch_ms(max(ts)) - epoch_ms(min(ts)) AS BIGINT) AS duration_ms
+         |FROM z GROUP BY user_id, sess_id
+         |ORDER BY user_id, sess_id""".stripMargin
+
+    val sessionStats: String =
+      s"""WITH sess AS ($sessionize)
+         |SELECT n_events, count(*) AS n_sessions,
+         |  ${S.rnd("CAST(sum(duration_ms) AS BIGINT) / CAST(count(*) AS DOUBLE)", 2)} AS avg_duration_ms,
+         |  max(duration_ms) AS max_duration_ms
+         |FROM sess GROUP BY n_events ORDER BY n_events""".stripMargin
   }
 }

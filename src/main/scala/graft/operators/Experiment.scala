@@ -69,7 +69,7 @@ object Experiment {
       .select(lit("hashing_tf").as("model"), col("q_id"), col("rank"),
         col("doc_id"))
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("lang"))
-    val keysGrid = broadcast(Seq("hashing_tf").toDF("model"))
+    val keysGrid = Seq("hashing_tf").toDF("model")
     val perQBase = keysGrid.crossJoin(broadcast(
       docs.filter(col("doc_id") < nq).select(col("doc_id").as("q_id"))))
     keysGrid
@@ -128,10 +128,10 @@ object Experiment {
       .unionByName(tag(rrf(hr), "hashing_tf", "hybrid"))
       .unionByName(tag(rrf(tr), "tfidf", "hybrid"))
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("lang"))
-    val keysGrid = broadcast(
+    val keysGrid =
       Seq(("hashing_tf", "vector"), ("hashing_tf", "hybrid"),
         ("tfidf", "vector"), ("tfidf", "hybrid"))
-        .toDF("model", "search_mode"))
+        .toDF("model", "search_mode")
     val perQBase = keysGrid.crossJoin(broadcast(
       docs.filter(col("doc_id") < nq).select(col("doc_id").as("q_id"))))
     // empty legs (0-doc corpus) re-attach from the key grid, matching

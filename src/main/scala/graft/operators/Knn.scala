@@ -166,7 +166,7 @@ object Knn {
       s"(SELECT vec_id AS doc_id, embedding AS doc_vec, label AS doc_label FROM embeddings WHERE vec_id >= $n)"
 
     /** Ranked CTE body shared by the knn oracles and the eval oracles. */
-    def rankedSql(score: String, docFilter: String = "TRUE", k: Int = K): String =
+    def rankedSql(score: String, docFilter: String = "TRUE"): String =
       s"""WITH q AS ${queriesCte()},
          |d AS ${docsCte()},
          |scored AS (

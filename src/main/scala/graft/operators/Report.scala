@@ -10,15 +10,12 @@ import graft.functions.{Sql => S}
   * as Spark plans (ref: experiments/produce_h3_model_comparison.py —
   * per-(n_docs, model) summary grid + best-model plots;
   * experiments/produce_h2_summary_and_plots.py — search_mode lift per
-  * model; experiments/generate_h1_report.py:31-100 — the combined
-  * h_report.txt artifact with ingest, latency and relevance sections).
+  * model).
   *
   * The reference aggregates driver-side over result-JSON files; here
   * the SAME aggregations run as DataFrame plans directly over the
   * experiment legs, so the report layer scales with the cluster and is
-  * oracle-verifiable. Only the final text rendering collects — and only
-  * after aggregation has reduced the data to a bounded handful of rows
-  * (capped detail sections, see [[textReport]]).
+  * oracle-verifiable.
   */
 object Report {
 
@@ -119,116 +116,6 @@ object Report {
       .select(col("f.stage"), col("f.n_docs"), col("f.n_tokens"),
         col("f.docs_kept_pct"))
       .orderBy("stage")
-  }
-
-  /** How many ingest-batch detail lines the text report prints before
-    * truncating (the reference prints one block per result file — a
-    * bounded set; at 100 TB the batch list is not bounded, so the
-    * report keeps the aggregate exact and caps the detail). */
-  val MaxDetail = 20
-
-  /** The combined text report (ref: generate_h1_report.py:31-100 —
-    * h_report.txt: summary counts, per-run H1 ingest + query-latency
-    * details, H2 relevance aggregate). Every section aggregates in
-    * Spark first; collect happens only on bounded frames (per-type
-    * latency rows, |caps|·|models| grid rows, MaxDetail batch rows +
-    * one exact aggregate row). */
-  def textReport(spark: SparkSession, dir: String): String = {
-    val ingest = PerfStats.ingestThroughput(spark, dir)
-    val ingestAgg = ingest.agg(
-      count(lit(1)).as("n_batches"),
-      rnd(fxAvg(col("throughput_vps"), 6), 4).as("mean_vps"),
-      rnd(min("throughput_vps"), 4).as("min_vps"),
-      rnd(max("throughput_vps"), 4).as("max_vps")).collect()(0)
-    val ingestHead = ingest.limit(MaxDetail).collect()
-    val lat = PerfStats.latencyPercentiles(spark, dir).collect()
-    val lift = modeLift(spark, dir).collect()
-    val grid = modelBySize(spark, dir).collect()
-
-    val funnel = filterFunnel(spark, dir).collect()
-
-    val sb = new StringBuilder
-    sb ++= "Experiment report - graft\n"
-    sb ++= "\nSUMMARY:\n"
-    sb ++= s" - H1 ingest batches: ${ingestAgg.getAs[Long]("n_batches")}\n"
-    // derive the leg count from the lift rows themselves (one non-null
-    // <mode>_map column per evaluated mode), not a hardcoded ×2 — a
-    // grid with a missing or added search_mode reports its real size
-    val nLegs = lift.map(r => r.schema.fieldNames
-      .filter(n => n.endsWith("_map") && n != "map_lift")
-      .count(c => !r.isNullAt(r.fieldIndex(c)))).sum
-    sb ++= s" - H2 relevance legs (model x mode): $nLegs\n"
-    sb ++= s" - H3 size sweep cells: ${grid.length}\n"
-
-    sb ++= "\nCorpus filter funnel (docs / tokens / % kept):\n"
-    funnel.foreach { r =>
-      sb ++= "%s: docs=%s tokens=%s kept=%s\n".format(
-        r.getAs[String]("stage"), r.getAs[Long]("n_docs"),
-        r.getAs[Long]("n_tokens"), r.getAs[Double]("docs_kept_pct"))
-    }
-
-    sb ++= "\nH1 (ingest) summary:\n"
-    sb ++= " - throughput_vps mean=%s min=%s max=%s\n".format(
-      ingestAgg.getAs[Double]("mean_vps"),
-      ingestAgg.getAs[Double]("min_vps"),
-      ingestAgg.getAs[Double]("max_vps"))
-    sb ++= s"\nFirst ${ingestHead.length} ingest batches:\n"
-    ingestHead.foreach { r =>
-      sb ++= "batch: %s  size: %s  time_s: %s  throughput_vps: %s\n".format(
-        r.getAs[Long]("batch_id"), r.getAs[Long]("batch_size"),
-        r.getAs[Double]("batch_time"), r.getAs[Double]("throughput_vps"))
-    }
-
-    sb ++= "\nQUERY LATENCY by event type:\n"
-    lat.foreach { r =>
-      sb ++= "%s: mean_s=%s p50=%s p90=%s p99=%s qps=%s\n".format(
-        r.getAs[String]("event_type"), r.getAs[Double]("mean_v"),
-        r.getAs[Double]("p50"), r.getAs[Double]("p90"),
-        r.getAs[Double]("p99"), r.getAs[Double]("qps"))
-    }
-
-    sb ++= "\nH2 (relevance) - hybrid vs vector per model:\n"
-    lift.foreach { r =>
-      sb ++= "model=%s vector_map=%s hybrid_map=%s map_lift=%s p5_lift=%s\n".format(
-        r.getAs[String]("model"), r.getAs[Double]("vector_map"),
-        r.getAs[Double]("hybrid_map"), r.getAs[Double]("map_lift"),
-        r.getAs[Double]("p5_lift"))
-    }
-
-    sb ++= "\nH3 (by corpus size) - model ranking:\n"
-    grid.foreach { r =>
-      sb ++= "cap=%s model=%s n_docs=%s p@5=%s map=%s gap=%s rank=%s\n".format(
-        r.getAs[Long]("corpus_cap"), r.getAs[String]("model"),
-        r.getAs[Long]("n_docs"), r.getAs[Double]("mean_p_at_5"),
-        r.getAs[Double]("map"), r.getAs[Double]("map_gap"),
-        r.getAs[Long]("model_rank"))
-    }
-    sb.result()
-  }
-
-  /** Writes [[textReport]] to `path` (the h_report.txt artifact). */
-  def writeTextReport(spark: SparkSession, dir: String, path: String): Unit =
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
-      textReport(spark, dir))
-
-  /** The plot-input series the reference renders as PNGs (ref:
-    * experiments/plot_results.py and produce_h*_summary_and_plots.py —
-    * p@5/map-by-model-vs-n_docs, mode comparison, per-type latency),
-    * written as tidy CSVs under `outDir`. The plotting itself is a
-    * presentation concern the engine stays out of; these CSVs are the
-    * exact frames a notebook or `plots/run_plots.py`-style script
-    * draws from. */
-  def writePlotSeries(spark: SparkSession, dir: String, outDir: String): Unit = {
-    import graft.sources.Sources.writeSummaryCsv
-    writeSummaryCsv(modelBySize(spark, dir), s"$outDir/model_by_size")
-    writeSummaryCsv(modeLift(spark, dir), s"$outDir/mode_lift")
-    writeSummaryCsv(PerfStats.latencyPercentiles(spark, dir),
-      s"$outDir/latency_by_type")
-    // the per-batch series is the one unbounded frame here (one row
-    // per 256 events) — same MaxDetail bound as the text report, so
-    // the coalesce(1) CSV write stays a driver-scale artifact
-    writeSummaryCsv(PerfStats.ingestThroughput(spark, dir).limit(MaxDetail),
-      s"$outDir/ingest_throughput")
   }
 
   object SqlOracle {

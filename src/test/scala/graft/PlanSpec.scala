@@ -113,7 +113,7 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val p = plan(Bucketing.join(spark, "b_meta", "b_vecs", "vec_id"))
+      val p = plan(spark.table("b_meta").join(spark.table("b_vecs"), "vec_id"))
       p should include("SortMergeJoin")
       p should not include "Exchange"
     } finally {
@@ -161,23 +161,6 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
       spark.sql("DROP TABLE IF EXISTS gidx_plan_meta")
       spark.sql("DROP TABLE IF EXISTS gidx_plan_bands")
     }
-  }
-
-  test("day-partitioned layout: range predicate prunes partitions at planning time") {
-    val tmp = tempDir("graft-part")
-    Bucketing.writePartitionedByDay(Tables.events(spark, sfDir), tmp)
-    val all = spark.read.parquet(tmp)
-    val days = all.select("day").distinct().orderBy("day")
-      .collect().map(_.get(0).toString) // partition col may infer as DATE
-    days.length should be > 1
-    val one = Bucketing.readDayRange(spark, tmp, days.head, days.head)
-    // the day predicate is a PARTITION filter (planning-time pruning),
-    // not a data filter pushed into row groups
-    val p = plan(one)
-    p should include("PartitionFilters: [isnotnull(day")
-    p should not include "PushedFilters: [IsNotNull(day"
-    one.count() should be > 0L
-    one.count() should be < all.count()
   }
 
   test("minhash LSH: no cartesian product anywhere") {
@@ -251,20 +234,6 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
     val direct = Ann.ivf(spark, sfDir)
     indexed.exceptAll(direct).count() shouldBe 0
     direct.exceptAll(indexed).count() shouldBe 0
-  }
-
-  test("incremental IVF index: appending a batch equals a full rebuild") {
-    val tmp = tempDir("graft-ivfapp")
-    val docs = Knn.docSet(spark, sfDir)
-    // build on the even half, then ingest the odd half as a new batch
-    Ann.writeIvfIndex(spark, sfDir, tmp,
-      Some(docs.filter(pmod(col("doc_id"), lit(2)) === 0)))
-    Ann.appendToIvfIndex(spark, sfDir,
-      docs.filter(pmod(col("doc_id"), lit(2)) === 1), tmp)
-    val appended = Ann.ivfIndexed(spark, sfDir, tmp)
-    val direct = Ann.ivf(spark, sfDir)
-    appended.exceptAll(direct).count() shouldBe 0
-    direct.exceptAll(appended).count() shouldBe 0
   }
 
   test("range join plans as an equi-join on time buckets, never a nested loop") {

@@ -5,7 +5,7 @@ import org.scalatest.matchers.should.Matchers
 import graft.operators.{Experiment, Report}
 
 /** The report/analysis layer (ref: experiments/produce_h3_model_comparison.py,
-  * produce_h2_summary_and_plots.py, generate_h1_report.py). */
+  * produce_h2_summary_and_plots.py). */
 class ReportLayerSpec extends AnyFunSuite with Matchers with SharedSpark {
 
   test("modelBySize ranks every model per corpus size with gap-to-best") {
@@ -49,29 +49,6 @@ class ReportLayerSpec extends AnyFunSuite with Matchers with SharedSpark {
     }
   }
 
-  test("textReport renders all sections and writes the artifact") {
-    val txt = Report.textReport(spark, sfDir)
-    txt should include("SUMMARY:")
-    txt should include("Corpus filter funnel")
-    txt should include("5_lang_quota: docs=")
-    txt should include("H1 (ingest) summary:")
-    txt should include("QUERY LATENCY by event type:")
-    txt should include("H2 (relevance) - hybrid vs vector per model:")
-    txt should include("H3 (by corpus size) - model ranking:")
-    // the latency section carries one formatted line per event type
-    val latLines = txt.linesIterator.filter(_.contains("mean_s=")).toSeq
-    latLines.size shouldBe
-      operators.PerfStats.latencyPercentiles(spark, sfDir).count()
-    latLines.foreach(l => l should fullyMatch regex
-      """\S+: mean_s=\S+ p50=\S+ p90=\S+ p99=\S+ qps=\S+""")
-    // detail truncation is bounded by MaxDetail regardless of batch count
-    txt.linesIterator.count(_.startsWith("batch: ")) should be <= Report.MaxDetail
-
-    val out = new java.io.File(tempDir("graft-report"), "h_report.txt")
-    Report.writeTextReport(spark, sfDir, out.toString)
-    java.nio.file.Files.readString(out.toPath) shouldBe txt
-  }
-
   test("filterFunnel stages are monotone and agree with the quality pipeline") {
     val funnel = Report.filterFunnel(spark, sfDir).collect()
       .map(r => r.getAs[String]("stage") ->
@@ -91,70 +68,5 @@ class ReportLayerSpec extends AnyFunSuite with Matchers with SharedSpark {
       operators.Shaping.qualityFilterPipeline(spark, sfDir).count()
     // raw row covers the whole corpus
     funnel("1_raw")._1 shouldBe Tables.documents(spark, sfDir).count()
-  }
-
-  test("writePlotSeries emits every plot-input CSV with headers") {
-    val dir = tempDir("graft-plotseries")
-    Report.writePlotSeries(spark, sfDir, dir)
-    Seq("model_by_size", "mode_lift", "latency_by_type", "ingest_throughput")
-      .foreach { name =>
-        val back = spark.read.option("header", "true").csv(s"$dir/$name")
-        back.count() should be > 0L
-      }
-    // round-trip keeps the grid's shape
-    spark.read.option("header", "true").csv(s"$dir/model_by_size")
-      .columns should contain allOf ("corpus_cap", "model", "map", "model_rank")
-  }
-
-  test("writePlots renders the ref's three chart families as well-formed SVG") {
-    import graft.operators.Plotting
-    val dir = tempDir("graft-plots")
-    val paths = Plotting.writePlots(spark, sfDir, dir)
-    paths.map(p => new java.io.File(p).getName) shouldBe Seq(
-      "h1_ingest_throughput.svg", "h2_precision_vs_n_docs.svg",
-      "h3_model_map_vs_n_docs.svg", "metrics_by_model.svg")
-    // every artifact is well-formed XML (parse, don't eyeball)
-    val parsed = paths.map { p =>
-      val f = javax.xml.parsers.DocumentBuilderFactory.newInstance()
-      f.newDocumentBuilder().parse(new java.io.File(p))
-    }
-    parsed.foreach(_.getDocumentElement.getTagName shouldBe "svg")
-    // the H3 chart carries one series (polyline) per model in the grid
-    val nModels = Report.modelBySize(spark, sfDir)
-      .select("model").distinct().count()
-    parsed(2).getElementsByTagName("polyline").getLength shouldBe nModels
-    // H2 carries the p@5 and MAP series
-    parsed(1).getElementsByTagName("polyline").getLength shouldBe 2
-    // the metric-by-model bar chart: 3 metric groups × models bars
-    // (+ one legend swatch rect per model, + the background rect)
-    val nBars = parsed(3).getElementsByTagName("rect").getLength
-    nBars shouldBe (1 + nModels * 3 + nModels)
-    // deterministic: a second render is byte-identical
-    val again = Plotting.writePlots(spark, sfDir, tempDir("graft-plots2"))
-    paths.zip(again).foreach { case (a, b) =>
-      java.nio.file.Files.readString(java.nio.file.Paths.get(a)) shouldBe
-        java.nio.file.Files.readString(java.nio.file.Paths.get(b))
-    }
-  }
-
-  test("writePlots over an empty corpus produces valid empty-series SVGs") {
-    import graft.operators.Plotting
-    // a 0-row corpus with the real schemas: every chart degenerates to
-    // an empty series, which must render as a valid (axis-less) SVG,
-    // not throw NoSuchElement (VERDICT r11 item 8)
-    val empty = tempDir("graft-empty-corpus")
-    Tables.documents(spark, sfDir).limit(0)
-      .write.mode("overwrite").parquet(s"$empty/documents.parquet")
-    Tables.events(spark, sfDir).limit(0)
-      .write.mode("overwrite").parquet(s"$empty/events.parquet")
-    spark.read.parquet(s"$sfDir/embeddings.parquet").limit(0)
-      .write.mode("overwrite").parquet(s"$empty/embeddings.parquet")
-    val paths = Plotting.writePlots(spark, empty, tempDir("graft-plots-empty"))
-    paths should have size 4
-    paths.foreach { p =>
-      val f = javax.xml.parsers.DocumentBuilderFactory.newInstance()
-      val doc = f.newDocumentBuilder().parse(new java.io.File(p))
-      doc.getDocumentElement.getTagName shouldBe "svg"
-    }
   }
 }

@@ -5,74 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.operators.{Ann, Compaction, Encoders, Knn, KnnGraph}
 
-/** Round-14 pins: `_bands` entry-table compaction, staged (atomic)
-  * fit-carrying index builds, the hybridTextStd arm-depth guard, and the
-  * bands-without-split loud failure. */
+/** Round-14 pins: staged (atomic) fit-carrying index builds, the
+  * hybridTextStd arm-depth guard, the incremental-pool walk, and the
+  * persisted IVF+PQ layout. */
 class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
-
-  private def dropGraph(name: String): Unit =
-    Seq("edges", "nodes", "meta", "bands").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS ${name}_$s"))
-
-  test("bands compaction folds append debt per band; identical search; idempotent") {
-    val name = "g14c"
-    dropGraph(name)
-    KnnGraph.writeGraphIndex(spark, sfDir, name = name)
-    try {
-      // streaming-style debt: 10 small appends, each banding its batch
-      // into one new file per touched bkt directory
-      val newNodes = Knn.querySet(spark, sfDir)
-        .select(col("q_id").as("id"), col("q_vec").as("vec"))
-      (0 until 10).foreach { i =>
-        KnnGraph.appendToGraphIndex(spark,
-          newNodes.filter(col("id") % 10 === i), name)
-      }
-      val loc = spark.sql(s"DESCRIBE EXTENDED ${name}_bands").collect()
-        .find(_.getString(0) == "Location").get.getString(1)
-      def files(): Map[String, Int] =
-        new java.io.File(new java.net.URI(loc)).listFiles()
-          .filter(d => d.isDirectory && d.getName.startsWith("bkt="))
-          .map(d => d.getName ->
-            d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
-      val before = files()
-      before.values.max should be > 1 // debt exists
-      val resultsBefore = KnnGraph.searchIndexed(spark, sfDir, name)
-        .collect().map(_.toString).sorted
-      val rowsBefore = spark.table(s"${name}_bands").count()
-
-      val hot = KnnGraph.compactBandsTable(spark, name,
-        maxFilesPerPartition = 1)
-      hot should not be empty
-
-      val after = files()
-      // every hot band folded to one file; untouched bands byte-count
-      // identical
-      hot.foreach(b => after(s"bkt=$b") shouldBe 1)
-      before.filter { case (k, _) =>
-        !hot.contains(k.stripPrefix("bkt=").toLong)
-      }.foreach { case (k, n) => after(k) shouldBe n }
-      spark.table(s"${name}_bands").count() shouldBe rowsBefore
-      KnnGraph.searchIndexed(spark, sfDir, name)
-        .collect().map(_.toString).sorted shouldBe resultsBefore
-      // idempotent: nothing left over threshold
-      KnnGraph.compactBandsTable(spark, name,
-        maxFilesPerPartition = 1) shouldBe empty
-      // absent table: clean no-op
-      KnnGraph.compactBandsTable(spark, "g14_no_such") shouldBe empty
-      // the DPP contract survives compaction: the entry join still
-      // carries a runtime pruning subquery against the band dirs
-      val bands = spark.table(s"${name}_bands")
-        .select(col("id"), col("bkt").cast("long").as("bkt"), col("sub"))
-      val qb = Knn.querySet(spark, sfDir)
-        .select(col("q_id"),
-          explode(array(lit(3L), lit(104L))).as("bkt"),
-          lit(0L).as("sub"))
-      bands.join(broadcast(qb), Seq("bkt", "sub"))
-        .select(col("q_id"), col("id"))
-        .queryExecution.executedPlan.toString
-        .toLowerCase should include("dynamicpruning")
-    } finally dropGraph(name)
-  }
 
   test("staged index build: a failed rebuild leaves the old index intact and readable") {
     val idx = s"${tempDir("graft-staged")}/codes"
@@ -130,28 +66,6 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
     Encoders.hybridTextStd(spark, sfDir).count() should be > 0L
   }
 
-  test("append with bands but no frozen split fails loudly, not near-unreachably") {
-    val name = "g14m"
-    dropGraph(name)
-    KnnGraph.writeGraphIndex(spark, sfDir, name = name)
-    try {
-      // corrupt the contract: replace _meta with a legacy n-only shape
-      // while _bands still exists (nothing else enforces they travel
-      // together — ADVICE r13)
-      import spark.implicits._
-      val n = KnnGraph.readGraphMeta(spark, name)
-      spark.sql(s"DROP TABLE IF EXISTS ${name}_meta")
-      operators.Bucketing.reclaimOrphanedLocation(spark, s"${name}_meta")
-      Seq(n).toDF("n").write.format("parquet").saveAsTable(s"${name}_meta")
-      val newNodes = Knn.querySet(spark, sfDir)
-        .select(col("q_id").as("id"), col("q_vec").as("vec"))
-      val e = intercept[IllegalArgumentException] {
-        KnnGraph.appendToGraphIndex(spark, newNodes, name)
-      }
-      e.getMessage should include("frozen-split")
-    } finally dropGraph(name)
-  }
-
   test("incremental-pool walk is bit-equal to the cumulative-state walk") {
     // the r14 exactness claim (SURVEY §7.23 cap arithmetic): the pooled
     // walk must reproduce the cumulative walk's results EXACTLY — same
@@ -173,18 +87,9 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
     }
   }
 
-  test("ivf-pq persisted layout: append ≡ rebuild bit-identically; probe is DPP-pruned") {
-    val base = tempDir("graft-ivfpq")
-    val full = s"$base/full"; val half = s"$base/half"
+  test("ivf-pq persisted layout: served ≡ in-plan bit-identically; probe is DPP-pruned") {
+    val full = s"${tempDir("graft-ivfpq")}/full"
     Ann.writeIvfPqIndex(spark, sfDir, full)
-    // frozen-fit append contract: build from the even half, append the
-    // odd half under the stored fits — must equal the full build
-    val docs = Knn.docSet(spark, sfDir)
-    Ann.writeIvfPqIndex(spark, sfDir, half,
-      docs = Some(docs.filter(col("doc_id") % 2 === 0)))
-    Ann.appendToIvfPqIndex(spark, docs.filter(col("doc_id") % 2 === 1), half)
-    spark.read.parquet(half).collect().map(_.toString).sorted shouldBe
-      spark.read.parquet(full).collect().map(_.toString).sorted
     // the served form answers identically to the in-plan composition
     // (the shared-oracle claim), and its probe carries runtime pruning
     val served = Ann.ivfPqIndexed(spark, sfDir, full)
@@ -192,44 +97,6 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
       Ann.ivfPq(spark, sfDir).collect().map(_.toString).sorted
     served.queryExecution.executedPlan.toString
       .toLowerCase should include("dynamicpruning")
-  }
-
-  test("_meta compaction folds append rows to one; search, meta and appends unchanged") {
-    val name = "g14meta"
-    dropGraph(name)
-    KnnGraph.writeGraphIndex(spark, sfDir, name = name)
-    try {
-      val newNodes = Knn.querySet(spark, sfDir)
-        .select(col("q_id").as("id"), col("q_vec").as("vec"))
-      (0 until 5).foreach { i =>
-        KnnGraph.appendToGraphIndex(spark,
-          newNodes.filter(col("id") % 5 === i), name)
-      }
-      val before = KnnGraph.readGraphMetaFull(spark, name)
-      val results = KnnGraph.searchIndexed(spark, sfDir, name)
-        .collect().map(_.toString).sorted
-      spark.table(s"${name}_meta").count() shouldBe 6 // build + 5 appends
-      KnnGraph.compactGraphMeta(spark, name) shouldBe Some(6L -> 1L)
-      spark.table(s"${name}_meta").count() shouldBe 1
-      // everything the meta feeds is unchanged: summed n, frozen
-      // split, seeds, and therefore the search itself
-      val after = KnnGraph.readGraphMetaFull(spark, name)
-      after shouldBe before
-      KnnGraph.searchIndexed(spark, sfDir, name)
-        .collect().map(_.toString).sorted shouldBe results
-      // idempotent, and appends keep working against the compacted row
-      KnnGraph.compactGraphMeta(spark, name) shouldBe None
-      KnnGraph.appendToGraphIndex(spark,
-        newNodes.select(col("id") + 1000000L as "id", col("vec")), name)
-      KnnGraph.readGraphMeta(spark, name) shouldBe before.n + newNodes.count()
-      // crash recovery: simulate the drop→rename window
-      spark.sql(s"ALTER TABLE ${name}_meta RENAME TO ${name}_meta__compacting")
-      KnnGraph.compactGraphMeta(spark, name) shouldBe None // completes swap
-      KnnGraph.readGraphMeta(spark, name) shouldBe before.n + newNodes.count()
-    } finally {
-      dropGraph(name)
-      spark.sql(s"DROP TABLE IF EXISTS ${name}_meta__compacting")
-    }
   }
 
   test("trained PQ codebook: deterministic, full result shape, recall >= seeds") {

@@ -1,72 +1,14 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import graft.operators.{Ann, Drift, Knn, Opq}
+import graft.operators.{Ann, Drift, Opq}
 import graft.sources.DataGen
 
-/** Round-15 pins: the IVF-PQ layout's compaction closure (VERDICT r14
-  * §next-6), the drift alarm FIRING under planted drift (§next-5), and
-  * the non-parametric OPQ refinement's rotation staying orthonormal
-  * (§next-4). */
+/** Round-15 pins: the drift alarm FIRING under planted drift (VERDICT
+  * r14 §next-5) and the non-parametric OPQ refinement's rotation
+  * staying orthonormal (§next-4). */
 class Round15Spec extends AnyFunSuite with Matchers with SharedSpark {
-
-  test("ivf-pq layout: compaction folds append debt; results, fits and DPP unchanged") {
-    val idx = s"${tempDir("graft-ivfpqc")}/idx"
-    val docs = Knn.docSet(spark, sfDir)
-    // build from a quarter, append the rest in 3 batches — streaming-
-    // style debt: each append lands ≥1 new file in every touched cell
-    Ann.writeIvfPqIndex(spark, sfDir, idx,
-      docs = Some(docs.filter(col("doc_id") % 4 === 0)))
-    (1 to 3).foreach(i =>
-      Ann.appendToIvfPqIndex(spark,
-        docs.filter(col("doc_id") % 4 === i), idx))
-    def cellFiles(): Map[String, Int] =
-      new java.io.File(idx).listFiles()
-        .filter(d => d.isDirectory && d.getName.startsWith("c_id="))
-        .map(d => d.getName ->
-          d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
-    // the fits must survive byte-identically: hash every data file
-    // under the underscore dirs (the compactor must never touch them)
-    def fitHash(sub: String): Seq[(String, String)] =
-      new java.io.File(s"$idx/$sub").listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-        .map { f =>
-          val md = java.security.MessageDigest.getInstance("SHA-256")
-          f.getName -> md.digest(
-            java.nio.file.Files.readAllBytes(f.toPath))
-            .map("%02x".format(_)).mkString
-        }.toSeq
-    val before = cellFiles()
-    before.values.max should be > 1 // debt exists
-    val centBefore = fitHash("_cent")
-    val fitBefore = fitHash("_fit")
-    val resultsBefore = Ann.ivfPqIndexed(spark, sfDir, idx)
-      .collect().map(_.toString).sorted
-    // append ≡ rebuild still holds with the quarter-wise debt
-    resultsBefore shouldBe
-      Ann.ivfPq(spark, sfDir).collect().map(_.toString).sorted
-
-    val hot = Ann.compactIvfIndex(spark, idx, maxFilesPerPartition = 1)
-    hot should not be empty
-
-    val after = cellFiles()
-    hot.foreach(c => after(s"c_id=$c") shouldBe 1)
-    before.filter { case (k, _) =>
-      !hot.contains(k.stripPrefix("c_id=").toLong)
-    }.foreach { case (k, n) => after(k) shouldBe n }
-    // fits byte-identical, served results identical, probe still
-    // carries the runtime pruning subquery
-    fitHash("_cent") shouldBe centBefore
-    fitHash("_fit") shouldBe fitBefore
-    val served = Ann.ivfPqIndexed(spark, sfDir, idx)
-    served.collect().map(_.toString).sorted shouldBe resultsBefore
-    served.queryExecution.executedPlan.toString
-      .toLowerCase should include("dynamicpruning")
-    // idempotent: nothing left over threshold
-    Ann.compactIvfIndex(spark, idx, maxFilesPerPartition = 1) shouldBe empty
-  }
 
   test("drift alarm fires under planted drift and stays quiet on iid") {
     val iid = tempDir("graft-drift-iid")
