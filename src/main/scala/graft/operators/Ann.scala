@@ -246,10 +246,11 @@ object Ann {
   }
 
   /** (doc_id, dim, code) rows of a (doc_id, doc_vec) frame under a
-    * given (dim, lo, hi) fit — the shared encode of the in-plan search
-    * and the index build. Codes clamp to [0, 255] (the FAISS QT_8bit
-    * encode clip): vectors outside the fit's (lo, hi) range saturate
-    * at the grid edge instead of emitting out-of-byte codes. A NaN component
+    * given (dim, lo, hi) fit — the shared encode of the in-plan search,
+    * the index build, and the frozen-fit append. Codes clamp to
+    * [0, 255] (the FAISS QT_8bit encode clip): a frozen-fit append of
+    * vectors outside the trained (lo, hi) range saturates at the grid
+    * edge instead of emitting out-of-byte codes. A NaN component
     * encodes as value 0.0 — NaN compares greatest in Spark, so without
     * the nanvl the clamp would silently saturate garbage at the top
     * grid cell 255 (ADVICE r10). */
@@ -295,8 +296,8 @@ object Ann {
   /** Persisted SQ8 serving layout: the code relation at `out`, the
     * (dim, lo, hi) fit under `out/_fit` (underscore path — invisible
     * to the postings scan, the [[Encoders.writeTfidfIndex]] `_vocab`
-    * convention). The fit travels WITH the index, so later queries
-    * need neither the corpus nor a refit. */
+    * convention). The fit travels WITH the index, so later queries and
+    * appends need neither the corpus nor a refit. */
   def writeSq8Index(spark: SparkSession, dir: String, out: String): Unit =
     Compaction.stagedBuild(spark, out) { tmp =>
       val ranges = sq8Ranges(spark, dir)
@@ -304,6 +305,18 @@ object Ann {
         .write.mode("overwrite").parquet(tmp)
       ranges.coalesce(1).write.mode("overwrite").parquet(s"$tmp/_fit")
     }
+
+  /** Frozen-fit incremental maintenance (the FAISS add-to-trained-
+    * index contract, like [[appendToIvfIndex]]): a new (doc_id,
+    * doc_vec) batch is encoded with the INDEX'S OWN stored fit — the
+    * quantization grid does not move — and appended; only the batch is
+    * scanned. A disjoint append is bit-equal to having encoded those
+    * docs at build time (per-doc codes depend only on the fit).
+    * Refit + rebuild when range drift accumulates. */
+  def appendToSq8Index(spark: SparkSession, newVecs: DataFrame,
+                       indexPath: String): Unit =
+    sq8Encode(newVecs, spark.read.parquet(s"$indexPath/_fit"))
+      .write.mode("append").parquet(indexPath)
 
   /** [[sq8Search]] answered from a persisted [[writeSq8Index]] layout —
     * no encode pass in the hot path: codes and fit read from disk,
@@ -323,7 +336,7 @@ object Ann {
 
   /** PQ codes of an arbitrary (doc_id, doc_vec) frame under a given
     * codebook — the batch-general encode behind [[writePqIndex]] and
-    * [[writeIvfPqIndex]] (same argmin/tie rule as [[pqEncode]]).
+    * [[appendToPqIndex]] (same argmin/tie rule as [[pqEncode]]).
     * Output (doc_id, j, code). */
   private def pqEncodeOf(vecs: DataFrame, cb: DataFrame): DataFrame =
     vecs.select(col("doc_id"), posexplode(array(
@@ -348,6 +361,18 @@ object Ann {
       cb.coalesce(1).write.mode("overwrite").parquet(s"$tmp/_fit")
     }
 
+  /** Frozen-fit incremental maintenance: the batch is encoded under
+    * the INDEX'S OWN stored codebook (the `_cent`/`_fit` lesson — a
+    * re-derived codebook mis-codes silently) and appended; only the
+    * batch is scanned, and a disjoint append is bit-equal to having
+    * encoded those docs at build time (codes depend only on the
+    * fit). Re-train + rebuild when codebook drift accumulates. */
+  def appendToPqIndex(spark: SparkSession, newVecs: DataFrame,
+                      indexPath: String): Unit =
+    pqEncodeOf(newVecs.select(col("doc_id"), col("doc_vec")),
+      spark.read.parquet(s"$indexPath/_fit"))
+      .write.mode("append").parquet(indexPath)
+
   /** [[pqSearch]] answered from a persisted [[writePqIndex]] layout —
     * no encode pass in the hot path: codes and codebook read from
     * disk, ADC scores the stored codes, exact re-rank finishes.
@@ -357,6 +382,11 @@ object Ann {
                 k: Int = K): DataFrame =
     pqScore(spark, dir, spark.read.parquet(indexPath),
       spark.read.parquet(s"$indexPath/_fit"), k)
+
+  /** Test seam for the append≡rebuild spec (a partial build under a
+    * caller-held codebook). */
+  private[graft] def pqEncodeForTest(vecs: DataFrame, cb: DataFrame): DataFrame =
+    pqEncodeOf(vecs, cb)
 
   /** [[pqIndexed]] over a memoized scratch build — the verified-query
     * form (`ann_pq_indexed`). */
@@ -458,6 +488,28 @@ object Ann {
       cb.coalesce(1).write.mode("overwrite").parquet(s"$tmp/_fit")
     }
 
+  /** Frozen-fit incremental maintenance for a [[writeIvfPqIndex]]
+    * layout: the batch is assigned under the index's OWN `_cent` grid
+    * and encoded under its OWN `_fit` codebook (both frozen — the
+    * FAISS add-to-trained-index contract applied to the composition),
+    * and the append writes only the batch's own cell directories.
+    * Disjoint append ≡ build-time encode (codes and assignment depend
+    * only on the fits); re-train + rebuild when [[
+    * graft.operators.Drift]]'s numbers say the fits drifted. */
+  def appendToIvfPqIndex(spark: SparkSession, newVecs: DataFrame,
+                         indexPath: String): Unit = {
+    val cent = spark.read.parquet(s"$indexPath/_cent")
+    val cb = spark.read.parquet(s"$indexPath/_fit")
+    val vecs = newVecs.select(col("doc_id"), col("doc_vec"))
+    val assign = vecs.crossJoin(broadcast(cent))
+      .groupBy("doc_id")
+      .agg(min_by(col("c_id"),
+        struct(-dot(col("doc_vec"), col("c_vec")), col("c_id"))).as("c_id"))
+    pqEncodeOf(vecs, cb)
+      .join(assign, Seq("doc_id"))
+      .write.mode("append").partitionBy("c_id").parquet(indexPath)
+  }
+
   /** [[ivfPq]] answered from a persisted [[writeIvfPqIndex]] layout:
     * both pruning levels compose against STORED artifacts — the probe
     * join DPP-prunes the code scan to the queries' nprobe cell
@@ -475,7 +527,7 @@ object Ann {
     val cb = spark.read.parquet(s"$indexPath/_fit")
     val np = if (nProbe > 0) nProbe else sqrtProbeCount(cent.count().toInt)
     val pool = if (rerank > 0) rerank else 3 * k
-    // an index built over an empty doc set holds its fits but ZERO
+    // an index built before any data arrived holds its fits but ZERO
     // code files (a partitioned write of no rows emits no parts, so
     // schema inference fails loudly rather than wrongly) — serve the
     // empty relation instead of throwing
@@ -532,7 +584,7 @@ object Ann {
   /** Centroid assignment of a doc frame against this corpus's fixed
     * centroids (broadcast; min_by argmin — the pqEncode pattern) — or
     * against trained `centroids` (the √N deployment path). Shared by
-    * the IVF and IVF+PQ index builds. */
+    * the full index build and the incremental append. */
   private def assignToIndex(spark: SparkSession, dir: String,
                             docs: DataFrame,
                             centroids: Option[DataFrame]): DataFrame = {
@@ -567,8 +619,8 @@ object Ann {
       .write.mode("overwrite").partitionBy("c_id").parquet(out)
     // the centroids travel WITH the index (r13; `_cent`, the `_fit`/
     // `_vocab` underscore convention — invisible to the partitioned
-    // scan): a trained-grid index whose searches derive or receive
-    // DIFFERENT centroids mis-probes SILENTLY
+    // scan): a trained-grid index whose searches or appends derive or
+    // receive DIFFERENT centroids mis-probes/mis-assigns SILENTLY
     // (the lists still exist, the results just degrade), so the
     // layout is self-contained and later calls need neither the
     // corpus's fixed seeds nor a caller-threaded frame.
@@ -585,6 +637,24 @@ object Ann {
     else Tables.embeddings(spark, dir).filter(col("vec_id") < NCentroids)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
   }
+
+  /** Incremental index maintenance — the serving-side ingest path: a
+    * batch of NEW vectors is assigned to the EXISTING centroids and
+    * appended into the partitioned layout. Only the new batch is
+    * scanned/assigned (a rebuild re-reads the whole corpus), the
+    * append writes only into the batch's own c_id directories, and
+    * probe-side dynamic partition pruning keeps working unchanged
+    * because the layout key is stable. Centroids intentionally do NOT
+    * move on append (the FAISS add-to-trained-index contract);
+    * re-train + rebuild when drift accumulates. */
+  def appendToIvfIndex(spark: SparkSession, dir: String,
+                       newDocs: DataFrame, out: String): Unit =
+    // frozen-fit contract done right: the batch is assigned under the
+    // INDEX'S OWN stored centroids (r13) — a trained-grid layout used
+    // to be silently mis-assigned here with the corpus-fixed seeds
+    assignToIndex(spark, dir, newDocs,
+      Some(indexCentroids(spark, dir, out)))
+      .write.mode("append").partitionBy("c_id").parquet(out)
 
   /** Probe-side search over a [[writeIvfIndex]] layout: queries pick
     * their top-NProbe centroids (broadcast), and the join against the

@@ -36,11 +36,14 @@ object Chunking {
   val Stride = 8
 
   /** (doc_id, chunk_id, start_tok, chunk_toks) for ANY frame with
-    * (doc_id, text) — pure narrow ops. `chunk_toks` is materialized once per row (a projection, not
+    * (doc_id, text) — pure narrow ops, so it applies unchanged to a
+    * streaming ingest frame ([[graft.streaming.StreamOps.chunkStream]]).
+    * `chunk_toks` is materialized once per row (a projection, not
     * repeated HOF re-evaluation) so downstream size/join/explode reuse
     * it. */
   def chunkToksOf(docs: DataFrame, w: Int = W, s: Int = Stride): DataFrame = {
-    // every non-text column rides along
+    // every non-text column rides along (e.g. the event-time column a
+    // streaming caller watermarks on)
     val keep = docs.columns.filter(_ != "text").map(col)
     docs
       .select(keep :+ tokens(col("text")).as("_toks"): _*)
@@ -58,7 +61,7 @@ object Chunking {
 
   /** [[chunkToksOf]] plus the rendered window: (…, chunk_id, start_tok,
     * n_tokens, chunk_text) — the shared projection of [[chunkSliding]]
-    * and [[chunkDedup]]. */
+    * and the streaming chunker. */
   def chunkRows(docs: DataFrame, w: Int = W, s: Int = Stride): DataFrame = {
     val ct = chunkToksOf(docs, w, s)
     val keep = ct.columns.filter(_ != "chunk_toks").map(col)

@@ -76,9 +76,10 @@ object EventsAnalytics {
   val HistNumBins = 20
 
   /** THE bin definition — shared by [[histogram]],
-    * [[windowedHistogram]] and (as [[SqlOracle.binSql]]) their oracles,
-    * so a clamping change can never drift between the verified
-    * queries. */
+    * [[windowedHistogram]], the streaming
+    * [[graft.streaming.StreamOps.histogramStream]] and (as
+    * [[SqlOracle.binSql]]) the oracles, so a clamping change can never
+    * drift between the verified queries. */
   def binCol(value: Column): Column =
     least(greatest(floor(value / HistBinWidth), lit(0.0)),
       lit((HistNumBins - 1).toDouble)).cast("long")
@@ -150,7 +151,8 @@ object EventsAnalytics {
     * arbitrary-range variant), broadcast back over the log as a pure
     * filter. No shuffle of the log itself. */
   /** Per-type (mean, std) from one fixed-point stats pass — the
-    * baseline [[anomalies]] filters against. */
+    * "trained baseline" both [[anomalies]] and the streaming
+    * [[graft.streaming.StreamOps.anomalyStream]] filter against. */
   def typeStats(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .groupBy("event_type")

@@ -450,8 +450,9 @@ object KnnGraph {
     val queries = queries0.localCheckpoint(true)
     val emb = emb0.select(col("id"), col("vec"))
     // fixed entry points (index metadata): the nSeeds smallest node
-    // ids. DISTINCT ids, not rows — a plain orderBy+limit over
-    // duplicate node rows would silently shrink the distinct
+    // ids. DISTINCT ids, not rows — a re-applied appendToGraphIndex
+    // batch leaves duplicate node rows, and a plain
+    // orderBy+limit over duplicates would silently shrink the distinct
     // entry-point set and change exploration. A persisted index
     // carries the seed set in `_meta` (seedsHint) — the ad-hoc path
     // derives it here, once.
@@ -477,8 +478,8 @@ object KnnGraph {
     val bw = resolveBeam(beam, n)
     // the sub-slice split is FROZEN at index-build time for a
     // persisted layout (subCountHint): queries must split the same
-    // way the stored band table was split — the same frozen-fit
-    // contract as the IVF `_cent` grid
+    // way the stored band table was split, across appends — the same
+    // frozen-fit contract as the IVF `_cent` grid
     val subCount =
       if (subCountHint > 0) subCountHint else subCountOf(n, seedGroup)
     // the banded node table is INDEX CONTENT, not per-search work: a
@@ -741,29 +742,40 @@ object KnnGraph {
       .partitionBy("bkt").saveAsTable(s"${name}_bands")
     val seedIds = nodes.select(col("id")).distinct().orderBy("id")
       .limit(NSeeds).collect().map(_.getLong(0)).toSeq
-    writeGraphMeta(spark, name, n, subCount, seedIds)
+    writeGraphMeta(spark, name, n, subCount, seedIds, overwrite = true)
   }
 
-  /** Metadata row for a [[writeGraphIndex]] layout — the
+  /** Metadata row(s) for a [[writeGraphIndex]] layout — the
     * `_fit`/`_vocab` convention applied to everything the serving
     * search would otherwise scan the corpus for: node count (√N
-    * auto-beam), the sub-slice split, and the fixed seed ids, in one
-    * row. At bench sizes these are metadata reads; at 100 TB a
-    * per-search corpus scan is a serving-path defect (VERDICT r12
-    * §next-2). */
+    * auto-beam), the FROZEN sub-slice split, and the fixed seed ids.
+    * The build writes the one full row; every [[appendToGraphIndex]]
+    * batch appends a count-only row and the reader sums counts. At
+    * bench sizes these are metadata reads; at 100 TB a per-search
+    * corpus scan is a serving-path defect (VERDICT r12 §next-2). */
   private def writeGraphMeta(spark: SparkSession, name: String, n: Long,
-                             subCount: Long, seeds: Seq[Long]): Unit = {
+                             subCount: Long, seeds: Seq[Long],
+                             overwrite: Boolean): Unit = {
     import spark.implicits._
-    Bucketing.reclaimOrphanedLocation(spark, s"${name}_meta")
-    Seq((n, Option(subCount).filter(_ > 0), Option(seeds)))
+    val df = Seq((n, Option(subCount).filter(_ > 0), Option(seeds)))
       .toDF("n", "sub_count", "seeds")
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${name}_meta")
+    // appends into a pre-bands single-column layout keep its schema
+    val out =
+      if (!overwrite && spark.catalog.tableExists(s"${name}_meta") &&
+          !spark.table(s"${name}_meta").columns.contains("sub_count"))
+        df.select("n")
+      else df
+    if (overwrite) Bucketing.reclaimOrphanedLocation(spark, s"${name}_meta")
+    out.write.mode(if (overwrite) "overwrite" else "append")
+      .format("parquet").saveAsTable(s"${name}_meta")
   }
 
   /** Everything [[searchIndexed]] needs from `_meta`: summed node
     * count, the build-time sub-slice split, and the seed ids — old
     * layouts (or a missing table) degrade field-by-field to the
-    * derive-it-from-the-corpus fallbacks. */
+    * derive-it-from-the-corpus fallbacks. Appended counts can
+    * over-count after an at-least-once replay; they only size the √N
+    * beam, where drift is benign. */
   final case class GraphMeta(n: Long, subCount: Long, seeds: Option[Seq[Long]])
 
   def readGraphMetaFull(spark: SparkSession,
@@ -810,6 +822,65 @@ object KnnGraph {
           Some(spark.table(s"${name}_bands")) else None,
       seedsHint = meta.seeds.map(_.toDF("id")),
       subCountHint = meta.subCount)
+  }
+
+  /** Incremental maintenance — the serving-side insert path, HNSW's
+    * insertion rule expressed batch-wise: the WHOLE new batch
+    * beam-searches the existing graph together (one shared batch
+    * search, never per-node loops), each new node's top-k results
+    * become its out-edges, and each discovered neighbor gains a
+    * reverse edge — without the reverse edge no later search could
+    * ever surface the insert, since search only travels existing
+    * edges. The append writes only new bucket files (existing files
+    * untouched); neighbors' out-degree can exceed K between rebuilds —
+    * the bounded search heaps absorb the extra fan-out, and a periodic
+    * [[buildGraph]] re-prunes. Same add-to-built-index contract as
+    * [[Ann.appendToIvfIndex]]. */
+  def appendToGraphIndex(spark: SparkSession, newNodes: DataFrame,
+                         name: String = "graft_graph",
+                         nBuckets: Int = IndexBuckets, k: Int = K): Unit = {
+    import spark.implicits._
+    val nn = newNodes.select(col("id"), col("vec"))
+    val meta = readGraphMetaFull(spark, name)
+    val res = graphSearch(
+      nn.select(col("id").as("q_id"), col("vec").as("q_vec")),
+      spark.table(s"${name}_nodes"), spark.table(s"${name}_edges"), k,
+      nHint = meta.n,
+      entriesHint =
+        if (spark.catalog.tableExists(s"${name}_bands"))
+          Some(spark.table(s"${name}_bands")) else None,
+      seedsHint = meta.seeds.map(_.toDF("id")),
+      subCountHint = meta.subCount)
+      // if a node id is already in the index (an at-least-once replay),
+      // its best match is itself — never append self-loops
+      .filter(col("q_id") =!= col("id"))
+    val fwd = res.select(col("q_id").as("src"), col("id").as("dst"), col("score"))
+    val rev = res.select(col("id").as("src"), col("q_id").as("dst"), col("score"))
+    fwd.union(rev).write.mode("append").format("parquet")
+      .bucketBy(nBuckets, "src").sortBy("src").saveAsTable(s"${name}_edges")
+    nn.write.mode("append").format("parquet")
+      .bucketBy(nBuckets, "id").sortBy("id").saveAsTable(s"${name}_nodes")
+    // the batch enters the entry table too, banded under the FROZEN
+    // build-time sub-split — without this, a later search could never
+    // ENTER at an appended node, only walk to it
+    if (spark.catalog.tableExists(s"${name}_bands")) {
+      // a bands table without its build-time split in _meta is a
+      // broken frozen-fit contract (writeGraphIndex writes both
+      // together): banding the batch under a GUESSED split would
+      // silently make appended nodes near-unreachable as entries —
+      // searches split queries with subCountOf(actual n), not the
+      // guess — so fail loudly instead
+      require(meta.subCount > 0,
+        s"${name}_bands exists but ${name}_meta has no build-time " +
+          "sub_count — the frozen-split contract is broken; rebuild " +
+          "with writeGraphIndex")
+      nodeBands(nn, meta.subCount).write.mode("append").format("parquet")
+        .partitionBy("bkt").saveAsTable(s"${name}_bands")
+    }
+    // maintain the index's node count alongside the nodes themselves
+    // (the batch scan here is over the BATCH, not the index)
+    writeGraphMeta(spark, name, nn.count(), subCount = -1L, seeds = null,
+      overwrite = false)
   }
 
   /** Mean overlap@k of graph search vs the exact cosine top-k — the

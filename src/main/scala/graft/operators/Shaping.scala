@@ -107,7 +107,8 @@ object Shaping {
     * quality filter and the n_toks computation collapse into the scan
     * projection, and the only shuffle is the dedup groupBy. */
   /** Adds (n_toks, quality, norm_hash) to any frame with a `text`
-    * column — the gate columns of the cleaning pipeline.
+    * column — the shared gate columns of the batch pipeline and its
+    * streaming form ([[graft.streaming.StreamOps.cleanDocsStream]]).
     * Token array projected ONCE per row; the four token statistics
     * then read the materialized array (SURVEY §5: a computed array
     * referenced by several expressions re-runs the tokenizer per use). */

@@ -6,7 +6,8 @@ import org.apache.spark.sql.types._
 
 /** Readers/writers for the reference's on-disk data shapes (ref:
   * data layout in PROJECT_DOCUMENTATION.txt §2 — `documents_{n}.jsonl`,
-  * CSV result summaries under experiments/results/).
+  * `queries.jsonl`, `qrels.json`, CSV/JSON result summaries under
+  * experiments/results/).
   *
   * All readers hand Spark an explicit schema so the scan never pays a
   * sampling pass, and all are plain `spark.read` plans — partitioned
@@ -23,8 +24,26 @@ object Sources {
     StructField("timestamp", StringType),
     StructField("source", StringType)))
 
+  val querySchema: StructType = StructType(Seq(
+    StructField("id", StringType),
+    StructField("query", StringType)))
+
   def readDocumentsJsonl(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(documentSchema).json(path)
+
+  def readQueriesJsonl(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(querySchema).json(path)
+
+  /** qrels.json is one object {qid: [docid, ...]} (ref
+    * auto_run_tests.py:509-510); exploded to (q_id, doc_id) rows.
+    * A whole-file JSON object is driver-light but single-record, so it
+    * is read in wholeText mode and exploded distributively. */
+  def readQrelsJson(spark: SparkSession, path: String): DataFrame = {
+    val raw = spark.read.option("wholetext", "true").text(path)
+    raw.select(explode(
+        from_json(col("value"), MapType(StringType, ArrayType(StringType)))).as(Seq("q_id", "docs")))
+      .select(col("q_id"), explode(col("docs")).as("doc_id"))
+  }
 
   /** Writes a documents frame in the ref's JSONL corpus layout
     * (one {"id","text","category","timestamp","source"} object per
@@ -99,6 +118,9 @@ object Sources {
     if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
     java.nio.file.Files.writeString(p, md)
   }
+
+  def readSummaryCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).option("header", "true").csv(path)
 
   // ---------- Verified round-trip queries (SURVEY §2) ----------
   // The readers/writers above are exercised by unit tests; these two

@@ -5,82 +5,25 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
-import graft.Tables
 import graft.functions.{fxSum, rnd}
+import graft.operators.EventsAnalytics.SessionGapMin
 
 /** Streaming operators (the ref ingests in streaming batches —
   * ingestion/ingest.py:52-80 `run_*_ingest_stream`; here re-expressed
-  * as Structured Streaming).
+  * as Structured Streaming), exercised in ScalaTest via memory and
+  * file sources.
   *
-  * Each operator comes in two forms with identical semantics:
-  *  - a *streaming* form (`readStream`/`writeStream`, watermarks,
-  *    `flatMapGroupsWithState`) exercised in ScalaTest via rate/memory
-  *    sources, and
-  *  - a *batch-equivalent* form over the events table, which is what the
-  *    DuckDB oracle verifies (a correct streaming windowed agg must
-  *    produce exactly the batch answer once the watermark closes).
+  * Each is the streaming form of a batch operator in
+  * [[graft.operators.EventsAnalytics]], [[graft.operators.Dedup]],
+  * [[graft.operators.Shaping]] or [[graft.operators.Chunking]] with
+  * identical semantics: a correct streaming windowed agg must produce
+  * exactly the batch answer once the watermark closes. The batch forms
+  * are what the verified queries run and the DuckDB oracle checks.
   */
 object StreamOps {
-  val SessionGapMin = 30
-
-  // ---------- batch-equivalent (verified) forms ----------
-
-  /** Event-time hourly windowed counts/sums per event_type. */
-  def windowedAggBatch(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), rnd(fxSum(col("value"), 6), 4).as("sum_value"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
-      .orderBy("window_start", "event_type")
-
-  /** Sliding-window counts/sums (1-hour windows, 30-minute slide):
-    * every event contributes to exactly two windows. Spark expands the
-    * window set at the map side; the oracle mirrors the expansion with
-    * an explicit two-start unnest. */
-  def slidingAggBatch(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), rnd(fxSum(col("value"), 6), 4).as("sum_value"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
-      .orderBy("window_start", "event_type")
-
-  /** Hourly-window per-type binned value counts — the batch-equivalent
-    * (verified) form of [[histogramStream]]: same binning map, same
-    * windowed aggregate, minus the watermark. */
-  def histogramBatch(spark: SparkSession, dir: String): DataFrame = {
-    val bin = graft.operators.EventsAnalytics.binCol(col("value"))
-    Tables.events(spark, dir)
-      .select(col("ts"), col("event_type"), bin.as("bin"))
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"), col("bin"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("bin"), col("cnt"))
-      .orderBy("window_start", "event_type", "bin")
-  }
-
-  /** Trending detection: the top-3 event types per hourly window by
-    * event count (ties by type name). The rank runs AFTER the windowed
-    * aggregation — the frame is already reduced to (windows × types)
-    * rows, so the partitioned row_number sorts a handful of rows per
-    * window, not the event stream; the only full-data shuffle is the
-    * windowed groupBy with map-side partials. */
-  def trendingTopKBatch(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val counts = Tables.events(spark, dir)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    counts
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("w").orderBy(col("n").desc, col("event_type"))).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("w.start").as("window_start"), col("rank"),
-        col("event_type"), col("n"))
-      .orderBy("window_start", "rank")
-  }
-
-  /** Streaming form of [[trendingTopKBatch]]: watermarked windowed
-    * counts (append mode — a window is emitted once, when it closes),
+  /** Streaming form of [[graft.operators.EventsAnalytics.trendingTopK]]:
+    * watermarked windowed counts (append mode — a window is emitted
+    * once, when it closes),
     * then the per-window top-k rank runs in foreachBatch over the few
     * CLOSED window rows of that micro-batch. Ranking state never grows:
     * each batch ranks only windows finalized in it. */
@@ -100,28 +43,6 @@ object StreamOps {
           .select(col("w.start").as("window_start"), col("rank"),
             col("event_type"), col("n")))
       }
-
-  /** Sessionization with a 30-minute inactivity gap: batch equivalent
-    * via lag + cumulative session starts (single shuffle on user_id). */
-  def sessionizeBatch(spark: SparkSession, dir: String): DataFrame = {
-    val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val cum = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.events(spark, dir)
-      .withColumn("prev_ts", lag("ts", 1).over(byUser))
-      .withColumn("new_sess",
-        when(col("prev_ts").isNull ||
-          unix_millis(col("ts")) - unix_millis(col("prev_ts")) > SessionGapMin * 60000L,
-          1L).otherwise(0L))
-      .withColumn("sess_id", sum("new_sess").over(cum))
-      .groupBy("user_id", "sess_id")
-      .agg(min("ts").as("session_start"),
-        count(lit(1)).as("n_events"),
-        (unix_millis(max("ts")) - unix_millis(min("ts"))).as("duration_ms"))
-      .orderBy("user_id", "sess_id")
-  }
-
-  // ---------- streaming forms (tested with MemoryStream) ----------
 
   /** File-source streaming read of an events directory (parquet), with
     * the same nanos→µs timestamp handling as the batch reader. New
@@ -481,324 +402,4 @@ object StreamOps {
           }
       }
   }
-
-  object SqlOracle {
-    val windowedAgg: String =
-      s"""SELECT date_trunc('hour', ts) AS window_start, event_type,
-        |  count(*) AS n, (floor((${graft.functions.Sql.fxSum("value", 6)}) * 1e4 + 0.5e0) / 1e4) AS sum_value
-        |FROM events GROUP BY window_start, event_type
-        |ORDER BY window_start, event_type""".stripMargin
-
-    val slidingAgg: String =
-      s"""WITH ev AS (SELECT * FROM ${graft.functions.Sql.eventsUs} e),
-         |x AS (
-         |  SELECT event_type, value,
-         |    date_trunc('hour', ts) + CASE WHEN minute(ts) >= 30
-         |      THEN INTERVAL 30 MINUTE ELSE INTERVAL 0 MINUTE END AS b
-         |  FROM ev),
-         |w AS (
-         |  SELECT unnest([b - INTERVAL 30 MINUTE, b]) AS window_start,
-         |    event_type, value
-         |  FROM x)
-         |SELECT window_start, event_type, count(*) AS n,
-         |  (floor((${graft.functions.Sql.fxSum("value", 6)}) * 1e4 + 0.5e0) / 1e4) AS sum_value
-         |FROM w GROUP BY window_start, event_type
-         |ORDER BY window_start, event_type""".stripMargin
-
-    val histogram: String =
-      s"""WITH b AS (
-         |  SELECT date_trunc('hour', ts) AS window_start, event_type,
-         |    ${graft.operators.EventsAnalytics.SqlOracle.binSql} AS bin
-         |  FROM events)
-         |SELECT window_start, event_type, bin, count(*) AS cnt
-         |FROM b GROUP BY window_start, event_type, bin
-         |ORDER BY window_start, event_type, bin""".stripMargin
-
-    val trendingTopK: String =
-      s"""WITH counts AS (
-         |  SELECT date_trunc('hour', ts) AS window_start, event_type,
-         |    count(*) AS n
-         |  FROM ${graft.functions.Sql.eventsUs} e
-         |  GROUP BY window_start, event_type),
-         |ranked AS (
-         |  SELECT window_start, event_type, n,
-         |    row_number() OVER (PARTITION BY window_start
-         |                       ORDER BY n DESC, event_type) AS rank
-         |  FROM counts)
-         |SELECT window_start, CAST(rank AS BIGINT) AS rank, event_type, n
-         |FROM ranked WHERE rank <= 3
-         |ORDER BY window_start, rank""".stripMargin
-
-    val sessionize: String =
-      s"""WITH x AS (
-         |  SELECT user_id, ts, event_id,
-         |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-         |  FROM ${graft.functions.Sql.eventsUs} events),
-         |y AS (
-         |  SELECT user_id, ts, event_id,
-         |    CASE WHEN prev_ts IS NULL
-         |           OR epoch_ms(ts) - epoch_ms(prev_ts) > ${SessionGapMin * 60000} THEN 1 ELSE 0 END AS new_sess
-         |  FROM x),
-         |z AS (
-         |  SELECT user_id, ts,
-         |    sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-         |                        ROWS UNBOUNDED PRECEDING) AS sess_id
-         |  FROM y)
-         |SELECT user_id, CAST(sess_id AS BIGINT) AS sess_id, min(ts) AS session_start,
-         |  count(*) AS n_events,
-         |  CAST(epoch_ms(max(ts)) - epoch_ms(min(ts)) AS BIGINT) AS duration_ms
-         |FROM z GROUP BY user_id, sess_id
-         |ORDER BY user_id, sess_id""".stripMargin
-  }
-
-  // ---------- streaming index ingest (serving-side write path) ----------
-
-  /** Streaming ANN ingest into the persisted GRAPH index — the ref's
-    * serving-side ingest loop (ingestion/ingest.py:52-80 drip-feeds
-    * vectors into the index) over a [[graft.operators.KnnGraph
-    * .writeGraphIndex]] layout: every micro-batch of (id, vec) rows
-    * runs the batch insert rule (beam-search the existing graph for
-    * neighbors → forward + reverse edges → bucket-aligned appends).
-    *
-    * Delivery semantics: the checkpoint gives at-least-once appends —
-    * a batch replayed across a crash re-appends its rows. That is
-    * semantically EXACTLY-ONCE for every reader of this index: scores
-    * are deterministic, self-loops are filtered at append, and every
-    * search-side keep runs through the id-distinct bounded heap, so
-    * duplicate node/edge rows collapse before any result
-    * (StreamingSpec asserts a full duplicate re-ingest changes no
-    * search result). */
-  def annIngestStream(vecs: DataFrame, indexName: String,
-                      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.KnnGraph.appendToGraphIndex(
-            batch.sparkSession, batch, indexName)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-
-  /** Streaming ingest into the partitioned IVF index
-    * ([[graft.operators.Ann.writeIvfIndex]]): each micro-batch of
-    * (doc_id, doc_vec) rows is assigned to the FIXED trained centroids
-    * and appended into its `c_id=` directories. Unlike the graph path,
-    * a replayed IVF append is NOT absorbed by a distinct heap at read
-    * time, so each batch is anti-joined against the index's existing
-    * doc_ids first — replays and overlapping feeds become no-ops and
-    * the append is idempotent by construction (the doc_id column is
-    * pruned straight off the index scan). */
-  def ivfIngestStream(docs: DataFrame, dir: String, indexPath: String,
-                      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val existing = spark.read.parquet(indexPath).select("doc_id")
-        // dedupe WITHIN the batch too: a producer retry can land the
-        // same doc twice in one trigger, where the index anti-join
-        // can't see it — one row per doc_id keeps the index invariant
-        val fresh = batch.dropDuplicates("doc_id")
-          .join(existing, Seq("doc_id"), "left_anti")
-        if (!fresh.isEmpty)
-          graft.operators.Ann.appendToIvfIndex(spark, dir, fresh, indexPath)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-
-  /** Streaming ingest into the persisted hashing-TF postings index
-    * ([[graft.operators.Encoders.writeHashingIndex]]): each
-    * micro-batch of (doc_id, text) documents is tokenized/bucketed
-    * FROM THE BATCH ALONE (per-doc norms make a disjoint append
-    * bit-equal to a rebuild) and appended to the stored layout. Same
-    * idempotence discipline as [[ivfIngestStream]]: a replayed or
-    * overlapping batch is anti-joined against the index's existing
-    * doc_ids, so at-least-once delivery becomes an exactly-once
-    * index. Self-seeding: a missing layout means nothing to dedupe
-    * against, and the first appended batch creates it. */
-  /** The two analysis conditions that genuinely mean "no layout yet":
-    * the path does not exist, or it exists but holds only
-    * underscore-hidden fit files (`_vocab`/`_fit`) so parquet cannot
-    * infer a schema. Anything else is a real analysis failure. */
-  private val MissingLayoutConditions =
-    Seq("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-
-  /** Batch-minus-stored anti-join shared by every write-time-idempotent
-    * ingest stream, with the "no layout yet" case NARROWED to
-    * [[MissingLayoutConditions]] (ADVICE r11): any other
-    * AnalysisException — schema drift, a store missing `key` —
-    * propagates and fails the stream instead of silently disabling
-    * dedup, which would append duplicates that later replays freeze in
-    * place. The stored side is not pre-distinct'd: anti-join semantics
-    * are duplicate-insensitive, so the extra pre-aggregation shuffle
-    * buys nothing. */
-  private def minusStored(unique: DataFrame, path: String,
-                          key: String = "doc_id"): DataFrame = {
-    val spark = unique.sparkSession
-    val existing =
-      try Some(spark.read.parquet(path).select(key))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if Option(e.getCondition).exists(c =>
-              MissingLayoutConditions.exists(c.startsWith)) => None
-      }
-    existing.fold(unique)(ex => unique.join(ex, Seq(key), "left_anti"))
-  }
-
-  def postingsIngestStream(docs: DataFrame, indexPath: String,
-                           checkpointDir: String, dim: Int = graft.operators.Encoders.Dim)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        // dedupe WITHIN the batch first (a producer retry can land the
-        // same doc twice in one trigger, where the index anti-join
-        // can't see it): duplicated postings would double cnt/norm and
-        // then be frozen forever by the anti-join on later replays
-        val fresh = minusStored(batch.dropDuplicates("doc_id"), indexPath)
-        if (!fresh.isEmpty)
-          graft.operators.Encoders.appendToHashingIndex(spark, fresh, indexPath, dim)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-
-  /** Streaming ingest into a persisted TF-IDF index
-    * ([[graft.operators.Encoders.writeTfidfIndex]]) under its FROZEN
-    * fit: each micro-batch of (doc_id, text) documents is weighted
-    * with the index's own stored `_vocab` (idf never moves — the ref's
-    * fitted-TfidfVectorizer transform contract, encoder.py:76-92) and
-    * appended. NOT self-seeding, by design: the frozen fit must exist
-    * before any transform, so the index is created by a batch
-    * [[graft.operators.Encoders.writeTfidfIndex]] build (possibly over
-    * an empty corpus snapshot, leaving just `_vocab`) and the stream
-    * only appends. Idempotence is the [[postingsIngestStream]]
-    * discipline: intra-batch dropDuplicates + anti-join against the
-    * index's existing doc_ids, so at-least-once delivery and full
-    * replays land exactly once. Refit + rebuild when drift
-    * accumulates, exactly like the IVF centroid contract. */
-  def tfidfIngestStream(docs: DataFrame, indexPath: String,
-                        checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        // vocab-only layout (fresh index, no postings yet) is the
-        // UNABLE_TO_INFER_SCHEMA arm of minusStored — `_vocab` is
-        // underscore-hidden from the postings read, so that is the
-        // empty-snapshot case, not a missing index (that throws in the
-        // append); any other analysis failure propagates
-        val fresh = minusStored(batch.dropDuplicates("doc_id"), indexPath)
-        if (!fresh.isEmpty)
-          graft.operators.Encoders.appendToTfidfIndex(spark, fresh, indexPath)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-
-  /** Streaming ingest into a persisted SQ8 code layout
-    * ([[graft.operators.Ann.writeSq8Index]]) under its FROZEN stored
-    * `_fit`: each micro-batch of (doc_id, doc_vec) rows is encoded
-    * with the index's own quantization grid (the FAISS
-    * add-to-trained-index contract) and appended. NOT self-seeding
-    * (the fit must exist first — same contract as
-    * [[tfidfIngestStream]]); idempotent via intra-batch
-    * dropDuplicates + the doc_id anti-join. Refit + rebuild when
-    * range drift accumulates. */
-  def sq8IngestStream(vecs: DataFrame, indexPath: String,
-                      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        // fit-only layout (fresh index, no codes yet — `_fit` is
-        // underscore-hidden from the codes read) is minusStored's
-        // UNABLE_TO_INFER_SCHEMA arm; real analysis failures propagate
-        val fresh = minusStored(batch.dropDuplicates("doc_id"), indexPath)
-        if (!fresh.isEmpty)
-          graft.operators.Ann.appendToSq8Index(spark, fresh, indexPath)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-
-  /** Streaming ingest into a persisted PQ-codes index
-    * ([[graft.operators.Ann.writePqIndex]]): each micro-batch of
-    * (doc_id, doc_vec) vectors is encoded under the index's OWN
-    * stored `_fit` codebook (frozen-fit — codes depend only on the
-    * fit, so disjoint append ≡ rebuild) and appended. Same
-    * at-least-once idempotence discipline as [[sq8IngestStream]]. */
-  def pqIngestStream(vecs: DataFrame, indexPath: String,
-                     checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val fresh = minusStored(batch.dropDuplicates("doc_id"), indexPath)
-        if (!fresh.isEmpty)
-          graft.operators.Ann.appendToPqIndex(spark, fresh, indexPath)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-
-  /** Streaming ingest into a persisted IVF+PQ composed index
-    * ([[graft.operators.Ann.writeIvfPqIndex]]): each micro-batch is
-    * assigned under the stored `_cent` grid AND encoded under the
-    * stored `_fit` codebook (both frozen), appending only into the
-    * batch's own cell directories. Same at-least-once idempotence
-    * discipline as [[pqIngestStream]]. */
-  def ivfPqIngestStream(vecs: DataFrame, indexPath: String,
-                        checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val fresh = minusStored(batch.dropDuplicates("doc_id"), indexPath)
-        if (!fresh.isEmpty)
-          graft.operators.Ann.appendToIvfPqIndex(spark, fresh, indexPath)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-
-  /** Streaming ingest into a persisted chunk-postings index
-    * ([[graft.operators.Chunking.writeChunkIndex]]): each micro-batch
-    * of (doc_id, text) documents is chunked/bucketed from the batch
-    * alone (per-CHUNK norms ⇒ disjoint append ≡ rebuild) and
-    * appended. Self-seeding and idempotent — the
-    * [[postingsIngestStream]] discipline at chunk granularity. */
-  def chunkIndexIngestStream(docs: DataFrame, indexPath: String,
-                             checkpointDir: String,
-                             dim: Int = graft.operators.Encoders.Dim,
-                             w: Int = graft.operators.Chunking.W,
-                             s: Int = graft.operators.Chunking.Stride)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val fresh = minusStored(batch.dropDuplicates("doc_id"), indexPath)
-        if (!fresh.isEmpty)
-          graft.operators.Chunking.appendToChunkIndex(spark, fresh, indexPath,
-            dim, w, s)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
-
-  /** Streaming maintenance of the span-dedup window-hash STORE
-    * ([[graft.operators.Dedup.spanIncremental]]'s corpus-side
-    * artifact): each micro-batch's distinct w-token window hashes are
-    * appended — minus those already stored, so the store stays a SET
-    * and a full replay is a no-op (write-time idempotent, the
-    * postings-ingest discipline). Self-seeding: the first batch
-    * creates the layout. At 100 TB this is how the between-runs hash
-    * store tracks a live feed without ever re-scanning the corpus. */
-  def spanStoreIngestStream(docs: DataFrame, storePath: String,
-                            checkpointDir: String,
-                            w: Int = graft.operators.Dedup.SpanW)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val hashes = graft.operators.Dedup.windowHashes(
-          batch.dropDuplicates("doc_id"), w)
-        val fresh = minusStored(hashes, storePath, key = "h")
-        if (!fresh.isEmpty)
-          fresh.write.mode("append").parquet(storePath)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
 }

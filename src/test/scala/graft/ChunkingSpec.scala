@@ -79,6 +79,34 @@ class ChunkingSpec extends AnyFunSuite with Matchers with SharedSpark {
     plan should not include "BroadcastNestedLoopJoin"
   }
 
+  test("chunkStream equals the batch chunker on the same docs") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp, String)]
+    val q = graft.streaming.StreamOps.chunkStream(
+        input.toDF().toDF("doc_id", "ts", "text"))
+      .writeStream.format("memory").queryName("schunks")
+      .outputMode("append").start()
+    try {
+      val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+      val docs = Seq(
+        (1L, t0, (1 to 40).map(i => s"w$i").mkString(" ")), // multi-chunk
+        (2L, t0, "just five short tokens here"),            // single chunk
+        (3L, t0, (1 to 17).map(i => s"t$i").mkString(" "))) // boundary: W+1
+      input.addData(docs: _*)
+      q.processAllAvailable()
+      val streamed = spark.table("schunks")
+        .select("doc_id", "chunk_id", "start_tok", "n_tokens", "chunk_text")
+        .collect().map(_.toString).sorted
+      val batch = Chunking.chunkRows(docs.toDF("doc_id", "ts", "text"))
+        .select("doc_id", "chunk_id", "start_tok", "n_tokens", "chunk_text")
+        .collect().map(_.toString).sorted
+      streamed shouldBe batch
+      streamed.length should be > 3 // doc 1 exploded into several windows
+    } finally q.stop()
+  }
+
   test("a doc whose best chunk matches outranks a doc with diffuse overlap") {
     // against whole-doc search, chunk max-pool favors locally dense
     // matches; sanity: both pipelines retrieve overlapping candidates

@@ -37,22 +37,34 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with SharedSpark {
 
 class SourcesSpec extends AnyFunSuite with Matchers with SharedSpark {
 
-  test("JSONL documents read with the reference schema; summary CSV round-trips") {
+  test("JSONL documents/queries and qrels.json round-trip") {
     val dir = new java.io.File(tempDir("graft-sources"))
     val docs = new java.io.File(dir, "documents.jsonl")
     Files.writeString(docs.toPath,
       """{"id":"d1","text":"hello world","category":"c1","timestamp":"2024-01-01","source":"s1"}
         |{"id":"d2","text":"more text","category":"c2","timestamp":"2024-01-02","source":"s2"}
         |""".stripMargin)
+    val queries = new java.io.File(dir, "queries.jsonl")
+    Files.writeString(queries.toPath,
+      """{"id":"q1","query":"hello"}
+        |""".stripMargin)
+    val qrels = new java.io.File(dir, "qrels.json")
+    Files.writeString(qrels.toPath, """{"q1": ["d1", "d2"], "q2": ["d2"]}""")
 
     val d = Sources.readDocumentsJsonl(spark, docs.getAbsolutePath)
     d.count() shouldBe 2
     d.schema.fieldNames.toSeq shouldBe Seq("id", "text", "category", "timestamp", "source")
+    Sources.readQueriesJsonl(spark, queries.getAbsolutePath).count() shouldBe 1
+    val qr = Sources.readQrelsJson(spark, qrels.getAbsolutePath)
+    qr.count() shouldBe 3
+    qr.filter(col("q_id") === "q1").count() shouldBe 2
 
     val out = new java.io.File(dir, "summary")
     Sources.writeSummaryCsv(d.groupBy("category").count(), out.getAbsolutePath)
-    val back = spark.read.schema("category STRING, count BIGINT")
-      .option("header", "true").csv(out.getAbsolutePath)
+    val back = Sources.readSummaryCsv(spark, out.getAbsolutePath,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("category", org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("count", org.apache.spark.sql.types.LongType))))
     back.count() shouldBe 2
   }
 
@@ -258,7 +270,7 @@ class SkewSpec extends AnyFunSuite with Matchers with SharedSpark {
     row.getAs[Long]("n_queries") shouldBe 5L
     row.getAs[Double]("encode_sec") should be > 0.0
     val schema = StructType(out.schema.map(f => f.copy(dataType = StringType)))
-    val back = spark.read.schema(schema).option("header", "true").csv(s"$tmp/summary")
+    val back = Sources.readSummaryCsv(spark, s"$tmp/summary", schema)
     back.count() shouldBe 1
     back.collect()(0).getAs[String]("model") shouldBe "hashing_tf"
   }

@@ -163,6 +163,23 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
     }
   }
 
+  test("day-partitioned layout: range predicate prunes partitions at planning time") {
+    val tmp = tempDir("graft-part")
+    Bucketing.writePartitionedByDay(Tables.events(spark, sfDir), tmp)
+    val all = spark.read.parquet(tmp)
+    val days = all.select("day").distinct().orderBy("day")
+      .collect().map(_.get(0).toString) // partition col may infer as DATE
+    days.length should be > 1
+    val one = Bucketing.readDayRange(spark, tmp, days.head, days.head)
+    // the day predicate is a PARTITION filter (planning-time pruning),
+    // not a data filter pushed into row groups
+    val p = plan(one)
+    p should include("PartitionFilters: [isnotnull(day")
+    p should not include "PushedFilters: [IsNotNull(day"
+    one.count() should be > 0L
+    one.count() should be < all.count()
+  }
+
   test("minhash LSH: no cartesian product anywhere") {
     val p = plan(Dedup.minhashLsh(spark, sfDir))
     p should not include "CartesianProduct"
@@ -234,6 +251,20 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
     val direct = Ann.ivf(spark, sfDir)
     indexed.exceptAll(direct).count() shouldBe 0
     direct.exceptAll(indexed).count() shouldBe 0
+  }
+
+  test("incremental IVF index: appending a batch equals a full rebuild") {
+    val tmp = tempDir("graft-ivfapp")
+    val docs = Knn.docSet(spark, sfDir)
+    // build on the even half, then ingest the odd half as a new batch
+    Ann.writeIvfIndex(spark, sfDir, tmp,
+      Some(docs.filter(pmod(col("doc_id"), lit(2)) === 0)))
+    Ann.appendToIvfIndex(spark, sfDir,
+      docs.filter(pmod(col("doc_id"), lit(2)) === 1), tmp)
+    val appended = Ann.ivfIndexed(spark, sfDir, tmp)
+    val direct = Ann.ivf(spark, sfDir)
+    appended.exceptAll(direct).count() shouldBe 0
+    direct.exceptAll(appended).count() shouldBe 0
   }
 
   test("range join plans as an equi-join on time buckets, never a nested loop") {

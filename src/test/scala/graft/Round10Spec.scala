@@ -60,7 +60,7 @@ class Round10Spec extends AnyFunSuite with Matchers with SharedSpark {
 
   test("sq8Encode clamps out-of-fit values to [0, 255] (FAISS encode clip)") {
     import spark.implicits._
-    // fit trained on [0, 1] per dim; later vectors drift far outside
+    // fit trained on [0, 1] per dim; appended vectors drift far outside
     val ranges = Seq((1L, 0.0, 1.0), (2L, 0.0, 1.0)).toDF("dim", "lo", "hi")
     val drifted = Seq(
       (1L, Array(-5.0f, 0.5f)), // below fit -> 0
@@ -79,6 +79,29 @@ class Round10Spec extends AnyFunSuite with Matchers with SharedSpark {
       c should be >= 0L
       c should be <= 255L
     }
+  }
+
+  test("sq8 frozen-fit append of drifted vectors stays byte-codable") {
+    import spark.implicits._
+    val idx = tempDir("graft-sq8clamp")
+    val base = (0L until 20L).map(i =>
+      (i, Array.tabulate(VectorCore.Dim)(d => ((i + d) % 7).toFloat / 7f)))
+      .toDF("doc_id", "doc_vec")
+    val fitSrc = tempDir("graft-sq8fitsrc")
+    // writeSq8Index reads via Knn.docSet(dir); emulate with direct calls
+    val ranges = base
+      .select(posexplode(col("doc_vec")).as(Seq("dim0", "x")))
+      .select((col("dim0") + 1).cast("long").as("dim"), col("x").cast("double").as("v"))
+      .groupBy("dim").agg(min("v").as("lo"), max("v").as("hi"))
+    Ann.sq8Encode(base, ranges).write.mode("overwrite").parquet(idx)
+    ranges.coalesce(1).write.mode("overwrite").parquet(s"$idx/_fit")
+    val drifted = Seq((999L, Array.fill(VectorCore.Dim)(1e6f))).toDF("doc_id", "doc_vec")
+    Ann.appendToSq8Index(spark, drifted, idx)
+    val appended = spark.read.parquet(idx).filter(col("doc_id") === 999L)
+      .select("code").collect().map(_.getLong(0))
+    appended should have length VectorCore.Dim.toLong
+    appended.foreach(_ shouldBe 255L) // saturated at the grid edge, not > 255
+    fitSrc should not be null
   }
 
   test("gramMatrix on an empty embeddings table returns zero rows") {

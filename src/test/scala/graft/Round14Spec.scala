@@ -6,9 +6,13 @@ import org.scalatest.matchers.should.Matchers
 import graft.operators.{Ann, Compaction, Encoders, Knn, KnnGraph}
 
 /** Round-14 pins: staged (atomic) fit-carrying index builds, the
-  * hybridTextStd arm-depth guard, the incremental-pool walk, and the
-  * persisted IVF+PQ layout. */
+  * hybridTextStd arm-depth guard, the bands-without-split loud failure,
+  * the incremental-pool walk, and the persisted IVF+PQ layout. */
 class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
+
+  private def dropGraph(name: String): Unit =
+    Seq("edges", "nodes", "meta", "bands").foreach(s =>
+      spark.sql(s"DROP TABLE IF EXISTS ${name}_$s"))
 
   test("staged index build: a failed rebuild leaves the old index intact and readable") {
     val idx = s"${tempDir("graft-staged")}/codes"
@@ -66,6 +70,28 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
     Encoders.hybridTextStd(spark, sfDir).count() should be > 0L
   }
 
+  test("append with bands but no frozen split fails loudly, not near-unreachably") {
+    val name = "g14m"
+    dropGraph(name)
+    KnnGraph.writeGraphIndex(spark, sfDir, name = name)
+    try {
+      // corrupt the contract: replace _meta with a legacy n-only shape
+      // while _bands still exists (nothing else enforces they travel
+      // together — ADVICE r13)
+      import spark.implicits._
+      val n = KnnGraph.readGraphMeta(spark, name)
+      spark.sql(s"DROP TABLE IF EXISTS ${name}_meta")
+      operators.Bucketing.reclaimOrphanedLocation(spark, s"${name}_meta")
+      Seq(n).toDF("n").write.format("parquet").saveAsTable(s"${name}_meta")
+      val newNodes = Knn.querySet(spark, sfDir)
+        .select(col("q_id").as("id"), col("q_vec").as("vec"))
+      val e = intercept[IllegalArgumentException] {
+        KnnGraph.appendToGraphIndex(spark, newNodes, name)
+      }
+      e.getMessage should include("frozen-split")
+    } finally dropGraph(name)
+  }
+
   test("incremental-pool walk is bit-equal to the cumulative-state walk") {
     // the r14 exactness claim (SURVEY §7.23 cap arithmetic): the pooled
     // walk must reproduce the cumulative walk's results EXACTLY — same
@@ -87,9 +113,18 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
     }
   }
 
-  test("ivf-pq persisted layout: served ≡ in-plan bit-identically; probe is DPP-pruned") {
-    val full = s"${tempDir("graft-ivfpq")}/full"
+  test("ivf-pq persisted layout: append ≡ rebuild bit-identically; probe is DPP-pruned") {
+    val base = tempDir("graft-ivfpq")
+    val full = s"$base/full"; val half = s"$base/half"
     Ann.writeIvfPqIndex(spark, sfDir, full)
+    // frozen-fit append contract: build from the even half, append the
+    // odd half under the stored fits — must equal the full build
+    val docs = Knn.docSet(spark, sfDir)
+    Ann.writeIvfPqIndex(spark, sfDir, half,
+      docs = Some(docs.filter(col("doc_id") % 2 === 0)))
+    Ann.appendToIvfPqIndex(spark, docs.filter(col("doc_id") % 2 === 1), half)
+    spark.read.parquet(half).collect().map(_.toString).sorted shouldBe
+      spark.read.parquet(full).collect().map(_.toString).sorted
     // the served form answers identically to the in-plan composition
     // (the shared-oracle claim), and its probe carries runtime pruning
     val served = Ann.ivfPqIndexed(spark, sfDir, full)

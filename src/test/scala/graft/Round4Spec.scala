@@ -1,13 +1,15 @@
 package graft
 
+import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.operators._
 
 /** Round-4 additions: NDCG/MRR eval, IVF+PQ composed search, source
-  * round-trips, trending top-k, events analytics. */
+  * round-trips, trending top-k (batch + streaming). */
 class Round4Spec extends AnyFunSuite with Matchers with SharedSpark {
 
   private def collectSet(df: DataFrame): Set[String] =
@@ -181,6 +183,41 @@ class Round4Spec extends AnyFunSuite with Matchers with SharedSpark {
     }
   }
 
+  test("trendingTopKStream: closed windows match the batch top-k") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    def ts(minute: Int): Timestamp =
+      Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
+    val input = MemoryStream[(Timestamp, String, Double)]
+    val events = input.toDF().toDF("ts", "event_type", "value")
+    val got = scala.collection.mutable.ArrayBuffer.empty[String]
+    val q = graft.streaming.StreamOps.trendingTopKStream(events) { batch =>
+      got.synchronized { got ++= batch.collect().map(_.toString) }
+    }.start()
+    try {
+      // events in hours 0-2, then a late watermark pusher at minute 400:
+      // watermark 400-120 = 280 ⇒ hourly windows ending ≤ 280 min close
+      val data = (0 until 180 by 7).map(m =>
+        (ts(m), Seq("a", "b", "c", "d")(m % 4), 1.0)) :+ ((ts(400), "z", 1.0))
+      input.addData(data: _*)
+      q.processAllAvailable()
+      input.addData((ts(401), "z", 1.0)) // flush: emit windows closed by 400
+      q.processAllAvailable()
+      val batchAll = data.toDF("ts", "event_type", "value")
+        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .withColumn("rank", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("w")
+            .orderBy(col("n").desc, col("event_type"))).cast("long"))
+        .filter(col("rank") <= 3 &&
+          col("w.start") < lit(ts(280))) // only closed windows
+        .select(col("w.start").as("window_start"), col("rank"),
+          col("event_type"), col("n"))
+      got.toSet shouldBe batchAll.collect().map(_.toString).toSet
+    } finally q.stop()
+  }
+
   test("text_repetition matches a driver-side recomputation") {
     val texts = Tables.documents(spark, sfDir).select("doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -210,6 +247,207 @@ class Round4Spec extends AnyFunSuite with Matchers with SharedSpark {
       (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3),
         r.getLong(4), r.getDouble(5))).toSet
     got shouldBe expected
+  }
+
+  test("funnelStream: out-of-order arrival converges to the batch funnel semantics") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    def ts(minute: Int): Timestamp =
+      Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
+    def ev(id: Long, m: Int, u: Long, t: String) =
+      graft.streaming.StreamOps.Ev(id, ts(m), u, t, 1.0)
+    val input = MemoryStream[graft.streaming.StreamOps.Ev]
+    val q = graft.streaming.StreamOps.funnelStream(input.toDS())
+      .writeStream.format("memory").queryName("funnel")
+      .outputMode("update").start()
+    try {
+      // user 1 completes the funnel but arrives OUT of order;
+      // user 2's click precedes their first view -> must stay stage 1
+      input.addData(
+        ev(1, 20, 1, "click"), ev(2, 30, 1, "purchase"), ev(3, 10, 1, "view"),
+        ev(4, 5, 2, "click"), ev(5, 15, 2, "view"))
+      q.processAllAvailable()
+      input.addData(ev(6, 400, 99, "view")) // watermark pusher
+      q.processAllAvailable()
+      input.addData(ev(7, 401, 99, "view")) // fire remaining timeouts
+      q.processAllAvailable()
+      val rows = spark.table("funnel")
+        .as[graft.streaming.StreamOps.FunnelOut].collect()
+      val u1 = rows.filter(_.user_id == 1L).maxBy(_.stage)
+      (u1.stage, u1.t1_us, u1.t2_us, u1.t3_us) shouldBe
+        (3L, ts(10).getTime * 1000, ts(20).getTime * 1000, ts(30).getTime * 1000)
+      val u2 = rows.filter(_.user_id == 2L).maxBy(_.stage)
+      (u2.stage, u2.t1_us, u2.t2_us) shouldBe (1L, ts(15).getTime * 1000, -1L)
+    } finally q.stop()
+  }
+
+  test("movingAvgStream: out-of-order arrival converges to the batch moving average") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    def ts(minute: Int): Timestamp =
+      Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
+    def ev(id: Long, m: Int, u: Long, v: Double) =
+      graft.streaming.StreamOps.Ev(id, ts(m), u, "view", v)
+    val input = MemoryStream[graft.streaming.StreamOps.Ev]
+    val q = graft.streaming.StreamOps.movingAvgStream(input.toDS())
+      .writeStream.format("memory").queryName("movavg")
+      .outputMode("append").start()
+    try {
+      // user 1's three events arrive OUT of event-time order; the
+      // drained averages must still be the event-time trailing-3 ones
+      input.addData(ev(2, 20, 1, 2.0), ev(3, 30, 1, 4.0), ev(1, 10, 1, 1.0))
+      q.processAllAvailable()
+      input.addData(ev(6, 400, 99, 1.0)) // watermark pusher
+      q.processAllAvailable()
+      input.addData(ev(7, 401, 99, 1.0))
+      q.processAllAvailable()
+      val got = spark.table("movavg")
+        .as[graft.streaming.StreamOps.MovAvgOut].collect()
+        .filter(_.user_id == 1L).sortBy(_.event_id).map(_.mov_avg).toSeq
+      def rnd4(x: Double) = math.floor(x * 1e4 + 0.5) / 1e4
+      got shouldBe Seq(1.0, 1.5, rnd4(7.0 / 3))
+    } finally q.stop()
+  }
+
+  test("movingAvgStream: the tail survives a drain-timeout (gap > horizon, < idle TTL)") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    def ts(minute: Int): Timestamp =
+      Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
+    def ev(id: Long, m: Int, u: Long, v: Double) =
+      graft.streaming.StreamOps.Ev(id, ts(m), u, "view", v)
+    val input = MemoryStream[graft.streaming.StreamOps.Ev]
+    val q = graft.streaming.StreamOps.movingAvgStream(input.toDS())
+      .writeStream.format("memory").queryName("movavg_gap")
+      .outputMode("append").start()
+    try {
+      input.addData(ev(1, 10, 1, 1.0))
+      q.processAllAvailable()
+      // push the watermark far past event 1: its drain-timeout fires
+      // with an emptied buffer — the tail must NOT be dropped
+      input.addData(ev(90, 60, 99, 1.0))
+      q.processAllAvailable()
+      input.addData(ev(91, 61, 99, 1.0))
+      q.processAllAvailable()
+      // an hour after event 1 (gap > 10-minute horizon, << 24 h TTL;
+      // event time above the current watermark, so not late data)
+      input.addData(ev(2, 70, 1, 3.0))
+      q.processAllAvailable()
+      input.addData(ev(92, 120, 99, 1.0))
+      q.processAllAvailable()
+      input.addData(ev(93, 121, 99, 1.0))
+      q.processAllAvailable()
+      val got = spark.table("movavg_gap")
+        .as[graft.streaming.StreamOps.MovAvgOut].collect()
+        .filter(_.user_id == 1L).sortBy(_.event_id).map(_.mov_avg).toSeq
+      // event 2 averages (1.0, 3.0) = 2.0; a dropped tail would read 3.0
+      got shouldBe Seq(1.0, 2.0)
+    } finally q.stop()
+  }
+
+  test("dauStream: closed days report the batch DAU") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    def ev(id: Long, ts: String, u: Long) =
+      graft.streaming.StreamOps.Ev(id, Timestamp.valueOf(ts), u, "view", 1.0)
+    val input = MemoryStream[graft.streaming.StreamOps.Ev]
+    val q = graft.streaming.StreamOps.dauStream(input.toDS().toDF())
+      .writeStream.format("memory").queryName("dau")
+      .outputMode("append").start()
+    try {
+      // day 1: user 1 twice + user 2; day 2: users 1 and 3
+      input.addData(
+        ev(1, "2024-01-01 01:00:00", 1), ev(2, "2024-01-01 09:30:00", 1),
+        ev(3, "2024-01-01 15:00:00", 2),
+        ev(4, "2024-01-02 08:00:00", 1), ev(5, "2024-01-02 19:00:00", 3))
+      q.processAllAvailable()
+      // watermark pushers: close both days (horizon 25 h)
+      input.addData(ev(90, "2024-01-05 00:00:00", 99))
+      q.processAllAvailable()
+      input.addData(ev(91, "2024-01-05 00:01:00", 99))
+      q.processAllAvailable()
+      val got = spark.table("dau").collect()
+        .map(r => (r.getDate(0).toString, r.getLong(1))).toMap
+      got("2024-01-01") shouldBe 2L
+      got("2024-01-02") shouldBe 2L
+    } finally q.stop()
+  }
+
+  test("funnelStream: stage progress survives a drain-timeout (gap > horizon, < idle TTL)") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    def ts(minute: Int): Timestamp =
+      Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
+    def ev(id: Long, m: Int, u: Long, t: String) =
+      graft.streaming.StreamOps.Ev(id, ts(m), u, t, 1.0)
+    val input = MemoryStream[graft.streaming.StreamOps.Ev]
+    val q = graft.streaming.StreamOps.funnelStream(input.toDS())
+      .writeStream.format("memory").queryName("funnel_gap")
+      .outputMode("update").start()
+    try {
+      input.addData(ev(1, 10, 1, "view"))
+      q.processAllAvailable()
+      // drain the view via watermark pushers (its drain-timeout fires
+      // with an emptied buffer; t1 must survive)
+      input.addData(ev(90, 60, 99, "view"))
+      q.processAllAvailable()
+      input.addData(ev(91, 61, 99, "view"))
+      q.processAllAvailable()
+      // the click comes an hour after the view — far past the
+      // 10-minute horizon but well inside the 24 h idle TTL
+      input.addData(ev(2, 70, 1, "click"))
+      q.processAllAvailable()
+      input.addData(ev(92, 180, 99, "view"))
+      q.processAllAvailable()
+      input.addData(ev(93, 181, 99, "view"))
+      q.processAllAvailable()
+      val u1 = spark.table("funnel_gap")
+        .as[graft.streaming.StreamOps.FunnelOut].collect()
+        .filter(_.user_id == 1L).maxBy(_.stage)
+      // a state row dropped at the drain-timeout would leave t1=-1 and
+      // never count the click
+      u1.stage shouldBe 2L
+      u1.t1_us shouldBe ts(10).getTime * 1000
+      u1.t2_us shouldBe ts(70).getTime * 1000
+    } finally q.stop()
+  }
+
+  test("funnelStream: sub-millisecond stage gaps fold at microsecond precision") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    def tsUs(base: String, us: Int): Timestamp = {
+      val t = Timestamp.valueOf(base)
+      t.setNanos(us * 1000); t
+    }
+    // view at .000100, click at .000900 — same millisecond; a ms-level
+    // fold reads click.ts > view.ts as false and never converts
+    val input = MemoryStream[graft.streaming.StreamOps.Ev]
+    val q = graft.streaming.StreamOps.funnelStream(input.toDS())
+      .writeStream.format("memory").queryName("funnel_us")
+      .outputMode("update").start()
+    try {
+      input.addData(
+        graft.streaming.StreamOps.Ev(1, tsUs("2024-01-01 00:10:00", 100), 1, "view", 1.0),
+        graft.streaming.StreamOps.Ev(2, tsUs("2024-01-01 00:10:00", 900), 1, "click", 1.0))
+      q.processAllAvailable()
+      input.addData(graft.streaming.StreamOps.Ev(3,
+        Timestamp.valueOf("2024-01-01 06:00:00"), 99, "view", 1.0))
+      q.processAllAvailable()
+      input.addData(graft.streaming.StreamOps.Ev(4,
+        Timestamp.valueOf("2024-01-01 06:00:01"), 99, "view", 1.0))
+      q.processAllAvailable()
+      val u1 = spark.table("funnel_us")
+        .as[graft.streaming.StreamOps.FunnelOut].collect()
+        .filter(_.user_id == 1L).maxBy(_.stage)
+      u1.stage shouldBe 2L
+      (u1.t2_us - u1.t1_us) shouldBe 800L
+    } finally q.stop()
   }
 
   test("mm_modality_route matches a driver-side recomputation") {
@@ -444,14 +682,6 @@ class Round4Spec extends AnyFunSuite with Matchers with SharedSpark {
     val got = EventsAnalytics.movingAvg(spark, sfDir).collect()
       .map(r => r.getLong(0) -> r.getDouble(3)).toMap
     got shouldBe expected
-  }
-
-  test("batch sessionize: session boundaries respect the 30-minute gap") {
-    val r = EventsAnalytics.sessionize(spark, sfDir)
-    r.count() should be > 0L
-    // no session may contain an internal gap > 30 min: sessions of n=1
-    // have duration 0; all durations are non-negative
-    r.filter(col("duration_ms") < 0).count() shouldBe 0
   }
 
   test("events_session_stats: session-length histogram reconciles with the raw log") {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+import graft.operators.EventsAnalytics
 import graft.streaming.StreamOps
 
 /** Real Structured Streaming execution: the streaming forms must agree
@@ -148,7 +149,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SharedSpark {
     // append-mode emits only watermark-closed windows; every emitted row
     // must match the batch computation exactly
     val streamed = spark.read.parquet(sink.getAbsolutePath)
-    val batch = StreamOps.windowedAggBatch(spark, sfDir)
+    val batch = EventsAnalytics.windowedAgg(spark, sfDir)
     streamed.count() should be > 0L
     streamed.exceptAll(batch).count() shouldBe 0
   }
@@ -185,7 +186,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SharedSpark {
     stage(col("ts") > mid, "phase2")
     runOnce() // restart from the same checkpoint
     val streamed = spark.read.parquet(sink.getAbsolutePath)
-    val batch = StreamOps.windowedAggBatch(spark, sfDir)
+    val batch = EventsAnalytics.windowedAgg(spark, sfDir)
     // every emitted row matches the batch answer (batch has each window
     // once, so a replayed/duplicated window would fail exceptAll)
     streamed.exceptAll(batch).count() shouldBe 0
@@ -193,368 +194,6 @@ class StreamingSpec extends AnyFunSuite with Matchers with SharedSpark {
       .filter(col("count") > 1).count() shouldBe 0
     streamed.count() should be >= c1
     streamed.count() should be > 0L
-  }
-
-  test("annIngestStream: streamed inserts retrievable; duplicate re-ingest changes nothing") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import operators.{Knn, KnnGraph}
-    KnnGraph.writeGraphIndex(spark, sfDir, name = "gstream")
-    try {
-      val newVecs = Knn.querySet(spark, sfDir)
-        .select(col("q_id").as("id"), col("q_vec").as("vec"))
-        .as[(Long, Array[Float])].collect().toSeq
-      def ingest(ck: String): Unit = {
-        val input = MemoryStream[(Long, Array[Float])]
-        val q = StreamOps.annIngestStream(
-          input.toDF().toDF("id", "vec"), "gstream", tempDir(ck))
-        try { input.addData(newVecs: _*); q.processAllAvailable() }
-        finally q.stop()
-      }
-      ingest("graft-annck1")
-      val once = KnnGraph.searchIndexed(spark, sfDir, "gstream").cache()
-      // every streamed-in vector is its own query's best match
-      once.filter(col("rank") === 1 && col("id") === col("q_id"))
-        .count() shouldBe newVecs.size.toLong
-      // worst-case duplicate delivery: a FULL re-ingest under a fresh
-      // checkpoint (at-least-once's failure mode). Duplicate node/edge
-      // rows land in the table, but no self-loops and no result drift —
-      // the id-distinct heaps collapse them at read time
-      ingest("graft-annck2")
-      spark.table("gstream_edges")
-        .filter(col("src") === col("dst")).count() shouldBe 0
-      KnnGraph.searchIndexed(spark, sfDir, "gstream")
-        .collect().map(_.toString).toSet shouldBe
-        once.collect().map(_.toString).toSet
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS gstream_edges")
-      spark.sql("DROP TABLE IF EXISTS gstream_nodes")
-      spark.sql("DROP TABLE IF EXISTS gstream_meta")
-    }
-  }
-
-  test("ivfIngestStream: streamed appends equal batch appends, replay is a no-op") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import operators.{Ann, Knn}
-    val tmp = new java.io.File(tempDir("graft-ivfstream"))
-    val pathA = new java.io.File(tmp, "a").getAbsolutePath
-    val pathB = new java.io.File(tmp, "b").getAbsolutePath
-    Ann.writeIvfIndex(spark, sfDir, pathA)
-    Ann.writeIvfIndex(spark, sfDir, pathB)
-    val newDocs = Knn.querySet(spark, sfDir)
-      .select(col("q_id").as("doc_id"), col("q_vec").as("doc_vec"))
-    val rows = newDocs.as[(Long, Array[Float])].collect().toSeq
-    def ingest(ck: String): Unit = {
-      val input = MemoryStream[(Long, Array[Float])]
-      val q = StreamOps.ivfIngestStream(
-        input.toDF().toDF("doc_id", "doc_vec"), sfDir, pathA, tempDir(ck))
-      try { input.addData(rows: _*); q.processAllAvailable() }
-      finally q.stop()
-    }
-    ingest("graft-ivfck1")
-    Ann.appendToIvfIndex(spark, sfDir, newDocs, pathB)
-    // streamed appends produce the same searchable index as the batch path
-    val a = Ann.ivfIndexed(spark, sfDir, pathA).collect().map(_.toString).toSet
-    val b = Ann.ivfIndexed(spark, sfDir, pathB).collect().map(_.toString).toSet
-    a shouldBe b
-    // replay under a fresh checkpoint: the anti-join makes it a no-op
-    val nRows = spark.read.parquet(pathA).count()
-    ingest("graft-ivfck2")
-    spark.read.parquet(pathA).count() shouldBe nRows
-  }
-
-  test("postingsIngestStream: streamed index equals batch build, replay is a no-op") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import operators.Encoders
-    val tmp = new java.io.File(tempDir("graft-poststream"))
-    val streamed = new java.io.File(tmp, "streamed").getAbsolutePath
-    val batch = new java.io.File(tmp, "batch").getAbsolutePath
-    Encoders.writeHashingIndex(spark, sfDir, batch)
-    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val rows = docs.as[(Long, String)].collect().toSeq
-    def ingest(ck: String): Unit = {
-      val input = MemoryStream[(Long, String)]
-      val q = StreamOps.postingsIngestStream(
-        input.toDF().toDF("doc_id", "text"), streamed, tempDir(ck))
-      try {
-        // two micro-batches (self-seeding first, disjoint second);
-        // the first carries an intra-batch duplicate — a producer
-        // retry inside one trigger — which must collapse to one row
-        val (h1, h2) = rows.splitAt(rows.length / 2)
-        input.addData(h1 ++ h1.take(1): _*); q.processAllAvailable()
-        input.addData(h2: _*); q.processAllAvailable()
-      } finally q.stop()
-    }
-    ingest("graft-postck1")
-    // the streamed index is bit-identical to the one-shot batch build
-    spark.read.parquet(streamed).collect().map(_.toString).sorted shouldBe
-      spark.read.parquet(batch).collect().map(_.toString).sorted
-    // and searches identically
-    Encoders.hashingSearchIndexed(spark, streamed)
-      .collect().map(_.toString).sorted shouldBe
-      Encoders.hashingSearchIndexed(spark, batch)
-        .collect().map(_.toString).sorted
-    // full replay under a fresh checkpoint: anti-join makes it a no-op
-    val nRows = spark.read.parquet(streamed).count()
-    ingest("graft-postck2")
-    spark.read.parquet(streamed).count() shouldBe nRows
-  }
-
-  test("tfidfIngestStream: streamed appends under the frozen fit equal the batch build, replay is a no-op") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import operators.Encoders
-    val tmp = new java.io.File(tempDir("graft-tfidfstream"))
-    val streamed = new java.io.File(tmp, "streamed").getAbsolutePath
-    val batch = new java.io.File(tmp, "batch").getAbsolutePath
-    Encoders.writeTfidfIndex(spark, sfDir, batch)
-    // the streamed index starts as an empty-corpus snapshot holding
-    // ONLY the frozen fit (the batch build's own _vocab) — the
-    // non-self-seeding contract: the fit exists before any transform
-    new java.io.File(streamed).mkdirs()
-    spark.read.parquet(s"$batch/_vocab")
-      .coalesce(1).write.parquet(s"$streamed/_vocab")
-    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val rows = docs.as[(Long, String)].collect().toSeq
-    def ingest(ck: String): Unit = {
-      val input = MemoryStream[(Long, String)]
-      val q = StreamOps.tfidfIngestStream(
-        input.toDF().toDF("doc_id", "text"), streamed, tempDir(ck))
-      try {
-        // two micro-batches; the first carries an intra-batch
-        // duplicate (producer retry inside one trigger)
-        val (h1, h2) = rows.splitAt(rows.length / 2)
-        input.addData(h1 ++ h1.take(1): _*); q.processAllAvailable()
-        input.addData(h2: _*); q.processAllAvailable()
-      } finally q.stop()
-    }
-    ingest("graft-tfidfck1")
-    // streamed-under-frozen-fit ≡ the one-shot batch build bit-identically
-    spark.read.parquet(streamed).collect().map(_.toString).sorted shouldBe
-      spark.read.parquet(batch).collect().map(_.toString).sorted
-    // and searches identically
-    Encoders.tfIdfSearchIndexed(spark, streamed)
-      .collect().map(_.toString).sorted shouldBe
-      Encoders.tfIdfSearchIndexed(spark, batch)
-        .collect().map(_.toString).sorted
-    // full replay under a fresh checkpoint: anti-join makes it a no-op
-    val nRows = spark.read.parquet(streamed).count()
-    ingest("graft-tfidfck2")
-    spark.read.parquet(streamed).count() shouldBe nRows
-  }
-
-  test("sq8IngestStream: streamed frozen-fit appends equal the batch build, replay is a no-op") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import operators.Ann
-    val tmp = new java.io.File(tempDir("graft-sq8stream"))
-    val streamed = new java.io.File(tmp, "streamed").getAbsolutePath
-    val batch = new java.io.File(tmp, "batch").getAbsolutePath
-    Ann.writeSq8Index(spark, sfDir, batch)
-    // the streamed index starts as a fit-only snapshot (the frozen
-    // quantization grid) — the non-self-seeding contract
-    new java.io.File(streamed).mkdirs()
-    spark.read.parquet(s"$batch/_fit")
-      .coalesce(1).write.parquet(s"$streamed/_fit")
-    val rows = operators.Knn.docSet(spark, sfDir)
-      .select("doc_id", "doc_vec")
-      .as[(Long, Array[Float])].collect().toSeq
-    def ingest(ck: String): Unit = {
-      val input = MemoryStream[(Long, Array[Float])]
-      val q = StreamOps.sq8IngestStream(
-        input.toDF().toDF("doc_id", "doc_vec"), streamed, tempDir(ck))
-      try {
-        val (h1, h2) = rows.splitAt(rows.length / 2)
-        input.addData(h1 ++ h1.take(1): _*); q.processAllAvailable()
-        input.addData(h2: _*); q.processAllAvailable()
-      } finally q.stop()
-    }
-    ingest("graft-sq8ck1")
-    spark.read.parquet(streamed).collect().map(_.toString).sorted shouldBe
-      spark.read.parquet(batch).collect().map(_.toString).sorted
-    // and searches identically
-    Ann.sq8Indexed(spark, sfDir, streamed)
-      .collect().map(_.toString).sorted shouldBe
-      Ann.sq8Indexed(spark, sfDir, batch).collect().map(_.toString).sorted
-    val nRows = spark.read.parquet(streamed).count()
-    ingest("graft-sq8ck2")
-    spark.read.parquet(streamed).count() shouldBe nRows
-  }
-
-  test("pqIngestStream: streamed frozen-fit appends equal the batch build, replay is a no-op") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import operators.Ann
-    val tmp = new java.io.File(tempDir("graft-pqstream"))
-    val streamed = new java.io.File(tmp, "streamed").getAbsolutePath
-    val batch = new java.io.File(tmp, "batch").getAbsolutePath
-    Ann.writePqIndex(spark, sfDir, batch)
-    // fit-only snapshot seeds the streamed index (frozen codebook)
-    new java.io.File(streamed).mkdirs()
-    spark.read.parquet(s"$batch/_fit")
-      .coalesce(1).write.parquet(s"$streamed/_fit")
-    val rows = operators.Knn.docSet(spark, sfDir)
-      .select("doc_id", "doc_vec")
-      .as[(Long, Array[Float])].collect().toSeq
-    def ingest(ck: String): Unit = {
-      val input = MemoryStream[(Long, Array[Float])]
-      val q = StreamOps.pqIngestStream(
-        input.toDF().toDF("doc_id", "doc_vec"), streamed, tempDir(ck))
-      try {
-        val (h1, h2) = rows.splitAt(rows.length / 2)
-        input.addData(h1 ++ h1.take(1): _*); q.processAllAvailable()
-        input.addData(h2: _*); q.processAllAvailable()
-      } finally q.stop()
-    }
-    ingest("graft-pqck1")
-    spark.read.parquet(streamed).collect().map(_.toString).sorted shouldBe
-      spark.read.parquet(batch).collect().map(_.toString).sorted
-    Ann.pqIndexed(spark, sfDir, streamed)
-      .collect().map(_.toString).sorted shouldBe
-      Ann.pqIndexed(spark, sfDir, batch).collect().map(_.toString).sorted
-    val nRows = spark.read.parquet(streamed).count()
-    ingest("graft-pqck2")
-    spark.read.parquet(streamed).count() shouldBe nRows
-  }
-
-  test("ivfPqIngestStream: streamed composed index equals the batch build, replay is a no-op") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import operators.Ann
-    val tmp = new java.io.File(tempDir("graft-ivfpqstream"))
-    val streamed = new java.io.File(tmp, "streamed").getAbsolutePath
-    val batch = new java.io.File(tmp, "batch").getAbsolutePath
-    Ann.writeIvfPqIndex(spark, sfDir, batch)
-    // fits-only snapshot seeds the streamed index (frozen grid AND
-    // frozen codebook — the composed contract)
-    new java.io.File(streamed).mkdirs()
-    spark.read.parquet(s"$batch/_fit")
-      .coalesce(1).write.parquet(s"$streamed/_fit")
-    spark.read.parquet(s"$batch/_cent")
-      .coalesce(1).write.parquet(s"$streamed/_cent")
-    val rows = operators.Knn.docSet(spark, sfDir)
-      .select("doc_id", "doc_vec")
-      .as[(Long, Array[Float])].collect().toSeq
-    def ingest(ck: String): Unit = {
-      val input = MemoryStream[(Long, Array[Float])]
-      val q = StreamOps.ivfPqIngestStream(
-        input.toDF().toDF("doc_id", "doc_vec"), streamed, tempDir(ck))
-      try {
-        val (h1, h2) = rows.splitAt(rows.length / 2)
-        input.addData(h1 ++ h1.take(1): _*); q.processAllAvailable()
-        input.addData(h2: _*); q.processAllAvailable()
-      } finally q.stop()
-    }
-    ingest("graft-ivfpqck1")
-    spark.read.parquet(streamed).collect().map(_.toString).sorted shouldBe
-      spark.read.parquet(batch).collect().map(_.toString).sorted
-    Ann.ivfPqIndexed(spark, sfDir, streamed)
-      .collect().map(_.toString).sorted shouldBe
-      Ann.ivfPqIndexed(spark, sfDir, batch).collect().map(_.toString).sorted
-    val nRows = spark.read.parquet(streamed).count()
-    ingest("graft-ivfpqck2")
-    spark.read.parquet(streamed).count() shouldBe nRows
-  }
-
-  test("chunkIndexIngestStream: streamed chunk index equals batch build, replay is a no-op") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    import operators.{Chunking, Encoders}
-    val tmp = new java.io.File(tempDir("graft-cidxstream"))
-    val streamed = new java.io.File(tmp, "streamed").getAbsolutePath
-    val batch = new java.io.File(tmp, "batch").getAbsolutePath
-    val docIdx = new java.io.File(tmp, "docs").getAbsolutePath
-    Chunking.writeChunkIndex(spark, sfDir, batch)
-    val rows = Tables.documents(spark, sfDir).select("doc_id", "text")
-      .as[(Long, String)].collect().toSeq
-    def ingest(ck: String): Unit = {
-      val input = MemoryStream[(Long, String)]
-      val q = StreamOps.chunkIndexIngestStream(
-        input.toDF().toDF("doc_id", "text"), streamed, tempDir(ck))
-      try {
-        val (h1, h2) = rows.splitAt(rows.length / 2)
-        input.addData(h1 ++ h1.take(1): _*); q.processAllAvailable()
-        input.addData(h2: _*); q.processAllAvailable()
-      } finally q.stop()
-    }
-    ingest("graft-cidxck1")
-    spark.read.parquet(streamed).collect().map(_.toString).sorted shouldBe
-      spark.read.parquet(batch).collect().map(_.toString).sorted
-    // and the chunk retrieval over the streamed layout matches
-    Encoders.writeHashingIndex(spark, sfDir, docIdx)
-    Chunking.chunkSearchIndexed(spark, streamed, docIdx)
-      .collect().map(_.toString).sorted shouldBe
-      Chunking.chunkSearchIndexed(spark, batch, docIdx)
-        .collect().map(_.toString).sorted
-    val nRows = spark.read.parquet(streamed).count()
-    ingest("graft-cidxck2")
-    spark.read.parquet(streamed).count() shouldBe nRows
-  }
-
-  test("spanStoreIngestStream: streamed hash store equals batch set, replay is a no-op") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    val tmp = new java.io.File(tempDir("graft-spanstream"))
-    val store = new java.io.File(tmp, "store").getAbsolutePath
-    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-    val rows = docs.as[(Long, String)].collect().toSeq
-    def ingest(ck: String): Unit = {
-      val input = MemoryStream[(Long, String)]
-      val q = StreamOps.spanStoreIngestStream(
-        input.toDF().toDF("doc_id", "text"), store, tempDir(ck))
-      try {
-        // two micro-batches; the first carries an intra-batch
-        // duplicate doc (producer retry inside one trigger)
-        val (h1, h2) = rows.splitAt(rows.length / 2)
-        input.addData(h1 ++ h1.take(1): _*); q.processAllAvailable()
-        input.addData(h2: _*); q.processAllAvailable()
-      } finally q.stop()
-    }
-    ingest("graft-spanck1")
-    // streamed store = the batch-computed distinct window-hash set
-    val streamedSet = spark.read.parquet(store)
-      .collect().map(_.getLong(0)).sorted
-    streamedSet shouldBe operators.Dedup.windowHashes(docs)
-      .collect().map(_.getLong(0)).sorted
-    // it is a SET: appending batches never duplicated a hash
-    streamedSet.distinct.length shouldBe streamedSet.length
-    // full replay under a fresh checkpoint: anti-join makes it a no-op
-    val n = spark.read.parquet(store).count()
-    ingest("graft-spanck2")
-    spark.read.parquet(store).count() shouldBe n
-  }
-
-  test("ingest streams: a real analysis failure propagates instead of silently disabling dedup") {
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx = s.sqlContext
-    // a store that EXISTS but lacks the doc_id column — schema drift,
-    // not "no layout yet": the narrowed catch (ADVICE r11) must let
-    // this fail the stream rather than append duplicates forever
-    val store = tempDir("graft-driftstore") + "/idx"
-    Seq((1L, "x")).toDF("wrong_col", "other").write.parquet(store)
-    val input = MemoryStream[(Long, String)]
-    val q = StreamOps.postingsIngestStream(
-      input.toDF().toDF("doc_id", "text"), store, tempDir("graft-driftck"))
-    try {
-      input.addData((1L, "alpha beta"))
-      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
-      }
-      // the underlying failure is the unresolved-column analysis error
-      ex.getMessage should include("doc_id")
-    } finally q.stop()
   }
 
   test("dedupStream drops re-seen content within the watermark horizon") {
@@ -624,7 +263,7 @@ class StreamingSpec extends AnyFunSuite with Matchers with SharedSpark {
   }
 
   test("batch sessionize: session boundaries respect the 30-minute gap") {
-    val r = StreamOps.sessionizeBatch(spark, sfDir)
+    val r = EventsAnalytics.sessionize(spark, sfDir)
     r.count() should be > 0L
     // no session may contain an internal gap > 30 min: sessions of n=1
     // have duration 0; all durations are non-negative
