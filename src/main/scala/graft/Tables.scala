@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -65,4 +65,28 @@ object Tables {
     }
   def documents(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "embeddings")
+
+  /** Schemas of the fits an index stores beside its rows. */
+  val Sq8Fit: StructType = StructType.fromDDL("dim BIGINT, lo DOUBLE, hi DOUBLE")
+  val PqFit: StructType = StructType.fromDDL("c_id BIGINT, j INT, cvec ARRAY<FLOAT>")
+  val CentroidFit: StructType = StructType.fromDDL("c_id BIGINT, c_vec ARRAY<FLOAT>")
+  val VocabFit: StructType = StructType.fromDDL("tok STRING, idf DOUBLE")
+
+  /** A fit stored inside an index directory under an underscore name
+    * (`_fit`, `_cent`, `_vocab`, invisible to the index's own scan),
+    * written in `schema` as one file. */
+  def writeFit(fit: DataFrame, path: String, schema: StructType): Unit =
+    fit.select(schema.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
+      .coalesce(1).write.mode("overwrite").parquet(path)
+
+  /** Reads a [[writeFit]] fit back with the schema it was written in,
+    * from its part files, matched by a Hadoop glob: Spark's listing drops
+    * a root path whose name starts with `_` (logging "All paths were
+    * ignored"), and a read without a schema runs an inference job. */
+  def readFit(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    val parts = new org.apache.hadoop.fs.Path(s"$path/*.parquet")
+    val files = parts.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .globStatus(parts).map(_.getPath.toString)
+    spark.read.schema(schema).parquet(files.toSeq: _*)
+  }
 }

@@ -67,7 +67,7 @@ object Ann {
       .agg(first("score").as("score"))
     Knn.topKPerQuery(cands, k)
       .select(col("q_id"), col("rank"), col("doc_id"), rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   /** IVF ANN: fixed seed centroids (vec_id < NCentroids); every doc is
@@ -113,7 +113,7 @@ object Ann {
         dot(col("q_vec"), col("doc_vec")).as("score"))
     Knn.topKPerQuery(cands, k)
       .select(col("q_id"), col("rank"), col("doc_id"), rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   /** Metadata-filtered ANN: the [[Knn.metaPredicate]] filter pushed
@@ -163,7 +163,6 @@ object Ann {
       .agg(min_by(col("c_id"),
         struct(native.dist2F(col("evec"), col("cvec")), col("c_id"))).as("code"))
       .select(col("vec_id"), col("j").cast("long").as("subspace"), col("code"))
-      .orderBy("vec_id", "subspace")
   }
 
   /** PQ asymmetric-distance search (ADC): per query, build the PqM×
@@ -212,7 +211,7 @@ object Ann {
         dot(col("q_vec"), col("doc_vec")).as("score"))
     Knn.topKPerQuery(exact, k)
       .select(col("q_id"), col("rank"), col("doc_id"), rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   /** Per-dimension scalar-quantization fit over the DOC set (FAISS
@@ -290,7 +289,7 @@ object Ann {
     Knn.topKPerQuery(exact, k)
       .select(col("q_id"), col("rank"), col("doc_id"),
         rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   /** Persisted SQ8 serving layout: the code relation at `out`, the
@@ -303,7 +302,7 @@ object Ann {
       val ranges = sq8Ranges(spark, dir)
       sq8Encode(Knn.docSet(spark, dir), ranges)
         .write.mode("overwrite").parquet(tmp)
-      ranges.coalesce(1).write.mode("overwrite").parquet(s"$tmp/_fit")
+      Tables.writeFit(ranges, s"$tmp/_fit", Tables.Sq8Fit)
     }
 
   /** Frozen-fit incremental maintenance (the FAISS add-to-trained-
@@ -315,7 +314,7 @@ object Ann {
     * Refit + rebuild when range drift accumulates. */
   def appendToSq8Index(spark: SparkSession, newVecs: DataFrame,
                        indexPath: String): Unit =
-    sq8Encode(newVecs, spark.read.parquet(s"$indexPath/_fit"))
+    sq8Encode(newVecs, Tables.readFit(spark, s"$indexPath/_fit", Tables.Sq8Fit))
       .write.mode("append").parquet(indexPath)
 
   /** [[sq8Search]] answered from a persisted [[writeSq8Index]] layout —
@@ -325,7 +324,7 @@ object Ann {
   def sq8Indexed(spark: SparkSession, dir: String, indexPath: String,
                  k: Int = K): DataFrame =
     sq8Score(spark, dir, spark.read.parquet(indexPath),
-      spark.read.parquet(s"$indexPath/_fit"), k)
+      Tables.readFit(spark, s"$indexPath/_fit", Tables.Sq8Fit), k)
 
   /** [[sq8Indexed]] over a memoized scratch build — the verified-query
     * form (`ann_sq8_indexed`). */
@@ -358,7 +357,7 @@ object Ann {
       val cb = pqCodebook(spark, dir)
       pqEncodeOf(Knn.docSet(spark, dir), cb)
         .write.mode("overwrite").parquet(tmp)
-      cb.coalesce(1).write.mode("overwrite").parquet(s"$tmp/_fit")
+      Tables.writeFit(cb, s"$tmp/_fit", Tables.PqFit)
     }
 
   /** Frozen-fit incremental maintenance: the batch is encoded under
@@ -370,7 +369,7 @@ object Ann {
   def appendToPqIndex(spark: SparkSession, newVecs: DataFrame,
                       indexPath: String): Unit =
     pqEncodeOf(newVecs.select(col("doc_id"), col("doc_vec")),
-      spark.read.parquet(s"$indexPath/_fit"))
+      Tables.readFit(spark, s"$indexPath/_fit", Tables.PqFit))
       .write.mode("append").parquet(indexPath)
 
   /** [[pqSearch]] answered from a persisted [[writePqIndex]] layout —
@@ -381,7 +380,7 @@ object Ann {
   def pqIndexed(spark: SparkSession, dir: String, indexPath: String,
                 k: Int = K): DataFrame =
     pqScore(spark, dir, spark.read.parquet(indexPath),
-      spark.read.parquet(s"$indexPath/_fit"), k)
+      Tables.readFit(spark, s"$indexPath/_fit", Tables.PqFit), k)
 
   /** Test seam for the append≡rebuild spec (a partial build under a
     * caller-held codebook). */
@@ -444,7 +443,7 @@ object Ann {
         dot(col("q_vec"), col("doc_vec")).as("score"))
     Knn.topKPerQuery(exact, k)
       .select(col("q_id"), col("rank"), col("doc_id"), rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   /** Persisted IVF+PQ composed layout — FAISS IndexIVFPQ's on-disk
@@ -484,8 +483,8 @@ object Ann {
         .repartition(col("c_id"))
         .sortWithinPartitions("c_id", "doc_id", "j")
         .write.mode("overwrite").partitionBy("c_id").parquet(tmp)
-      cent.coalesce(1).write.mode("overwrite").parquet(s"$tmp/_cent")
-      cb.coalesce(1).write.mode("overwrite").parquet(s"$tmp/_fit")
+      Tables.writeFit(cent, s"$tmp/_cent", Tables.CentroidFit)
+      Tables.writeFit(cb, s"$tmp/_fit", Tables.PqFit)
     }
 
   /** Frozen-fit incremental maintenance for a [[writeIvfPqIndex]]
@@ -498,8 +497,8 @@ object Ann {
     * graft.operators.Drift]]'s numbers say the fits drifted. */
   def appendToIvfPqIndex(spark: SparkSession, newVecs: DataFrame,
                          indexPath: String): Unit = {
-    val cent = spark.read.parquet(s"$indexPath/_cent")
-    val cb = spark.read.parquet(s"$indexPath/_fit")
+    val cent = indexCentroids(spark, indexPath)
+    val cb = Tables.readFit(spark, s"$indexPath/_fit", Tables.PqFit)
     val vecs = newVecs.select(col("doc_id"), col("doc_vec"))
     val assign = vecs.crossJoin(broadcast(cent))
       .groupBy("doc_id")
@@ -523,8 +522,8 @@ object Ann {
     // the deployment path passes AutoProbe (√nlist against the stored
     // grid) and a scaled re-rank pool (VERDICT r14 §next-3: the 200k
     // flat-PQ saturation was localized to the fixed 3k pool)
-    val cent = spark.read.parquet(s"$indexPath/_cent")
-    val cb = spark.read.parquet(s"$indexPath/_fit")
+    val cent = indexCentroids(spark, indexPath)
+    val cb = Tables.readFit(spark, s"$indexPath/_fit", Tables.PqFit)
     val np = if (nProbe > 0) nProbe else sqrtProbeCount(cent.count().toInt)
     val pool = if (rerank > 0) rerank else 3 * k
     // an index built before any data arrived holds its fits but ZERO
@@ -566,7 +565,7 @@ object Ann {
     Knn.topKPerQuery(exact, k)
       .select(col("q_id"), col("rank"), col("doc_id"),
         rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   /** [[ivfPqIndexed]] over a memoized scratch build — the verified-
@@ -624,19 +623,13 @@ object Ann {
     // (the lists still exist, the results just degrade), so the
     // layout is self-contained and later calls need neither the
     // corpus's fixed seeds nor a caller-threaded frame.
-    cent.coalesce(1).write.mode("overwrite").parquet(s"$out/_cent")
+    Tables.writeFit(cent, s"$out/_cent", Tables.CentroidFit)
   }
 
-  /** The index's own stored centroids ([[writeIvfIndex]] `_cent`), or
-    * the corpus-fixed seeds for a pre-`_cent` layout. */
-  private def indexCentroids(spark: SparkSession, dir: String,
-                             indexPath: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/_cent")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(p.toString)
-    else Tables.embeddings(spark, dir).filter(col("vec_id") < NCentroids)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-  }
+  /** The index's own stored centroids (`_cent`, written by
+    * [[writeIvfIndex]] and [[writeIvfPqIndex]]). */
+  private def indexCentroids(spark: SparkSession, indexPath: String): DataFrame =
+    Tables.readFit(spark, s"$indexPath/_cent", Tables.CentroidFit)
 
   /** Incremental index maintenance — the serving-side ingest path: a
     * batch of NEW vectors is assigned to the EXISTING centroids and
@@ -653,7 +646,7 @@ object Ann {
     // INDEX'S OWN stored centroids (r13) — a trained-grid layout used
     // to be silently mis-assigned here with the corpus-fixed seeds
     assignToIndex(spark, dir, newDocs,
-      Some(indexCentroids(spark, dir, out)))
+      Some(indexCentroids(spark, out)))
       .write.mode("append").partitionBy("c_id").parquet(out)
 
   /** Probe-side search over a [[writeIvfIndex]] layout: queries pick
@@ -672,9 +665,8 @@ object Ann {
   def ivfIndexed(spark: SparkSession, dir: String, indexPath: String,
                  k: Int = K, centroids: Option[DataFrame] = None,
                  nProbe: Int = NProbe): DataFrame = {
-    // default: the index's own stored `_cent` (self-contained serving;
-    // a pre-_cent layout falls back to the corpus-fixed seeds)
-    val cent = centroids.getOrElse(indexCentroids(spark, dir, indexPath))
+    // default: the index's own stored `_cent` (self-contained serving)
+    val cent = centroids.getOrElse(indexCentroids(spark, indexPath))
     val np = if (nProbe > 0) nProbe else sqrtProbeCount(cent.count().toInt)
     // read with the layout's own schema: over an empty doc set the
     // partitioned write leaves no data file to infer it from
@@ -693,7 +685,7 @@ object Ann {
         dot(col("q_vec"), col("doc_vec")).as("score"))
     Knn.topKPerQuery(cands, k)
       .select(col("q_id"), col("rank"), col("doc_id"), rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   /** [[ivfIndexed]] over a memoized scratch [[writeIvfIndex]] layout —
@@ -1005,7 +997,7 @@ object Ann {
     val pqEncode: String =
       s"""WITH $encodeCtes
          |SELECT vec_id, CAST(j AS BIGINT) AS subspace, code
-         |FROM codes ORDER BY vec_id, subspace""".stripMargin
+         |FROM codes""".stripMargin
 
     val pqSearch: String =
       s"""WITH $encodeCtes,

@@ -76,7 +76,6 @@ object Chunking {
   def chunkSliding(spark: SparkSession, dir: String,
                    w: Int = W, s: Int = Stride): DataFrame =
     chunkRows(Tables.documents(spark, dir).select("doc_id", "text"), w, s)
-      .orderBy("doc_id", "chunk_id")
 
   /** Chunk-level retrieval with doc-level max-pooling: query docs
     * (doc_id < nq, whole-document hashing-TF as in the reference's
@@ -192,7 +191,6 @@ object Chunking {
         countDistinct(col("doc_id")).as("n_docs"),
         min(col("doc_id")).as("keep_doc_id"))
       .filter(col("cnt") > 1)
-      .orderBy("chunk_hash")
 
   object SqlOracle {
     /** DuckDB mirror of the chunk relation: 1-based inclusive list
@@ -220,15 +218,14 @@ object Chunking {
          |  count(*) AS cnt,
          |  count(DISTINCT doc_id) AS n_docs,
          |  min(doc_id) AS keep_doc_id
-         |FROM rendered GROUP BY chunk_hash HAVING count(*) > 1
-         |ORDER BY chunk_hash""".stripMargin
+         |FROM rendered GROUP BY chunk_hash HAVING count(*) > 1""".stripMargin
 
     def chunkSliding(w: Int = W, s: Int = Stride): String =
       s"""WITH ${chunksCte(w, s)}
          |SELECT doc_id, chunk_id, start_tok,
          |  CAST(len(chunk_toks) AS BIGINT) AS n_tokens,
          |  array_to_string(chunk_toks, ' ') AS chunk_text
-         |FROM chunks ORDER BY doc_id, chunk_id""".stripMargin
+         |FROM chunks""".stripMargin
 
     def chunkSearch(k: Int = 10, nq: Int = 5, dim: Int = Encoders.Dim,
                     w: Int = W, s: Int = Stride): String =

@@ -90,7 +90,6 @@ object Dedup {
     Tables.documents(spark, dir)
       .groupBy(md5(col("text").cast("binary")).as("content_hash"))
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("cnt"))
-      .orderBy("content_hash")
 
   /** Incremental (batch-vs-corpus) dedup — the shape a continuously-fed
     * training pipeline actually runs: an incoming batch (here docs with
@@ -119,7 +118,6 @@ object Dedup {
           .when(col("doc_id") =!= col("survivor_id"), "batch_dup")
           .otherwise("new").as("status"),
         col("survivor_id"))
-      .orderBy("doc_id")
   }
 
   /** (doc_id, lang, t0, sh): per-doc sorted-distinct hashed shingle
@@ -223,7 +221,6 @@ object Dedup {
         (size(col("sh_a")) + size(col("sh_b")) - col("n_int")).cast("double"))
       .filter(col("j") >= threshold)
       .select(col("id_a"), col("id_b"), rnd(col("j"), 4).as("j"))
-      .orderBy("id_a", "id_b")
   }
 
   /** MinHash + LSH near-dup pairs: 8 bands × 2 rows; docs sharing any
@@ -288,7 +285,6 @@ object Dedup {
         (size(col("sh_a")) + size(col("sh_b")) - col("n_int")).cast("double"))
       .filter(col("j") >= threshold)
       .select(col("id_a"), col("id_b"), rnd(col("j"), 4).as("j"))
-      .orderBy("id_a", "id_b")
   }
 
   /** 62-bit SimHash fingerprint: token hash h64 = h31(t)·2³¹ + h131(t);
@@ -297,7 +293,6 @@ object Dedup {
   def simhash(spark: SparkSession, dir: String): DataFrame =
     simhashFingerprints(spark, dir)
       .select(col("doc_id"), col("fp"), shiftright(col("fp"), 46).as("band"))
-      .orderBy("doc_id")
 
   /** (doc_id, fp) SimHash fingerprint frame shared by [[simhash]] and
     * [[simhashPairs]] — one codegen'd kernel call per row (asserted
@@ -369,7 +364,6 @@ object Dedup {
       // a pair agreeing on several chunks surfaces once per chunk;
       // distinct runs on the (small) post-filter pair set
       .distinct()
-      .orderBy("id_a", "id_b")
   }
 
   /** Embedding-cosine near-dup pairs, blocked by cluster label (the
@@ -389,7 +383,6 @@ object Dedup {
       .withColumn("cos", cosine(col("va"), col("vb")))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), rnd(col("cos"), 4).as("cos"))
-      .orderBy("id_a", "id_b")
   }
 
   /** Embedding near-dup pairs WITHOUT labels — the 100 TB path the
@@ -409,7 +402,6 @@ object Dedup {
       .withColumn("cos", cosine(col("va"), col("vb")))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), rnd(col("cos"), 4).as("cos"))
-      .orderBy("id_a", "id_b")
   }
 
   /** The banded-bucket candidate-pair stage of [[embeddingLsh]].
@@ -547,7 +539,6 @@ object Dedup {
     connectedComponents(minhashLsh(spark, dir).select("id_a", "id_b"))
       .select(col("node").as("doc_id"), col("label").as("rep_id"),
         when(col("node") === col("label"), 1L).otherwise(0L).as("is_survivor"))
-      .orderBy("doc_id")
 
   /** SemDeDup-style semantic dedup over the kNN GRAPH (Abbas et al.,
     * "SemDeDup", arXiv 2303.09540 — public method): near-dup discovery
@@ -587,7 +578,6 @@ object Dedup {
     connectedComponents(pairs)
       .select(col("node").as("doc_id"), col("label").as("rep_id"),
         when(col("node") === col("label"), 1L).otherwise(0L).as("is_survivor"))
-      .orderBy("doc_id")
   }
 
   /** Benchmark decontamination (cross-corpus n-gram overlap): flag each
@@ -608,7 +598,6 @@ object Dedup {
     sh.filter(col("doc_id") >= nEval)
       .join(broadcast(evalSh), Seq("h"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
-      .orderBy("doc_id")
   }
 
   /** Cross-source duplication-leakage matrix — the data-mixture
@@ -632,7 +621,6 @@ object Dedup {
       .select(least(col("sa"), col("sb")).as("src_a"),
         greatest(col("sa"), col("sb")).as("src_b"))
       .groupBy("src_a", "src_b").agg(count(lit(1)).as("n_pairs"))
-      .orderBy("src_a", "src_b")
   }
 
   /** Minimum duplicated-substring length in TOKENS for
@@ -761,7 +749,6 @@ object Dedup {
         sum(col("e") - col("s") + 1).as("dup_tokens"),
         first("n_tokens").as("n_tokens"))
       .withColumn("dup_frac", rnd(col("dup_tokens") / col("n_tokens")))
-      .orderBy("doc_id")
   }
 
   /** [[spanCoverage]] over any (doc_id, text) frame. */
@@ -772,7 +759,6 @@ object Dedup {
         sum(col("e") - col("s") + 1).as("dup_tokens"),
         first("n_tokens").as("n_tokens"))
       .withColumn("dup_frac", rnd(col("dup_tokens") / col("n_tokens")))
-      .orderBy("doc_id")
 
   /** Duplicated-span SCRUB — the removal step [[spanCoverage]]'s
     * signal feeds (Lee et al. 2021's dedup applied remove-ALL-wise:
@@ -808,7 +794,6 @@ object Dedup {
       .select(col("doc_id"), col("n_tokens"),
         size(col("_kept")).cast("long").as("n_kept"),
         md5(concat_ws(" ", col("_kept")).cast("binary")).as("scrub_hash"))
-      .orderBy("doc_id")
   }
 
   /** (blocking name, max observed members, applicable cap) for every
@@ -866,7 +851,7 @@ object Dedup {
 
     val exact: String =
       """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS cnt
-        |FROM documents GROUP BY content_hash ORDER BY content_hash""".stripMargin
+        |FROM documents GROUP BY content_hash""".stripMargin
 
     val incremental: String =
       """WITH inc AS (
@@ -879,8 +864,7 @@ object Dedup {
         |       WHEN inc.doc_id <> s.survivor_id THEN 'batch_dup'
         |       ELSE 'new' END AS status,
         |  s.survivor_id
-        |FROM inc LEFT JOIN store ON inc.h = store.h JOIN s ON inc.h = s.h
-        |ORDER BY inc.doc_id""".stripMargin
+        |FROM inc LEFT JOIN store ON inc.h = store.h JOIN s ON inc.h = s.h""".stripMargin
 
     def ngramJaccard(threshold: Double = 0.2): String =
       s"""WITH d AS (SELECT doc_id, lang, t0,
@@ -889,8 +873,7 @@ object Dedup {
          |FROM d a JOIN d b ON a.lang = b.lang AND a.t0 = b.t0 AND a.doc_id < b.doc_id,
          |LATERAL (SELECT CAST(len(list_distinct(list_intersect(a.sh, b.sh))) AS BIGINT) /
          |  CAST(len(a.sh) + len(b.sh) - len(list_distinct(list_intersect(a.sh, b.sh))) AS DOUBLE) AS j) l
-         |WHERE j >= $threshold
-         |ORDER BY id_a, id_b""".stripMargin
+         |WHERE j >= $threshold""".stripMargin
 
     def minhashLsh(threshold: Double = 0.5): String = {
       val mh = perms.zipWithIndex.map { case ((a, b), i) =>
@@ -919,8 +902,7 @@ object Dedup {
          |JOIN shd b ON b.doc_id = id_b,
          |LATERAL (SELECT CAST(len(list_distinct(list_intersect(a.sh, b.sh))) AS BIGINT) /
          |  CAST(len(a.sh) + len(b.sh) - len(list_distinct(list_intersect(a.sh, b.sh))) AS DOUBLE) AS j) l
-         |WHERE j >= $threshold
-         |ORDER BY id_a, id_b""".stripMargin
+         |WHERE j >= $threshold""".stripMargin
     }
 
     /** Transitive closure via a recursive CTE: `reach` saturates to all
@@ -941,7 +923,7 @@ object Dedup {
          |  SELECT reach.node, e.dst FROM reach JOIN edges e ON reach.r = e.src)
          |SELECT node AS doc_id, min(r) AS rep_id,
          |  CAST(CASE WHEN node = min(r) THEN 1 ELSE 0 END AS BIGINT) AS is_survivor
-         |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin
+         |FROM reach GROUP BY node""".stripMargin
 
     /** Mirrors [[Dedup.sourceMatrix]] over the same minhash pair set. */
     def sourceMatrix(threshold: Double = 0.5): String =
@@ -951,7 +933,7 @@ object Dedup {
          |SELECT least(a.source, b.source) AS src_a,
          |  greatest(a.source, b.source) AS src_b, count(*) AS n_pairs
          |FROM mh JOIN d a ON a.doc_id = mh.id_a JOIN d b ON b.doc_id = mh.id_b
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+         |GROUP BY 1, 2""".stripMargin
 
     def crossCorpus(nEval: Long = 50): String =
       s"""WITH sh AS (
@@ -961,7 +943,7 @@ object Dedup {
          |SELECT doc_id, count(*) AS n_hits
          |FROM sh JOIN ev USING (h)
          |WHERE doc_id >= $nEval
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin
+         |GROUP BY doc_id""".stripMargin
 
     val simhash: String =
       s"""WITH tok AS (
@@ -976,7 +958,7 @@ object Dedup {
          |SELECT doc_id,
          |  CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS fp,
          |  CAST(sum(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) >> 46 AS band
-         |FROM bits GROUP BY doc_id ORDER BY doc_id""".stripMargin
+         |FROM bits GROUP BY doc_id""".stripMargin
 
     private val fpCte: String =
       s"""tok AS (
@@ -1004,8 +986,7 @@ object Dedup {
          |FROM fp a JOIN fp b
          |  ON (a.fp >> 46) = (b.fp >> 46) AND a.doc_id < b.doc_id
          |JOIN bst ON bst.band = (a.fp >> 46)
-         |WHERE bit_count(xor(a.fp, b.fp)) <= $maxHamming AND bst.bsz <= $maxBand
-         |ORDER BY id_a, id_b""".stripMargin
+         |WHERE bit_count(xor(a.fp, b.fp)) <= $maxHamming AND bst.bsz <= $maxBand""".stripMargin
 
     /** Mirrors [[Dedup.embeddingLshCandidates]]'s bucket cap EXACTLY,
       * including the star-expansion fallback: buckets ≤ `maxBucket`
@@ -1040,8 +1021,7 @@ object Dedup {
          |  SELECT id_a, id_b, ${S.cosine("a.embedding", "b.embedding", VectorCore.Dim)} AS c
          |  FROM cands JOIN e a ON a.vec_id = id_a JOIN e b ON b.vec_id = id_b)
          |SELECT id_a, id_b, ${S.rnd("c", 4)} AS cos
-         |FROM s WHERE c >= $threshold
-         |ORDER BY id_a, id_b""".stripMargin
+         |FROM s WHERE c >= $threshold""".stripMargin
 
     /** Shared CTE chain deriving the merged duplicated-span relation
       * `sp(doc_id, s, e, n_tokens)` — the window hash is polyHash of
@@ -1075,7 +1055,7 @@ object Dedup {
          |  CAST(sum(e - s + 1) AS BIGINT) AS dup_tokens,
          |  any_value(n_tokens) AS n_tokens,
          |  ${S.rnd("CAST(sum(e - s + 1) AS DOUBLE) / any_value(n_tokens)", 4)} AS dup_frac
-         |FROM sp GROUP BY doc_id ORDER BY doc_id""".stripMargin
+         |FROM sp GROUP BY doc_id""".stripMargin
 
     /** Mirror of [[Dedup.spanIncremental]]: batch windows duplicated
       * within the batch or present in the corpus-rest distinct-hash
@@ -1106,7 +1086,7 @@ object Dedup {
          |  CAST(sum(e - s + 1) AS BIGINT) AS dup_tokens,
          |  any_value(n_tokens) AS n_tokens,
          |  ${S.rnd("CAST(sum(e - s + 1) AS DOUBLE) / any_value(n_tokens)", 4)} AS dup_frac
-         |FROM sp GROUP BY doc_id ORDER BY doc_id""".stripMargin
+         |FROM sp GROUP BY doc_id""".stripMargin
 
     /** Mirror of [[Dedup.spanScrub]]: positions anti-joined to the
       * span ranges (merged islands are disjoint and non-adjacent, so
@@ -1125,8 +1105,7 @@ object Dedup {
          |SELECT t.doc_id, CAST(len(t.toks) AS BIGINT) AS n_tokens,
          |  CAST(COALESCE(a.n_kept, 0) AS BIGINT) AS n_kept,
          |  md5(COALESCE(a.s2, '')) AS scrub_hash
-         |FROM t LEFT JOIN agg a ON t.doc_id = a.doc_id
-         |ORDER BY t.doc_id""".stripMargin
+         |FROM t LEFT JOIN agg a ON t.doc_id = a.doc_id""".stripMargin
 
     def embeddingCosine(threshold: Double = 0.3): String =
       s"""WITH e AS (SELECT vec_id, label, embedding FROM embeddings WHERE vec_id % 5 = 0),
@@ -1136,7 +1115,6 @@ object Dedup {
          |  FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id),
          |s AS (SELECT id_a, id_b, ${S.cosine("va", "vb", VectorCore.Dim)} AS c FROM p)
          |SELECT id_a, id_b, ${S.rnd("c", 4)} AS cos
-         |FROM s WHERE c >= $threshold
-         |ORDER BY id_a, id_b""".stripMargin
+         |FROM s WHERE c >= $threshold""".stripMargin
   }
 }

@@ -115,7 +115,6 @@ object Drift {
       .groupBy("split").agg(fxAvg(col("oov"), 9).as("stat")))
 
     ivf.unionByName(pq).unionByName(sq8).unionByName(tfidf)
-      .orderBy("layout")
   }
 
   /** The drift alarm's CONSUMER (VERDICT r15 §next-4): turns
@@ -169,7 +168,6 @@ object Drift {
         .when(col("layout") === "pq_fit", "Ann.writePqIndex")
         .when(col("layout") === "sq8_fit", "Ann.writeSq8Index")
         .otherwise("Encoders.writeTfidfIndex").as("rebuild"))
-      .orderBy("layout")
   }
 
   object SqlOracle {
@@ -240,7 +238,7 @@ object Drift {
            |SELECT split, ${S.fxAvg("oov", 9)} AS stat FROM oov GROUP BY split""".stripMargin
       Seq(legSql("ivf_cent", ivf), legSql("pq_fit", pq),
         legSql("sq8_fit", sq8), legSql("tfidf_vocab", tfidf))
-        .mkString("", "\nUNION ALL\n", "\nORDER BY layout")
+        .mkString("\nUNION ALL\n")
     }
 
     /** DuckDB mirror of [[Drift.refitAdvice]] — the same calibrated
@@ -258,7 +256,6 @@ object Drift {
          |    WHEN 'pq_fit' THEN 'Ann.writePqIndex'
          |    WHEN 'sq8_fit' THEN 'Ann.writeSq8Index'
          |    ELSE 'Encoders.writeTfidfIndex' END AS rebuild
-         |FROM (${indexDriftStats(vocabDim)}) ds
-         |ORDER BY layout""".stripMargin
+         |FROM (${indexDriftStats(vocabDim)}) ds""".stripMargin
   }
 }

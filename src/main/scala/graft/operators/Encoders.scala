@@ -98,7 +98,6 @@ object Encoders {
     postingsOf(Tables.documents(spark, dir), dim)
       .select(col("doc_id"), col("bucket"),
         rnd(col("cnt") / col("norm"), 4).as("tf_norm"))
-      .orderBy("doc_id", "bucket")
 
   /** End-to-end reference pipeline (ref main flow: DummyEncoder +
     * offline_search — encoder.py:93-103 then auto_run_tests.py:115-160):
@@ -335,7 +334,7 @@ object Encoders {
       .filter(col("score") > 0)
       .select(col("q_id"), col("rank"), col("doc_id"),
         rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   /** [[hashingSearchDense]] over the memoized GATHERED artifact — the
@@ -393,11 +392,11 @@ object Encoders {
         (col("ip") / (col("qn") * col("dn"))).as("score"): _*)
 
   /** Shared ranked-output tail: bounded-heap top-k per query, rounded
-    * score, (q_id, rank, doc_id, score) ordered. */
+    * score, (q_id, rank, doc_id, score) in rank order. */
   private[operators] def rankTopK(scored: DataFrame, k: Int): DataFrame =
     Knn.topKPerQuery(scored, k)
       .select(col("q_id"), col("rank"), col("doc_id"), rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
 
   /** (doc_id, tok, weight) unrounded TF-IDF weights — shared by
     * [[tfIdf]] (verified rounded projection) and [[tfIdfSearch]]. */
@@ -591,7 +590,7 @@ object Encoders {
       .select(col("q_id"), col("doc_id"), (col("ip") / (col("qn") * col("dn"))).as("score"))
     Knn.topKPerQuery(scored, k)
       .select(col("q_id"), col("rank"), col("doc_id"), rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   /** Free-text query search under the reference's PRIMARY encoder —
@@ -615,7 +614,7 @@ object Encoders {
   def tfIdfSearchTextIndexed(spark: SparkSession, indexPath: String,
                              queries: DataFrame, k: Int = 10): DataFrame =
     tfIdfScoreText(spark.read.parquet(indexPath),
-      spark.read.parquet(s"$indexPath/_vocab"), queries, k)
+      Tables.readFit(spark, s"$indexPath/_vocab", Tables.VocabFit), queries, k)
 
   private def tfIdfScoreText(wn: DataFrame, vocab: DataFrame,
                              queries: DataFrame, k: Int): DataFrame = {
@@ -636,7 +635,7 @@ object Encoders {
     Knn.topKPerQuery(scored, k)
       .select(col("q_id"), col("rank"), col("doc_id"),
         rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   /** Persisted TF-IDF postings index — [[writeHashingIndex]]'s twin
@@ -654,8 +653,7 @@ object Encoders {
                       dim: Int = Dim, maxDoc: Option[Long] = None): Unit =
     Compaction.stagedBuild(spark, out) { tmp =>
       tfIdfPostings(spark, dir, dim, maxDoc).write.mode("overwrite").parquet(tmp)
-      fittedVocab(spark, dir, dim, maxDoc)
-        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/_vocab")
+      Tables.writeFit(fittedVocab(spark, dir, dim, maxDoc), s"$tmp/_vocab", Tables.VocabFit)
     }
 
   /** Frozen-fit incremental maintenance for a [[writeTfidfIndex]]
@@ -669,7 +667,7 @@ object Encoders {
     * accumulates, exactly like the IVF centroid contract. */
   def appendToTfidfIndex(spark: SparkSession, newDocs: DataFrame,
                          indexPath: String): Unit = {
-    val vocab = spark.read.parquet(s"$indexPath/_vocab")
+    val vocab = Tables.readFit(spark, s"$indexPath/_vocab", Tables.VocabFit)
     val byDoc = Window.partitionBy("doc_id")
     docTermOf(newDocs)
       .join(broadcast(vocab), "tok")
@@ -774,7 +772,7 @@ object Encoders {
       .select(col("q_id"), col("doc_id"), (col("sq") / lit(1e9)).as("score"))
     Knn.topKPerQuery(scored, k)
       .select(col("q_id"), col("rank"), col("doc_id"), rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   /** Free-text BM25 top-k — keyword retrieval for arbitrary (q_id,
@@ -812,16 +810,17 @@ object Encoders {
       case "bm25" => bm25TopKText(spark, dir, stdTextQueries(spark, dir))
     }).localCheckpoint(true))
 
-  /** Registered std-query forms: the memoized arm, re-ordered for
-    * presentation (the checkpoint drops the total order). Bit-equal to
+  /** Registered std-query forms: the memoized arm (≤ k rows per query,
+    * so one task re-sorts it; the checkpoint drops the total order),
+    * in presentation order. Bit-equal to
     * the direct generic calls over [[stdTextQueries]] — same subplan,
     * materialized once per session (Round13Spec). */
   def hashingTextStd(spark: SparkSession, dir: String): DataFrame =
-    textArm(spark, dir, "hashing").orderBy("q_id", "rank")
+    textArm(spark, dir, "hashing").transform(Knn.ranked("q_id", "rank"))
   def tfIdfTextStd(spark: SparkSession, dir: String): DataFrame =
-    textArm(spark, dir, "tfidf").orderBy("q_id", "rank")
+    textArm(spark, dir, "tfidf").transform(Knn.ranked("q_id", "rank"))
   def bm25TextStd(spark: SparkSession, dir: String): DataFrame =
-    textArm(spark, dir, "bm25").orderBy("q_id", "rank")
+    textArm(spark, dir, "bm25").transform(Knn.ranked("q_id", "rank"))
 
   /** [[hybridSearchText]] over [[stdTextQueries]], fused by RRF
     * row-arithmetic from the memoized hashing and bm25 arms — the
@@ -846,7 +845,7 @@ object Encoders {
           coalesce(lit(1.0) / (lit(60) + col("rk")), lit(0.0))).as("score"))
     Knn.topKPerQuery(fused, k)
       .select(col("q_id"), col("rank"), col("doc_id"), rnd(col("score"), 6).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   /** Free-text hybrid retrieval — the reference's "hybrid" search mode
@@ -869,7 +868,7 @@ object Encoders {
           coalesce(lit(1.0) / (lit(60) + col("rk")), lit(0.0))).as("score"))
     Knn.topKPerQuery(fused, k)
       .select(col("q_id"), col("rank"), col("doc_id"), rnd(col("score"), 6).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   /** The two hybrid arms, (vector, keyword) — routed through
@@ -921,7 +920,7 @@ object Encoders {
           coalesce(lit(1.0) / (lit(60) + col("rk")), lit(0.0))).as("score"))
     Knn.topKPerQuery(fused, k)
       .select(col("q_id"), col("rank"), col("doc_id"), rnd(col("score"), 6).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   /** Hybrid retrieval, relative-score fusion — the OTHER Weaviate
@@ -961,7 +960,7 @@ object Encoders {
     Knn.topKPerQuery(fused, k)
       .select(col("q_id"), col("rank"), col("doc_id"),
         rnd(col("score"), 6).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   /** TF-IDF with a capped vocabulary (ref encoder.py:76-116
@@ -974,7 +973,6 @@ object Encoders {
       .withColumn("norm", sqrt(sum(col("weight") * col("weight")).over(w)))
       .select(col("doc_id"), col("tok").as("term"),
         rnd(col("weight") / col("norm"), 4).as("w"))
-      .orderBy("doc_id", "term")
   }
 
   /** Top-[[KeywordsPerDoc]] TF-IDF keywords per document — the
@@ -1040,7 +1038,7 @@ object Encoders {
           / size(col("_th")),
         4).as(s"e_$j")
     }
-    base.select(col("doc_id") +: pooled: _*).orderBy("doc_id")
+    base.select(col("doc_id") +: pooled: _*)
   }
 
   /** Dense-vector assembly from exploded (doc_id, bucket, weight) —
@@ -1070,7 +1068,7 @@ object Encoders {
          |c AS (SELECT doc_id, bucket, count(*) AS cnt FROM b GROUP BY doc_id, bucket)
          |SELECT doc_id, bucket,
          |  (floor((cnt / sqrt(sum(cnt * cnt) OVER (PARTITION BY doc_id))) * 1e4 + 0.5e0) / 1e4) AS tf_norm
-         |FROM c ORDER BY doc_id, bucket""".stripMargin
+         |FROM c""".stripMargin
 
     def tfIdf(dim: Int = Dim): String =
       s"""WITH t AS $toksCte,
@@ -1084,7 +1082,7 @@ object Encoders {
          |  FROM dt JOIN vocab USING (tok) CROSS JOIN nd)
          |SELECT doc_id, tok AS term,
          |  (floor((weight / sqrt(sum(weight * weight) OVER (PARTITION BY doc_id))) * 1e4 + 0.5e0) / 1e4) AS w
-         |FROM wtd ORDER BY doc_id, term""".stripMargin
+         |FROM wtd""".stripMargin
 
     /** `idf = Some(idx → idf6)` (Verify's per-SF overlay) swaps the
       * in-SQL ln() for the driver-fitted quantized literals, joined on
@@ -1459,8 +1457,7 @@ object Encoders {
           s"(a, x) -> a + x) / len(toks)", 4) + s" AS e_$j"
       s"""WITH d AS (SELECT doc_id, ${S.tokens("text")} AS toks FROM documents)
          |SELECT doc_id, ${(0 until 8).map(e).mkString(",\n  ")}
-         |FROM d WHERE len(toks) > 0
-         |ORDER BY doc_id""".stripMargin
+         |FROM d WHERE len(toks) > 0""".stripMargin
     }
   }
 }

@@ -51,7 +51,6 @@ object Eval {
         Ks.tail.map(k =>
           rnd(sum(when(col("rank") <= k, col("rel")).otherwise(0L)) / k.toDouble, 4)
             .as(s"p_at_$k")): _*)
-      .orderBy("q_id")
 
   def recallAtK(spark: SparkSession, dir: String): DataFrame = {
     val relCounts = Knn.docSet(spark, dir)
@@ -67,7 +66,6 @@ object Eval {
       .join(broadcast(relCounts), Seq("q_id"), "left")
       .select(col("q_id") +: Ks.map(k =>
         rnd(col(s"hits_$k") / col("n_rel"), 4).as(s"r_at_$k")): _*)
-      .orderBy("q_id")
   }
 
   /** ANN quality vs ground truth: fraction of the *exact* dot-product
@@ -84,7 +82,6 @@ object Eval {
       .join(hit, Seq("q_id"), "left")
       .select(col("q_id"),
         rnd(coalesce(col("n_hit"), lit(0L)) / k.toDouble, 4).as("recall"))
-      .orderBy("q_id")
   }
 
   /** nprobe values swept by [[annRecallIvfSweep]] — the grid a tuner
@@ -157,7 +154,6 @@ object Eval {
     // (no broadcast hint: the preserved side of a left join cannot be
     // the build side, so Spark would drop it with a warning)
     probeKeys.join(agg, Seq("nprobe"), "left")
-      .orderBy("nprobe")
   }
 
   /** The pre-round-12 one-leg-per-nprobe formulation — kept as the
@@ -236,7 +232,6 @@ object Eval {
         rnd(when(m > 0, col(s"dcg_$k") / element_at(idcgLit, m))
           .otherwise(0.0), 4).as(s"ndcg_$k")
       }: _*)
-      .orderBy("q_id")
   }
 
   /** Mean reciprocal rank over the query set (single summary row, the
@@ -286,7 +281,7 @@ object Eval {
         |  ${Ks.map(k =>
              s"(floor((sum(CASE WHEN rank <= $k THEN rel ELSE 0 END) / $k.0) * 1e4 + 0.5e0) / 1e4) AS p_at_$k")
              .mkString(",\n  ")}
-        |FROM h GROUP BY q_id ORDER BY q_id""".stripMargin
+        |FROM h GROUP BY q_id""".stripMargin
 
     val recallAtK: String =
       base + s""",
@@ -300,7 +295,7 @@ object Eval {
              s"(floor((sum(CASE WHEN rank <= $k THEN rel ELSE 0 END) / CAST(any_value(n_rel) AS DOUBLE)) * 1e4 + 0.5e0) / 1e4) AS r_at_$k")
              .mkString(",\n  ")}
         |FROM h LEFT JOIN rc ON h.q_id = rc.q_id
-        |GROUP BY h.q_id ORDER BY h.q_id""".stripMargin
+        |GROUP BY h.q_id""".stripMargin
 
     /** overlap@k of an ANN oracle vs the exact brute-force oracle. */
     def annRecall(annSql: String, k: Int = Knn.K): String =
@@ -314,15 +309,14 @@ object Eval {
          |SELECT q.q_id,
          |  (floor((coalesce(n_hit, 0) / $k.0) * 1e4 + 0.5e0) / 1e4) AS recall
          |FROM (SELECT vec_id AS q_id FROM embeddings WHERE vec_id < ${Knn.NQueries}) q
-         |LEFT JOIN hit USING (q_id)
-         |ORDER BY q_id""".stripMargin
+         |LEFT JOIN hit USING (q_id)""".stripMargin
 
     def annRecallIvfSweep(probes: Seq[Int] = SweepProbes): String =
       probes.map { np =>
         s"""SELECT CAST($np AS BIGINT) AS nprobe,
            |  ${S.rnd(S.fxAvg("recall", 6), 4)} AS mean_recall
            |FROM (${annRecall(Ann.SqlOracle.ivfSql("TRUE", np))}) r$np""".stripMargin
-      }.mkString("", "\nUNION ALL\n", "\nORDER BY nprobe")
+      }.mkString("\nUNION ALL\n")
 
     /** Round-trip double literal (exponent marker forces DOUBLE). */
     private def dbl(x: Double): String = {
@@ -352,8 +346,7 @@ object Eval {
              S.rnd(s"CASE WHEN least(coalesce(n_rel, 0), $k) > 0 " +
                s"THEN dcg_$k / ($idcg)[CAST(least(coalesce(n_rel, 0), $k) AS INT)] " +
                s"ELSE 0.0e0 END", 4) + s" AS ndcg_$k").mkString(",\n  ")}
-        |FROM dc LEFT JOIN rc ON dc.q_id = rc.q_id
-        |ORDER BY dc.q_id""".stripMargin
+        |FROM dc LEFT JOIN rc ON dc.q_id = rc.q_id""".stripMargin
     }
 
     val mrr: String =

@@ -98,7 +98,6 @@ object EventsAnalytics {
       .withColumn("share", rnd(col("cnt") / sum("cnt").over(w).cast("double"), 4))
       .select(col("event_type"), col("bin"),
         rnd(col("bin") * HistBinWidth, 2).as("bin_lo"), col("cnt"), col("share"))
-      .orderBy("event_type", "bin")
   }
 
   /** Semi-structured payload extraction — the JSON-column surface
@@ -121,7 +120,6 @@ object EventsAnalytics {
         sum("k").as("sum_k"),
         min("k").as("min_k"), max("k").as("max_k"),
         countDistinct(col("k")).as("n_distinct_k"))
-      .orderBy("event_type")
 
   /** The per-path extraction form of [[propsExtract]]
     * (`get_json_object('$.k')` + try_cast) — kept as the
@@ -167,7 +165,6 @@ object EventsAnalytics {
       .filter(col("std") > 0 && abs(col("value") - col("mean")) > lit(z) * col("std"))
       .select(col("event_id"), col("event_type"), rnd(col("value"), 4).as("value"),
         rnd((col("value") - col("mean")) / col("std"), 4).as("z_score"))
-      .orderBy("event_id")
   }
 
   val MovAvgWindow = 3
@@ -187,7 +184,6 @@ object EventsAnalytics {
         col("value"), floor(col("value") * 1e6 + 0.5).cast("long").as("fx"))
       .select(col("event_id"), col("user_id"), rnd(col("value"), 4).as("value"),
         rnd(sum("fx").over(frame) / count(lit(1)).over(frame) / lit(1e6), 4).as("mov_avg"))
-      .orderBy("event_id")
   }
 
   /** Event-time hourly windowed counts/sums per event_type
@@ -261,7 +257,6 @@ object EventsAnalytics {
       .agg(min("ts").as("session_start"),
         count(lit(1)).as("n_events"),
         (unix_millis(max("ts")) - unix_millis(min("ts"))).as("duration_ms"))
-      .orderBy("user_id", "sess_id")
   }
 
   /** Session-length distribution: how many sessions have n events, and
@@ -276,7 +271,6 @@ object EventsAnalytics {
       .agg(count(lit(1)).as("n_sessions"),
         rnd(sum("duration_ms") / count(lit(1)), 2).as("avg_duration_ms"),
         max("duration_ms").as("max_duration_ms"))
-      .orderBy("n_events")
 
   /** Daily and trailing-7-day active users with the DAU/WAU stickiness
     * ratio — the standard engagement panel. The log first reduces to
@@ -329,7 +323,7 @@ object EventsAnalytics {
         |  CAST(sum(k) AS BIGINT) AS sum_k,
         |  min(k) AS min_k, max(k) AS max_k,
         |  CAST(count(DISTINCT k) AS BIGINT) AS n_distinct_k
-        |FROM x GROUP BY event_type ORDER BY event_type""".stripMargin
+        |FROM x GROUP BY event_type""".stripMargin
 
     val activeUsers: String =
       s"""WITH ud AS (
@@ -367,8 +361,7 @@ object EventsAnalytics {
          |  ${S.rnd("CAST(sum(fx) OVER w AS BIGINT) / (count(*) OVER w) / 1e6", 4)} AS mov_avg
          |FROM e
          |WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id
-         |             ROWS BETWEEN ${w - 1} PRECEDING AND CURRENT ROW)
-         |ORDER BY event_id""".stripMargin
+         |             ROWS BETWEEN ${w - 1} PRECEDING AND CURRENT ROW)""".stripMargin
 
     val funnel: String = {
       val Seq(k1, k2, k3) = FunnelStages
@@ -420,8 +413,7 @@ object EventsAnalytics {
          |  ${S.rnd("value", 4)} AS value,
          |  ${S.rnd("(value - mean) / std", 4)} AS z_score
          |FROM events e JOIN st ON e.event_type = st.event_type
-         |WHERE std > 0 AND abs(value - mean) > ${z}e0 * std
-         |ORDER BY event_id""".stripMargin
+         |WHERE std > 0 AND abs(value - mean) > ${z}e0 * std""".stripMargin
 
     /** Bin expression shared by the histogram oracles. */
     val binSql: String =
@@ -437,7 +429,7 @@ object EventsAnalytics {
          |SELECT event_type, bin,
          |  ${S.rnd(s"bin * ${HistBinWidth}e0", 2)} AS bin_lo, cnt,
          |  ${S.rnd("cnt / CAST(CAST(sum(cnt) OVER (PARTITION BY event_type) AS BIGINT) AS DOUBLE)", 4)} AS share
-         |FROM g ORDER BY event_type, bin""".stripMargin
+         |FROM g""".stripMargin
     }
 
     val windowedAgg: String =
@@ -504,14 +496,13 @@ object EventsAnalytics {
          |SELECT user_id, CAST(sess_id AS BIGINT) AS sess_id, min(ts) AS session_start,
          |  count(*) AS n_events,
          |  CAST(epoch_ms(max(ts)) - epoch_ms(min(ts)) AS BIGINT) AS duration_ms
-         |FROM z GROUP BY user_id, sess_id
-         |ORDER BY user_id, sess_id""".stripMargin
+         |FROM z GROUP BY user_id, sess_id""".stripMargin
 
     val sessionStats: String =
       s"""WITH sess AS ($sessionize)
          |SELECT n_events, count(*) AS n_sessions,
          |  ${S.rnd("CAST(sum(duration_ms) AS BIGINT) / CAST(count(*) AS DOUBLE)", 2)} AS avg_duration_ms,
          |  max(duration_ms) AS max_duration_ms
-         |FROM sess GROUP BY n_events ORDER BY n_events""".stripMargin
+         |FROM sess GROUP BY n_events""".stripMargin
   }
 }

@@ -143,7 +143,6 @@ object Experiment {
       .select(col("model"), col("search_mode"), lit(dim.toLong).as("dim"),
         col("n_docs"), coalesce(col("n_queries"), lit(0L)).as("n_queries"),
         col("mean_p_at_5"), col("mean_p_at_10"), col("map"))
-      .orderBy("model", "search_mode")
   }
 
   /** The pre-round-12 one-leg-per-(model, mode) formulation — kept as
@@ -232,17 +231,6 @@ object Experiment {
     * to the unchanged SQL oracle. At 100 TB this is the difference
     * between 2 corpus scans and 2·|caps| of them. */
   def sizes(spark: SparkSession, dir: String, caps: Seq[Long] = SizeCaps,
-            k: Int = K, nq: Int = NQ, dim: Int = Encoders.Dim): DataFrame =
-    sizesGrid(spark, dir, caps, k, nq, dim).orderBy("corpus_cap", "model")
-
-  /** [[sizes]] without the final presentation orderBy — what consumers
-    * that re-sort anyway ([[Report.modelBySize]]'s window) should read
-    * (r17): EliminateSorts cannot descend through a Window, so under
-    * the bench's count() the inner orderBy survived column pruning as
-    * a DEAD global sort (sampling job + range exchange + sort) in
-    * report_model_by_size's executed plan. */
-  private[operators] def sizesGrid(spark: SparkSession, dir: String,
-            caps: Seq[Long] = SizeCaps,
             k: Int = K, nq: Int = NQ, dim: Int = Encoders.Dim): DataFrame = {
     import spark.implicits._
     val capsDf = broadcast(caps.toDF("corpus_cap"))
@@ -433,7 +421,7 @@ object Experiment {
         leg(Encoders.SqlOracle.hybridSearch(k, nq, dim, "tfidf", idf),
           "tfidf", "hybrid"))
         .mkString("SELECT * FROM (\n", "\n) UNION ALL SELECT * FROM (\n",
-          "\n) ORDER BY model, search_mode")
+          "\n)")
     }
 
     def sizes(caps: Seq[Long] = SizeCaps, k: Int = K, nq: Int = NQ,
@@ -447,7 +435,7 @@ object Experiment {
              |${summaryFor(Encoders.SqlOracle.tfIdfSearch(k, nq, dim, Some(c)), "tfidf", k, nq, dim, Some(c))}
              |)""".stripMargin)
       }.mkString("SELECT * FROM (\n", "\nUNION ALL ",
-        "\n) ORDER BY corpus_cap, model")
+        "\n)")
 
     private def summaryFor(retrievalSql: String, model: String,
                            k: Int, nq: Int, dim: Int,

@@ -61,6 +61,17 @@ object Knn {
         col("e.score").as("score"),
         (col("pos") + 1).cast("long").as("rank")): _*)
 
+  /** Presentation order of a result bounded by construction — at most
+    * k rows per key of a top-k aggregate ([[topKPerKey]],
+    * `TopKAgg.topKBy`/`topKByDistinct`) — used as
+    * `.transform(ranked("q_id", "rank"))` directly over that
+    * aggregate. The aggregate's stage already starts at a shuffle
+    * read, so one task sorts its output: no range-partitioning
+    * sample job, no extra exchange. Never put it over a stage that
+    * scans a corpus; corpus-sized ordered results keep `orderBy`. */
+  def ranked(keys: String*)(topK: DataFrame): DataFrame =
+    topK.coalesce(1).sortWithinPartitions(keys.map(col): _*)
+
   /** Window-based two-phase formulation (the declarative spec the
     * DuckDB oracles mirror). */
   def topKPerQueryWindow(scored: DataFrame, k: Int): DataFrame = {
@@ -88,7 +99,7 @@ object Knn {
         dot(col("q_vec"), col("doc_vec"))), k)
       .select(col("q_id"), col("rank"), col("doc_id"),
         rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(ranked("q_id", "rank"))
 
   /** Exact top-k by cosine similarity. */
   def cosineTopK(spark: SparkSession, dir: String, k: Int = K): DataFrame =
@@ -97,7 +108,7 @@ object Knn {
         cosine(col("q_vec"), col("doc_vec"))), k)
       .select(col("q_id"), col("rank"), col("doc_id"),
         rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(ranked("q_id", "rank"))
 
   /** The (q_id, doc_id) ground-truth rows of [[bruteForce]] (dot) or
     * [[cosineTopK]] (cosine), memoized per (dir, k, metric): the exact
@@ -120,7 +131,6 @@ object Knn {
       dot(col("q_vec"), col("doc_vec")))
       .filter(col("score") >= minScore)
       .select(col("q_id"), col("doc_id"), rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "doc_id")
 
   /** The ref's `query_vector_search` API shape (local_db/mock.py:29):
     * caller-supplied query vectors against any doc frame (doc_id,
@@ -137,7 +147,7 @@ object Knn {
           dot(col("q_vec"), col("doc_vec")).as("score")), k)
       .select(col("q_id"), col("rank"), col("doc_id"),
         rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(ranked("q_id", "rank"))
   }
 
   /** The metadata predicate shared by exact and ANN filtered search
@@ -154,7 +164,7 @@ object Knn {
         dot(col("q_vec"), col("doc_vec"))), k)
       .select(col("q_id"), col("rank"), col("doc_id"),
         rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(ranked("q_id", "rank"))
 
   object SqlOracle {
     val Dim = VectorCore.Dim
@@ -201,7 +211,6 @@ object Knn {
          |  SELECT q_id, doc_id, ${S.dot("q_vec", "doc_vec", Dim)} AS score
          |  FROM d CROSS JOIN q)
          |SELECT q_id, doc_id, ${S.rnd("score", 4)} AS score
-         |FROM scored WHERE score >= $minScore
-         |ORDER BY q_id, doc_id""".stripMargin
+         |FROM scored WHERE score >= $minScore""".stripMargin
   }
 }

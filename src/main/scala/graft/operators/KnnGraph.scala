@@ -707,7 +707,7 @@ object KnnGraph {
     search(spark, dir, k)
       .select(col("q_id"), col("rank"), col("id").as("doc_id"),
         rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
 
   // ---------- persisted serving index (bucketed layout) ----------
 

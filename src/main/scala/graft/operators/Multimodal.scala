@@ -144,7 +144,7 @@ object Multimodal {
     Knn.topKPerQuery(scored, k)
       .select(col("q_id").as("media_id"), col("rank"), col("doc_id"),
         rnd(col("score"), 4).as("score"))
-      .orderBy("media_id", "rank")
+      .transform(Knn.ranked("media_id", "rank"))
   }
 
   /** Modality headers planted on the text corpus — 4 ASCII bytes each
@@ -210,14 +210,12 @@ object Multimodal {
     routeModalities(mixedMediaFrame(spark, dir)).toDF()
       .select(col("media_id"), col("modality"), col("n_bytes"),
         col("checksum"), rnd(col("feat"), 4).as("feat"))
-      .orderBy("media_id")
 
   /** Verified frame-sampling query (every 2nd 64-byte frame). */
   def frameFeaturesQ(spark: SparkSession, dir: String): DataFrame =
     frameFeatures(mediaFrame(spark, dir)).toDF()
       .select(col("media_id"), col("frame_no"), col("checksum"),
         rnd(col("feat"), 4).as("feat"))
-      .orderBy("media_id", "frame_no")
 
   /** Verified projection: scalar metadata + stub features; the byte-sum
     * checksum is mirrored in SQL over the utf8 payload. */
@@ -225,7 +223,6 @@ object Multimodal {
     extractFeatures(mediaFrame(spark, dir)).toDF()
       .select(col("media_id"), col("n_bytes"), col("checksum"),
         rnd(col("feat0"), 4).as("feat0"))
-      .orderBy("media_id")
 
   object SqlOracle {
     /** ASCII corpus: byte-sum == codepoint-sum of chars. */
@@ -239,7 +236,7 @@ object Multimodal {
         |  FROM documents)
         |SELECT media_id, n_bytes, checksum,
         |  (floor((CAST(checksum % 997 AS DOUBLE) / 997.0) * 1e4 + 0.5e0) / 1e4) AS feat0
-        |FROM f ORDER BY media_id""".stripMargin
+        |FROM f""".stripMargin
 
     /** Strided byte-sum embedding + exact top-k (ASCII corpus: byte ==
       * codepoint; stepped-range nested comprehension mirrors the stub
@@ -301,7 +298,7 @@ object Multimodal {
          |     WHEN 'audio' THEN CAST(checksum % 101 AS DOUBLE) / 101.0
          |     WHEN 'video' THEN CAST((n_bytes + 63) // 64 AS DOUBLE)
          |     ELSE 0.0e0 END) * 1e4 + 0.5e0) / 1e4) AS feat
-         |FROM c ORDER BY media_id""".stripMargin
+         |FROM c""".stripMargin
     }
 
     /** ASCII corpus: frame byte-sums == codepoint-sums of substrings. */
@@ -321,6 +318,6 @@ object Multimodal {
         |  FROM fr)
         |SELECT media_id, frame_no, checksum,
         |  (floor((CAST(checksum % 997 AS DOUBLE) / 997.0) * 1e4 + 0.5e0) / 1e4) AS feat
-        |FROM c ORDER BY media_id, frame_no""".stripMargin
+        |FROM c""".stripMargin
   }
 }

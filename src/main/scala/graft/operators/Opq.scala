@@ -254,7 +254,7 @@ object Opq {
     Knn.topKPerQuery(exact, k)
       .select(col("q_id"), col("rank"), col("doc_id"),
         rnd(col("score"), 4).as("score"))
-      .orderBy("q_id", "rank")
+      .transform(Knn.ranked("q_id", "rank"))
   }
 
   // ---------- non-parametric refinement (VERDICT r14 §next-4) ----------

@@ -101,7 +101,6 @@ object PerfStats {
         rnd(col("_p95"), 4).as("p95"),
         rnd(col("_p99"), 4).as("p99"),
         rnd(col("n") / (col("_fx") / 1e6), 4).as("qps"))
-      .orderBy("event_type")
 
   /** Per-type value sums via [[Skew.saltedAgg]] — the two-phase
     * skew-safe aggregation wired into a VERIFIED query: phase 1 groups
@@ -117,7 +116,6 @@ object PerfStats {
       pv => sum(pv))
       .select(col("_k").as("event_type"),
         rnd(col("value") / 1e4, 4).as("sum_value"))
-      .orderBy("event_type")
 
   /** Skew.saltedJoin wired into a VERIFIED query: the event log joined
     * to a per-user activity profile through the salted (key, salt)
@@ -135,7 +133,6 @@ object PerfStats {
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         rnd(fxAvg(col("user_n").cast("double"), 4), 4).as("mean_user_events"))
-      .orderBy("event_type")
   }
 
   /** Batches of 256 by event_id (mirrors the ref's fixed batch loop,
@@ -164,7 +161,6 @@ object PerfStats {
         rnd(col("_p50"), 4).as("median_v"),
         rnd(col("_vmin"), 4).as("min_v"),
         rnd(col("_vmax"), 4).as("max_v"))
-      .orderBy("event_type", "hr")
 
   /** Rollup summary — both of the reference's summary granularities
     * (per (event_type, hour) AND per event_type AND grand total, the
@@ -181,8 +177,6 @@ object PerfStats {
         rnd(fxAvg(col("value"), 6), 4).as("mean_v"),
         rnd(min("value"), 4).as("min_v"),
         rnd(max("value"), 4).as("max_v"))
-      .orderBy(col("gid"), col("event_type").asc_nulls_first,
-        col("hr").asc_nulls_first)
 
   /** Paired statistical comparison of two metric populations (ref:
     * experiments/stats.py `paired_tests` — scipy ttest_rel + wilcoxon):
@@ -349,7 +343,7 @@ object PerfStats {
     val saltedSum: String =
       s"""SELECT event_type,
          |  ${Sql.rnd(Sql.fxSum("value", 4), 4)} AS sum_value
-         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
+         |FROM events GROUP BY event_type""".stripMargin
 
     val saltedJoinStats: String =
       s"""WITH prof AS (
@@ -357,7 +351,7 @@ object PerfStats {
          |SELECT event_type, count(*) AS n,
          |  ${Sql.rnd(Sql.fxAvg("CAST(user_n AS DOUBLE)", 4), 4)} AS mean_user_events
          |FROM events JOIN prof USING (user_id)
-         |GROUP BY event_type ORDER BY event_type""".stripMargin
+         |GROUP BY event_type""".stripMargin
 
     val latencyPercentiles: String =
       s"""SELECT event_type,
@@ -368,7 +362,7 @@ object PerfStats {
         |  (floor((quantile_cont(value, 0.95)) * 1e4 + 0.5e0) / 1e4) AS p95,
         |  (floor((quantile_cont(value, 0.99)) * 1e4 + 0.5e0) / 1e4) AS p99,
         |  (floor((count(*) / ${Sql.fxSum("value", 6)}) * 1e4 + 0.5e0) / 1e4) AS qps
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
+        |FROM events GROUP BY event_type""".stripMargin
 
     val ingestThroughput: String =
       s"""SELECT CAST(floor(event_id / 256) AS BIGINT) AS batch_id,
@@ -476,8 +470,7 @@ object PerfStats {
         |  (floor((min(value)) * 1e4 + 0.5e0) / 1e4) AS min_v,
         |  (floor((max(value)) * 1e4 + 0.5e0) / 1e4) AS max_v
         |FROM events
-        |GROUP BY ROLLUP (event_type, hour(ts))
-        |ORDER BY gid, event_type NULLS FIRST, hr NULLS FIRST""".stripMargin
+        |GROUP BY ROLLUP (event_type, hour(ts))""".stripMargin
 
     val runSummary: String =
       s"""SELECT event_type, CAST(hour(ts) AS BIGINT) AS hr,
@@ -486,6 +479,6 @@ object PerfStats {
         |  (floor((quantile_cont(value, 0.5)) * 1e4 + 0.5e0) / 1e4) AS median_v,
         |  (floor((min(value)) * 1e4 + 0.5e0) / 1e4) AS min_v,
         |  (floor((max(value)) * 1e4 + 0.5e0) / 1e4) AS max_v
-        |FROM events GROUP BY event_type, hr ORDER BY event_type, hr""".stripMargin
+        |FROM events GROUP BY event_type, hr""".stripMargin
   }
 }

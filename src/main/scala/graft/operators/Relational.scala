@@ -33,7 +33,6 @@ object Relational {
         rnd(fxAvg(col("l_quantity")), 4).as("avg_qty"),
         rnd(fxAvg(col("l_discount"), 6), 6).as("avg_disc"),
         count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")
 
   /** customer ⋈ orders ⋈ lineitem revenue per order; dims broadcast. */
   def q3JoinAgg(spark: SparkSession, dir: String): DataFrame = {
@@ -81,7 +80,6 @@ object Relational {
       .select(col("user_id"), col("e.event_id").as("event_id"),
         col("e.event_type").as("event_type"),
         rnd(col("e.value"), 4).as("value"))
-      .orderBy("user_id")
 
   /** As-of join: for every 'click' event, the most recent 'view' of
     * the same user at-or-before its timestamp (NULLs when none) — the
@@ -105,7 +103,6 @@ object Relational {
       .select(col("event_id").as("click_id"), col("user_id"),
         col("_pv.event_id").as("view_id"),
         (unix_millis(col("ts")) - unix_millis(col("_pv.ts"))).as("gap_ms"))
-      .orderBy("click_id")
   }
 
   /** Range join: all (click, view) pairs of the same user within
@@ -135,7 +132,6 @@ object Relational {
       .filter(abs(col("a_ms") - col("b_ms")) <= W)
       .select(col("click_id"), col("user_id"), col("view_id"),
         (col("a_ms") - col("b_ms")).as("delta_ms"))
-      .orderBy("click_id", "view_id")
   }
 
   /** Semi/anti-join surface (TPC-H Q22's customers-without-orders
@@ -158,7 +154,6 @@ object Relational {
         sum(when(col("o_custkey").isNull, 1L).otherwise(0L)).as("n_without_orders"),
         rnd(fxSum(when(col("o_custkey").isNull, col("c_acctbal")).otherwise(0.0)), 2)
           .as("idle_acctbal"))
-      .orderBy("c_mktsegment")
   }
 
   /** Small-quantity revenue per brand (the TPC-H Q17 pattern): lineitems
@@ -182,7 +177,6 @@ object Relational {
       .groupBy("p_brand")
       .agg(count(lit(1)).as("n_small"),
         rnd(fxSum(col("l_extendedprice"), 2) / lit(7.0), 2).as("avg_yearly"))
-      .orderBy("p_brand")
   }
 
   /** Top supplier(s) by lineitem revenue (the TPC-H Q15 pattern — a
@@ -190,7 +184,7 @@ object Relational {
     * fixed-point groupBy; the global maximum is a SINGLE-ROW aggregate
     * broadcast back over the (one row per supplier) revenue frame as a
     * filter — argmax with no global sort and no window, and revenue
-    * ties all surface, ordered by key. The double equality in the join
+    * ties all surface. The double equality in the join
     * is safe because fxSum yields exact multiples of 0.01 on both
     * engines. */
   def topSupplier(spark: SparkSession, dir: String): DataFrame = {
@@ -202,7 +196,6 @@ object Relational {
     rev.join(broadcast(mx), col("total_rev") === col("max_rev"))
       .join(Tables.supplier(spark, dir), col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"), rnd(col("total_rev"), 2).as("total_rev"))
-      .orderBy("s_suppkey")
   }
 
   /** Exact distinct counts over several columns in one pass. */
@@ -256,8 +249,7 @@ object Relational {
         |  (floor((${Sql.fxAvg("l_discount", 6)}) * 1e6 + 0.5e0) / 1e6) AS avg_disc,
         |  count(*) AS count_order
         |FROM lineitem WHERE l_quantity > 0
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin
+        |GROUP BY l_returnflag, l_linestatus""".stripMargin
 
     val q3JoinAgg: String =
       s"""SELECT l_orderkey,
@@ -294,8 +286,7 @@ object Relational {
          |  FROM e)
          |SELECT event_id AS click_id, user_id, pv.id AS view_id,
          |  CAST(epoch_ms(ts) - epoch_ms(pv.ts) AS BIGINT) AS gap_ms
-         |FROM x WHERE event_type = '$kindA'
-         |ORDER BY click_id""".stripMargin
+         |FROM x WHERE event_type = '$kindA'""".stripMargin
 
     def rangeJoin(kindA: String = "click", kindB: String = "view",
                   boundMin: Int = 10): String = {
@@ -309,8 +300,7 @@ object Relational {
          |SELECT click_id, user_id, view_id,
          |  CAST(a_ms - b_ms AS BIGINT) AS delta_ms
          |FROM a JOIN b USING (user_id)
-         |WHERE abs(a_ms - b_ms) <= $w
-         |ORDER BY click_id, view_id""".stripMargin
+         |WHERE abs(a_ms - b_ms) <= $w""".stripMargin
     }
 
     val latestByKey: String =
@@ -321,8 +311,7 @@ object Relational {
         |    row_number() OVER (PARTITION BY user_id
         |                       ORDER BY ts DESC, event_id DESC) AS r
         |  FROM ${graft.functions.Sql.eventsUs} events)
-        |WHERE r = 1
-        |ORDER BY user_id""".stripMargin
+        |WHERE r = 1""".stripMargin
 
     val semiAntiJoin: String =
       s"""WITH wo AS (SELECT DISTINCT o_custkey FROM orders)
@@ -331,7 +320,7 @@ object Relational {
          |  CAST(sum(CASE WHEN wo.o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_without_orders,
          |  ${Sql.rnd(Sql.fxSum("CASE WHEN wo.o_custkey IS NULL THEN c_acctbal ELSE 0.0e0 END"), 2)} AS idle_acctbal
          |FROM customer LEFT JOIN wo ON c_custkey = wo.o_custkey
-         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
+         |GROUP BY c_mktsegment""".stripMargin
 
     val smallQtyRevenue: String =
       s"""WITH a AS (
@@ -343,7 +332,7 @@ object Relational {
          |JOIN a USING (l_partkey)
          |JOIN part ON p_partkey = l_partkey
          |WHERE l_quantity < 0.5e0 * avg_qty
-         |GROUP BY p_brand ORDER BY p_brand""".stripMargin
+         |GROUP BY p_brand""".stripMargin
 
     val topSupplier: String =
       s"""WITH rev AS (
@@ -353,8 +342,7 @@ object Relational {
          |mx AS (SELECT max(total_rev) AS max_rev FROM rev)
          |SELECT s_suppkey, s_name, ${Sql.rnd("total_rev", 2)} AS total_rev
          |FROM rev JOIN mx ON total_rev = max_rev
-         |JOIN supplier ON l_suppkey = s_suppkey
-         |ORDER BY s_suppkey""".stripMargin
+         |JOIN supplier ON l_suppkey = s_suppkey""".stripMargin
 
     val distinctCounts: String =
       """SELECT count(DISTINCT o_custkey) AS n_cust,

@@ -33,13 +33,7 @@ object Report {
     // and sort instead of two passes
     val ranked = Window.partitionBy("corpus_cap")
       .orderBy(col("map").desc, col("model"))
-    // sizesGrid, not sizes: the window defines its own total order and
-    // the final orderBy the presentation one, so sizes' orderBy would
-    // be dead weight — and worse, a dead weight EliminateSorts cannot
-    // remove under the bench's count() because the Window blocks its
-    // descent (r17; the executed plan carried a sampling job + range
-    // exchange + global sort for it)
-    Experiment.sizesGrid(spark, dir)
+    Experiment.sizes(spark, dir)
       .withColumn("best_map", first("map").over(ranked))
       .withColumn("model_rank", row_number().over(ranked).cast("long"))
       .select(col("corpus_cap"), col("model"), col("n_docs"),
@@ -69,7 +63,6 @@ object Report {
         rnd(col("hybrid_map") - col("vector_map"), 4).as("map_lift"),
         col("vector_p5"), col("hybrid_p5"),
         rnd(col("hybrid_p5") - col("vector_p5"), 4).as("p5_lift"))
-      .orderBy("model")
 
   /** Corpus-construction funnel: docs and tokens surviving each stage
     * of the quality pipeline (raw → token gate → quality gate →
@@ -115,7 +108,6 @@ object Report {
         row("5_lang_quota", "d4", "t4"))).as("f"))
       .select(col("f.stage"), col("f.n_docs"), col("f.n_tokens"),
         col("f.docs_kept_pct"))
-      .orderBy("stage")
   }
 
   object SqlOracle {
@@ -185,8 +177,7 @@ object Report {
          |UNION ALL ${stageRow("2_token_gate", "d1", "t1")}
          |UNION ALL ${stageRow("3_quality_gate", "d2", "t2")}
          |UNION ALL ${stageRow("4_dedup", "d3", "t3")}
-         |UNION ALL ${stageRow("5_lang_quota", "d4", "t4")}
-         |ORDER BY stage""".stripMargin
+         |UNION ALL ${stageRow("5_lang_quota", "d4", "t4")}""".stripMargin
     }
 
     /** `idf`: same per-SF literal overlay as the matrix oracle (the
@@ -206,6 +197,6 @@ object Report {
          |  ${S.rnd("hybrid_map - vector_map")} AS map_lift,
          |  vector_p5, hybrid_p5,
          |  ${S.rnd("hybrid_p5 - vector_p5")} AS p5_lift
-         |FROM folded ORDER BY model""".stripMargin
+         |FROM folded""".stripMargin
   }
 }

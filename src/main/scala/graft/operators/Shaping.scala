@@ -49,7 +49,6 @@ object Shaping {
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .filter(sampleKey(col("doc_id")) < quota)
-      .orderBy("doc_id")
   }
 
   /** Distributed reservoir sampling: a fixed-size uniform-without-
@@ -69,7 +68,7 @@ object Shaping {
       .select(col("lang"), posexplode(col("tk")).as(Seq("pos", "e")))
       .select(col("lang"), col("e.id").as("doc_id"),
         (col("pos") + 1).cast("long").as("rank"))
-      .orderBy("lang", "rank")
+      .transform(Knn.ranked("lang", "rank"))
 
   val NShards = 64
   val BinCapacity = 512L
@@ -96,7 +95,6 @@ object Shaping {
         sum("n_toks").as("bin_tokens"),
         min("doc_id").as("first_doc"),
         max("doc_id").as("last_doc"))
-      .orderBy("shard", "bin")
   }
 
   /** The composed corpus-cleaning pipeline a training-data run executes
@@ -148,7 +146,6 @@ object Shaping {
       when(col("lang") === l, lit(q)).otherwise(els)
     }
     survivors.filter(sampleKey(col("doc_id")) < quota)
-      .orderBy("doc_id")
   }
 
   /** [[qualityCalibration]] keep-rate as an integer fraction (70%),
@@ -189,7 +186,6 @@ object Shaping {
         max("quality").as("threshold"), min("cum").as("n_kept"))
       .select(col("lang"), col("n_docs"), col("target"), col("threshold"),
         col("n_kept"), rnd(col("n_kept") / col("n_docs")).as("kept_frac"))
-      .orderBy("lang")
   }
 
   /** Per-source corpus health: doc counts, language spread, mean
@@ -207,7 +203,6 @@ object Shaping {
         countDistinct(col("lang")).as("n_langs"),
         rnd(fxAvg(col("quality"), 6), 4).as("mean_quality"),
         (count(lit(1)) - countDistinct(col("norm_hash"))).as("n_dups"))
-      .orderBy("source")
 
   /** Referential-integrity audit between the document corpus and the
     * embedding store — the health check a vector pipeline runs after
@@ -251,7 +246,6 @@ object Shaping {
       .crossJoin(broadcast(total))
       .select(col("shard"), col("n_docs"), col("total_chars"),
         rnd(col("n_docs") / col("n_total"), 4).as("share"))
-      .orderBy("shard")
   }
 
   /** Quality-weighted importance sampling: each doc survives with
@@ -269,7 +263,6 @@ object Shaping {
         polyHash(concat(lit("imp"), col("doc_id").cast("string"))) % 1000 <
           floor(col("quality") * 1000))
       .select("doc_id", "lang", "n_toks", "quality")
-      .orderBy("doc_id")
 
   /** Per-source mixture-resampling weights: the factor each ingest
     * source's docs must be up/down-sampled by to hit a UNIFORM target
@@ -289,7 +282,6 @@ object Shaping {
       .select(col("source"), col("n_docs"),
         rnd(col("n_docs") / col("n_total"), 4).as("share"),
         rnd(col("n_total") / (col("k_sources") * col("n_docs")), 4).as("weight"))
-      .orderBy("source")
   }
 
   /** Snippet-query + qrels generation (ref experiments/create_qs.py:
@@ -341,7 +333,7 @@ object Shaping {
          |SELECT source, n_docs,
          |  ${S.rnd("n_docs / CAST(n_total AS DOUBLE)", 4)} AS share,
          |  ${S.rnd("n_total / CAST(k_sources * n_docs AS DOUBLE)", 4)} AS weight
-         |FROM s, t ORDER BY source""".stripMargin
+         |FROM s, t""".stripMargin
 
     def shardAssignment(nShards: Int = NOutputShards): String =
       s"""WITH s AS (
@@ -355,7 +347,7 @@ object Shaping {
          |t AS (SELECT count(*) AS n_total FROM documents)
          |SELECT shard, n_docs, total_chars,
          |  ${S.rnd("n_docs / CAST(n_total AS DOUBLE)", 4)} AS share
-         |FROM g, t ORDER BY shard""".stripMargin
+         |FROM g, t""".stripMargin
 
     val importanceSample: String = {
       val stop = TextAnalysis.markers.head._2.map(w => s"'$w'").mkString(", ")
@@ -377,8 +369,7 @@ object Shaping {
          |  FROM s)
          |SELECT doc_id, lang, n_toks, quality FROM q
          |WHERE n_toks > 0
-         |  AND ${S.polyHash("'imp' || CAST(doc_id AS VARCHAR)")} % 1000 < floor(quality * 1000)
-         |ORDER BY doc_id""".stripMargin
+         |  AND ${S.polyHash("'imp' || CAST(doc_id AS VARCHAR)")} % 1000 < floor(quality * 1000)""".stripMargin
     }
 
     /** Mirror of [[Shaping.qualityCalibration]] — same quantized-score
@@ -413,7 +404,7 @@ object Shaping {
          |  max(quality) AS threshold,
          |  CAST(min(cum) AS BIGINT) AS n_kept,
          |  ${S.rnd("min(cum) / CAST(any_value(n_docs) AS DOUBLE)", 4)} AS kept_frac
-         |FROM t WHERE cum >= target GROUP BY lang ORDER BY lang""".stripMargin
+         |FROM t WHERE cum >= target GROUP BY lang""".stripMargin
     }
 
     def reservoirSample(k: Int = 20): String =
@@ -433,8 +424,7 @@ object Shaping {
         s"CASE WHEN lang = '$l' THEN $q ELSE $els END"
       }
       s"""SELECT doc_id, lang, n_chars FROM documents
-         |WHERE ${S.polyHash("'smp' || CAST(doc_id AS VARCHAR)")} % 1000 < $quota
-         |ORDER BY doc_id""".stripMargin
+         |WHERE ${S.polyHash("'smp' || CAST(doc_id AS VARCHAR)")} % 1000 < $quota""".stripMargin
     }
 
     def qualityFilterPipeline(minToks: Long = 20L, minQuality: Double = 0.6): String = {
@@ -464,8 +454,7 @@ object Shaping {
          |k AS (SELECT f.doc_id, f.lang, f.n_toks, f.quality
          |      FROM f JOIN d ON f.norm_hash = d.norm_hash AND f.doc_id = d.doc_id)
          |SELECT doc_id, lang, n_toks, quality FROM k
-         |WHERE ${S.polyHash("'smp' || CAST(doc_id AS VARCHAR)")} % 1000 < $quota
-         |ORDER BY doc_id""".stripMargin
+         |WHERE ${S.polyHash("'smp' || CAST(doc_id AS VARCHAR)")} % 1000 < $quota""".stripMargin
     }
 
     val sourceStats: String = {
@@ -491,7 +480,7 @@ object Shaping {
          |  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
          |  (floor((${S.fxAvg("quality", 6)}) * 1e4 + 0.5e0) / 1e4) AS mean_quality,
          |  CAST(count(*) - count(DISTINCT norm_hash) AS BIGINT) AS n_dups
-         |FROM q GROUP BY source ORDER BY source""".stripMargin
+         |FROM q GROUP BY source""".stripMargin
     }
 
     val corpusIntegrity: String =
@@ -519,6 +508,6 @@ object Shaping {
          |  CAST(sum(n_toks) AS BIGINT) AS bin_tokens,
          |  min(doc_id) AS first_doc,
          |  max(doc_id) AS last_doc
-         |FROM p GROUP BY shard, bin ORDER BY shard, bin""".stripMargin
+         |FROM p GROUP BY shard, bin""".stripMargin
   }
 }

@@ -28,7 +28,6 @@ object TextAnalysis {
       .select(col("doc_id"),
         size(tokens(col("text"))).cast("long").as("n_ws"),
         regexp_count(col("text"), lit(BpePattern)).cast("long").as("n_bpe"))
-      .orderBy("doc_id")
 
   /** Per-language tokenizer health dashboard (fertility stats): doc
     * counts, total tokens/chars, chars-per-token (the bytes-per-token
@@ -49,7 +48,6 @@ object TextAnalysis {
         col("total_chars"),
         rnd(col("total_chars") / col("total_tokens")).as("chars_per_token"),
         rnd(col("total_tokens") / col("n_docs")).as("tokens_per_doc"))
-      .orderBy("lang")
 
   /** Corpus bigram frequency: top `topN` word 2-grams by count — the
     * corpus-analysis query a training-data pipeline runs for
@@ -95,7 +93,6 @@ object TextAnalysis {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
         rnd(sum("qlp") / count(lit(1)) / lit(1e6), 4).as("lm_score"))
-      .orderBy("doc_id")
   }
 
   /** (doc-bigram stream (doc_id, gram), LM table (gram, c2, c1v, qlp))
@@ -170,7 +167,6 @@ object TextAnalysis {
         sum(when(col("in_vocab").isNull, 1L).otherwise(0L)).as("n_oov"))
       .select(col("lang"), col("n_tokens"), col("n_oov"),
         rnd(col("n_oov") / col("n_tokens").cast("double"), 4).as("oov_rate"))
-      .orderBy("lang")
   }
 
   /** n-gram/stopword-heuristic language ID: per-language marker hit
@@ -190,7 +186,6 @@ object TextAnalysis {
           when(col(s"s_$l") >= greatest(markers.map(m => col(s"s_${m._1}")): _*) &&
             col(s"s_$l") > 0, lit(l)).otherwise(els)
         })
-      .orderBy("doc_id")
   }
 
   /** Language-ID confusion matrix — the evaluation a pipeline runs to
@@ -203,7 +198,6 @@ object TextAnalysis {
       .join(Tables.documents(spark, dir).select("doc_id", "lang"), "doc_id")
       .groupBy("lang", "pred_lang")
       .agg(count(lit(1)).as("cnt"))
-      .orderBy("lang", "pred_lang")
 
   /** Deterministic quality score from token statistics
     * (length / distinct-ratio / token-length / stopword components). */
@@ -224,7 +218,6 @@ object TextAnalysis {
             ((col("n_chars") - (col("n_toks") - 1)) / col("n_toks").cast("double")) / lit(8.0)) +
           lit(0.2) * (lit(1.0) - col("n_stop") / col("n_toks").cast("double")), 4))
       .select("doc_id", "n_toks", "uniq_ratio", "quality")
-      .orderBy("doc_id")
   }
 
   /** Canonical text normalization (lowercase, strip non-alnum, collapse
@@ -239,7 +232,6 @@ object TextAnalysis {
       .select(col("doc_id"),
         length(norm).cast("long").as("n_chars_norm"),
         md5(norm.cast("binary")).as("norm_hash"))
-      .orderBy("doc_id")
   }
 
   /** Rolling polynomial fingerprints: whole-text hash (base 131) and an
@@ -251,7 +243,6 @@ object TextAnalysis {
         polyHash(col("text"), 131).as("fp_text"),
         aggregate(ts, lit(0L),
           (h, t) => (h * 1000003L + polyHash(t)) % HashP).as("fp_tokens"))
-      .orderBy("doc_id")
   }
 
   /** Token-run fold: longest run of consecutive identical tokens in
@@ -300,7 +291,6 @@ object TextAnalysis {
           rnd((size(col("_bg")) - size(array_distinct(col("_bg"))))
             / size(col("_bg")).cast("double"), 4))
           .otherwise(0.0).as("dup_2gram_frac"))
-      .orderBy("doc_id")
   }
 
   /** log2 lookup bound: token counts and doc lengths clamp here before
@@ -343,7 +333,6 @@ object TextAnalysis {
           element_at(tbl, least(col("n_toks"), lit(EntropyCap.toLong)).cast("int"))
             - (sumFx / 1e6) / col("n_toks"), 4))
           .otherwise(0.0).as("entropy"))
-      .orderBy("doc_id")
   }
 
   /** PII patterns shared by the Spark plan and the oracle — restricted
@@ -372,7 +361,6 @@ object TextAnalysis {
         regexp_count(planted, lit(PhoneRe)).cast("long").as("n_phone"),
         length(scrubbed).cast("long").as("n_chars_scrubbed"),
         md5(scrubbed.cast("binary")).as("scrub_hash"))
-      .orderBy("doc_id")
   }
 
   object SqlOracle {
@@ -382,7 +370,7 @@ object TextAnalysis {
       s"""SELECT doc_id,
          |  CAST(len($toksE) AS BIGINT) AS n_ws,
          |  CAST(len(regexp_extract_all(text, '$BpePattern')) AS BIGINT) AS n_bpe
-         |FROM documents ORDER BY doc_id""".stripMargin
+         |FROM documents""".stripMargin
 
     val tokenizerStats: String =
       s"""WITH s AS (SELECT lang,
@@ -394,7 +382,7 @@ object TextAnalysis {
          |  CAST(sum(n_chars) AS BIGINT) AS total_chars,
          |  ${S.rnd("CAST(sum(n_chars) AS BIGINT) / CAST(CAST(sum(n_toks) AS BIGINT) AS DOUBLE)", 4)} AS chars_per_token,
          |  ${S.rnd("CAST(sum(n_toks) AS BIGINT) / CAST(count(*) AS DOUBLE)", 4)} AS tokens_per_doc
-         |FROM s GROUP BY lang ORDER BY lang""".stripMargin
+         |FROM s GROUP BY lang""".stripMargin
 
     val langId: String = {
       val scores = markers.map { case (l, ws) =>
@@ -405,16 +393,14 @@ object TextAnalysis {
         s"CASE WHEN s_$l >= $gr AND s_$l > 0 THEN '$l' ELSE $els END"
       }
       s"""SELECT doc_id, ${markers.map(m => s"s_${m._1}").mkString(", ")}, $pred AS pred_lang
-         |FROM (SELECT doc_id, $scores FROM documents)
-         |ORDER BY doc_id""".stripMargin
+         |FROM (SELECT doc_id, $scores FROM documents)""".stripMargin
     }
 
     val langConfusion: String =
       s"""WITH p AS ($langId)
          |SELECT d.lang, p.pred_lang, count(*) AS cnt
          |FROM p JOIN documents d USING (doc_id)
-         |GROUP BY d.lang, p.pred_lang
-         |ORDER BY d.lang, p.pred_lang""".stripMargin
+         |GROUP BY d.lang, p.pred_lang""".stripMargin
 
     val qualityScore: String = {
       val stop = markers.head._2.map(w => s"'$w'").mkString(", ")
@@ -432,7 +418,7 @@ object TextAnalysis {
          |    0.35e0 * (n_uniq / CAST(n_toks AS DOUBLE)) +
          |    0.2e0 * least(1.0e0, ((n_chars - (n_toks - 1)) / CAST(n_toks AS DOUBLE)) / 8.0e0) +
          |    0.2e0 * (1.0e0 - n_stop / CAST(n_toks AS DOUBLE))) * 1e4 + 0.5e0) / 1e4) AS quality
-         |FROM s ORDER BY doc_id""".stripMargin
+         |FROM s""".stripMargin
     }
 
     def ngramFreq(topN: Int = 100): String =
@@ -478,7 +464,7 @@ object TextAnalysis {
          |$qCte
          |SELECT doc_id, count(*) AS n_bigrams,
          |  ${S.rnd("CAST(sum(qlp) AS BIGINT) / count(*) / 1e6", 4)} AS lm_score
-         |FROM q GROUP BY doc_id ORDER BY doc_id""".stripMargin
+         |FROM q GROUP BY doc_id""".stripMargin
     }
 
     def vocabCoverage(vocabSize: Int = 1000): String =
@@ -492,7 +478,7 @@ object TextAnalysis {
          |  CAST(sum(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
          |  ${S.rnd("CAST(sum(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS BIGINT) / CAST(count(*) AS DOUBLE)", 4)} AS oov_rate
          |FROM toks LEFT JOIN v ON toks.tok = v.tok
-         |GROUP BY toks.lang ORDER BY toks.lang""".stripMargin
+         |GROUP BY toks.lang""".stripMargin
 
     val normalize: String =
       """SELECT doc_id,
@@ -500,8 +486,7 @@ object TextAnalysis {
         |  md5(n) AS norm_hash
         |FROM (SELECT doc_id,
         |  trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS n
-        |  FROM documents)
-        |ORDER BY doc_id""".stripMargin
+        |  FROM documents)""".stripMargin
 
     val piiScrub: String = {
       val planted = "text || ' contact user' || CAST(doc_id AS VARCHAR) || " +
@@ -512,7 +497,7 @@ object TextAnalysis {
          |  CAST(len(regexp_extract_all($planted, '$PhoneRe')) AS BIGINT) AS n_phone,
          |  CAST(length($scrubbed) AS BIGINT) AS n_chars_scrubbed,
          |  md5($scrubbed) AS scrub_hash
-         |FROM documents ORDER BY doc_id""".stripMargin
+         |FROM documents""".stripMargin
     }
 
     /** Oracle in CLOSED FORM rather than a struct-state fold: DuckDB
@@ -548,7 +533,7 @@ object TextAnalysis {
          |  CASE WHEN n_toks > 0 THEN ${S.rnd("mode_cnt / CAST(n_toks AS DOUBLE)", 4)} ELSE 0.0e0 END AS top_tok_frac,
          |  CAST(coalesce(list_max([b[i+1] - b[i] for i in range(1, len(b))]), 0) AS BIGINT) AS max_run,
          |  CASE WHEN len(bg) > 0 THEN ${S.rnd("(len(bg) - len(list_distinct(bg))) / CAST(len(bg) AS DOUBLE)", 4)} ELSE 0.0e0 END AS dup_2gram_frac
-         |FROM f LEFT JOIN m ON f.doc_id = m.doc_id ORDER BY f.doc_id""".stripMargin
+         |FROM f LEFT JOIN m ON f.doc_id = m.doc_id""".stripMargin
 
     val entropy: String = {
       // 1-indexed literal log2 table, identical values to the plan's
@@ -574,7 +559,7 @@ object TextAnalysis {
          |  CASE WHEN n_toks > 0 THEN
          |    ${S.rnd(s"($tbl)[CAST(least(n_toks, ${EntropyCap}) AS INT)] - (sfx / 1e6) / n_toks", 4)}
          |  ELSE 0.0e0 END AS entropy
-         |FROM f ORDER BY doc_id""".stripMargin
+         |FROM f""".stripMargin
     }
 
     val fingerprint: String =
@@ -583,6 +568,6 @@ object TextAnalysis {
          |  list_reduce(list_prepend(CAST(0 AS BIGINT),
          |    [${S.polyHash("t")} for t in $toksE]),
          |    (h, t) -> (h * 1000003 + t) % ${HashP}) AS fp_tokens
-         |FROM documents ORDER BY doc_id""".stripMargin
+         |FROM documents""".stripMargin
   }
 }

@@ -29,18 +29,15 @@ object VectorCore {
     pairs(spark, dir)
       .select(col("id_a"), col("id_b"),
         rnd(dot(col("va"), col("vb")), 4).as("dot"))
-      .orderBy("id_a")
 
   def cosineSim(spark: SparkSession, dir: String): DataFrame =
     pairs(spark, dir)
       .select(col("id_a"), col("id_b"),
         rnd(cosine(col("va"), col("vb")), 4).as("cos"))
-      .orderBy("id_a")
 
   def l2NormQ(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), rnd(l2Norm(col("embedding")), 4).as("norm"))
-      .orderBy("vec_id")
 
   /** Normalization verified via scalar projections of the unit vector. */
   def l2NormalizeQ(spark: SparkSession, dir: String): DataFrame = {
@@ -50,14 +47,12 @@ object VectorCore {
         rnd(element_at(u, 1), 4).as("u_first"),
         rnd(element_at(u, Dim), 4).as("u_last"),
         rnd(aggregate(u, lit(0.0), (a, x) => a + x), 4).as("u_sum"))
-      .orderBy("vec_id")
   }
 
   def euclidDist(spark: SparkSession, dir: String): DataFrame =
     pairs(spark, dir)
       .select(col("id_a"), col("id_b"),
         rnd(euclid(col("va"), col("vb")), 4).as("dist"))
-      .orderBy("id_a")
 
   /** Per-label centroids — the building block of IVF/k-means training
     * (ref weaviate class ≈ label partitions; Ann.fitCentroids runs this
@@ -73,7 +68,6 @@ object VectorCore {
       .groupBy(col("label"), col("dim").cast("long").as("dim"))
       .agg(count(lit(1)).as("n_vecs"),
         rnd(fxAvg(col("x").cast("double"), 6), 6).as("c"))
-      .orderBy("label", "dim")
 
   /** Scalar int8 quantization audit (the FAISS SQ8 compression step: 4×
     * smaller vectors than float32 at ~1e-3 absolute error) — per
@@ -109,7 +103,6 @@ object VectorCore {
       .select(element_at(iLit, col("idx") + 1).as("i"),
         element_at(jLit, col("idx") + 1).as("j"),
         col("n_vecs"), rnd(col("s") / 1e9, 6).as("g"))
-      .orderBy("i", "j")
   }
 
   def quantizeInt8(spark: SparkSession, dir: String): DataFrame = {
@@ -126,7 +119,6 @@ object VectorCore {
       .agg(rnd(fxAvg(col("err"), 9), 6).as("mean_abs_err"))
       .select(col("dim"), rnd(col("lo"), 4).as("lo"), rnd(col("hi"), 4).as("hi"),
         col("mean_abs_err"))
-      .orderBy("dim")
   }
 
   object SqlOracle {
@@ -137,17 +129,15 @@ object VectorCore {
 
     val dotProduct: String =
       s"""SELECT id_a, id_b, (floor((${S.dot("va", "vb", Dim)}) * 1e4 + 0.5e0) / 1e4) AS dot
-         |$joinFrom
-         |ORDER BY id_a""".stripMargin
+         |$joinFrom""".stripMargin
 
     val cosineSim: String =
       s"""SELECT id_a, id_b, (floor((${S.cosine("va", "vb", Dim)}) * 1e4 + 0.5e0) / 1e4) AS cos
-         |$joinFrom
-         |ORDER BY id_a""".stripMargin
+         |$joinFrom""".stripMargin
 
     val l2Norm: String =
       s"""SELECT vec_id, (floor((${S.l2Norm("embedding", Dim)}) * 1e4 + 0.5e0) / 1e4) AS norm
-         |FROM embeddings ORDER BY vec_id""".stripMargin
+         |FROM embeddings""".stripMargin
 
     val l2Normalize: String = {
       val u = s"(CASE WHEN ${S.l2Norm("embedding", Dim)} > 0.0 THEN " +
@@ -157,20 +147,18 @@ object VectorCore {
          |  (floor((u[1]) * 1e4 + 0.5e0) / 1e4) AS u_first,
          |  (floor((u[$Dim]) * 1e4 + 0.5e0) / 1e4) AS u_last,
          |  (floor((list_reduce(list_prepend(CAST(0.0 AS DOUBLE), u), (a, x) -> a + x)) * 1e4 + 0.5e0) / 1e4) AS u_sum
-         |FROM (SELECT vec_id, $u AS u FROM embeddings)
-         |ORDER BY vec_id""".stripMargin
+         |FROM (SELECT vec_id, $u AS u FROM embeddings)""".stripMargin
     }
 
     val centroids: String =
       s"""SELECT label, CAST(i - 1 AS BIGINT) AS dim, count(*) AS n_vecs,
          |  ${S.rnd(S.fxAvg("CAST(embedding[i] AS DOUBLE)", 6), 6)} AS c
          |FROM embeddings, range(1, ${Dim + 1}) t(i)
-         |GROUP BY label, dim ORDER BY label, dim""".stripMargin
+         |GROUP BY label, dim""".stripMargin
 
     val euclidDist: String =
       s"""SELECT id_a, id_b, (floor((${S.euclid("va", "vb", Dim)}) * 1e4 + 0.5e0) / 1e4) AS dist
-         |$joinFrom
-         |ORDER BY id_a""".stripMargin
+         |$joinFrom""".stripMargin
 
     val gramMatrix: String =
       s"""SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
@@ -179,7 +167,7 @@ object VectorCore {
              "CAST(embedding[i] AS DOUBLE) * CAST(embedding[j] AS DOUBLE)", 9), 6)} AS g
          |FROM embeddings, range(1, ${Dim + 1}) a(i), range(1, ${Dim + 1}) b(j)
          |WHERE j >= i
-         |GROUP BY i, j ORDER BY i, j""".stripMargin
+         |GROUP BY i, j""".stripMargin
 
     val quantizeInt8: String = {
       val q = "floor((v - lo) / (hi - lo) * 255.0e0 + 0.5e0)"
@@ -195,7 +183,7 @@ object VectorCore {
          |  FROM vals JOIN r USING (dim))
          |SELECT dim, ${S.rnd("lo", 4)} AS lo, ${S.rnd("hi", 4)} AS hi,
          |  ${S.rnd(S.fxAvg("err", 9), 6)} AS mean_abs_err
-         |FROM e GROUP BY dim, lo, hi ORDER BY dim""".stripMargin
+         |FROM e GROUP BY dim, lo, hi""".stripMargin
     }
   }
 }

@@ -178,20 +178,38 @@ object Sources {
     s"$base/$leaf"
   }
 
+  private val scratchLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** One round trip through this JVM's scratch path for (dir, leaf):
+    * `write` puts the table there, `summarize` reads it back and
+    * aggregates it, and the summary's rows come back as a local frame.
+    * The path is reused by every call, so nothing of the result may
+    * read it after the call returns, and callers that share it take
+    * turns: a frame built earlier never reads files a later call has
+    * overwritten. */
+  private def roundTrip(spark: SparkSession, dir: String, leaf: String)(
+      write: String => Unit)(summarize: String => DataFrame): DataFrame = {
+    val path = scratch(dir, leaf)
+    scratchLocks.computeIfAbsent(path, _ => new Object).synchronized {
+      write(path)
+      val summary = summarize(path)
+      spark.createDataFrame(summary.collectAsList(), summary.schema)
+    }
+  }
+
   /** events parquet → CSV → read back → per-type summary. The summary
     * is computed from the ROUND-TRIPPED frame while the oracle reads
     * the original parquet, so any lossy formatting (µs timestamps,
     * double text round-trip) would surface as a hash mismatch. */
   def roundTripEventsCsv(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions._
-    val path = scratch(dir, "events_csv")
-    writeEventsCsv(graft.Tables.events(spark, dir), path)
-    readEventsCsv(spark, path)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        rnd(fxSum(col("value"), 4), 4).as("sum_value"),
-        min("ts").as("min_ts"), max("ts").as("max_ts"))
-      .orderBy("event_type")
+    roundTrip(spark, dir, "events_csv")(writeEventsCsv(graft.Tables.events(spark, dir), _)) { path =>
+      readEventsCsv(spark, path)
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          rnd(fxSum(col("value"), 4), 4).as("sum_value"),
+          min("ts").as("min_ts"), max("ts").as("max_ts"))
+    }
   }
 
   /** documents parquet → ref-shaped JSONL corpus → read back → per-lang
@@ -199,18 +217,17 @@ object Sources {
     * must survive the JSON escape/unescape round trip. */
   def roundTripDocsJsonl(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions._
-    val path = scratch(dir, "docs_jsonl")
-    writeDocumentsJsonl(
+    roundTrip(spark, dir, "docs_jsonl")(writeDocumentsJsonl(
       graft.Tables.documents(spark, dir).select(
         col("doc_id").cast("string").as("id"), col("text"),
         col("lang").as("category"),
-        lit("1970-01-01T00:00:00Z").as("timestamp"), col("source")), path)
-    readDocumentsJsonl(spark, path)
-      .groupBy("category")
-      .agg(count(lit(1)).as("n"),
-        sum(length(col("text")).cast("long")).as("sum_chars"),
-        sum(polyHash(col("text"))).as("content_hash_sum"))
-      .orderBy("category")
+        lit("1970-01-01T00:00:00Z").as("timestamp"), col("source")), _)) { path =>
+      readDocumentsJsonl(spark, path)
+        .groupBy("category")
+        .agg(count(lit(1)).as("n"),
+          sum(length(col("text")).cast("long")).as("sum_chars"),
+          sum(polyHash(col("text"))).as("content_hash_sum"))
+    }
   }
 
   /** documents parquet → ORC → read back → per-lang summary with the
@@ -220,16 +237,15 @@ object Sources {
     * byte survive the format change). */
   def roundTripDocsOrc(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions._
-    val path = scratch(dir, "docs_orc")
-    graft.Tables.documents(spark, dir)
-      .write.mode("overwrite").orc(path)
-    spark.read.orc(path)
-      .groupBy("lang")
-      .agg(count(lit(1)).as("n"),
-        sum(length(col("text")).cast("long")).as("sum_chars"),
-        sum(col("n_chars")).as("sum_n_chars"),
-        sum(polyHash(col("text"))).as("content_hash_sum"))
-      .orderBy("lang")
+    roundTrip(spark, dir, "docs_orc")(
+      graft.Tables.documents(spark, dir).write.mode("overwrite").orc(_)) { path =>
+      spark.read.orc(path)
+        .groupBy("lang")
+        .agg(count(lit(1)).as("n"),
+          sum(length(col("text")).cast("long")).as("sum_chars"),
+          sum(col("n_chars")).as("sum_n_chars"),
+          sum(polyHash(col("text"))).as("content_hash_sum"))
+    }
   }
 
   object SqlOracle {
@@ -242,7 +258,7 @@ object Sources {
          |  ${S.rnd(S.fxSum("value", 4), 4)} AS sum_value,
          |  min(ts) AS min_ts, max(ts) AS max_ts
          |FROM ${S.eventsUs} e
-         |GROUP BY event_type ORDER BY event_type""".stripMargin
+         |GROUP BY event_type""".stripMargin
 
     val roundTripDocsOrc: String =
       s"""SELECT lang, count(*) AS n,
@@ -250,13 +266,13 @@ object Sources {
          |  CAST(sum(n_chars) AS BIGINT) AS sum_n_chars,
          |  CAST(sum(${S.polyHash("text")}) AS BIGINT) AS content_hash_sum
          |FROM documents
-         |GROUP BY lang ORDER BY lang""".stripMargin
+         |GROUP BY lang""".stripMargin
 
     val roundTripDocsJsonl: String =
       s"""SELECT lang AS category, count(*) AS n,
          |  CAST(sum(len(text)) AS BIGINT) AS sum_chars,
          |  CAST(sum(${S.polyHash("text")}) AS BIGINT) AS content_hash_sum
          |FROM documents
-         |GROUP BY lang ORDER BY category""".stripMargin
+         |GROUP BY lang""".stripMargin
   }
 }

@@ -1,7 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 import graft.operators._
@@ -13,6 +17,102 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString()
+
+  // ---------- the ordering contract of every declared query ----------
+  // A result pays for order only where its contract needs it. The
+  // reference returns ranked top-k lists and scores them as sets.
+  //  - ranked: top-k lists, rank columns, orderBy(...).limit(n) —
+  //    ordered;
+  //  - series: rows along a time or batch axis — ordered;
+  //  - set: per-row projections, per-key aggregates, pair lists and
+  //    samples — no order: no top-level sort, and the oracle has no
+  //    top-level ORDER BY, so crosscheck compares it as a multiset.
+  // A ranked result bounded by construction (a top-k tail, at most
+  // k rows per key) is sorted in the top-k stage's one task
+  // (`Knn.ranked`) and plans no range-partitioning exchange.
+
+  private val ranked: Set[String] = Set(
+    "knn_bruteforce", "knn_cosine_topk", "knn_metadata_filter",
+    "ann_lsh_hyperplane", "ann_lsh_filtered", "ann_ivf", "ann_ivf_filtered",
+    "ann_ivf_indexed", "ann_ivf_sqrtn", "ann_ivf_pq", "ann_ivf_pq_indexed",
+    "ann_pq_search", "ann_pq_indexed", "ann_pq_trained", "ann_sq8_search",
+    "ann_sq8_indexed", "ann_graph_search", "mm_embed_search",
+    "pipeline_hashing_search", "pipeline_indexed_search", "pipeline_indexed_dense",
+    "pipeline_tfidf_search", "pipeline_tfidf_indexed", "pipeline_chunk_search",
+    "pipeline_chunk_indexed", "pipeline_hybrid_search", "pipeline_hybrid_alpha",
+    "pipeline_text_query_search", "pipeline_tfidf_text_search",
+    "pipeline_bm25_text_search", "pipeline_hybrid_text_search", "text_bm25_topk",
+    "sample_reservoir", "events_top_users", "q3_join_agg", "text_ngram_freq",
+    "q_window_topn", "text_keyword_extract", "report_model_by_size",
+    "corpus_query_gen", "stream_topk_trending")
+
+  private val series: Set[String] = Set(
+    "events_retention", "events_active_users", "pivot_daily", "ingest_throughput",
+    "stream_windowed_agg", "stream_sliding_agg", "stream_histogram")
+
+  /** The ordered results that keep Spark's range sort, each with the
+    * reason it is not a bounded top-k tail. */
+  private val rangeSorted: Map[String, String] = Map(
+    "q_window_topn" -> "ranked per customer: customers x 3 rows, corpus-sized",
+    "text_keyword_extract" -> "ranked per document: documents x k rows, corpus-sized",
+    "report_model_by_size" -> "ranked by a window over the caps x models grid, not a top-k aggregate",
+    "stream_topk_trending" -> "ranked per window: windows x k rows, grows with the log's span",
+    "events_retention" -> "series over cohort days, grows with the log's span",
+    "events_active_users" -> "series over days, grows with the log's span",
+    "pivot_daily" -> "series over days, grows with the log's span",
+    "ingest_throughput" -> "series over batches of 256 events, corpus-sized",
+    "stream_windowed_agg" -> "series over windows, grows with the log's span",
+    "stream_sliding_agg" -> "series over windows, grows with the log's span",
+    "stream_histogram" -> "series over windows, grows with the log's span")
+
+  /** The executed plan of `df` under a `noop` write, the action that
+    * materializes every row and column. */
+  private def executedUnderNoop(df: DataFrame): SparkPlan = {
+    val done = scala.concurrent.Promise[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.isInstanceOf[V2WriteCommand]) done.trySuccess(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        if (qe.analyzed.isInstanceOf[V2WriteCommand]) done.tryFailure(exception)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      scala.concurrent.Await.result(done.future, scala.concurrent.duration.Duration(60, "s"))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The plan's output comes out of a global sort: below the write,
+    * only order-preserving wrappers and projections sit over it. */
+  private def topLevelSort(p: SparkPlan): Boolean = p match {
+    case s: SortExec => s.global
+    case a: AdaptiveSparkPlanExec => topLevelSort(a.executedPlan)
+    case q: QueryStageExec => topLevelSort(q.plan)
+    case _ if p.children.size == 1 && Set("WholeStageCodegen", "InputAdapter", "Project",
+        "ColumnarToRow", "OverwriteByExpression", "AppendData").exists(p.nodeName.startsWith) =>
+      topLevelSort(p.children.head)
+    case _ => false
+  }
+
+  test("ordering contract: every declared query is ranked, series or set, in its cheapest plan") {
+    val all = SparkEntry.queries.keySet
+    (ranked ++ series) -- all shouldBe empty
+    ranked intersect series shouldBe empty
+    rangeSorted.keySet -- (ranked ++ series) shouldBe empty
+    val sets = all -- ranked -- series
+    val faults = all.toSeq.sorted.flatMap { name =>
+      val p = executedUnderNoop(SparkEntry.queries(name)(spark, sfDir))
+      val range = p.toString.contains("rangepartitioning")
+      if (sets(name) && (range || topLevelSort(p)))
+        Some(s"$name: a set result that sorts (range exchange=$range)")
+      else if (!sets(name) && !rangeSorted.contains(name) && range)
+        Some(s"$name: a bounded ranked result that range-sorts")
+      else if (rangeSorted.contains(name) && !range)
+        Some(s"$name: listed as range-sorted but plans no range exchange")
+      else None
+    }
+    faults shouldBe empty
+  }
 
   test("fused experiment grids scan the corpus far fewer times than their unioned forms") {
     // r12 fusions: a regression back to one-corpus-pass-per-leg would
@@ -58,9 +158,9 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
     // AQE prints "final plan == Initial Plan ==" sections; audit the final
     val p = plan(df).split("== Initial Plan ==").head
     p should include("*(") // whole-stage-codegen stage markers
-    // exactly the groupBy(doc,bucket) exchange, the window-by-doc
-    // exchange, and the final orderBy range exchange
-    "Exchange".r.findAllIn(p).size should be <= 4
+    // the groupBy(doc,bucket) exchange and the window-by-doc
+    // exchange; a set result has no presentation sort
+    "Exchange".r.findAllIn(p).size should be <= 3
   }
 
   test("metadata filter is applied before scoring (pushed below the join)") {
@@ -223,11 +323,11 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
     }
   }
 
-  test("stratified sample: pure scan-side filter, no exchange before the sort") {
+  test("stratified sample: pure scan-side filter, no exchange at all") {
     val p = plan(Shaping.stratifiedSample(spark, sfDir))
-    // the quota filter is per-row arithmetic: nothing may shuffle except
-    // the final presentation orderBy (one range exchange)
-    "Exchange".r.findAllIn(p).size should be <= 1
+    // the quota filter is per-row arithmetic and a sample is a set:
+    // nothing shuffles
+    "Exchange".r.findAllIn(p).size shouldBe 0
     p should not include "Window"
   }
 
@@ -332,15 +432,15 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
     p should not include "Window"
   }
 
-  test("text_entropy: pure per-row map, only the presentation sort shuffles") {
+  test("text_entropy: pure per-row map, nothing shuffles") {
     val p = plan(TextAnalysis.entropy(spark, sfDir))
-    "Exchange".r.findAllIn(p).size should be <= 1
+    "Exchange".r.findAllIn(p).size shouldBe 0
     p should not include "Window"
   }
 
-  test("mm_modality_route: partition-local routing, only the presentation sort shuffles") {
+  test("mm_modality_route: partition-local routing, nothing shuffles") {
     val p = plan(Multimodal.modalityRoute(spark, sfDir))
-    "Exchange".r.findAllIn(p).size should be <= 1
+    "Exchange".r.findAllIn(p).size shouldBe 0
   }
 
   test("dedup_incremental: fingerprint store aggregated before the batch joins") {
@@ -386,11 +486,12 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
 
   test("shard assignment and importance sample: pure per-row maps ahead of one reduce") {
     val ps = plan(Shaping.shardAssignment(spark, sfDir))
-    // one groupBy exchange + the presentation sort; the total-count row broadcasts
-    "hashpartitioning".r.findAllIn(ps).size should be <= 2
+    // one groupBy exchange; the total-count row broadcasts
+    "hashpartitioning".r.findAllIn(ps).size should be <= 1
+    ps should not include "rangepartitioning"
     val pi = plan(Shaping.importanceSample(spark, sfDir))
     pi should not include "Window"
-    "Exchange".r.findAllIn(pi).size should be <= 1 // presentation sort only
+    "Exchange".r.findAllIn(pi).size shouldBe 0
   }
 
   test("span dedup: no cartesian product, island window partitioned by doc only") {
@@ -430,8 +531,8 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
     val gens = "Generate".r.findAllIn(p).size
     gens should be <= 1
     p should not include "CartesianProduct"
-    // one shuffle for the global aggregate + the presentation sort only
-    "Exchange".r.findAllIn(p).size should be <= 2
+    // one shuffle for the global aggregate only
+    "Exchange".r.findAllIn(p).size should be <= 1
   }
 
   test("quality calibration: corpus collapses to the histogram before any window") {
@@ -455,8 +556,8 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
       p should not include "Percentile"
       p.toLowerCase should include("partial_count")
       // histogram shuffle + one keys shuffle (windows and the final
-      // groupBy share it) + the presentation sort's range exchange
-      "Exchange".r.findAllIn(p).size should be <= 3
+      // groupBy share it)
+      "Exchange".r.findAllIn(p).size should be <= 2
     }
   }
 }

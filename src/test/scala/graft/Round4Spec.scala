@@ -110,6 +110,40 @@ class Round4Spec extends AnyFunSuite with Matchers with SharedSpark {
       collectSet(directDocs)
   }
 
+  private val roundTrips: Seq[(String, (org.apache.spark.sql.SparkSession, String) => DataFrame)] =
+    Seq("events_csv" -> graft.sources.Sources.roundTripEventsCsv,
+      "docs_jsonl" -> graft.sources.Sources.roundTripDocsJsonl,
+      "docs_orc" -> graft.sources.Sources.roundTripDocsOrc)
+
+  test("round-trip frames built before any of them runs each keep their own result") {
+    // every call reuses one scratch path per (JVM, input dir): a frame
+    // that read those files lazily would find them overwritten by the
+    // next call's write
+    for ((name, q) <- roundTrips) {
+      val frames = Seq.fill(3)(q(spark, sfDir))
+      withClue(name) { frames.map(collectSet).distinct should have size 1 }
+    }
+  }
+
+  test("racing round-trip callers share one scratch root and each read their own write") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val expected = roundTrips.map { case (_, q) => collectSet(q(spark, sfDir)) }
+    val roots0 = Cleanup.registeredPaths.toSet
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val calls = (1 to 4).map(_ => Future {
+        start.await()
+        roundTrips.map { case (_, q) => collectSet(q(spark, sfDir)) }
+      })
+      start.countDown()
+      calls.map(Await.result(_, 5.minutes)).foreach(_ shouldBe expected)
+      Cleanup.registeredPaths.toSet shouldBe roots0
+    } finally pool.shutdown()
+  }
+
   test("q_semi_anti_join: segment totals partition the customer set") {
     val rows = Relational.semiAntiJoin(spark, sfDir).collect()
     val total = rows.map(r => r.getLong(1) + r.getLong(2)).sum
@@ -564,7 +598,7 @@ class Round4Spec extends AnyFunSuite with Matchers with SharedSpark {
 
   test("pipeline_experiment_matrix: one row per (model, search_mode), hashing/vector leg equals the summary") {
     val m = Experiment.matrix(spark, sfDir).collect()
-    m.map(r => (r.getString(0), r.getString(1))).toSeq shouldBe Seq(
+    m.map(r => (r.getString(0), r.getString(1))).toSeq.sorted shouldBe Seq(
       ("hashing_tf", "hybrid"), ("hashing_tf", "vector"),
       ("tfidf", "hybrid"), ("tfidf", "vector"))
     val s = Experiment.summary(spark, sfDir).collect()(0)
@@ -795,7 +829,7 @@ class Round4Spec extends AnyFunSuite with Matchers with SharedSpark {
   test("v_quantize_int8: one row per dim, reconstruction error within half a grid step") {
     val rows = VectorCore.quantizeInt8(spark, sfDir).collect()
     rows.length shouldBe VectorCore.Dim
-    rows.map(_.getLong(0)).toSeq shouldBe (1L to VectorCore.Dim)
+    rows.map(_.getLong(0)).toSeq.sorted shouldBe (1L to VectorCore.Dim)
     for (r <- rows) {
       val (lo, hi, err) = (r.getDouble(1), r.getDouble(2), r.getDouble(3))
       hi should be >= lo

@@ -76,13 +76,13 @@ class Round5Spec extends AnyFunSuite with Matchers with SharedSpark {
     // round 12: sizes runs the |caps|x|models| grid as two fused plan
     // families over one corpus pass each; results must not move by a
     // bit vs the legacy one-union-arm-per-leg form (the oracle's shape)
-    Experiment.sizes(spark, sfDir).collect().map(_.toString) shouldBe
-      Experiment.sizesUnioned(spark, sfDir).collect().map(_.toString)
+    Experiment.sizes(spark, sfDir).collect().map(_.toString).sorted shouldBe
+      Experiment.sizesUnioned(spark, sfDir).collect().map(_.toString).sorted
   }
 
   test("fused experiment matrix equals the per-leg unioned formulation bit-identically") {
-    Experiment.matrix(spark, sfDir).collect().map(_.toString) shouldBe
-      Experiment.matrixUnioned(spark, sfDir).collect().map(_.toString)
+    Experiment.matrix(spark, sfDir).collect().map(_.toString).sorted shouldBe
+      Experiment.matrixUnioned(spark, sfDir).collect().map(_.toString).sorted
   }
 
   test("fused summary equals the direct formulation bit-identically (incl. empty corpus)") {
@@ -98,22 +98,22 @@ class Round5Spec extends AnyFunSuite with Matchers with SharedSpark {
   }
 
   test("fused nprobe recall sweep equals the per-leg unioned formulation bit-identically") {
-    graft.operators.Eval.annRecallIvfSweep(spark, sfDir).collect().map(_.toString) shouldBe
-      graft.operators.Eval.annRecallIvfSweepUnioned(spark, sfDir).collect().map(_.toString)
+    graft.operators.Eval.annRecallIvfSweep(spark, sfDir).collect().map(_.toString).sorted shouldBe
+      graft.operators.Eval.annRecallIvfSweepUnioned(spark, sfDir).collect().map(_.toString).sorted
   }
 
   test("fused sizes matches unioned on edge inputs: a cap below nq, an empty corpus") {
     // cap 3 < nq 5: the leg's QUERY set is cap-bounded too (review r12)
-    Experiment.sizes(spark, sfDir, caps = Seq(3L, 100L)).collect().map(_.toString) shouldBe
-      Experiment.sizesUnioned(spark, sfDir, caps = Seq(3L, 100L)).collect().map(_.toString)
+    Experiment.sizes(spark, sfDir, caps = Seq(3L, 100L)).collect().map(_.toString).sorted shouldBe
+      Experiment.sizesUnioned(spark, sfDir, caps = Seq(3L, 100L)).collect().map(_.toString).sorted
     // 0-doc corpus: one row per (cap, model) with zero counts and null
     // means — the unioned form's global-agg-over-empty rows must not
     // vanish through the fused form's joins
     val empty = tempDir("graft-sizes-empty")
     graft.Tables.documents(spark, sfDir).limit(0)
       .write.parquet(s"$empty/documents.parquet")
-    Experiment.sizes(spark, empty).collect().map(_.toString) shouldBe
-      Experiment.sizesUnioned(spark, empty).collect().map(_.toString)
+    Experiment.sizes(spark, empty).collect().map(_.toString).sorted shouldBe
+      Experiment.sizesUnioned(spark, empty).collect().map(_.toString).sorted
   }
 
   test("fused matrix and nprobe sweep match their unioned forms on an empty corpus") {
@@ -122,10 +122,10 @@ class Round5Spec extends AnyFunSuite with Matchers with SharedSpark {
       .write.parquet(s"$empty/documents.parquet")
     spark.read.parquet(s"$sfDir/embeddings.parquet").limit(0)
       .write.parquet(s"$empty/embeddings.parquet")
-    Experiment.matrix(spark, empty).collect().map(_.toString) shouldBe
-      Experiment.matrixUnioned(spark, empty).collect().map(_.toString)
-    graft.operators.Eval.annRecallIvfSweep(spark, empty).collect().map(_.toString) shouldBe
-      graft.operators.Eval.annRecallIvfSweepUnioned(spark, empty).collect().map(_.toString)
+    Experiment.matrix(spark, empty).collect().map(_.toString).sorted shouldBe
+      Experiment.matrixUnioned(spark, empty).collect().map(_.toString).sorted
+    graft.operators.Eval.annRecallIvfSweep(spark, empty).collect().map(_.toString).sorted shouldBe
+      graft.operators.Eval.annRecallIvfSweepUnioned(spark, empty).collect().map(_.toString).sorted
   }
 
   test("source matrix: totals tie out to the pair set, diagonal = within-source") {

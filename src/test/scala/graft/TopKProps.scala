@@ -5,7 +5,9 @@ import org.scalacheck.Prop.forAll
 import graft.functions.TopKBuffer
 
 /** Property tests: the bounded heap must agree with a naive
-  * sort-and-take for any input, any k, and any merge split. */
+  * sort-and-take for any input, any k, and any merge split; and a top-k
+  * tail ordered in one task ([[graft.operators.Knn.ranked]]) must equal
+  * its global sort row for row. */
 object TopKProps extends Properties("TopKBuffer") {
 
   private val entryGen: Gen[(Double, Long)] = for {
@@ -45,5 +47,26 @@ object TopKProps extends Properties("TopKBuffer") {
   property("never holds more than k entries") =
     forAll(Gen.listOf(entryGen), Gen.choose(1, 20)) { (xs, k) =>
       fill(xs, k).size <= k
+    }
+
+  // (q_id, doc_id, score) rows, one per (q_id, doc_id), over few score
+  // values so that ties are common
+  private val scoredGen: Gen[List[(Long, Long, Double)]] =
+    Gen.listOf(for {
+      q <- Gen.choose(0L, 5L)
+      d <- Gen.choose(0L, 60L)
+      s <- Gen.choose(0, 6)
+    } yield (q, d, s / 2.0)).map(_.groupBy(r => (r._1, r._2)).values.map(_.head).toList)
+
+  property("Knn.ranked over a top-k tail == its orderBy, row for row") =
+    forAll(scoredGen, Gen.choose(1, 8)) { (rows, k) =>
+      import graft.operators.Knn
+      val spark = graft.SharedSpark.session
+      import spark.implicits._
+      val scored = rows.toDF("q_id", "doc_id", "score").repartition(4)
+      val topK = Knn.topKPerKey(scored, Seq("q_id"), k)
+      scored.rdd.getNumPartitions >= 4 &&
+        topK.transform(Knn.ranked("q_id", "rank")).collect().toSeq ==
+          topK.orderBy("q_id", "rank").collect().toSeq
     }
 }
