@@ -54,11 +54,16 @@ object Memo {
     * by `prefix` (removed at JVM exit); returns the layout's path. */
   def scratch(spark: SparkSession, prefix: String, args: Any*)(
       build: String => Unit): String =
+    scratchWith(spark, prefix, args: _*)(build)._1
+
+  /** [[scratch]] whose build also returns a value memoized with the
+    * layout (a fit pinned while building it). */
+  def scratchWith[V](spark: SparkSession, prefix: String, args: Any*)(
+      build: String => V): (String, V) =
     apply(spark, prefix, args: _*) {
       val p = Cleanup.onExit(java.nio.file.Files.createTempDirectory(prefix))
         .resolve("index").toString
-      build(p)
-      p
+      (p, build(p))
     }
 
   /** Drops every entry, of every application. */

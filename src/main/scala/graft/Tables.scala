@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.graftbridge.ParquetFooter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
@@ -15,18 +16,19 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Inferred parquet schema per path — METADATA memo, not result
-    * caching: `spark.read.parquet` with no schema runs a footer
-    * -inference job (~30 ms) on EVERY call, and a single query calls
-    * these loaders up to 8 times (JobProbe r17: ann_ivf_pq paid 8 such
-    * jobs before its first real stage). The schema of a static table
-    * file is a constant; inferring it once per application
-    * ([[graft.Memo]]) and passing it explicitly removes the repeated
-    * jobs while the scan itself (file listing, pruning, pushdown) stays
-    * exactly as before. */
+  /** Parquet schema per path — METADATA memo, not result caching:
+    * `spark.read.parquet` with no schema runs a footer-inference job
+    * (~30 ms) on EVERY call, and a single query calls these loaders up
+    * to 8 times (JobProbe r17: ann_ivf_pq paid 8 such jobs before its
+    * first real stage). The schema of a static table file is a
+    * constant: it is read once per application ([[graft.Memo]]) from
+    * the footer Spark's inference would pick, on the driver with no
+    * job ([[ParquetFooter]]), and passed explicitly, while the scan
+    * itself (file listing, pruning, pushdown) stays exactly as
+    * before. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = Memo(spark, "schema", path)(spark.read.parquet(path).schema)
+    val schema = Memo(spark, "schema", path)(ParquetFooter.schema(spark, path))
     spark.read.schema(schema).parquet(path)
   }
 

@@ -272,6 +272,109 @@ object Kernels {
     }
     acc
   }
+
+  /** Ranking of (score, id) pairs shared by the codebook kernels: score
+    * descending, NaN last, ties (0.0 = -0.0 included) by id ascending —
+    * the order `min_by(id, struct(-score, id))` and a finite-score
+    * `TopKAgg.topKBy` both select by. */
+  @inline private def ranksBefore(sa: Double, ia: Long, sb: Double, ib: Long): Boolean =
+    if (sa.isNaN) sb.isNaN && ia < ib
+    else sb.isNaN || sa > sb || (sa == sb && ia < ib)
+
+  /** The ids of the `n` centroids with the largest [[dotF]] against `v`,
+    * best first. Each score is dotF's sequential double fold over float
+    * components, so the ids, ties and order equal the cross join of `v`
+    * with the grid ranked by `topKBy(dotF, c_id, n)` (for n = 1, its
+    * `min_by` argmax). */
+  def topByDot(v: ArrayData, ids: Array[Long], vecs: Array[Array[Float]],
+               n: Int): ArrayData = {
+    val x = v.toFloatArray()
+    val k = math.min(n, ids.length)
+    val bestS = new Array[Double](k)
+    val bestI = new Array[Long](k)
+    var size = 0
+    var c = 0
+    while (c < ids.length) {
+      val w = vecs(c)
+      val m = math.min(x.length, w.length)
+      var acc = 0.0
+      var i = 0
+      while (i < m) { acc += x(i).toDouble * w(i).toDouble; i += 1 }
+      val id = ids(c)
+      // insertion into the sorted best-k prefix
+      if (size < k || (k > 0 && ranksBefore(acc, id, bestS(k - 1), bestI(k - 1)))) {
+        var p = if (size < k) size else k - 1
+        while (p > 0 && ranksBefore(acc, id, bestS(p - 1), bestI(p - 1))) {
+          bestS(p) = bestS(p - 1); bestI(p) = bestI(p - 1); p -= 1
+        }
+        bestS(p) = acc; bestI(p) = id
+        if (size < k) size += 1
+      }
+      c += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(bestI)
+  }
+
+  /** PQ codes of `v`: for each subspace j, the id of the codeword with
+    * the smallest [[dist2F]] to the slice of components [j·sub,
+    * (j+1)·sub) (cut at the vector's end), ties by id — the argmin
+    * `min_by(c_id, struct(dist2F(slice, cvec), c_id))` selects per
+    * (vector, subspace). */
+  def subspaceArgmin(v: ArrayData, ids: Array[Array[Long]],
+                     words: Array[Array[Array[Float]]], sub: Int): ArrayData = {
+    val x = v.toFloatArray()
+    val out = new Array[Long](ids.length)
+    var j = 0
+    while (j < ids.length) {
+      val off = j * sub
+      val len = math.max(0, math.min(sub, x.length - off))
+      var bestD = 0.0
+      var bestId = 0L
+      var c = 0
+      while (c < ids(j).length) {
+        val w = words(j)(c)
+        val m = math.min(len, w.length)
+        var acc = 0.0
+        var i = 0
+        while (i < m) {
+          val d = x(off + i).toDouble - w(i).toDouble
+          acc += d * d
+          i += 1
+        }
+        val id = ids(j)(c)
+        if (c == 0 || ranksBefore(-acc, id, -bestD, bestId)) { bestD = acc; bestId = id }
+        c += 1
+      }
+      out(j) = bestId
+      j += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
+  /** (n_toks, n_uniq, n_stop) of a text's single-space tokens in one
+    * byte scan: the size of `tokens(s)`, of its `array_distinct`, and of
+    * its `filter(isin(stop))` (byte equality throughout; 0x20 never
+    * occurs inside a multi-byte UTF-8 sequence). */
+  def tokenStats(s: UTF8String, stop: java.util.Set[UTF8String]): InternalRow = {
+    val bytes = s.getBytes
+    val n = bytes.length
+    val seen = new java.util.HashSet[UTF8String]()
+    var toks = 0L
+    var stops = 0L
+    var i = 0
+    while (i < n) {
+      while (i < n && bytes(i) == ' ') i += 1
+      val start = i
+      while (i < n && bytes(i) != ' ') i += 1
+      if (i > start) {
+        val t = UTF8String.fromBytes(bytes, start, i - start)
+        toks += 1
+        seen.add(t)
+        if (stop.contains(t)) stops += 1
+      }
+    }
+    InternalRow(toks, seen.size.toLong, stops)
+  }
 }
 
 /** normalize_ascii(str) — on an already-lowercased string, equal to
@@ -543,6 +646,82 @@ case class MatVecExpr(child: Expression, m: Array[Array[Double]])
     copy(child = newChild)
 }
 
+/** A codebook pinned on the driver and held by [[CodebookAssignExpr]]
+  * as a construction-time constant (bounded by construction: ≤ nlist
+  * centroids, or PqM × codes codewords). */
+sealed trait Codebook
+
+/** IVF grid: centroid `ids(c)` is `vecs(c)`; assignment returns the ids
+  * of the `n` best centroids by dot, best first ([[Kernels.topByDot]]). */
+final case class TopByDot(ids: Array[Long], vecs: Array[Array[Float]], n: Int)
+  extends Codebook
+
+/** PQ codebook: codeword `ids(j)(c)` of subspace j is `words(j)(c)`;
+  * subspace j covers components [j·sub, (j+1)·sub). Assignment returns
+  * one code per subspace ([[Kernels.subspaceArgmin]]). */
+final case class SubspaceCodes(ids: Array[Array[Long]],
+                               words: Array[Array[Array[Float]]], sub: Int)
+  extends Codebook
+
+/** codebook_assign(array<float>) — the ids a vector is assigned under a
+  * pinned [[Codebook]]: the in-row form of the broadcast cross join with
+  * the codebook plus the per-vector argmin (`min_by`) or top-n
+  * (`topKBy`) aggregate, with the same dotF/dist2F arithmetic, so every
+  * assignment, tie and probe list is the same. Equality to that
+  * relational form is a property in TopKProps. */
+case class CodebookAssignExpr(child: Expression, book: Codebook)
+  extends UnaryExpression {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "codebook_assign"
+  // the codebook's arrays would print as object ids in plans
+  override protected def flatArguments: Iterator[Any] = Iterator(child)
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    FloatArrayCheck.check("codebook_assign", child)
+  def compute(v: ArrayData): ArrayData = book match {
+    case TopByDot(ids, vecs, n) => Kernels.topByDot(v, ids, vecs, n)
+    case SubspaceCodes(ids, words, sub) => Kernels.subspaceArgmin(v, ids, words, sub)
+  }
+  override protected def nullSafeEval(input: Any): Any =
+    compute(input.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("assign", this)
+    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
+  }
+  override protected def withNewChildInternal(newChild: Expression): CodebookAssignExpr =
+    copy(child = newChild)
+}
+
+/** token_stats(string) — struct(n_toks, n_uniq, n_stop) of the text's
+  * single-space tokens in one byte scan ([[Kernels.tokenStats]]): equal
+  * to size(tokens(s)), size(array_distinct(tokens(s))) and
+  * size(filter(tokens(s), t -> t IN stop)), without materializing the
+  * token array or calling a lambda per token. */
+case class TokenStatsExpr(child: Expression, stop: Seq[String])
+  extends UnaryExpression {
+  import org.apache.spark.sql.types.{StructField, StructType}
+  private lazy val stopSet: java.util.Set[UTF8String] = {
+    val s = new java.util.HashSet[UTF8String]()
+    stop.foreach(w => s.add(UTF8String.fromString(w)))
+    s
+  }
+  override def dataType: DataType = StructType(Seq(
+    StructField("n_toks", LongType, nullable = false),
+    StructField("n_uniq", LongType, nullable = false),
+    StructField("n_stop", LongType, nullable = false)))
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "token_stats"
+  def compute(s: UTF8String): InternalRow = Kernels.tokenStats(s, stopSet)
+  override protected def nullSafeEval(input: Any): Any =
+    compute(input.asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("tokenStats", this)
+    defineCodeGen(ctx, ev, c => s"$ref.compute($c)")
+  }
+  override protected def withNewChildInternal(newChild: Expression): TokenStatsExpr =
+    copy(child = newChild)
+}
+
 /** scored_pairs(array<struct<id long, vec array<float>>>) — all
   * unordered pairs among a gathered member array, cosine-scored once
   * per pair and emitted in BOTH directions as (src, dst, score)
@@ -692,6 +871,14 @@ object native {
   /** Fixed linear projection y = M·x of an array<float> column. */
   def matVec(v: Column, m: Array[Array[Double]]): Column =
     Bridge.column(MatVecExpr(ex(v), m))
+
+  /** Ids of an array<float> column's vectors under a pinned codebook. */
+  def codebookAssign(v: Column, book: Codebook): Column =
+    Bridge.column(CodebookAssignExpr(ex(v), book))
+
+  /** struct(n_toks, n_uniq, n_stop) of a text's single-space tokens. */
+  def tokenStats(text: Column, stop: Seq[String]): Column =
+    Bridge.column(TokenStatsExpr(ex(text), stop))
 
   def sparseDotDense(buckets: Column, cnts: Column, dense: Column): Column =
     Bridge.column(SparseDotDenseExpr(ex(buckets), ex(cnts), ex(dense)))

@@ -71,10 +71,10 @@ object Ann {
   }
 
   /** IVF ANN: fixed seed centroids (vec_id < NCentroids); every doc is
-    * assigned to its argmax-dot centroid (broadcast join, one pass);
-    * each query probes its top-NProbe centroids and exact-reranks the
-    * docs in those lists. [[fitCentroids]] is the Lloyd trainer for
-    * real deployments (same plan shape per iteration). */
+    * assigned to its argmax-dot centroid and each query probes its
+    * top-NProbe centroids, both in-row against the grid pinned on the
+    * driver ([[pinGrid]]), then exact-reranks the docs in those lists.
+    * [[fitCentroids]] is the Lloyd trainer for real deployments. */
   def ivf(spark: SparkSession, dir: String, k: Int = K,
           docFilter: org.apache.spark.sql.Column = lit(true),
           centroids: Option[DataFrame] = None,
@@ -82,30 +82,11 @@ object Ann {
     // default: fixed seed centroids (oracle-mirrorable); production
     // passes Lloyd-trained centroids from [[fitCentroids]] — (c_id,
     // c_vec array<float>) — and the probe plan is identical
-    val cent = centroids.getOrElse(
-      Tables.embeddings(spark, dir).filter(col("vec_id") < NCentroids)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_vec")))
-    // argmax-dot centroid via min_by on a (-score, c_id) struct —
-    // lexicographic struct min = best score, ties by c_id — with
-    // map-side partial aggregation (pqEncode's pattern): the exploded
-    // docs×centroids frame never shuffles; only one narrow row per doc
-    // does. (A window row_number here would sort-shuffle 16×N rows.)
-    val docs = Knn.docSet(spark, dir).filter(docFilter).crossJoin(broadcast(cent))
-      .groupBy("doc_id")
-      .agg(
-        min_by(col("c_id"),
-          struct(-dot(col("doc_vec"), col("c_vec")), col("c_id"))).as("c_id"),
-        first(col("doc_vec")).as("doc_vec"))
-    // top-NProbe probes per query via the bounded-heap aggregate
-    // (score desc, c_id asc — same order as the window formulation)
-    val qs = Knn.querySet(spark, dir).crossJoin(broadcast(cent))
-      .groupBy("q_id")
-      .agg(
-        graft.functions.TopKAgg.topKBy(
-          dot(col("q_vec"), col("c_vec")), col("c_id"), nProbe).as("tk"),
-        first(col("q_vec")).as("q_vec"))
-      .select(col("q_id"), col("q_vec"), explode(col("tk")).as("e"))
-      .select(col("q_id"), col("q_vec"), col("e.id").as("c_id"))
+    val grid = pinGrid(centroids.getOrElse(seedCentroids(spark, dir)))
+    // assignment is a projection: no cross join, no per-doc aggregate,
+    // no shuffle of the doc vectors
+    val docs = grid.assign(Knn.docSet(spark, dir).filter(docFilter), "doc_vec")
+    val qs = grid.assign(Knn.querySet(spark, dir), "q_vec", nProbe)
     // each doc has exactly one centroid and each query probes distinct
     // centroids, so (q_id, doc_id) pairs are already unique — no dedup
     val cands = docs.join(broadcast(qs), Seq("c_id"))
@@ -115,6 +96,54 @@ object Ann {
       .select(col("q_id"), col("rank"), col("doc_id"), rnd(col("score"), 4).as("score"))
       .transform(Knn.ranked("q_id", "rank"))
   }
+
+  /** The fixed seed grid: (c_id, c_vec) = the first [[NCentroids]]
+    * embeddings. */
+  private[operators] def seedCentroids(spark: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(spark, dir).filter(col("vec_id") < NCentroids)
+      .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
+
+  /** A centroid grid pinned on the driver: the codebook the
+    * [[native.codebookAssign]] kernel scores each vector against. */
+  final case class Grid(ids: Array[Long], vecs: Array[Array[Float]]) {
+    def size: Int = ids.length
+
+    /** The ids of each vector's `n` best centroids by dot, best first
+      * (score desc, c_id asc). */
+    def top(v: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
+      native.codebookAssign(v, TopByDot(ids, vecs, n))
+
+    /** `df` plus `c_id`, one row per each of `vecCol`'s `n` best
+      * centroids; n = 1 is the argmax-dot assignment. */
+    def assign(df: DataFrame, vecCol: String, n: Int = 1): DataFrame =
+      df.withColumn("c_id", explode(top(col(vecCol), n)))
+  }
+
+  /** Pins a (c_id, c_vec array<float>) centroid frame on the driver —
+    * bounded by construction (≤ nlist rows), the way the Lloyd fits
+    * already pin theirs. */
+  private[operators] def pinGrid(cent: DataFrame): Grid = {
+    val rows = cent.select(col("c_id"), col("c_vec")).collect()
+    Grid(rows.map(_.getLong(0)), rows.map(_.getSeq[Float](1).toArray))
+  }
+
+  /** Pins a (c_id, j, cvec array<float>) PQ codebook on the driver (≤
+    * PqM × codes rows): the in-row encode of [[pqCodesOf]]. The
+    * codebook of an empty corpus is empty and encodes nothing. */
+  private[operators] def pinCodebook(cb: DataFrame): SubspaceCodes = {
+    val rows = cb.select(col("c_id"), col("j"), col("cvec")).collect()
+    val byJ = if (rows.isEmpty) Seq.empty
+      else (0 until PqM).map(j => rows.filter(_.getInt(1) == j))
+    require(byJ.forall(_.nonEmpty),
+      s"a PQ codebook needs codewords in each of its $PqM subspaces")
+    SubspaceCodes(byJ.map(_.map(_.getLong(0))).toArray,
+      byJ.map(_.map(_.getSeq[Float](2).toArray)).toArray, PqSub)
+  }
+
+  /** (j, code) rows of each vector of `vecCol` under a pinned codebook:
+    * per subspace, the argmin squared-L2 codeword, ties by c_id. */
+  private[operators] def pqCodesOf(vecCol: String, book: SubspaceCodes): org.apache.spark.sql.Column =
+    posexplode(native.codebookAssign(col(vecCol), book)).as(Seq("j", "code"))
 
   /** Metadata-filtered ANN: the [[Knn.metaPredicate]] filter pushed
     * below signature/probe computation (scan-level), combined with the
@@ -144,24 +173,15 @@ object Ann {
       .select(col("c_id"), col("j"), col("cvec"))
 
   /** PQ encoding: each vector → PqM 4-bit codes (argmin squared-L2 to
-    * the subspace codebook, ties by c_id). One pass over the data:
-    * subvectors exploded via posexplode, codebook broadcast, argmin via
-    * min_by partial aggregation. Output exploded (vec_id, subspace,
-    * code) — 64 floats become 8 small ints (8× compression). */
+    * the subspace codebook, ties by c_id). One pass over the data: the
+    * codebook is pinned on the driver and every vector is encoded in
+    * its row. Output exploded (vec_id, subspace, code) — 64 floats
+    * become 8 small ints (8× compression). */
   def pqEncode(spark: SparkSession, dir: String,
                codebook: Option[DataFrame] = None): DataFrame = {
-    val subs = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), posexplode(array(
-        (0 until PqM).map(j => slice(col("embedding"), j * PqSub + 1, PqSub)): _*))
-        .as(Seq("j", "evec")))
-    // argmin via min_by on a (d2, c_id) struct: lexicographic struct
-    // ordering = min distance, ties by c_id — same result as a window
-    // row_number, but with map-side partial aggregation instead of a
-    // sort shuffle of the full |vectors|×codes frame
-    subs.join(broadcast(codebook.getOrElse(pqCodebook(spark, dir))), Seq("j"))
-      .groupBy("vec_id", "j")
-      .agg(min_by(col("c_id"),
-        struct(native.dist2F(col("evec"), col("cvec")), col("c_id"))).as("code"))
+    val book = pinCodebook(codebook.getOrElse(pqCodebook(spark, dir)))
+    Tables.embeddings(spark, dir)
+      .select(col("vec_id"), pqCodesOf("embedding", book))
       .select(col("vec_id"), col("j").cast("long").as("subspace"), col("code"))
   }
 
@@ -338,14 +358,7 @@ object Ann {
     * [[appendToPqIndex]] (same argmin/tie rule as [[pqEncode]]).
     * Output (doc_id, j, code). */
   private def pqEncodeOf(vecs: DataFrame, cb: DataFrame): DataFrame =
-    vecs.select(col("doc_id"), posexplode(array(
-        (0 until PqM).map(j => slice(col("doc_vec"), j * PqSub + 1, PqSub)): _*))
-        .as(Seq("j", "evec")))
-      .join(broadcast(cb), Seq("j"))
-      .groupBy("doc_id", "j")
-      .agg(min_by(col("c_id"),
-        struct(native.dist2F(col("evec"), col("cvec")), col("c_id"))).as("code"))
-      .select(col("doc_id"), col("j"), col("code"))
+    vecs.select(col("doc_id"), pqCodesOf("doc_vec", pinCodebook(cb)))
 
   /** Persisted PQ index — codes durable at ingest time, the codebook
     * stored with them (`_fit`, the [[writeSq8Index]] contract): at
@@ -404,24 +417,17 @@ object Ann {
     * in the probed lists; both pruning levels compose multiplicatively.
     * All joins against query-derived frames broadcast (Q ≪ N). */
   def ivfPq(spark: SparkSession, dir: String, k: Int = K): DataFrame = {
-    val cent = Tables.embeddings(spark, dir).filter(col("vec_id") < NCentroids)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
+    val grid = pinGrid(seedCentroids(spark, dir))
     val cb = pqCodebook(spark, dir)
-    // coarse assignment: narrow (doc_id, c_id) rows, min_by partial agg
-    val docAssign = Knn.docSet(spark, dir).crossJoin(broadcast(cent))
-      .groupBy("doc_id")
-      .agg(min_by(col("c_id"),
-        struct(-dot(col("doc_vec"), col("c_vec")), col("c_id"))).as("c_id"))
+    // coarse assignment: narrow (doc_id, c_id) rows, in-row
+    val docAssign = grid.assign(Knn.docSet(spark, dir), "doc_vec")
+      .select(col("doc_id"), col("c_id"))
     val codes = pqEncode(spark, dir, Some(cb))
       .filter(col("vec_id") >= Knn.NQueries)
       .select(col("vec_id").as("doc_id"), col("subspace").as("j"), col("code"))
     // query side: probe lists + ADC lookup tables (both tiny, broadcast)
-    val qs = Knn.querySet(spark, dir).crossJoin(broadcast(cent))
-      .groupBy("q_id")
-      .agg(graft.functions.TopKAgg.topKBy(
-        dot(col("q_vec"), col("c_vec")), col("c_id"), NProbe).as("tk"))
-      .select(col("q_id"), explode(col("tk")).as("e"))
-      .select(col("q_id"), col("e.id").as("c_id"))
+    val qs = grid.assign(Knn.querySet(spark, dir), "q_vec", NProbe)
+      .select(col("q_id"), col("c_id"))
     val lut = Knn.querySet(spark, dir)
       .select(col("q_id"), posexplode(array(
         (0 until PqM).map(j => slice(col("q_vec"), j * PqSub + 1, PqSub)): _*))
@@ -455,25 +461,21 @@ object Ann {
     * reads ONLY its probed cells' code files (DPP) at ~1 byte per
     * doc per subspace; float vectors are touched only by the
     * k-bounded exact re-rank. Built via [[Compaction.stagedBuild]] —
-    * no crash point leaves codes without their fits. */
+    * no crash point leaves codes without their fits. Returns the
+    * coarse grid it assigned under, pinned. */
   def writeIvfPqIndex(spark: SparkSession, dir: String, out: String,
                       docs: Option[DataFrame] = None,
                       centroids: Option[DataFrame] = None,
-                      codebook: Option[DataFrame] = None): Unit =
+                      codebook: Option[DataFrame] = None): Grid = {
+    // defaults = the verified fixed-seed fits (oracle-mirrorable);
+    // the deployment path passes TRAINED fits (√N spherical
+    // centroids, 8×256 Lloyd codebook) — the layout stores whatever
+    // it was built with and serving reads only the stored fits
+    val cent = centroids.getOrElse(seedCentroids(spark, dir))
+    val cb = codebook.getOrElse(pqCodebook(spark, dir))
+    val grid = pinGrid(cent)
     Compaction.stagedBuild(spark, out) { tmp =>
-      // defaults = the verified fixed-seed fits (oracle-mirrorable);
-      // the deployment path passes TRAINED fits (√N spherical
-      // centroids, 8×256 Lloyd codebook) — the layout stores whatever
-      // it was built with and serving reads only the stored fits
-      val cent = centroids.getOrElse(
-        Tables.embeddings(spark, dir).filter(col("vec_id") < NCentroids)
-          .select(col("vec_id").as("c_id"), col("embedding").as("c_vec")))
-      val cb = codebook.getOrElse(pqCodebook(spark, dir))
-      val ds = docs.getOrElse(Knn.docSet(spark, dir))
-      val assign = assignToIndex(spark, dir, ds, Some(cent))
-        .select(col("doc_id"), col("c_id"))
-      pqEncodeOf(ds, cb)
-        .join(assign, Seq("doc_id"))
+      ivfPqRows(docs.getOrElse(Knn.docSet(spark, dir)), grid, pinCodebook(cb))
         // same cell-clustered write as writeIvfIndex (guide §6): one
         // consolidated code file per cell instead of one per writer
         // task per cell. The within-file sort is load-bearing: an
@@ -486,6 +488,15 @@ object Ann {
       Tables.writeFit(cent, s"$tmp/_cent", Tables.CentroidFit)
       Tables.writeFit(cb, s"$tmp/_fit", Tables.PqFit)
     }
+    grid
+  }
+
+  /** (doc_id, j, code, c_id) rows of a (doc_id, doc_vec) batch: its
+    * coarse cell and its PQ codes, both assigned in the row — one scan
+    * of the batch, no join. */
+  private def ivfPqRows(docs: DataFrame, grid: Grid, book: SubspaceCodes): DataFrame =
+    grid.assign(docs.select(col("doc_id"), col("doc_vec")), "doc_vec")
+      .select(col("doc_id"), pqCodesOf("doc_vec", book), col("c_id"))
 
   /** Frozen-fit incremental maintenance for a [[writeIvfPqIndex]]
     * layout: the batch is assigned under the index's OWN `_cent` grid
@@ -496,18 +507,10 @@ object Ann {
     * only on the fits); re-train + rebuild when [[
     * graft.operators.Drift]]'s numbers say the fits drifted. */
   def appendToIvfPqIndex(spark: SparkSession, newVecs: DataFrame,
-                         indexPath: String): Unit = {
-    val cent = indexCentroids(spark, indexPath)
-    val cb = Tables.readFit(spark, s"$indexPath/_fit", Tables.PqFit)
-    val vecs = newVecs.select(col("doc_id"), col("doc_vec"))
-    val assign = vecs.crossJoin(broadcast(cent))
-      .groupBy("doc_id")
-      .agg(min_by(col("c_id"),
-        struct(-dot(col("doc_vec"), col("c_vec")), col("c_id"))).as("c_id"))
-    pqEncodeOf(vecs, cb)
-      .join(assign, Seq("doc_id"))
+                         indexPath: String): Unit =
+    ivfPqRows(newVecs, indexGrid(spark, indexPath),
+      pinCodebook(Tables.readFit(spark, s"$indexPath/_fit", Tables.PqFit)))
       .write.mode("append").partitionBy("c_id").parquet(indexPath)
-  }
 
   /** [[ivfPq]] answered from a persisted [[writeIvfPqIndex]] layout:
     * both pruning levels compose against STORED artifacts — the probe
@@ -517,14 +520,18 @@ object Ann {
     * set, same fixed-point ADC), so it shares its oracle. */
   def ivfPqIndexed(spark: SparkSession, dir: String, indexPath: String,
                    k: Int = K, nProbe: Int = NProbe,
-                   rerank: Int = -1): DataFrame = {
+                   rerank: Int = -1): DataFrame =
+    ivfPqProbe(spark, dir, indexPath, indexGrid(spark, indexPath), k, nProbe, rerank)
+
+  /** [[ivfPqIndexed]] against the layout's grid already pinned. */
+  private def ivfPqProbe(spark: SparkSession, dir: String, indexPath: String,
+                         grid: Grid, k: Int, nProbe: Int, rerank: Int): DataFrame = {
     // defaults reproduce the verified fixed-fit query bit-identically;
     // the deployment path passes AutoProbe (√nlist against the stored
     // grid) and a scaled re-rank pool (VERDICT r14 §next-3: the 200k
     // flat-PQ saturation was localized to the fixed 3k pool)
-    val cent = indexCentroids(spark, indexPath)
     val cb = Tables.readFit(spark, s"$indexPath/_fit", Tables.PqFit)
-    val np = if (nProbe > 0) nProbe else sqrtProbeCount(cent.count().toInt)
+    val np = if (nProbe > 0) nProbe else sqrtProbeCount(grid.size)
     val pool = if (rerank > 0) rerank else 3 * k
     // an index built before any data arrived holds its fits but ZERO
     // code files (a partitioned write of no rows emits no parts, so
@@ -539,12 +546,8 @@ object Ann {
           import spark.implicits._
           Seq.empty[(Long, Int, Long, Long)].toDF("doc_id", "j", "code", "c_id")
       }
-    val qs = Knn.querySet(spark, dir).crossJoin(broadcast(cent))
-      .groupBy("q_id")
-      .agg(graft.functions.TopKAgg.topKBy(
-        dot(col("q_vec"), col("c_vec")), col("c_id"), np).as("tk"))
-      .select(col("q_id"), explode(col("tk")).as("e"))
-      .select(col("q_id"), col("e.id").as("c_id"))
+    val qs = grid.assign(Knn.querySet(spark, dir), "q_vec", np)
+      .select(col("q_id"), col("c_id"))
     val lut = Knn.querySet(spark, dir)
       .select(col("q_id"), posexplode(array(
         (0 until PqM).map(j => slice(col("q_vec"), j * PqSub + 1, PqSub)): _*))
@@ -569,43 +572,31 @@ object Ann {
   }
 
   /** [[ivfPqIndexed]] over a memoized scratch build — the verified-
-    * query form (`ann_ivf_pq_indexed`; shares [[ivfPq]]'s oracle). */
-  def ivfPqViaIndex(spark: SparkSession, dir: String, k: Int = K): DataFrame =
-    ivfPqIndexed(spark, dir,
-      graft.Memo.scratch(spark, "graft-ivfpqidx", dir)(
-        writeIvfPqIndex(spark, dir, _)), k)
+    * query form (`ann_ivf_pq_indexed`; shares [[ivfPq]]'s oracle). The
+    * grid pinned at build is memoized with the layout, so no search
+    * reads `_cent` back. */
+  def ivfPqViaIndex(spark: SparkSession, dir: String, k: Int = K): DataFrame = {
+    val (path, grid) = graft.Memo.scratchWith(spark, "graft-ivfpqidx", dir)(
+      writeIvfPqIndex(spark, dir, _))
+    ivfPqProbe(spark, dir, path, grid, k, NProbe, -1)
+  }
 
   /** Materializes the IVF index in the layout a 100 TB deployment
     * serves from: the corpus stored ONCE as a `c_id`-partitioned
-    * parquet table (one directory per centroid). A probe query then
-    * touches only its nprobe partitions — the scan skips the rest of
-    * the corpus at the source, which is the entire point of IVF. */
-  /** Centroid assignment of a doc frame against this corpus's fixed
-    * centroids (broadcast; min_by argmin — the pqEncode pattern) — or
-    * against trained `centroids` (the √N deployment path). Shared by
-    * the full index build and the incremental append. */
-  private def assignToIndex(spark: SparkSession, dir: String,
-                            docs: DataFrame,
-                            centroids: Option[DataFrame]): DataFrame = {
-    val cent = centroids.getOrElse(
-      Tables.embeddings(spark, dir).filter(col("vec_id") < NCentroids)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_vec")))
-    docs.crossJoin(broadcast(cent))
-      .groupBy("doc_id")
-      .agg(
-        min_by(col("c_id"),
-          struct(-dot(col("doc_vec"), col("c_vec")), col("c_id"))).as("c_id"),
-        first(col("doc_vec")).as("doc_vec"))
-  }
-
+    * parquet table (one directory per centroid), each doc assigned in
+    * its row under the pinned grid — one scan, one write. A probe
+    * query then touches only its nprobe partitions — the scan skips
+    * the rest of the corpus at the source, which is the entire point
+    * of IVF. Defaults to the corpus's fixed seed centroids; trained
+    * `centroids` give the √N deployment layout. Returns the grid,
+    * pinned. */
   def writeIvfIndex(spark: SparkSession, dir: String, out: String,
                     docs: Option[DataFrame] = None,
-                    centroids: Option[DataFrame] = None): Unit = {
-    val cent = centroids.getOrElse(
-      Tables.embeddings(spark, dir).filter(col("vec_id") < NCentroids)
-        .select(col("vec_id").as("c_id"), col("embedding").as("c_vec")))
-    assignToIndex(spark, dir, docs.getOrElse(Knn.docSet(spark, dir)),
-      Some(cent))
+                    centroids: Option[DataFrame] = None): Grid = {
+    val cent = centroids.getOrElse(seedCentroids(spark, dir))
+    val grid = pinGrid(cent)
+    grid.assign(docs.getOrElse(Knn.docSet(spark, dir))
+        .select(col("doc_id"), col("doc_vec")), "doc_vec")
       // cluster by the layout key before the partitioned write (guide
       // §6, VERDICT r16 §next-3): without it every writer task holding
       // rows of a cell opens a file in that cell's directory — at scale
@@ -624,12 +615,13 @@ object Ann {
     // layout is self-contained and later calls need neither the
     // corpus's fixed seeds nor a caller-threaded frame.
     Tables.writeFit(cent, s"$out/_cent", Tables.CentroidFit)
+    grid
   }
 
   /** The index's own stored centroids (`_cent`, written by
-    * [[writeIvfIndex]] and [[writeIvfPqIndex]]). */
-  private def indexCentroids(spark: SparkSession, indexPath: String): DataFrame =
-    Tables.readFit(spark, s"$indexPath/_cent", Tables.CentroidFit)
+    * [[writeIvfIndex]] and [[writeIvfPqIndex]]), pinned. */
+  private def indexGrid(spark: SparkSession, indexPath: String): Grid =
+    pinGrid(Tables.readFit(spark, s"$indexPath/_cent", Tables.CentroidFit))
 
   /** Incremental index maintenance — the serving-side ingest path: a
     * batch of NEW vectors is assigned to the EXISTING centroids and
@@ -639,47 +631,47 @@ object Ann {
     * probe-side dynamic partition pruning keeps working unchanged
     * because the layout key is stable. Centroids intentionally do NOT
     * move on append (the FAISS add-to-trained-index contract);
-    * re-train + rebuild when drift accumulates. */
-  def appendToIvfIndex(spark: SparkSession, dir: String,
+    * re-train + rebuild when drift accumulates. `dir` is the corpus
+    * the layout was built from; the batch never reads it. */
+  def appendToIvfIndex(spark: SparkSession, @scala.annotation.unused dir: String,
                        newDocs: DataFrame, out: String): Unit =
     // frozen-fit contract done right: the batch is assigned under the
     // INDEX'S OWN stored centroids (r13) — a trained-grid layout used
     // to be silently mis-assigned here with the corpus-fixed seeds
-    assignToIndex(spark, dir, newDocs,
-      Some(indexCentroids(spark, out)))
+    indexGrid(spark, out)
+      .assign(newDocs.select(col("doc_id"), col("doc_vec")), "doc_vec")
       .write.mode("append").partitionBy("c_id").parquet(out)
 
-  /** Probe-side search over a [[writeIvfIndex]] layout: queries pick
-    * their top-NProbe centroids (broadcast), and the join against the
-    * partitioned index triggers DYNAMIC PARTITION PRUNING — Spark
-    * plans a pruning subquery from the broadcast side and the fact
-    * scan reads only the probed `c_id=` directories. Asserted in
-    * PlanSpec (`dynamicpruning`). Same results as [[ivf]]. */
   /** Sentinel for [[ivfIndexed]]'s nProbe: resolve to
     * [[sqrtProbeCount]] of the index's own centroid count — the
     * tuned default for a [[writeTrainedIvfIndex]] √N layout (the
-    * centroid frame is ≤ nlist rows, so the resolving count is a
-    * metadata-scale job, the AutoBeam pattern). */
+    * pinned grid's length). */
   val AutoProbe: Int = -1
 
+  /** Probe-side search over a [[writeIvfIndex]] layout: queries pick
+    * their top-NProbe centroids in-row, and the join of that broadcast
+    * probe list against the partitioned index triggers DYNAMIC
+    * PARTITION PRUNING — Spark plans a pruning subquery from the
+    * broadcast side and the fact scan reads only the probed `c_id=`
+    * directories. Asserted in PlanSpec (`dynamicpruning`). Same
+    * results as [[ivf]]. Default grid: the index's own stored
+    * `_cent` (self-contained serving). */
   def ivfIndexed(spark: SparkSession, dir: String, indexPath: String,
                  k: Int = K, centroids: Option[DataFrame] = None,
-                 nProbe: Int = NProbe): DataFrame = {
-    // default: the index's own stored `_cent` (self-contained serving)
-    val cent = centroids.getOrElse(indexCentroids(spark, indexPath))
-    val np = if (nProbe > 0) nProbe else sqrtProbeCount(cent.count().toInt)
+                 nProbe: Int = NProbe): DataFrame =
+    ivfProbe(spark, dir, indexPath,
+      centroids.map(pinGrid).getOrElse(indexGrid(spark, indexPath)), k, nProbe)
+
+  /** [[ivfIndexed]] against a grid already pinned. */
+  private def ivfProbe(spark: SparkSession, dir: String, indexPath: String,
+                       grid: Grid, k: Int, nProbe: Int): DataFrame = {
+    val np = if (nProbe > 0) nProbe else sqrtProbeCount(grid.size)
     // read with the layout's own schema: over an empty doc set the
     // partitioned write leaves no data file to infer it from
     val idx = spark.read.schema("doc_id BIGINT, doc_vec ARRAY<FLOAT>, c_id BIGINT")
       .parquet(indexPath)
-    val qs = Knn.querySet(spark, dir).crossJoin(broadcast(cent))
-      .groupBy("q_id")
-      .agg(
-        graft.functions.TopKAgg.topKBy(
-          dot(col("q_vec"), col("c_vec")), col("c_id"), np).as("tk"),
-        first(col("q_vec")).as("q_vec"))
-      .select(col("q_id"), col("q_vec"), explode(col("tk")).as("e"))
-      .select(col("q_id"), col("q_vec"), col("e.id").as("c_id"))
+    val qs = grid.assign(Knn.querySet(spark, dir), "q_vec", np)
+      .select(col("q_id"), col("q_vec"), col("c_id"))
     val cands = idx.join(broadcast(qs), Seq("c_id"))
       .select(col("q_id"), col("doc_id"),
         dot(col("q_vec"), col("doc_vec")).as("score"))
@@ -691,12 +683,14 @@ object Ann {
   /** [[ivfIndexed]] over a memoized scratch [[writeIvfIndex]] layout —
     * the verified-query form (`ann_ivf_indexed`): first call builds
     * the partitioned index, every later call is the DPP-pruned probe
-    * alone. Results ≡ [[ivf]] (same centroids, same candidates), so it
-    * shares the ivf oracle. */
-  def ivfViaIndex(spark: SparkSession, dir: String, k: Int = K): DataFrame =
-    ivfIndexed(spark, dir,
-      graft.Memo.scratch(spark, "graft-ivfidx", dir)(
-        writeIvfIndex(spark, dir, _)), k)
+    * alone. The grid pinned at build is memoized with the layout, so
+    * no search reads `_cent` back. Results ≡ [[ivf]] (same centroids,
+    * same candidates), so it shares the ivf oracle. */
+  def ivfViaIndex(spark: SparkSession, dir: String, k: Int = K): DataFrame = {
+    val (path, grid) = graft.Memo.scratchWith(spark, "graft-ivfidx", dir)(
+      writeIvfIndex(spark, dir, _))
+    ivfProbe(spark, dir, path, grid, k, NProbe)
+  }
 
   /** Centroid count for the √N deployment configuration (the FAISS
     * sizing rule: nlist ≈ √N balances cell scan cost N/nlist against
@@ -743,7 +737,7 @@ object Ann {
     * grid — fit and full-corpus assignment paid once, measured at
     * 200 k as recall 1.000 at a 4.9% per-query scan fraction. */
   def writeTrainedIvfIndex(spark: SparkSession, dir: String, out: String,
-                           iters: Int = 2): Unit = {
+                           iters: Int = 2): Grid = {
     val docsEmb = Tables.embeddings(spark, dir)
       .filter(col("vec_id") >= Knn.NQueries)
     val kCent = sqrtCentroidCount(docsEmb.count())
@@ -760,11 +754,11 @@ object Ann {
     * probe alone — the serving split every other *_indexed query
     * follows, and bit-identical to the in-plan [[ivfSqrtN]]
     * (Round13Spec: same sampled fit, same grid, same probe count). */
-  def ivfSqrtNViaIndex(spark: SparkSession, dir: String, k: Int = K): DataFrame =
-    ivfIndexed(spark, dir,
-      graft.Memo.scratch(spark, "graft-trainedivf", dir)(
-        writeTrainedIvfIndex(spark, dir, _)),
-      k, nProbe = AutoProbe)
+  def ivfSqrtNViaIndex(spark: SparkSession, dir: String, k: Int = K): DataFrame = {
+    val (path, grid) = graft.Memo.scratchWith(spark, "graft-trainedivf", dir)(
+      writeTrainedIvfIndex(spark, dir, _))
+    ivfProbe(spark, dir, path, grid, k, AutoProbe)
+  }
 
   /** Lloyd k-means fit over an embedding frame: each iteration is one
     * broadcast-assign + one groupBy-mean (two shuffle-free/one-shuffle
@@ -802,27 +796,23 @@ object Ann {
     }
     // k centroid rows are broadcast-by-construction: collecting them
     // each iteration keeps every Lloyd step an independent job (flat
-    // plans) — the same thing MLlib's KMeans does driver-side.
-    def pin(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.collect().toIndexedSeq.asJava, df.schema)
-    var cent = pin(emb.orderBy("vec_id").limit(k)
+    // plans) — the same thing MLlib's KMeans does driver-side. The
+    // collected rows are also the grid the next assignment scores
+    // against.
+    def pin(df: DataFrame): (DataFrame, Grid) = {
+      val rows = df.collect()
+      (spark.createDataFrame(rows.toIndexedSeq.asJava, df.schema),
+        // float ranking is how FAISS trains; the kept means stay double
+        Grid(rows.map(_.getLong(0)),
+          rows.map(_.getSeq[Double](1).map(_.toFloat).toArray)))
+    }
+    var (cent, grid) = pin(emb.orderBy("vec_id").limit(k)
       .select(col("vec_id").as("c_id"), vecD(col("embedding")).as("c_vec")))
     for (_ <- 0 until iters) {
-      // same min_by partial-agg assignment as [[ivf]]: no sort shuffle
-      // of the exploded points×centroids frame. Scoring runs the
-      // CODEGEN'D float dot kernel against a float view of the
-      // centroids (r13: the interpreted HOF fold made a √N-centroid
-      // fit ~10× slower — N·k lambda-per-element folds per iteration;
-      // float ranking is how FAISS trains, and the kept means stay
-      // double)
-      val centF = cent.select(col("c_id"),
-        transform(col("c_vec"), x => x.cast("float")).as("c_vec_f"))
-      val assigned = emb.crossJoin(broadcast(centF))
-        .groupBy("vec_id")
-        .agg(
-          min_by(col("c_id"),
-            struct(-dot(col("embedding"), col("c_vec_f")), col("c_id"))).as("c_id"),
-          first(col("embedding")).as("embedding"))
+      // in-row assignment under the pinned float view of the
+      // centroids ([[ivf]]'s kernel): no cross join, no per-point
+      // aggregate, no shuffle before the update aggregate
+      val assigned = grid.assign(emb.select(col("embedding")), "embedding")
       val agg = assigned.groupBy("c_id")
         .agg(array((0 until dim).map(i =>
           avg(element_at(col("embedding"), i + 1))): _*).as("c_vec_new"))
@@ -835,7 +825,7 @@ object Ann {
       // double means (the r13 silent-corruption lesson now also fails
       // at analysis, FloatArrayCheck); norm materialized in its own
       // projection so the HOF lambda doesn't re-fold it per element
-      cent = pin(
+      val (c, g) = pin(
         if (spherical)
           updated
             .select(col("c_id"), col("cv"), sqrt(aggregate(col("cv"),
@@ -845,6 +835,8 @@ object Ann {
                 transform(col("cv"), x => x / col("_nrm")))
                 .otherwise(col("cv")).as("c_vec"))
         else updated.select(col("c_id"), col("cv").as("c_vec")))
+      cent = c
+      grid = g
     }
     cent
   }

@@ -113,38 +113,29 @@ object Eval {
     val k = Knn.K
     val maxProbe = probes.max
     val probeKeys = probes.map(_.toLong).toDF("nprobe")
-    val probesDf = broadcast(probeKeys)
-    val cent = graft.Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < Ann.NCentroids)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
+    // the settings as an in-row literal: each candidate and query
+    // fans out to them without a nested-loop join
+    val probeList = array(probes.map(p => lit(p.toLong)): _*)
     // Ann.ivf's exact assignment/probe shapes, computed once
-    val docs = Knn.docSet(spark, dir).crossJoin(broadcast(cent))
-      .groupBy("doc_id")
-      .agg(
-        min_by(col("c_id"),
-          struct(-dot(col("doc_vec"), col("c_vec")), col("c_id"))).as("c_id"),
-        first(col("doc_vec")).as("doc_vec"))
-    val qs = Knn.querySet(spark, dir).crossJoin(broadcast(cent))
-      .groupBy("q_id")
-      .agg(
-        graft.functions.TopKAgg.topKBy(
-          dot(col("q_vec"), col("c_vec")), col("c_id"), maxProbe).as("tk"),
-        first(col("q_vec")).as("q_vec"))
-      .select(col("q_id"), col("q_vec"), posexplode(col("tk")).as(Seq("p", "e")))
-      .select(col("q_id"), col("q_vec"), col("e.id").as("c_id"),
+    val grid = Ann.pinGrid(Ann.seedCentroids(spark, dir))
+    val docs = grid.assign(Knn.docSet(spark, dir), "doc_vec")
+    val qs = Knn.querySet(spark, dir)
+      .select(col("q_id"), col("q_vec"),
+        posexplode(grid.top(col("q_vec"), maxProbe)).as(Seq("p", "c_id")))
+      .select(col("q_id"), col("q_vec"), col("c_id"),
         (col("p") + 1).as("probe_rank"))
     val cands = docs.join(broadcast(qs), Seq("c_id"))
       .select(col("q_id"), col("doc_id"),
         dot(col("q_vec"), col("doc_vec")).as("score"), col("probe_rank"))
-      .crossJoin(probesDf)
+      .withColumn("nprobe", explode(probeList))
       .filter(col("probe_rank") <= col("nprobe"))
     val annAll = Knn.topKPerKey(cands, Seq("nprobe", "q_id"), k)
     val exact = Knn.exactSet(spark, dir, k)
     val hit = exact
       .join(annAll.select("nprobe", "q_id", "doc_id"), Seq("q_id", "doc_id"))
       .groupBy("nprobe", "q_id").agg(count(lit(1)).as("n_hit"))
-    val agg = probesDf
-      .crossJoin(broadcast(Knn.querySet(spark, dir).select("q_id")))
+    val agg = Knn.querySet(spark, dir)
+      .select(explode(probeList).as("nprobe"), col("q_id"))
       .join(hit, Seq("nprobe", "q_id"), "left")
       .select(col("nprobe"),
         rnd(coalesce(col("n_hit"), lit(0L)) / k.toDouble, 4).as("recall"))

@@ -369,8 +369,7 @@ object KnnGraph {
   }
 
   /** Scored NN-Descent proposals from a (src, nb) neighborhood frame —
-    * exposed for the plans/r17 dump tool and the Round17Spec
-    * bit-equality assertion. */
+    * exposed for the Round17Spec bit-equality assertion. */
   private[graft] def roundProposals(nb: DataFrame, emb: DataFrame,
                                     joinScored: Boolean): DataFrame =
     if (joinScored) {

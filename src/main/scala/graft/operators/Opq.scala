@@ -228,11 +228,7 @@ object Opq {
         slice(c, j * Ann.PqSub + 1, Ann.PqSub)): _*)
     val codes = emb.filter(col("vec_id") >= Knn.NQueries)
       .select(col("vec_id").as("doc_id"),
-        posexplode(slices(col("embedding"))).as(Seq("j", "evec")))
-      .join(broadcast(cb), Seq("j"))
-      .groupBy("doc_id", "j")
-      .agg(min_by(col("c_id"),
-        struct(native.dist2F(col("evec"), col("cvec")), col("c_id"))).as("code"))
+        Ann.pqCodesOf("embedding", Ann.pinCodebook(cb)))
     val lut = emb.filter(col("vec_id") < Knn.NQueries)
       .select(col("vec_id").as("q_id"),
         posexplode(slices(col("embedding"))).as(Seq("j", "qvec")))

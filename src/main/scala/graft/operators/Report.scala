@@ -40,7 +40,9 @@ object Report {
         col("mean_p_at_5"), col("map"),
         rnd(col("best_map") - col("map"), 4).as("map_gap"),
         col("model_rank"))
-      .orderBy("corpus_cap", "model_rank")
+      // caps × models rows, bounded by construction: ordered in one
+      // task, no range-partitioning sample job
+      .transform(Knn.ranked("corpus_cap", "model_rank"))
   }
 
   /** H2-style search-mode lift: per model, hybrid-vs-vector deltas on

@@ -302,10 +302,15 @@ object Shaping {
         substring(col("text"), 1, snippetLen).as("query"),
         polyHash(concat(lit("qs"), col("doc_id").cast("string"))).as("pri"))
       .orderBy(col("pri"), col("doc_id")).limit(qCount)
-    val w = Window.orderBy(col("pri"), col("doc_id"))
+    // number the ≤ qCount picked rows in (pri, doc_id) order: one sorted
+    // list + posexplode, where an unpartitioned row_number window would
+    // log a single-partition warning on every call
     picked
-      .select(row_number().over(w).cast("long").as("q_num"),
-        col("query"), col("doc_id").as("rel_doc_id"))
+      .agg(sort_array(collect_list(
+        struct(col("pri"), col("doc_id"), col("query")))).as("_p"))
+      .select(posexplode(col("_p")).as(Seq("_i", "p")))
+      .select((col("_i") + 1).cast("long").as("q_num"),
+        col("p.query").as("query"), col("p.doc_id").as("rel_doc_id"))
       .select(col("q_num"),
         concat(lit("q"), col("q_num")).as("q_id"),
         col("query"), col("rel_doc_id"))

@@ -203,13 +203,14 @@ object TextAnalysis {
     * (length / distinct-ratio / token-length / stopword components). */
   def qualityScore(spark: SparkSession, dir: String): DataFrame = {
     val stop = markers.head._2 // english stopwords
+    // one byte scan per text for the three token counts — equal to
+    // size(tokens), size(array_distinct(tokens)) and
+    // size(filter(tokens, isin(stop))), the spec in FunctionsSpec
     Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), tokens(col("text")).as("_toks"))
-      .select(col("doc_id"),
-        size(col("_toks")).cast("long").as("n_toks"),
-        size(array_distinct(col("_toks"))).cast("long").as("n_uniq"),
-        length(col("text")).cast("long").as("n_chars"),
-        size(filter(col("_toks"), t => t.isin(stop.map(lit): _*))).cast("long").as("n_stop"))
+      .select(col("doc_id"), col("text"),
+        graft.functions.native.tokenStats(col("text"), stop).as("_ts"))
+      .select(col("doc_id"), col("_ts.n_toks"), col("_ts.n_uniq"),
+        length(col("text")).cast("long").as("n_chars"), col("_ts.n_stop"))
       .withColumn("uniq_ratio", rnd(col("n_uniq") / col("n_toks").cast("double"), 4))
       .withColumn("quality", rnd(
         lit(0.25) * least(lit(1.0), col("n_toks") / lit(100.0)) +

@@ -11,6 +11,26 @@ import graft.operators.Dedup
   * HOF specs compute (the specs are what the DuckDB oracles mirror). */
 class FunctionsSpec extends AnyFunSuite with Matchers with SharedSpark {
 
+  test("native tokenStats equals the tokens / array_distinct / filter(isin) spec") {
+    val stop = graft.operators.TextAnalysis.markers.head._2
+    val s = spark
+    import s.implicits._
+    val edge = Seq[String]("", " ", "    ", "the", " the a ", "a  b   c", "  of of  of ",
+      "the The THE the", "straße the ß straße", "日本 語 the 日本  é", "a\tb the\nthe", null)
+      .toDF("text")
+    val texts = edge.unionByName(graft.Tables.documents(spark, sfDir).select("text"))
+    val toks = tokens(col("text"))
+    val diffs = texts
+      .select(native.tokenStats(col("text"), stop).as("k"),
+        Fn.size(toks).cast("long").as("n_toks"),
+        Fn.size(array_distinct(toks)).cast("long").as("n_uniq"),
+        Fn.size(Fn.filter(toks, t => t.isin(stop.map(lit): _*))).cast("long").as("n_stop"))
+      .filter(!(col("k.n_toks") <=> col("n_toks") && col("k.n_uniq") <=> col("n_uniq") &&
+        col("k.n_stop") <=> col("n_stop")))
+    diffs.collect() shouldBe empty
+    texts.count() should be > 12L
+  }
+
   test("native polyHash equals HOF spec on document text and tokens") {
     val d = Tables.documents(spark, sfDir)
       .select(polyHash(col("text")).as("a"), polyHashHof(col("text")).as("b"),

@@ -267,6 +267,26 @@ class IndexedSearchSpec extends AnyFunSuite with Matchers with SharedSpark {
     } finally pool.shutdown()
   }
 
+  test("a memoized IVF layout after Memo.clear(): ivfIndexed reads its _cent, same rows") {
+    import graft.operators.Ann
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).toSeq
+    val served = rows(Ann.ivfViaIndex(spark, sfDir))
+    // the layout the memo holds (a build here would mean a miss)
+    val (path, _) = Memo.scratchWith(spark, "graft-ivfidx", sfDir)(
+      _ => fail("the layout was not memoized"))
+    Memo.clear()
+    // no memoized grid now: the search pins the layout's own `_cent`
+    rows(Ann.ivfIndexed(spark, sfDir, path)) shouldBe served
+    served should not be empty
+    // ... and needs it: with `_cent` moved away the grid is empty, so
+    // no query probes a cell of the untouched layout
+    val cent = new java.io.File(s"$path/_cent")
+    val moved = new java.io.File(s"$path.cent-moved")
+    cent.renameTo(moved) shouldBe true
+    try rows(Ann.ivfIndexed(spark, sfDir, path)) shouldBe empty
+    finally moved.renameTo(cent)
+  }
+
   test("an empty doc set gives every ANN search query 0 rows") {
     // 20 embeddings = Knn.NQueries: the query half takes them all, so
     // the doc half (and every index layout built over it) is empty

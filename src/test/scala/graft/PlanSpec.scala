@@ -55,7 +55,6 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
   private val rangeSorted: Map[String, String] = Map(
     "q_window_topn" -> "ranked per customer: customers x 3 rows, corpus-sized",
     "text_keyword_extract" -> "ranked per document: documents x k rows, corpus-sized",
-    "report_model_by_size" -> "ranked by a window over the caps x models grid, not a top-k aggregate",
     "stream_topk_trending" -> "ranked per window: windows x k rows, grows with the log's span",
     "events_retention" -> "series over cohort days, grows with the log's span",
     "events_active_users" -> "series over days, grows with the log's span",
@@ -170,20 +169,40 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
     p should include("In(label")
   }
 
-  test("ivf: centroid assignment via min_by partial aggregation, no window sort") {
+  test("ivf: in-row assignment and probes, no cross join, no window") {
     val p = plan(Ann.ivf(spark, sfDir))
     p should not include "Window"
-    p.toLowerCase should include("partial_min_by")
+    // no docs × centroids product and no per-doc argmin aggregate:
+    // the only aggregate left is the re-rank's top-k
+    p should not include "BroadcastNestedLoopJoin"
+    p.toLowerCase should not include "min_by"
+    p.toLowerCase should include("codebook_assign")
     p.toLowerCase should include("partial_topkbyscore")
   }
 
-  test("pq encode: codebook from a single extra scan, argmin via partial min_by") {
+  test("pq encode: in-row codes, one scan, no shuffle, no window") {
     val p = plan(Ann.pqEncode(spark, sfDir))
     p should not include "Window"
-    p.toLowerCase should include("partial_min_by")
-    // one scan for the data, one for the 16 codebook seed rows — not
-    // the 8-way unioned codebook build (9 scans) of round 1
-    "FileScan".r.findAllIn(p).size should be <= 2
+    p.toLowerCase should not include "min_by"
+    p.toLowerCase should include("codebook_assign")
+    // the codebook is pinned on the driver: the plan scans the data
+    // once and shuffles nothing
+    "FileScan".r.findAllIn(p).size shouldBe 1
+    "Exchange".r.findAllIn(p).size shouldBe 0
+  }
+
+  test("IVF/PQ/OPQ queries: no nested-loop join, no assignment aggregate") {
+    val names = SparkEntry.queries.keySet.filter(n =>
+      n.startsWith("ann_ivf") || n.startsWith("ann_pq") ||
+        n.contains("opq") || n == "eval_ann_recall_ivf" || n == "eval_ann_recall_sweep")
+    names should contain allOf ("ann_ivf", "ann_ivf_indexed", "ann_ivf_pq_indexed",
+      "ann_pq_trained", "eval_ann_recall_opq_refined", "eval_ann_recall_sweep")
+    val faults = names.toSeq.sorted.flatMap { name =>
+      val p = executedUnderNoop(SparkEntry.queries(name)(spark, sfDir)).toString
+      Seq("BroadcastNestedLoopJoin", "min_by").filter(p.contains)
+        .map(what => s"$name: $what")
+    }
+    faults shouldBe empty
   }
 
   test("pq search: ADC scores partial-aggregate map-side, no per-pair collect_list") {

@@ -83,9 +83,13 @@ class Round4Spec extends AnyFunSuite with Matchers with SharedSpark {
     overlap should be > 0L
   }
 
-  test("ann_ivf_pq plan: centroids/codebook/queries broadcast, topk partial agg, no shuffle-side window") {
+  test("ann_ivf_pq plan: in-row cells, codes, probes; topk partial agg") {
     val p = Ann.ivfPq(spark, sfDir).queryExecution.executedPlan.toString()
-    p should include("BroadcastNestedLoopJoin") // docs × broadcast centroids
+    // no docs × centroids product and no per-doc or per-subvector
+    // argmin aggregate: the pinned fits assign inside the row
+    p should not include "BroadcastNestedLoopJoin"
+    p.toLowerCase should not include "min_by"
+    p.toLowerCase should include("codebook_assign")
     p.toLowerCase should include("partial_topkbyscore")
     p should not include "Window"
   }
