@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §2 (coverage checklist)
@@ -16,8 +17,31 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Encoders.hashingSearch(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The declared queries whose contract is to write and read back
+    * inside the call: each of their calls runs its operator. */
+  val PerCall: Set[String] = Set("source_roundtrip_events_csv",
+    "source_roundtrip_docs_jsonl", "source_roundtrip_docs_orc")
+
+  /** One entry per implemented operator from SURVEY.md §2; every query
+    * outside [[PerCall]] is served from its prepared plan. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    operators.map { case (name, op) => name -> (if (PerCall(name)) op else prepared(name, op)) }
+
+  /** `op` served from a prepared plan: the analyzed logical plan of the
+    * frame `op` builds, memoized ([[Memo.Prepared]]) per application,
+    * query, corpus directory, corpus [[Fingerprint]] and the session's
+    * SQL conf. Every call gets a new DataFrame over that plan, so a call
+    * with an unchanged corpus skips operator construction, analysis and
+    * the tables' source resolution, and its action still optimizes,
+    * plans and runs every job. The corpus is listed once per call. */
+  private def prepared(name: String,
+                       op: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
+    (spark, dir) => Bridge.ofRows(spark, Fingerprint.within(spark, dir) {
+      Memo(spark, Memo.Prepared, dir, name, spark.sessionState.conf.getAllConfs)(
+        op(spark, dir).queryExecution.analyzed)
+    })
+
+  private def operators: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Relational/analytics surface
     "q1_agg" -> ((s, d) => Relational.q1Agg(s, d)),
     "q3_join_agg" -> ((s, d) => Relational.q3JoinAgg(s, d)),

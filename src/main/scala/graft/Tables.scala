@@ -16,19 +16,19 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Parquet schema per path — METADATA memo, not result caching:
+  /** Parquet schema per table — METADATA memo, not result caching:
     * `spark.read.parquet` with no schema runs a footer-inference job
     * (~30 ms) on EVERY call, and a single query calls these loaders up
     * to 8 times (JobProbe r17: ann_ivf_pq paid 8 such jobs before its
-    * first real stage). The schema of a static table file is a
-    * constant: it is read once per application ([[graft.Memo]]) from
-    * the footer Spark's inference would pick, on the driver with no
-    * job ([[ParquetFooter]]), and passed explicitly, while the scan
-    * itself (file listing, pruning, pushdown) stays exactly as
-    * before. */
+    * first real stage). The schema of a table file is a constant while
+    * its corpus is unchanged: it is read once per application and
+    * corpus [[Fingerprint]] ([[graft.Memo]]) from the footer Spark's
+    * inference would pick, on the driver with no job
+    * ([[ParquetFooter]]), and passed explicitly, while the scan itself
+    * (file listing, pruning, pushdown) stays exactly as before. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val schema = Memo(spark, "schema", path)(ParquetFooter.schema(spark, path))
+    val schema = Memo(spark, "schema", dir, name)(ParquetFooter.schema(spark, path))
     spark.read.schema(schema).parquet(path)
   }
 
@@ -84,11 +84,14 @@ object Tables {
   /** Reads a [[writeFit]] fit back with the schema it was written in,
     * from its part files, matched by a Hadoop glob: Spark's listing drops
     * a root path whose name starts with `_` (logging "All paths were
-    * ignored"), and a read without a schema runs an inference job. */
+    * ignored"), and a read without a schema runs an inference job. A
+    * missing fit directory is an error naming it; a fit written from no
+    * rows (one empty part file) reads as empty. */
   def readFit(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val parts = new org.apache.hadoop.fs.Path(s"$path/*.parquet")
-    val files = parts.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .globStatus(parts).map(_.getPath.toString)
+    val fit = new org.apache.hadoop.fs.Path(path)
+    val fs = fit.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(fit)) throw new java.io.FileNotFoundException(s"no stored fit at $path")
+    val files = fs.globStatus(new org.apache.hadoop.fs.Path(fit, "*.parquet")).map(_.getPath.toString)
     spark.read.schema(schema).parquet(files.toSeq: _*)
   }
 }

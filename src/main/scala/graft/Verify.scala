@@ -107,8 +107,9 @@ object Verify {
 
   /** Writes each of `names` (default: every declared query) to
     * `<outDir>/<name>` as parquet, then `oracle_sql.json` with those
-    * names' oracles and `_errors.json` (query name → failure, `{}` when
-    * none), and returns the errors. An unknown name throws before
+    * names' oracles, `_errors.json` (query name → failure, `{}` when
+    * none) and `_memo.json` (the [[Memo.snapshot]] after the run), and
+    * returns the errors. An unknown name throws before
     * anything is written. */
   def run(spark: SparkSession, sfDir: String, outDir: String,
           names: Seq[String] = SparkEntry.queries.keys.toSeq): Map[String, String] = {
@@ -151,6 +152,7 @@ object Verify {
     // Written even when empty so "no file" can never be confused with
     // "no errors" by a consumer of the out dir.
     Files.writeString(Paths.get(s"$outDir/_errors.json"), jsonObject(errors))
+    Files.writeString(Paths.get(s"$outDir/_memo.json"), memoJson(Memo.snapshot))
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries FAILED: ${errors.keys.mkString(", ")}")
     errors.toMap
@@ -180,19 +182,30 @@ object Verify {
   private def describe(e: Throwable): String =
     s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
 
+  /** `{"kinds": {kind: {"hits", "misses", "builds", "build_ms"}},
+    * "peak_entries": {"artifacts", "prepared"}}`, kinds by name. */
+  private def memoJson(m: Memo.Snapshot): String = {
+    val kinds = m.kinds.toSeq.sortBy(_._1).map { case (k, c) =>
+      s"""${q(k)}: {"hits": ${c.hits}, "misses": ${c.misses}, """ +
+        s""""builds": ${c.builds}, "build_ms": ${c.buildMs}}"""
+    }
+    kinds.mkString("""{"kinds": {""", ", ", "}, ") +
+      s""""peak_entries": {"artifacts": ${m.peakArtifacts}, "prepared": ${m.peakPlans}}}"""
+  }
+
   // JSON string escape: backslash, quote, and ALL control chars (<0x20)
   // — a tab or CR in oracle SQL would otherwise make a reader's
   // json.load fail and silently drop every verdict.
-  private def jsonObject(m: scala.collection.Map[String, String]): String = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  private def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  private def jsonObject(m: scala.collection.Map[String, String]): String =
     m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-  }
 }

@@ -882,9 +882,17 @@ object Ann {
     * oracle overlay cannot see different fits. */
   def trainedPqRows(spark: SparkSession, dir: String): Seq[(Long, Int, Seq[Float])] =
     graft.Memo(spark, "pq-trained", dir)(
-      fitPqCodebook(Tables.embeddings(spark, dir), iters = 2)
-        .collect().toIndexedSeq
-        .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2))))
+      codebookRows(fitPqCodebook(Tables.embeddings(spark, dir), iters = 2)))
+
+  /** A (c_id, j, cvec) codebook fit collected driver-side in (j, c_id)
+    * order, whatever the fit's partitioning, so the frozen-fit overlays
+    * render the same text for the same rows. The order moves no
+    * result: the assignment kernel breaks ties by c_id
+    * ([[graft.functions.Kernels.subspaceArgmin]]). */
+  def codebookRows(fit: DataFrame): Seq[(Long, Int, Seq[Float])] =
+    fit.select(col("c_id"), col("j"), col("cvec")).collect().toIndexedSeq
+      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2)))
+      .sortBy { case (c, j, _) => (j, c) }
 
   private def trainedPqCodebookDf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -198,9 +198,7 @@ object Opq {
     * variance is balanced). Driver-side rows, memoized. */
   def trainedOpqRows(spark: SparkSession, dir: String): Seq[(Long, Int, Seq[Float])] =
     graft.Memo(spark, "opq-trained", dir)(
-      Ann.fitPqCodebook(rotatedEmbeddings(spark, dir), iters = 2)
-        .collect().toIndexedSeq
-        .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2))))
+      Ann.codebookRows(Ann.fitPqCodebook(rotatedEmbeddings(spark, dir), iters = 2)))
 
   /** FULL OPQ: the fitted rotation AND codebooks trained in the
     * rotated space, at the same code budget — the fourth corner of
@@ -357,12 +355,10 @@ object Opq {
           s
         }
         // step 3: re-train the codebook in the refined space
-        val c1 = Ann.fitPqCodebook(
+        val c1 = Ann.codebookRows(Ann.fitPqCodebook(
           Tables.embeddings(spark, dir)
             .select(col("vec_id"), rotate(col("embedding"), r1).as("embedding")),
-          iters = 2)
-          .collect().toIndexedSeq
-          .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2)))
+          iters = 2))
         (r1, c1)
       }
     }

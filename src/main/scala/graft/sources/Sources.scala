@@ -170,7 +170,8 @@ object Sources {
     } catch { case NonFatal(_) => }
   }
 
-  private def scratch(dir: String, leaf: String): String = {
+  /** This JVM's round-trip scratch path for (dir, leaf). */
+  private[graft] def scratch(dir: String, leaf: String): String = {
     sweepStale
     val pid = java.lang.ProcessHandle.current().pid()
     val base = s"${System.getProperty("java.io.tmpdir")}/graft-roundtrip-$pid-${math.abs(dir.hashCode)}"

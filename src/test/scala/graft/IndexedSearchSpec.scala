@@ -168,7 +168,7 @@ class IndexedSearchSpec extends AnyFunSuite with Matchers with SharedSpark {
     // partial layout: the even doc_ids' postings plus the stored fit
     spark.read.parquet(full).filter(col("doc_id") % 2 === 0)
       .write.parquet(inc)
-    spark.read.parquet(s"$full/_vocab").write.parquet(s"$inc/_vocab")
+    Tables.readFit(spark, s"$full/_vocab", Tables.VocabFit).write.parquet(s"$inc/_vocab")
     // the odd docs arrive later as a batch, transformed under the
     // FROZEN fit (the index's own stored vocabulary)
     Encoders.appendToTfidfIndex(spark,
@@ -278,13 +278,15 @@ class IndexedSearchSpec extends AnyFunSuite with Matchers with SharedSpark {
     // no memoized grid now: the search pins the layout's own `_cent`
     rows(Ann.ivfIndexed(spark, sfDir, path)) shouldBe served
     served should not be empty
-    // ... and needs it: with `_cent` moved away the grid is empty, so
-    // no query probes a cell of the untouched layout
+    // ... and needs it: with `_cent` moved away the search fails,
+    // naming the missing fit, rather than probing no cell
     val cent = new java.io.File(s"$path/_cent")
     val moved = new java.io.File(s"$path.cent-moved")
     cent.renameTo(moved) shouldBe true
-    try rows(Ann.ivfIndexed(spark, sfDir, path)) shouldBe empty
-    finally moved.renameTo(cent)
+    try {
+      val e = intercept[java.io.FileNotFoundException](rows(Ann.ivfIndexed(spark, sfDir, path)))
+      e.getMessage should include(s"$path/_cent")
+    } finally moved.renameTo(cent)
   }
 
   test("an empty doc set gives every ANN search query 0 rows") {
@@ -323,9 +325,9 @@ class IndexedSearchSpec extends AnyFunSuite with Matchers with SharedSpark {
     val docs = graft.operators.Knn.docSet(spark, sfDir)
     operators.Ann.sq8Encode(
       docs.filter(col("doc_id") % 2 === 0),
-      spark.read.parquet(s"$full/_fit"))
+      Tables.readFit(spark, s"$full/_fit", Tables.Sq8Fit))
       .write.parquet(inc)
-    spark.read.parquet(s"$full/_fit").write.parquet(s"$inc/_fit")
+    Tables.readFit(spark, s"$full/_fit", Tables.Sq8Fit).write.parquet(s"$inc/_fit")
     operators.Ann.appendToSq8Index(spark,
       docs.filter(col("doc_id") % 2 =!= 0), inc)
     spark.read.parquet(inc).collect().map(_.toString).sorted shouldBe

@@ -37,6 +37,28 @@ class MemoSpec extends AnyFunSuite with Matchers {
     builds shouldBe cap + 4
   }
 
+  test("Memo: prepared plans have their own LRU and never evict an artifact") {
+    val app = "memo-spec-plans"
+    var builds = 0
+    def artifact(k: Int): Int = Memo.get(app, "t", Seq(k)) { builds += 1; k }
+    (1 to Memo.Capacity).foreach(artifact)
+    (1 to 2 * Memo.Capacity).foreach(k => Memo.get(app, Memo.Prepared, Seq(k))(k))
+    (1 to Memo.Capacity).foreach(artifact)
+    builds shouldBe Memo.Capacity
+    Memo.snapshot.peakPlans shouldBe Memo.Capacity
+  }
+
+  test("Memo: hits, misses, builds and build time are counted per kind") {
+    val kind = "memo-spec-counted"
+    Memo.snapshot.kinds.get(kind) shouldBe None
+    Memo.get("memo-spec-counts", kind, Seq(1)) { Thread.sleep(20); 1 }
+    Memo.get("memo-spec-counts", kind, Seq(1))(fail("a hit must not build"))
+    Memo.get("memo-spec-counts", kind, Seq(2))(2)
+    val c = Memo.snapshot.kinds(kind)
+    (c.hits, c.misses, c.builds) shouldBe ((1L, 2L, 2L))
+    c.buildMs should be >= 20L
+  }
+
   test("Memo: a build that throws is not memoized; the next caller rebuilds") {
     var builds = 0
     def get(fail: Boolean): Int = Memo.get("memo-spec-throw", "t", Nil) {

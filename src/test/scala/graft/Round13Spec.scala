@@ -77,7 +77,7 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
     val newDocs = Knn.querySet(spark, sfDir)
       .select((col("q_id") + 100000L).as("doc_id"), col("q_vec").as("doc_vec"))
     Ann.appendToIvfIndex(spark, sfDir, newDocs, idx)
-    val cent = spark.read.parquet(s"$idx/_cent").collect()
+    val cent = Tables.readFit(spark, s"$idx/_cent", Tables.CentroidFit).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
     def argmax(v: Array[Float]): Long =
       cent.map { case (cid, cv) =>
@@ -107,7 +107,7 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
       .parquet(s"$dir/embeddings.parquet")
     val idx = s"$dir/idx"
     Ann.writeTrainedIvfIndex(spark, dir, idx) // kCent=64, auto nprobe=8
-    val nCent = spark.read.parquet(s"$idx/_cent").count().toInt
+    val nCent = Tables.readFit(spark, s"$idx/_cent", Tables.CentroidFit).count().toInt
     nCent shouldBe Ann.sqrtCentroidCount(4000L - Knn.NQueries)
     val auto = Ann.ivfIndexed(spark, dir, idx, nProbe = Ann.AutoProbe)
       .collect().map(_.toString).toSet
@@ -212,7 +212,7 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
     Ann.writePqIndex(spark, sfDir, tmp2)
     val evenOnly = tempDir("graft-pqidx-even")
     val even = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val cb = spark.read.parquet(s"$tmp2/_fit")
+    val cb = Tables.readFit(spark, s"$tmp2/_fit", Tables.PqFit)
     operators.Ann.pqEncodeForTest(even, cb)
       .write.mode("overwrite").parquet(evenOnly)
     cb.coalesce(1).write.mode("overwrite").parquet(s"$evenOnly/_fit")

@@ -42,6 +42,12 @@ class VerifySpec extends AnyFunSuite with Matchers with SharedSpark {
     resultDirs(out) shouldBe Set("v_dot_product", "ann_ivf_sqrtn")
     jsonKeys(Paths.get(out, "oracle_sql.json")) shouldBe Set("v_dot_product")
     jsonKeys(Paths.get(out, "_errors.json")) shouldBe empty
+    // the memo counters beside the errors: each query ran from a plan
+    // prepared in this application
+    val memo = new ObjectMapper().readTree(Paths.get(out, "_memo.json").toFile)
+    memo.fieldNames().asScala.toSet shouldBe Set("kinds", "peak_entries")
+    memo.get("kinds").get(Memo.Prepared).get("misses").asLong should be >= 2L
+    memo.get("peak_entries").get("prepared").asInt should be >= 2
   }
 
   test("an unknown query name throws before any output is written") {
