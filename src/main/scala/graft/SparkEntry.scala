@@ -30,14 +30,15 @@ object SparkEntry {
   /** `op` served from a prepared plan: the analyzed logical plan of the
     * frame `op` builds, memoized ([[Memo.Prepared]]) per application,
     * query, corpus directory, corpus [[Fingerprint]] and the session's
-    * SQL conf. Every call gets a new DataFrame over that plan, so a call
+    * SQL conf (its explicit settings that differ from their registered
+    * defaults, [[Bridge.nonDefaultConfs]]). Every call gets a new DataFrame over that plan, so a call
     * with an unchanged corpus skips operator construction, analysis and
     * the tables' source resolution, and its action still optimizes,
     * plans and runs every job. The corpus is listed once per call. */
   private def prepared(name: String,
                        op: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
     (spark, dir) => Bridge.ofRows(spark, Fingerprint.within(spark, dir) {
-      Memo(spark, Memo.Prepared, dir, name, spark.sessionState.conf.getAllConfs)(
+      Memo(spark, Memo.Prepared, dir, name, Bridge.nonDefaultConfs(spark))(
         op(spark, dir).queryExecution.analyzed)
     })
 

@@ -265,11 +265,10 @@ object Ann {
   }
 
   /** (doc_id, dim, code) rows of a (doc_id, doc_vec) frame under a
-    * given (dim, lo, hi) fit — the shared encode of the in-plan search,
-    * the index build, and the frozen-fit append. Codes clamp to
-    * [0, 255] (the FAISS QT_8bit encode clip): a frozen-fit append of
-    * vectors outside the trained (lo, hi) range saturates at the grid
-    * edge instead of emitting out-of-byte codes. A NaN component
+    * given (dim, lo, hi) fit — the shared encode of the in-plan search
+    * and the index build. Codes clamp to [0, 255] (the FAISS QT_8bit
+    * encode clip): vectors outside the fit's (lo, hi) range saturate
+    * at the grid edge instead of emitting out-of-byte codes. A NaN component
     * encodes as value 0.0 — NaN compares greatest in Spark, so without
     * the nanvl the clamp would silently saturate garbage at the top
     * grid cell 255 (ADVICE r10). */
@@ -315,8 +314,8 @@ object Ann {
   /** Persisted SQ8 serving layout: the code relation at `out`, the
     * (dim, lo, hi) fit under `out/_fit` (underscore path — invisible
     * to the postings scan, the [[Encoders.writeTfidfIndex]] `_vocab`
-    * convention). The fit travels WITH the index, so later queries and
-    * appends need neither the corpus nor a refit. */
+    * convention). The fit travels WITH the index, so later queries
+    * need neither the corpus nor a refit. */
   def writeSq8Index(spark: SparkSession, dir: String, out: String): Unit =
     Compaction.stagedBuild(spark, out) { tmp =>
       val ranges = sq8Ranges(spark, dir)
@@ -324,18 +323,6 @@ object Ann {
         .write.mode("overwrite").parquet(tmp)
       Tables.writeFit(ranges, s"$tmp/_fit", Tables.Sq8Fit)
     }
-
-  /** Frozen-fit incremental maintenance (the FAISS add-to-trained-
-    * index contract, like [[appendToIvfIndex]]): a new (doc_id,
-    * doc_vec) batch is encoded with the INDEX'S OWN stored fit — the
-    * quantization grid does not move — and appended; only the batch is
-    * scanned. A disjoint append is bit-equal to having encoded those
-    * docs at build time (per-doc codes depend only on the fit).
-    * Refit + rebuild when range drift accumulates. */
-  def appendToSq8Index(spark: SparkSession, newVecs: DataFrame,
-                       indexPath: String): Unit =
-    sq8Encode(newVecs, Tables.readFit(spark, s"$indexPath/_fit", Tables.Sq8Fit))
-      .write.mode("append").parquet(indexPath)
 
   /** [[sq8Search]] answered from a persisted [[writeSq8Index]] layout —
     * no encode pass in the hot path: codes and fit read from disk,
@@ -353,13 +340,6 @@ object Ann {
       graft.Memo.scratch(spark, "graft-sq8idx", dir)(
         writeSq8Index(spark, dir, _)), k)
 
-  /** PQ codes of an arbitrary (doc_id, doc_vec) frame under a given
-    * codebook — the batch-general encode behind [[writePqIndex]] and
-    * [[appendToPqIndex]] (same argmin/tie rule as [[pqEncode]]).
-    * Output (doc_id, j, code). */
-  private def pqEncodeOf(vecs: DataFrame, cb: DataFrame): DataFrame =
-    vecs.select(col("doc_id"), pqCodesOf("doc_vec", pinCodebook(cb)))
-
   /** Persisted PQ index — codes durable at ingest time, the codebook
     * stored with them (`_fit`, the [[writeSq8Index]] contract): at
     * 100 TB the 8-codes-per-doc table IS the serving artifact (FAISS
@@ -368,22 +348,12 @@ object Ann {
   def writePqIndex(spark: SparkSession, dir: String, out: String): Unit =
     Compaction.stagedBuild(spark, out) { tmp =>
       val cb = pqCodebook(spark, dir)
-      pqEncodeOf(Knn.docSet(spark, dir), cb)
+      // same argmin/tie rule as [[pqEncode]]; output (doc_id, j, code)
+      Knn.docSet(spark, dir)
+        .select(col("doc_id"), pqCodesOf("doc_vec", pinCodebook(cb)))
         .write.mode("overwrite").parquet(tmp)
       Tables.writeFit(cb, s"$tmp/_fit", Tables.PqFit)
     }
-
-  /** Frozen-fit incremental maintenance: the batch is encoded under
-    * the INDEX'S OWN stored codebook (the `_cent`/`_fit` lesson — a
-    * re-derived codebook mis-codes silently) and appended; only the
-    * batch is scanned, and a disjoint append is bit-equal to having
-    * encoded those docs at build time (codes depend only on the
-    * fit). Re-train + rebuild when codebook drift accumulates. */
-  def appendToPqIndex(spark: SparkSession, newVecs: DataFrame,
-                      indexPath: String): Unit =
-    pqEncodeOf(newVecs.select(col("doc_id"), col("doc_vec")),
-      Tables.readFit(spark, s"$indexPath/_fit", Tables.PqFit))
-      .write.mode("append").parquet(indexPath)
 
   /** [[pqSearch]] answered from a persisted [[writePqIndex]] layout —
     * no encode pass in the hot path: codes and codebook read from
@@ -394,11 +364,6 @@ object Ann {
                 k: Int = K): DataFrame =
     pqScore(spark, dir, spark.read.parquet(indexPath),
       Tables.readFit(spark, s"$indexPath/_fit", Tables.PqFit), k)
-
-  /** Test seam for the append≡rebuild spec (a partial build under a
-    * caller-held codebook). */
-  private[graft] def pqEncodeForTest(vecs: DataFrame, cb: DataFrame): DataFrame =
-    pqEncodeOf(vecs, cb)
 
   /** [[pqIndexed]] over a memoized scratch build — the verified-query
     * form (`ann_pq_indexed`). */
@@ -461,21 +426,20 @@ object Ann {
     * reads ONLY its probed cells' code files (DPP) at ~1 byte per
     * doc per subspace; float vectors are touched only by the
     * k-bounded exact re-rank. Built via [[Compaction.stagedBuild]] —
-    * no crash point leaves codes without their fits. Returns the
+    * no crash point leaves codes without their fits. The fits are the
+    * corpus's fixed seed centroids and seed codebook (oracle-
+    * mirrorable); serving reads only the stored copies. Returns the
     * coarse grid it assigned under, pinned. */
-  def writeIvfPqIndex(spark: SparkSession, dir: String, out: String,
-                      docs: Option[DataFrame] = None,
-                      centroids: Option[DataFrame] = None,
-                      codebook: Option[DataFrame] = None): Grid = {
-    // defaults = the verified fixed-seed fits (oracle-mirrorable);
-    // the deployment path passes TRAINED fits (√N spherical
-    // centroids, 8×256 Lloyd codebook) — the layout stores whatever
-    // it was built with and serving reads only the stored fits
-    val cent = centroids.getOrElse(seedCentroids(spark, dir))
-    val cb = codebook.getOrElse(pqCodebook(spark, dir))
+  def writeIvfPqIndex(spark: SparkSession, dir: String, out: String): Grid = {
+    val cent = seedCentroids(spark, dir)
+    val cb = pqCodebook(spark, dir)
     val grid = pinGrid(cent)
     Compaction.stagedBuild(spark, out) { tmp =>
-      ivfPqRows(docs.getOrElse(Knn.docSet(spark, dir)), grid, pinCodebook(cb))
+      // each doc's coarse cell and its PQ codes, both assigned in the
+      // row: one scan, no join
+      grid.assign(Knn.docSet(spark, dir).select(col("doc_id"), col("doc_vec")),
+          "doc_vec")
+        .select(col("doc_id"), pqCodesOf("doc_vec", pinCodebook(cb)), col("c_id"))
         // same cell-clustered write as writeIvfIndex (guide §6): one
         // consolidated code file per cell instead of one per writer
         // task per cell. The within-file sort is load-bearing: an
@@ -490,27 +454,6 @@ object Ann {
     }
     grid
   }
-
-  /** (doc_id, j, code, c_id) rows of a (doc_id, doc_vec) batch: its
-    * coarse cell and its PQ codes, both assigned in the row — one scan
-    * of the batch, no join. */
-  private def ivfPqRows(docs: DataFrame, grid: Grid, book: SubspaceCodes): DataFrame =
-    grid.assign(docs.select(col("doc_id"), col("doc_vec")), "doc_vec")
-      .select(col("doc_id"), pqCodesOf("doc_vec", book), col("c_id"))
-
-  /** Frozen-fit incremental maintenance for a [[writeIvfPqIndex]]
-    * layout: the batch is assigned under the index's OWN `_cent` grid
-    * and encoded under its OWN `_fit` codebook (both frozen — the
-    * FAISS add-to-trained-index contract applied to the composition),
-    * and the append writes only the batch's own cell directories.
-    * Disjoint append ≡ build-time encode (codes and assignment depend
-    * only on the fits); re-train + rebuild when [[
-    * graft.operators.Drift]]'s numbers say the fits drifted. */
-  def appendToIvfPqIndex(spark: SparkSession, newVecs: DataFrame,
-                         indexPath: String): Unit =
-    ivfPqRows(newVecs, indexGrid(spark, indexPath),
-      pinCodebook(Tables.readFit(spark, s"$indexPath/_fit", Tables.PqFit)))
-      .write.mode("append").partitionBy("c_id").parquet(indexPath)
 
   /** [[ivfPq]] answered from a persisted [[writeIvfPqIndex]] layout:
     * both pruning levels compose against STORED artifacts — the probe
@@ -591,11 +534,10 @@ object Ann {
     * `centroids` give the √N deployment layout. Returns the grid,
     * pinned. */
   def writeIvfIndex(spark: SparkSession, dir: String, out: String,
-                    docs: Option[DataFrame] = None,
                     centroids: Option[DataFrame] = None): Grid = {
     val cent = centroids.getOrElse(seedCentroids(spark, dir))
     val grid = pinGrid(cent)
-    grid.assign(docs.getOrElse(Knn.docSet(spark, dir))
+    grid.assign(Knn.docSet(spark, dir)
         .select(col("doc_id"), col("doc_vec")), "doc_vec")
       // cluster by the layout key before the partitioned write (guide
       // §6, VERDICT r16 §next-3): without it every writer task holding
@@ -609,9 +551,9 @@ object Ann {
       .write.mode("overwrite").partitionBy("c_id").parquet(out)
     // the centroids travel WITH the index (r13; `_cent`, the `_fit`/
     // `_vocab` underscore convention — invisible to the partitioned
-    // scan): a trained-grid index whose searches or appends derive or
-    // receive DIFFERENT centroids mis-probes/mis-assigns SILENTLY
-    // (the lists still exist, the results just degrade), so the
+    // scan): a trained-grid index whose searches derive or receive
+    // DIFFERENT centroids mis-probes SILENTLY (the lists still
+    // exist, the results just degrade), so the
     // layout is self-contained and later calls need neither the
     // corpus's fixed seeds nor a caller-threaded frame.
     Tables.writeFit(cent, s"$out/_cent", Tables.CentroidFit)
@@ -622,25 +564,6 @@ object Ann {
     * [[writeIvfIndex]] and [[writeIvfPqIndex]]), pinned. */
   private def indexGrid(spark: SparkSession, indexPath: String): Grid =
     pinGrid(Tables.readFit(spark, s"$indexPath/_cent", Tables.CentroidFit))
-
-  /** Incremental index maintenance — the serving-side ingest path: a
-    * batch of NEW vectors is assigned to the EXISTING centroids and
-    * appended into the partitioned layout. Only the new batch is
-    * scanned/assigned (a rebuild re-reads the whole corpus), the
-    * append writes only into the batch's own c_id directories, and
-    * probe-side dynamic partition pruning keeps working unchanged
-    * because the layout key is stable. Centroids intentionally do NOT
-    * move on append (the FAISS add-to-trained-index contract);
-    * re-train + rebuild when drift accumulates. `dir` is the corpus
-    * the layout was built from; the batch never reads it. */
-  def appendToIvfIndex(spark: SparkSession, @scala.annotation.unused dir: String,
-                       newDocs: DataFrame, out: String): Unit =
-    // frozen-fit contract done right: the batch is assigned under the
-    // INDEX'S OWN stored centroids (r13) — a trained-grid layout used
-    // to be silently mis-assigned here with the corpus-fixed seeds
-    indexGrid(spark, out)
-      .assign(newDocs.select(col("doc_id"), col("doc_vec")), "doc_vec")
-      .write.mode("append").partitionBy("c_id").parquet(out)
 
   /** Sentinel for [[ivfIndexed]]'s nProbe: resolve to
     * [[sqrtProbeCount]] of the index's own centroid count — the

@@ -14,8 +14,8 @@ object Compaction {
     * build is swapped over the serving path. Closes the
     * codes-without-fit crash window of the naive two-job overwrite
     * (the first job's overwrite wipes the previous `_fit`; a crash
-    * before the second leaves an index whose reads and appends fail
-    * until a full rebuild). Properties: the previous index stays
+    * before the second leaves an index whose reads fail until a full
+    * rebuild). Properties: the previous index stays
     * readable for the entire build; no crash point leaves a PARTIAL
     * layout under the serving path — the only exposed instant is
     * between the delete and the rename, which reads as loud

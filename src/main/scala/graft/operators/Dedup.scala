@@ -550,10 +550,10 @@ object Dedup {
     *
     * Why a third embedding-dedup path: [[embeddingCosine]] needs label
     * blocking, [[embeddingLsh]] re-buckets per run; the graph is the
-    * reusable artifact — build (or read the persisted
-    * [[KnnGraph.writeGraphIndex]] layout) once, and the dedup pass is
-    * a threshold SCAN of the edge table plus components over the tiny
-    * above-threshold subgraph. No pair expansion, no labels, and
+    * reusable artifact — build it once ([[KnnGraph.docGraph]] memoizes
+    * it per session), and the dedup pass is a threshold SCAN of the
+    * edge table plus components over the tiny above-threshold
+    * subgraph. No pair expansion, no labels, and
     * precision 1.0 by construction (every edge carries its exact
     * cosine). Recall is the graph's neighbor recall restricted to
     * above-threshold pairs — near-dups are their partners' top-1
@@ -675,11 +675,6 @@ object Dedup {
     mergeIslands(occ.join(dup, Seq("h")), w)
   }
 
-  /** Distinct w-token window hashes of a (doc_id, text) frame — the
-    * span-dedup STORE artifact ([[spanIncremental]]'s corpus side). */
-  def windowHashes(docs: DataFrame, w: Int = SpanW): DataFrame =
-    spanOcc(docs, w).select("h").distinct()
-
   /** (doc_id, n_tokens, pos, h): every w-token rolling-window hash
     * occurrence of a (doc_id, text) frame, 1-based positions.
     *
@@ -690,9 +685,9 @@ object Dedup {
     * materialize=true the compact PRE-explode (doc_id, n_tokens,
     * hash-array) frame is eagerly localCheckpoint'ed once and each
     * consumer re-explodes from blocks (the explode is cheap; the
-    * kernel is not). Single-use consumers ([[windowHashes]], the
-    * incremental store side) keep the pipelined form. Same fail-fast localCheckpoint trade-off as the
-    * CC edge cache. */
+    * kernel is not). Single-use consumers (the incremental store
+    * side) keep the pipelined form. Same fail-fast localCheckpoint
+    * trade-off as the CC edge cache. */
   private def spanOcc(docs: DataFrame, w: Int,
                       materialize: Boolean = false): DataFrame = {
     val hashed = docs

@@ -37,9 +37,7 @@ object Encoders {
                    maxDoc: Option[Long] = None): DataFrame =
     bucketCountsOf(capped(Tables.documents(spark, dir), maxDoc), dim)
 
-  /** [[bucketCounts]] over an arbitrary (doc_id, text) frame — the
-    * form the incremental-ingest path needs (a batch of new docs is
-    * not a corpus directory). */
+  /** [[bucketCounts]] over an arbitrary (doc_id, text) frame. */
   private def bucketCountsOf(docs: DataFrame, dim: Int): DataFrame =
     // explode_OUTER + null filter, not plain explode: the optimizer
     // infers a `size(e) > 0 AND isnotnull(e)` filter below an inner
@@ -55,9 +53,10 @@ object Encoders {
         col("bc.cnt").as("cnt"))
 
   /** The ONE postings derivation — (doc_id, bucket, cnt, norm) with
-    * the exact-integer-squares L2 norm — shared by the index build and
-    * the index append so the two can never diverge. The norm is
-    * per-document, so it is computable from any doc-complete subset.
+    * the exact-integer-squares L2 norm — shared by the in-plan search,
+    * the index build and the text-query encode so they can never
+    * diverge. The norm is per-document, so it is computable from any
+    * doc-complete subset.
     *
     * MAP-SIDE since r16 (guide §2.4): the per-doc (bucket, cnt) pairs
     * come from the one-pass [[graft.functions.BucketCountsExpr]]
@@ -131,26 +130,12 @@ object Encoders {
     * sparse postings, where cnt stays the exact integer hashing-TF
     * count and norm the exact-integer-squares L2 norm — so indexed
     * search is bit-identical to [[hashingSearch]] (asserted in
-    * IndexedSearchSpec). At 100 TB this is the serving artifact: the
-    * ingest pipeline rebuilds or appends it once, amortized over
-    * every query that follows. */
+    * IndexedSearchSpec). At 100 TB this is the serving artifact: built
+    * once, amortized over every query that follows. */
   def writeHashingIndex(spark: SparkSession, dir: String, out: String,
                         dim: Int = Dim, maxDoc: Option[Long] = None): Unit =
     postingsOf(capped(Tables.documents(spark, dir), maxDoc), dim)
       .write.mode("overwrite").parquet(out)
-
-  /** Incremental maintenance for a [[writeHashingIndex]] layout — the
-    * serving-side ingest path (same contract as
-    * [[Ann.appendToIvfIndex]]): postings+norm for a batch of NEW
-    * (doc_id, text) documents, computed from the batch ALONE (a
-    * rebuild re-tokenizes the whole corpus) and appended. Hashing-TF
-    * norms are per-document, so for batch doc_ids disjoint from the
-    * index's, append ≡ full rebuild bit-identically (asserted in
-    * IndexedSearchSpec). Append debt (small files) is reclaimed by a
-    * rebuild. */
-  def appendToHashingIndex(newDocs: DataFrame, out: String,
-                           dim: Int = Dim): Unit =
-    postingsOf(newDocs, dim).write.mode("append").parquet(out)
 
   /** Cosine top-k against a persisted postings index (ref
     * `measure_offline_query_latency`, auto_run_tests.py:109-160: the
@@ -412,8 +397,8 @@ object Encoders {
     docTermOf(capped(Tables.documents(spark, dir), maxDoc))
 
   /** [[docTerm]] over an arbitrary (doc_id, text) frame — shared with
-    * the TF-IDF index append path so build and append can never
-    * diverge. */
+    * the capped experiment grids, so every TF-IDF consumer tokenizes
+    * the same way. */
   private[operators] def docTermOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
         explode_outer(native.tokenCounts(tokens(col("text")))).as("tc"))
@@ -558,8 +543,8 @@ object Encoders {
     tfIdfScore(tfIdfPostings(spark, dir, dim, maxDoc), k, nq)
 
   /** (doc_id, tok, weight, nrm) TF-IDF postings with fixed-point norms
-    * — the ONE weighted-postings derivation behind the in-plan search,
-    * the persisted index and the index append. Norms ride along as a
+    * — the ONE weighted-postings derivation behind the in-plan search
+    * and the persisted index. Norms ride along as a
     * window over the weights frame, so the plan needs no separate norm
     * aggregate and — crucially — no shuffle join of the scored pairs
     * back against a norm table. */
@@ -646,37 +631,15 @@ object Encoders {
     * bit-identically (spec-asserted). The FIT travels with the index
     * twice over: weights embed it, and the (tok, idf) table itself is
     * stored under `_vocab/` (an underscore path — invisible to the
-    * postings scan, exactly like `_SUCCESS`), which is what lets
-    * [[appendToTfidfIndex]] transform NEW documents under the frozen
-    * fit without the original corpus. */
+    * postings scan, exactly like `_SUCCESS`), which is what lets the
+    * text-query form ([[tfIdfSearchTextIndexed]]) transform queries
+    * under the frozen fit without the original corpus. */
   def writeTfidfIndex(spark: SparkSession, dir: String, out: String,
                       dim: Int = Dim, maxDoc: Option[Long] = None): Unit =
     Compaction.stagedBuild(spark, out) { tmp =>
       tfIdfPostings(spark, dir, dim, maxDoc).write.mode("overwrite").parquet(tmp)
       Tables.writeFit(fittedVocab(spark, dir, dim, maxDoc), s"$tmp/_vocab", Tables.VocabFit)
     }
-
-  /** Frozen-fit incremental maintenance for a [[writeTfidfIndex]]
-    * layout — the fitted-TfidfVectorizer TRANSFORM contract (the ref
-    * fits once and transforms every later batch with the same
-    * vectorizer, encoder.py:76-92): a batch of NEW (doc_id, text)
-    * documents is weighted with the INDEX'S OWN stored vocabulary —
-    * idf does not move — and appended. Per-doc norms make a disjoint
-    * append bit-equal to having encoded those docs at build time
-    * under the same fit (spec-asserted). Refit + rebuild when drift
-    * accumulates, exactly like the IVF centroid contract. */
-  def appendToTfidfIndex(spark: SparkSession, newDocs: DataFrame,
-                         indexPath: String): Unit = {
-    val vocab = Tables.readFit(spark, s"$indexPath/_vocab", Tables.VocabFit)
-    val byDoc = Window.partitionBy("doc_id")
-    docTermOf(newDocs)
-      .join(broadcast(vocab), "tok")
-      .select(col("doc_id"), col("tok"), (col("tf") * col("idf")).as("weight"))
-      .withColumn("nrm", sqrt(
-        sum(floor(col("weight") * col("weight") * 1e9 + 0.5).cast("long"))
-          .over(byDoc) / 1e9))
-      .write.mode("append").parquet(indexPath)
-  }
 
   /** Cosine top-k from a persisted [[writeTfidfIndex]] layout — no
     * tokenize, no vocabulary fit, no window in the hot path. */
@@ -686,11 +649,7 @@ object Encoders {
 
   /** [[tfIdfSearchIndexed]] over a memoized per-(app, dir, dim)
     * scratch index — the verified-query form, mirroring
-    * [[hashingSearchViaIndex]]. The ingest caveat differs from the
-    * hashing index: TF-IDF weights depend on the corpus-wide fit, so
-    * appending NEW documents is only exact under the FROZEN fit (the
-    * ref's fitted-TfidfVectorizer transform contract); refit + rebuild
-    * when drift accumulates, exactly like the IVF centroid contract. */
+    * [[hashingSearchViaIndex]]. */
   def tfIdfSearchViaIndex(spark: SparkSession, dir: String, k: Int = 10,
                           nq: Int = 5, dim: Int = Dim): DataFrame =
     tfIdfSearchIndexed(spark,

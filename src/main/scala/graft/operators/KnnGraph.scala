@@ -37,8 +37,8 @@ import graft.functions._
   * keyed on node id (co-partitionable), and the per-node state (K
   * neighbors) is index-shaped output, written once, reused by every
   * downstream search. Beam search reads the edge table as a keyed
-  * side; with the edge table bucketed by src the hop joins are
-  * shuffle-free.
+  * side: each hop broadcasts the bounded frontier, so the edge table
+  * streams in place and never shuffles.
   *
   * Deterministic everywhere: LSH planes are the fixed seed-42 literals
   * ([[Ann.planes]]), all top-k keeps order by (score desc, id asc)
@@ -393,17 +393,10 @@ object KnnGraph {
       .select(col("p.src").as("src"), col("p.dst").as("dst"),
         col("p.score").as("score"))
 
-  /** The [[AutoBeam]] resolution contract, unit-pinned in KnnGraphSpec:
-    * an explicit positive beam is taken as-is; the sentinel resolves to
-    * max([[Beam]], ⌈√N⌉) — sub-linear per-query cost that keeps recall
-    * at decade scale (0.715@200k vs 0.43 at fixed 64, SURVEY §2). */
   /** One row per (node, band): the node's LSH band bucket ids plus the
     * skew-capping sub-slice — the query-adaptive ENTRY TABLE of the
-    * walk. Derivable from the node vectors, but at serving scale it is
-    * index content: [[writeGraphIndex]] persists it partitioned by bkt
-    * so a search scans only its own queries' band directories (DPP),
-    * instead of re-scanning + re-hashing the corpus per batch. */
-  def nodeBands(nodes: DataFrame, subCount: Long): DataFrame =
+    * walk, derived from the node vectors once per search. */
+  private def nodeBands(nodes: DataFrame, subCount: Long): DataFrame =
     nodes.withColumn("_sig", Ann.signature(col("vec")))
       .select(col("id"), bandsOf(col("_sig")).as("bkt"))
       .withColumn("sub", pmod(xxhash64(lit(424242L), col("bkt"), col("id")),
@@ -417,12 +410,15 @@ object KnnGraph {
         .bitwiseAND((1 << Ann.BandBits) - 1) * 100 + bb): _*))
 
   /** Sub-slices per band bucket at corpus size n: keeps each entry
-    * slice ≈ seedGroup nodes, so per-query entry volume is constant
-    * in N. Frozen at build time for a persisted index (stored in
-    * `_meta`). */
-  def subCountOf(n: Long, seedGroup: Int = SeedGroup): Long =
-    math.max(1L, n / ((1L << Ann.BandBits) * seedGroup))
+    * slice ≈ [[SeedGroup]] nodes, so per-query entry volume is constant
+    * in N. */
+  private def subCountOf(n: Long): Long =
+    math.max(1L, n / ((1L << Ann.BandBits) * SeedGroup))
 
+  /** The [[AutoBeam]] resolution contract, unit-pinned in KnnGraphSpec:
+    * an explicit positive beam is taken as-is; the sentinel resolves to
+    * max([[Beam]], ⌈√N⌉) — sub-linear per-query cost that keeps recall
+    * at decade scale (0.715@200k vs 0.43 at fixed 64, SURVEY §2). */
   def resolveBeam(beam: Int, n: Long): Int =
     if (beam > 0) beam
     else math.max(Beam, math.ceil(math.sqrt(n.toDouble)).toInt)
@@ -434,10 +430,7 @@ object KnnGraph {
                                      entries: DataFrame)
 
   private def walkSetup(queries0: DataFrame, emb0: DataFrame,
-                        beam: Int, nSeeds: Int, nHint: Long,
-                        seedGroup: Int, entriesHint: Option[DataFrame],
-                        seedsHint: Option[DataFrame],
-                        subCountHint: Long): WalkSetup = {
+                        beam: Int): WalkSetup = {
     // The query frame is re-broadcast in EVERY hop's score() join; as
     // a raw plan each of those broadcast builds re-runs the query
     // subtree (a parquet scan on the ad-hoc path). One eager
@@ -448,15 +441,11 @@ object KnnGraph {
     // materializations).
     val queries = queries0.localCheckpoint(true)
     val emb = emb0.select(col("id"), col("vec"))
-    // fixed entry points (index metadata): the nSeeds smallest node
-    // ids. DISTINCT ids, not rows — a re-applied appendToGraphIndex
-    // batch leaves duplicate node rows, and a plain
-    // orderBy+limit over duplicates would silently shrink the distinct
-    // entry-point set and change exploration. A persisted index
-    // carries the seed set in `_meta` (seedsHint) — the ad-hoc path
-    // derives it here, once.
-    val seeds = seedsHint.getOrElse(
-      emb.select(col("id")).distinct().orderBy("id").limit(nSeeds))
+    // fixed entry points: the NSeeds smallest node ids. DISTINCT ids,
+    // not rows — the input contract does not promise one row per node
+    // id, and a plain orderBy+limit over duplicate rows would silently
+    // shrink the distinct entry-point set and change exploration.
+    val seeds = emb.select(col("id")).distinct().orderBy("id").limit(NSeeds)
     // query-ADAPTIVE entry points (the HNSW descend-to-the-right-
     // region analog, batch form): each query also enters the graph at
     // a bounded LSH slice of each of its band buckets — the same
@@ -466,27 +455,12 @@ object KnnGraph {
     // linear-init graph measured 0.43 recall@10 at 2k nodes; LSH entry
     // + the same walk restores the high-recall regime while every per-
     // query cost stays constant in N.
-    // N is INDEX METADATA, not something a serving search should scan
-    // for: a persisted index carries it in its _meta table
-    // ([[writeGraphIndex]]/[[readGraphMeta]]) and passes it as `nHint`,
-    // so the serving path runs no job over the node table beyond its
-    // hop joins; the ad-hoc (un-persisted) path counts once here.
-    val n = if (nHint > 0) nHint else emb.count()
-    // resolve the AutoBeam sentinel from the corpus size this search
-    // already computes for the entry-slice split (see [[Beam]])
+    // N: one count job over the node ids per search; it sizes both the
+    // AutoBeam sentinel (see [[Beam]]) and the entry-slice split
+    val n = emb.count()
     val bw = resolveBeam(beam, n)
-    // the sub-slice split is FROZEN at index-build time for a
-    // persisted layout (subCountHint): queries must split the same
-    // way the stored band table was split, across appends — the same
-    // frozen-fit contract as the IVF `_cent` grid
-    val subCount =
-      if (subCountHint > 0) subCountHint else subCountOf(n, seedGroup)
-    // the banded node table is INDEX CONTENT, not per-search work: a
-    // persisted layout stores it partitioned by bkt (entriesHint —
-    // the query side then prunes to its own band directories via DPP,
-    // the writeIvfIndex pattern); the ad-hoc path computes it here,
-    // one corpus scan per call.
-    val dBand = entriesHint.getOrElse(nodeBands(emb, subCount))
+    val subCount = subCountOf(n)
+    val dBand = nodeBands(emb, subCount)
     val qBand = queries
       .withColumn("_sig", Ann.signature(col("q_vec")))
       .select(col("q_id"), bandsOf(col("_sig")).as("bkt"))
@@ -508,7 +482,7 @@ object KnnGraph {
         .join(broadcast(queries), Seq("q_id"))
         .select(col("q_id"), col("id"), cosine(col("q_vec"), col("vec")).as("score"))
     val entries = score(
-      broadcast(queries.select(col("q_id"))).crossJoin(seeds.select(col("id")))
+      broadcast(queries.select(col("q_id"))).crossJoin(seeds)
         .union(lshEntries))
     WalkSetup(bw, score, entries)
   }
@@ -547,27 +521,13 @@ object KnnGraph {
     * expanded id from the candidate side order-independently, so a
     * re-discovered expanded node never re-enters the frontier. */
   def graphSearch(queries: DataFrame, emb0: DataFrame, edges: DataFrame,
-                  k: Int = Knn.K, beam: Int = AutoBeam, hops: Int = Hops,
-                  nSeeds: Int = NSeeds, nHint: Long = -1L,
-                  seedGroup: Int = SeedGroup,
-                  entriesHint: Option[DataFrame] = None,
-                  seedsHint: Option[DataFrame] = None,
-                  subCountHint: Long = -1L,
-                  beamGrowth: Double = 1.0): DataFrame = {
-    val s = walkSetup(queries, emb0, beam, nSeeds, nHint, seedGroup,
-      entriesHint, seedsHint, subCountHint)
-    // beamGrowth > 1 widens the frontier geometrically per hop
-    // (VERDICT r15 §next-6's recall lever: late hops are where the
-    // walk sits in the true neighborhood, so extra width buys recall
-    // there while the early, navigational hops stay cheap); 1.0 is
-    // the verified constant-beam default, bit-identical to the prior
-    // formulation (Round16Spec)
-    def bwAt(hop: Int): Int =
-      math.max(1, math.ceil(s.bw * math.pow(beamGrowth, hop - 1.0)).toInt)
-    // the exactness cap must cover the WIDEST scheduled frontier: a
-    // row dropped at hop h can improve by at most max-beam per later
-    // hop, so capUnit uses the schedule's maximum
-    val capUnit = math.max((1 to hops).map(bwAt).max, k)
+                  k: Int = Knn.K, beam: Int = AutoBeam,
+                  hops: Int = Hops): DataFrame = {
+    val s = walkSetup(queries, emb0, beam)
+    val bw = s.bw
+    // the exactness cap's unit: a row dropped at hop h can improve by
+    // at most bw per later hop, and k rows must outrank it at the end
+    val capUnit = math.max(bw, k)
     var state = s.entries.withColumn("x", lit(false))
     // (r16 measured, kept for the record: running this loop with AQE
     // disabled was tried and is SLOWER — 4.06 s vs 2.98 s at sf0.1 —
@@ -576,7 +536,6 @@ object KnnGraph {
     // handful of partitions the O(Q·pool)-row state actually needs.)
     for (hop <- 1 to hops) {
       val cap = capUnit * (hops - hop + 1)
-      val bw = bwAt(hop)
       // ONE aggregation + checkpoint per hop, over bounded input; the
       // row count out is Q (one struct per query)
       // LAZY localCheckpoint (r17): the returned frame's logical plan
@@ -641,14 +600,8 @@ object KnnGraph {
     * rows plus expansion markers, re-checkpointed whole every hop. */
   private[graft] def graphSearchCumulative(
       queries: DataFrame, emb0: DataFrame, edges: DataFrame,
-      k: Int = Knn.K, beam: Int = AutoBeam, hops: Int = Hops,
-      nSeeds: Int = NSeeds, nHint: Long = -1L,
-      seedGroup: Int = SeedGroup,
-      entriesHint: Option[DataFrame] = None,
-      seedsHint: Option[DataFrame] = None,
-      subCountHint: Long = -1L): DataFrame = {
-    val su = walkSetup(queries, emb0, beam, nSeeds, nHint, seedGroup,
-      entriesHint, seedsHint, subCountHint)
+      k: Int = Knn.K, beam: Int = AutoBeam, hops: Int = Hops): DataFrame = {
+    val su = walkSetup(queries, emb0, beam)
     val bw = su.bw
     var state = su.entries.withColumn("x", lit(false)).localCheckpoint(true)
     for (hop <- 1 to hops) {
@@ -679,8 +632,7 @@ object KnnGraph {
   /** kNN graph over the doc half of the embeddings table, memoized per
     * (dir, k): the graph is an INDEX — built once, reused by every
     * consumer in the session (beam search, recall eval, semantic
-    * dedup), the in-session mirror of the [[writeGraphIndex]]
-    * build-once contract. Safe to cache: the build is deterministic
+    * dedup). Safe to cache: the build is deterministic
     * and the returned edges are localCheckpoint'ed (materialized
     * blocks, not a growing lineage). */
   def docGraph(spark: SparkSession, dir: String, k: Int = K): DataFrame =
@@ -707,180 +659,6 @@ object KnnGraph {
       .select(col("q_id"), col("rank"), col("id").as("doc_id"),
         rnd(col("score"), 4).as("score"))
       .transform(Knn.ranked("q_id", "rank"))
-
-  // ---------- persisted serving index (bucketed layout) ----------
-
-  /** Bucket count for the persisted index tables. Both tables use the
-    * same count so a future edge⋈node co-join is also exchange-free. */
-  val IndexBuckets = 8
-
-  /** Persists the graph as a serving index: the edge table bucketed by
-    * `src` and the node vectors bucketed by `id`. A later search's hop
-    * joins and vector lookups then plan WITHOUT an Exchange on the
-    * index side — only the tiny per-hop frontier shuffles into the
-    * index's layout (asserted in PlanSpec, not assumed). Build once,
-    * read by every subsequent search — the same amortization contract
-    * as [[Ann.writeIvfIndex]], re-expressed for the graph. */
-  def writeGraphIndex(spark: SparkSession, dir: String,
-                      name: String = "graft_graph",
-                      nBuckets: Int = IndexBuckets): Unit = {
-    val nodes = Knn.docSet(spark, dir)
-      .select(col("doc_id").as("id"), col("doc_vec").as("vec"))
-    Bucketing.writeBucketed(buildGraph(nodes), s"${name}_edges", "src", nBuckets)
-    Bucketing.writeBucketed(nodes, s"${name}_nodes", "id", nBuckets)
-    val n = nodes.count()
-    val subCount = subCountOf(n)
-    // the walk's ENTRY TABLE is index content too (r13): persisted
-    // partitioned by bkt (≤ 2^BandBits·NBands directories), so a
-    // serving search's broadcast query-band side prunes the scan to
-    // its own band directories (DPP — the writeIvfIndex pattern)
-    // instead of re-scanning and re-hashing the whole node table on
-    // EVERY batch
-    Bucketing.reclaimOrphanedLocation(spark, s"${name}_bands")
-    nodeBands(nodes, subCount).write.mode("overwrite").format("parquet")
-      .partitionBy("bkt").saveAsTable(s"${name}_bands")
-    val seedIds = nodes.select(col("id")).distinct().orderBy("id")
-      .limit(NSeeds).collect().map(_.getLong(0)).toSeq
-    writeGraphMeta(spark, name, n, subCount, seedIds, overwrite = true)
-  }
-
-  /** Metadata row(s) for a [[writeGraphIndex]] layout — the
-    * `_fit`/`_vocab` convention applied to everything the serving
-    * search would otherwise scan the corpus for: node count (√N
-    * auto-beam), the FROZEN sub-slice split, and the fixed seed ids.
-    * The build writes the one full row; every [[appendToGraphIndex]]
-    * batch appends a count-only row and the reader sums counts. At
-    * bench sizes these are metadata reads; at 100 TB a per-search
-    * corpus scan is a serving-path defect (VERDICT r12 §next-2). */
-  private def writeGraphMeta(spark: SparkSession, name: String, n: Long,
-                             subCount: Long, seeds: Seq[Long],
-                             overwrite: Boolean): Unit = {
-    import spark.implicits._
-    val df = Seq((n, Option(subCount).filter(_ > 0), Option(seeds)))
-      .toDF("n", "sub_count", "seeds")
-    // appends into a pre-bands single-column layout keep its schema
-    val out =
-      if (!overwrite && spark.catalog.tableExists(s"${name}_meta") &&
-          !spark.table(s"${name}_meta").columns.contains("sub_count"))
-        df.select("n")
-      else df
-    if (overwrite) Bucketing.reclaimOrphanedLocation(spark, s"${name}_meta")
-    out.write.mode(if (overwrite) "overwrite" else "append")
-      .format("parquet").saveAsTable(s"${name}_meta")
-  }
-
-  /** Everything [[searchIndexed]] needs from `_meta`: summed node
-    * count, the build-time sub-slice split, and the seed ids — old
-    * layouts (or a missing table) degrade field-by-field to the
-    * derive-it-from-the-corpus fallbacks. Appended counts can
-    * over-count after an at-least-once replay; they only size the √N
-    * beam, where drift is benign. */
-  final case class GraphMeta(n: Long, subCount: Long, seeds: Option[Seq[Long]])
-
-  def readGraphMetaFull(spark: SparkSession,
-                        name: String = "graft_graph"): GraphMeta =
-    if (!spark.catalog.tableExists(s"${name}_meta")) GraphMeta(-1L, -1L, None)
-    else {
-      val t = spark.table(s"${name}_meta")
-      val n = t.agg(coalesce(sum("n"), lit(-1L))).head.getLong(0)
-      if (!t.columns.contains("sub_count")) GraphMeta(n, -1L, None)
-      else {
-        val build = t.filter(col("sub_count").isNotNull)
-          .select("sub_count", "seeds").collect()
-        if (build.isEmpty) GraphMeta(n, -1L, None)
-        else GraphMeta(n, build.head.getLong(0),
-          Option(build.head.getSeq[Long](1)))
-      }
-    }
-
-  /** Total node count recorded in the index's `_meta` table, or -1 for
-    * a pre-meta layout (the search then falls back to counting — the
-    * old behavior, never a wrong answer). */
-  def readGraphMeta(spark: SparkSession, name: String = "graft_graph"): Long =
-    readGraphMetaFull(spark, name).n
-
-  /** Batch beam search over a [[writeGraphIndex]] layout. Identical
-    * results to [[search]] over the same corpus (asserted in
-    * KnnGraphSpec); the difference is the plan — the edge and node
-    * sides are read pre-bucketed (no index-side shuffle), N, the
-    * sub-split and the seeds come from `_meta` (tiny-table reads),
-    * and the LSH entry join reads the persisted band table pruned to
-    * the queries' own band directories — so the only per-batch jobs
-    * touching corpus-sized data are the hop joins themselves. */
-  def searchIndexed(spark: SparkSession, dir: String,
-                    name: String = "graft_graph", k: Int = Knn.K): DataFrame = {
-    import spark.implicits._
-    val meta = readGraphMetaFull(spark, name)
-    graphSearch(
-      Knn.querySet(spark, dir).select(col("q_id"), col("q_vec")),
-      spark.table(s"${name}_nodes"),
-      spark.table(s"${name}_edges"), k,
-      nHint = meta.n,
-      entriesHint =
-        if (spark.catalog.tableExists(s"${name}_bands"))
-          Some(spark.table(s"${name}_bands")) else None,
-      seedsHint = meta.seeds.map(_.toDF("id")),
-      subCountHint = meta.subCount)
-  }
-
-  /** Incremental maintenance — the serving-side insert path, HNSW's
-    * insertion rule expressed batch-wise: the WHOLE new batch
-    * beam-searches the existing graph together (one shared batch
-    * search, never per-node loops), each new node's top-k results
-    * become its out-edges, and each discovered neighbor gains a
-    * reverse edge — without the reverse edge no later search could
-    * ever surface the insert, since search only travels existing
-    * edges. The append writes only new bucket files (existing files
-    * untouched); neighbors' out-degree can exceed K between rebuilds —
-    * the bounded search heaps absorb the extra fan-out, and a periodic
-    * [[buildGraph]] re-prunes. Same add-to-built-index contract as
-    * [[Ann.appendToIvfIndex]]. */
-  def appendToGraphIndex(spark: SparkSession, newNodes: DataFrame,
-                         name: String = "graft_graph",
-                         nBuckets: Int = IndexBuckets, k: Int = K): Unit = {
-    import spark.implicits._
-    val nn = newNodes.select(col("id"), col("vec"))
-    val meta = readGraphMetaFull(spark, name)
-    val res = graphSearch(
-      nn.select(col("id").as("q_id"), col("vec").as("q_vec")),
-      spark.table(s"${name}_nodes"), spark.table(s"${name}_edges"), k,
-      nHint = meta.n,
-      entriesHint =
-        if (spark.catalog.tableExists(s"${name}_bands"))
-          Some(spark.table(s"${name}_bands")) else None,
-      seedsHint = meta.seeds.map(_.toDF("id")),
-      subCountHint = meta.subCount)
-      // if a node id is already in the index (an at-least-once replay),
-      // its best match is itself — never append self-loops
-      .filter(col("q_id") =!= col("id"))
-    val fwd = res.select(col("q_id").as("src"), col("id").as("dst"), col("score"))
-    val rev = res.select(col("id").as("src"), col("q_id").as("dst"), col("score"))
-    fwd.union(rev).write.mode("append").format("parquet")
-      .bucketBy(nBuckets, "src").sortBy("src").saveAsTable(s"${name}_edges")
-    nn.write.mode("append").format("parquet")
-      .bucketBy(nBuckets, "id").sortBy("id").saveAsTable(s"${name}_nodes")
-    // the batch enters the entry table too, banded under the FROZEN
-    // build-time sub-split — without this, a later search could never
-    // ENTER at an appended node, only walk to it
-    if (spark.catalog.tableExists(s"${name}_bands")) {
-      // a bands table without its build-time split in _meta is a
-      // broken frozen-fit contract (writeGraphIndex writes both
-      // together): banding the batch under a GUESSED split would
-      // silently make appended nodes near-unreachable as entries —
-      // searches split queries with subCountOf(actual n), not the
-      // guess — so fail loudly instead
-      require(meta.subCount > 0,
-        s"${name}_bands exists but ${name}_meta has no build-time " +
-          "sub_count — the frozen-split contract is broken; rebuild " +
-          "with writeGraphIndex")
-      nodeBands(nn, meta.subCount).write.mode("append").format("parquet")
-        .partitionBy("bkt").saveAsTable(s"${name}_bands")
-    }
-    // maintain the index's node count alongside the nodes themselves
-    // (the batch scan here is over the BATCH, not the index)
-    writeGraphMeta(spark, name, nn.count(), subCount = -1L, seeds = null,
-      overwrite = false)
-  }
 
   /** Mean overlap@k of graph search vs the exact cosine top-k — the
     * recall the graph trades for never scanning the corpus (same shape

@@ -120,25 +120,6 @@ class IndexedSearchSpec extends AnyFunSuite with Matchers with SharedSpark {
     plan should include("PushedFilters")
   }
 
-  test("append to the index is bit-identical to a full rebuild") {
-    import org.apache.spark.sql.functions.col
-    val base = tempDir("graft-hidx-append")
-    val full = s"$base/full"; val inc = s"$base/inc"
-    Encoders.writeHashingIndex(spark, sfDir, full)
-    // incremental: the even doc_ids as the base batch, odds appended
-    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-    Encoders.appendToHashingIndex(
-      docs.filter(col("doc_id") % 2 === 0), inc)
-    Encoders.appendToHashingIndex(
-      docs.filter(col("doc_id") % 2 =!= 0), inc)
-    spark.read.parquet(inc).collect().map(_.toString).sorted shouldBe
-      spark.read.parquet(full).collect().map(_.toString).sorted
-    // and the search over the appended index matches the direct plan
-    Encoders.hashingSearchIndexed(spark, inc)
-      .collect().map(_.toString).sorted shouldBe
-      Encoders.hashingSearch(spark, sfDir).collect().map(_.toString).sorted
-  }
-
   test("indexed TF-IDF search is bit-identical to the in-plan search") {
     val idx = s"${tempDir("graft-tidx-spec")}/postings"
     Encoders.writeTfidfIndex(spark, sfDir, idx)
@@ -158,28 +139,6 @@ class IndexedSearchSpec extends AnyFunSuite with Matchers with SharedSpark {
     // and the via-index wrapper matches too
     Encoders.tfIdfSearchViaIndex(spark, sfDir)
       .collect().map(_.toString).sorted shouldBe direct
-  }
-
-  test("frozen-fit TF-IDF append is bit-identical to encoding at build time") {
-    import org.apache.spark.sql.functions.col
-    val base = tempDir("graft-tidx-append")
-    val full = s"$base/full"; val inc = s"$base/inc"
-    Encoders.writeTfidfIndex(spark, sfDir, full)
-    // partial layout: the even doc_ids' postings plus the stored fit
-    spark.read.parquet(full).filter(col("doc_id") % 2 === 0)
-      .write.parquet(inc)
-    Tables.readFit(spark, s"$full/_vocab", Tables.VocabFit).write.parquet(s"$inc/_vocab")
-    // the odd docs arrive later as a batch, transformed under the
-    // FROZEN fit (the index's own stored vocabulary)
-    Encoders.appendToTfidfIndex(spark,
-      Tables.documents(spark, sfDir).select("doc_id", "text")
-        .filter(col("doc_id") % 2 =!= 0), inc)
-    spark.read.parquet(inc).collect().map(_.toString).sorted shouldBe
-      spark.read.parquet(full).collect().map(_.toString).sorted
-    // and the appended index searches identically to the in-plan path
-    Encoders.tfIdfSearchIndexed(spark, inc)
-      .collect().map(_.toString).sorted shouldBe
-      Encoders.tfIdfSearch(spark, sfDir).collect().map(_.toString).sorted
   }
 
   test("text-query search from stored layouts is bit-identical to the in-plan forms") {
@@ -312,29 +271,5 @@ class IndexedSearchSpec extends AnyFunSuite with Matchers with SharedSpark {
       .collect().map(_.toString).sorted
     indexed shouldBe direct
     direct should not be empty
-  }
-
-  test("frozen-fit SQ8 append is bit-identical to encoding at build time") {
-    import org.apache.spark.sql.functions.col
-    val base = tempDir("graft-sq8-append")
-    val full = s"$base/full"; val inc = s"$base/inc"
-    operators.Ann.writeSq8Index(spark, sfDir, full)
-    // incremental: build from the even doc_ids, append the odds under
-    // the SAME fit (copy the full index's fit — the build-from-half
-    // fit would differ; the contract is append-under-frozen-fit)
-    val docs = graft.operators.Knn.docSet(spark, sfDir)
-    operators.Ann.sq8Encode(
-      docs.filter(col("doc_id") % 2 === 0),
-      Tables.readFit(spark, s"$full/_fit", Tables.Sq8Fit))
-      .write.parquet(inc)
-    Tables.readFit(spark, s"$full/_fit", Tables.Sq8Fit).write.parquet(s"$inc/_fit")
-    operators.Ann.appendToSq8Index(spark,
-      docs.filter(col("doc_id") % 2 =!= 0), inc)
-    spark.read.parquet(inc).collect().map(_.toString).sorted shouldBe
-      spark.read.parquet(full).collect().map(_.toString).sorted
-    // the search over the appended index matches the direct plan
-    operators.Ann.sq8Indexed(spark, sfDir, inc)
-      .collect().map(_.toString).sorted shouldBe
-      operators.Ann.sq8Search(spark, sfDir).collect().map(_.toString).sorted
   }
 }

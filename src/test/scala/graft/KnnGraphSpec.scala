@@ -8,7 +8,7 @@ import org.scalatest.matchers.should.Matchers
   * Spark-native stand-in for the reference's HNSW index
   * (weaviate/client.py:47-57). No SQL oracle exists for an iterative
   * graph construction, so coverage is spec-level, same contract as the
-  * other index-shaped components (writeIvfIndex, appendToIvfIndex):
+  * other index-shaped components (writeIvfIndex, writePqIndex):
   * determinism, structural invariants, and measured recall against the
   * exact answer.
   */
@@ -187,68 +187,6 @@ class KnnGraphSpec extends AnyFunSuite with Matchers with SharedSpark {
     operators.Dedup.semanticGraph(spark, sfDir, threshold,
       edges = Some(edges)).collect().map(_.toString).toSet shouldBe
       got.collect().map(_.toString).toSet
-  }
-
-  test("persisted index: indexed search matches in-memory; append makes new nodes retrievable") {
-    KnnGraph.writeGraphIndex(spark, sfDir, name = "gidx")
-    try {
-      // the index carries its node count as _meta (VERDICT r12 §next-2)
-      val nDocs = docs.count()
-      KnnGraph.readGraphMeta(spark, "gidx") shouldBe nDocs
-      val mem = KnnGraph.search(spark, sfDir).collect().map(_.toString).toSet
-      val idx = KnnGraph.searchIndexed(spark, sfDir, "gidx")
-        .collect().map(_.toString).toSet
-      idx shouldBe mem
-      // HNSW-style batch insert: the query vectors become new nodes
-      // (their ids 0..19 don't collide with doc ids)
-      val newNodes = Knn.querySet(spark, sfDir)
-        .select(col("q_id").as("id"), col("q_vec").as("vec"))
-      KnnGraph.appendToGraphIndex(spark, newNodes, "gidx")
-      // the append maintained the count without a node-table rescan
-      KnnGraph.readGraphMeta(spark, "gidx") shouldBe nDocs + newNodes.count()
-      val top1 = KnnGraph.searchIndexed(spark, sfDir, "gidx")
-        .filter(col("rank") === 1).cache()
-      // every query's own inserted vector is now its best match — this
-      // exercises the reverse edges: without them the inserts would be
-      // unreachable and search could never surface them
-      top1.filter(col("id") === col("q_id")).count() shouldBe newNodes.count()
-      top1.agg(min("score")).head.getDouble(0) should be >= 0.999
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS gidx_edges")
-      spark.sql("DROP TABLE IF EXISTS gidx_nodes")
-      spark.sql("DROP TABLE IF EXISTS gidx_meta")
-      spark.sql("DROP TABLE IF EXISTS gidx_bands")
-    }
-  }
-
-  test("a missing _meta table falls back to counting (pre-meta layouts keep working)") {
-    KnnGraph.readGraphMeta(spark, "graft_no_such_index") shouldBe -1L
-  }
-
-  test("nHint skips the per-search corpus count: strictly fewer jobs, same results") {
-    // the serving-path contract behind _meta (VERDICT r12 §next-2):
-    // with N supplied, graphSearch runs NO job over the node table
-    // beyond its hop joins — observable as exactly the counting job
-    // disappearing from an otherwise identical call
-    val q = Knn.querySet(spark, sfDir).select(col("q_id"), col("q_vec"))
-    val n = docs.count()
-    def jobsOf(group: String)(body: => org.apache.spark.sql.DataFrame): Int = {
-      spark.sparkContext.setJobGroup(group, group)
-      try { body.collect() }
-      finally spark.sparkContext.clearJobGroup()
-      spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-    }
-    val withCount = jobsOf("gs-count") {
-      KnnGraph.graphSearch(q, docs, edges) }
-    val withHint = jobsOf("gs-hint") {
-      KnnGraph.graphSearch(q, docs, edges, nHint = n) }
-    withClue(s"jobs with hint $withHint vs with count $withCount: ") {
-      withHint should be < withCount
-    }
-    // and the hinted search returns the identical result set
-    KnnGraph.graphSearch(q, docs, edges, nHint = n)
-      .collect().map(_.toString).toSet shouldBe
-      KnnGraph.graphSearch(q, docs, edges).collect().map(_.toString).toSet
   }
 
   test("beam search is deterministic and rank-ordered") {

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
 import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -225,80 +224,6 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
     p should not include "Window"
   }
 
-  test("bucketed tables: equi-join on the bucket key plans zero Exchange") {
-    val e = Tables.embeddings(spark, sfDir)
-    Bucketing.writeBucketed(e.select("vec_id", "label"), "b_meta", "vec_id", 8)
-    Bucketing.writeBucketed(e.select("vec_id", "embedding"), "b_vecs", "vec_id", 8)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val p = plan(spark.table("b_meta").join(spark.table("b_vecs"), "vec_id"))
-      p should include("SortMergeJoin")
-      p should not include "Exchange"
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS b_meta")
-      spark.sql("DROP TABLE IF EXISTS b_vecs")
-    }
-  }
-
-  test("graph index: hop join reads bucketed edges with no index-side Exchange") {
-    KnnGraph.writeGraphIndex(spark, sfDir, name = "gidx_plan")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // one beam-search hop: tiny frontier ⋈ persisted edge table
-      val frontier = spark.range(20).select(col("id"), lit(0L).as("q_id"))
-      val edges = spark.table("gidx_plan_edges").withColumnRenamed("src", "id")
-      val p = plan(frontier.join(edges, Seq("id")))
-      p should include("SortMergeJoin")
-      p should include("Bucketed: true")
-      // exactly ONE Exchange: the frontier re-hashes into the index's
-      // bucketing; the (arbitrarily large) edge side never shuffles
-      "Exchange".r.findAllIn(p).length shouldBe 1
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    }
-    // the persisted ENTRY table: the lshEntries-shaped join against
-    // the bkt-partitioned band table must carry a runtime pruning
-    // subquery — a serving batch reads only its own queries' band
-    // directories, never the full entry table (the ivfIndexed DPP
-    // contract, applied to the graph index)
-    try {
-      val bands = spark.table("gidx_plan_bands")
-        .select(col("id"), col("bkt").cast("long").as("bkt"), col("sub"))
-      val qb = graft.operators.Knn.querySet(spark, sfDir)
-        .select(col("q_id"),
-          explode(array(lit(3L), lit(104L))).as("bkt"),
-          lit(0L).as("sub"))
-      val pe = plan(bands.join(broadcast(qb), Seq("bkt", "sub"))
-        .select(col("q_id"), col("id")))
-      pe.toLowerCase should include("dynamicpruning")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS gidx_plan_edges")
-      spark.sql("DROP TABLE IF EXISTS gidx_plan_nodes")
-      spark.sql("DROP TABLE IF EXISTS gidx_plan_meta")
-      spark.sql("DROP TABLE IF EXISTS gidx_plan_bands")
-    }
-  }
-
-  test("day-partitioned layout: range predicate prunes partitions at planning time") {
-    val tmp = tempDir("graft-part")
-    Bucketing.writePartitionedByDay(Tables.events(spark, sfDir), tmp)
-    val all = spark.read.parquet(tmp)
-    val days = all.select("day").distinct().orderBy("day")
-      .collect().map(_.get(0).toString) // partition col may infer as DATE
-    days.length should be > 1
-    val one = Bucketing.readDayRange(spark, tmp, days.head, days.head)
-    // the day predicate is a PARTITION filter (planning-time pruning),
-    // not a data filter pushed into row groups
-    val p = plan(one)
-    p should include("PartitionFilters: [isnotnull(day")
-    p should not include "PushedFilters: [IsNotNull(day"
-    one.count() should be > 0L
-    one.count() should be < all.count()
-  }
-
   test("minhash LSH: no cartesian product anywhere") {
     val p = plan(Dedup.minhashLsh(spark, sfDir))
     p should not include "CartesianProduct"
@@ -370,20 +295,6 @@ class PlanSpec extends AnyFunSuite with Matchers with SharedSpark {
     val direct = Ann.ivf(spark, sfDir)
     indexed.exceptAll(direct).count() shouldBe 0
     direct.exceptAll(indexed).count() shouldBe 0
-  }
-
-  test("incremental IVF index: appending a batch equals a full rebuild") {
-    val tmp = tempDir("graft-ivfapp")
-    val docs = Knn.docSet(spark, sfDir)
-    // build on the even half, then ingest the odd half as a new batch
-    Ann.writeIvfIndex(spark, sfDir, tmp,
-      Some(docs.filter(pmod(col("doc_id"), lit(2)) === 0)))
-    Ann.appendToIvfIndex(spark, sfDir,
-      docs.filter(pmod(col("doc_id"), lit(2)) === 1), tmp)
-    val appended = Ann.ivfIndexed(spark, sfDir, tmp)
-    val direct = Ann.ivf(spark, sfDir)
-    appended.exceptAll(direct).count() shouldBe 0
-    direct.exceptAll(appended).count() shouldBe 0
   }
 
   test("range join plans as an equi-join on time buckets, never a nested loop") {

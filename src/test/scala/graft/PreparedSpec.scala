@@ -81,14 +81,16 @@ class PreparedSpec extends AnyFunSuite with Matchers with SharedSpark {
     val b0 = builds
     call(q, sfDir)
     builds shouldBe b0
-    // restores the session's explicit settings exactly: a key set to its
-    // default is still a different snapshot from an unset one
+    // restores the session's explicit settings exactly
     def withConf(key: String, value: String)(body: => Unit): Unit = {
       val prior = spark.conf.getAll.get(key)
       spark.conf.set(key, value)
       try body finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
     val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
+    // set explicitly to the value the session already reads: no new plan
+    withConf("spark.sql.ansi.enabled", ansi.toString)(call(q, sfDir))
+    builds shouldBe b0
     withConf("spark.sql.ansi.enabled", (!ansi).toString)(call(q, sfDir))
     builds shouldBe b0 + 1
     withConf("spark.sql.session.timeZone", "America/Los_Angeles")(call(q, sfDir))

@@ -82,27 +82,20 @@ class Round10Spec extends AnyFunSuite with Matchers with SharedSpark {
     }
   }
 
-  test("sq8 frozen-fit append of drifted vectors stays byte-codable") {
+  test("sq8Encode saturates a drifted vector at 255 under the base fit") {
     import spark.implicits._
-    val idx = tempDir("graft-sq8clamp")
     val base = (0L until 20L).map(i =>
       (i, Array.tabulate(VectorCore.Dim)(d => ((i + d) % 7).toFloat / 7f)))
       .toDF("doc_id", "doc_vec")
-    val fitSrc = tempDir("graft-sq8fitsrc")
-    // writeSq8Index reads via Knn.docSet(dir); emulate with direct calls
     val ranges = base
       .select(posexplode(col("doc_vec")).as(Seq("dim0", "x")))
       .select((col("dim0") + 1).cast("long").as("dim"), col("x").cast("double").as("v"))
       .groupBy("dim").agg(min("v").as("lo"), max("v").as("hi"))
-    Ann.sq8Encode(base, ranges).write.mode("overwrite").parquet(idx)
-    ranges.coalesce(1).write.mode("overwrite").parquet(s"$idx/_fit")
     val drifted = Seq((999L, Array.fill(VectorCore.Dim)(1e6f))).toDF("doc_id", "doc_vec")
-    Ann.appendToSq8Index(spark, drifted, idx)
-    val appended = spark.read.parquet(idx).filter(col("doc_id") === 999L)
+    val codes = Ann.sq8Encode(drifted, ranges)
       .select("code").collect().map(_.getLong(0))
-    appended should have length VectorCore.Dim.toLong
-    appended.foreach(_ shouldBe 255L) // saturated at the grid edge, not > 255
-    fitSrc should not be null
+    codes should have length VectorCore.Dim.toLong
+    codes.foreach(_ shouldBe 255L) // saturated at the grid edge, not > 255
   }
 
   test("gramMatrix on an empty embeddings table returns zero rows") {

@@ -53,11 +53,11 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
     }
   }
 
-  test("IVF index is self-contained: stored _cent drives searches and appends") {
+  test("IVF index is self-contained: stored _cent drives searches") {
     // a trained-grid layout must not depend on callers re-supplying
-    // the same centroids — searches and appends read the index's own
-    // stored _cent (r13); mismatched centroids would mis-probe and
-    // mis-assign SILENTLY (lists still exist, results just degrade)
+    // the same centroids — searches read the index's own stored _cent
+    // (r13); mismatched centroids would mis-probe SILENTLY (lists still
+    // exist, results just degrade)
     val idx = s"${tempDir("graft-ivfcent")}/idx"
     val trained = Ann.fitCentroids(
         Tables.embeddings(spark, sfDir), k = 8, iters = 2, spherical = true)
@@ -71,27 +71,7 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
     val passed = Ann.ivfIndexed(spark, sfDir, idx, centroids = Some(trained))
       .collect().map(_.toString).toSet
     stored shouldBe passed
-    // append assigns under the stored trained centroids, not the
-    // corpus-fixed seeds: every appended row's c_id is its argmax-dot
-    // cell under _cent
-    val newDocs = Knn.querySet(spark, sfDir)
-      .select((col("q_id") + 100000L).as("doc_id"), col("q_vec").as("doc_vec"))
-    Ann.appendToIvfIndex(spark, sfDir, newDocs, idx)
-    val cent = Tables.readFit(spark, s"$idx/_cent", Tables.CentroidFit).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    def argmax(v: Array[Float]): Long =
-      cent.map { case (cid, cv) =>
-        (cv.zip(v).map { case (a, b) => a.toDouble * b }.sum, cid)
-      }.maxBy { case (s, cid) => (s, -cid) }._2
-    val appended = spark.read.parquet(idx)
-      .filter(col("doc_id") >= 100000L)
-      // partition-column discovery may infer c_id narrower — pin it
-      .select(col("doc_id"), col("c_id").cast("long"), col("doc_vec"))
-      .collect()
-    appended.length shouldBe newDocs.count()
-    appended.foreach { r =>
-      r.getLong(1) shouldBe argmax(r.getSeq[Float](2).toArray)
-    }
+    stored should not be empty
   }
 
   test("registered sqrt-N query (stored layout) equals the in-plan form bit-identically") {
@@ -195,7 +175,7 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
       rows(Encoders.hybridSearchText(spark, sfDir, q))
   }
 
-  test("persisted PQ index: indexed ≡ in-plan search; disjoint append ≡ rebuild") {
+  test("persisted PQ index: indexed ≡ in-plan search") {
     import operators.Ann
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted
@@ -203,23 +183,9 @@ class Round13Spec extends AnyFunSuite with Matchers with SharedSpark {
     // the in-plan form (same codebook path, same codes)
     val tmp = tempDir("graft-pqidx-spec")
     Ann.writePqIndex(spark, sfDir, tmp)
-    rows(Ann.pqIndexed(spark, sfDir, tmp)) shouldBe
-      rows(Ann.pqSearch(spark, sfDir))
-    // frozen-fit append: build on the even doc half, append the odd
-    // half, search equals the full build (codes depend only on _fit)
-    val docs = Knn.docSet(spark, sfDir)
-    val tmp2 = tempDir("graft-pqidx-app")
-    Ann.writePqIndex(spark, sfDir, tmp2)
-    val evenOnly = tempDir("graft-pqidx-even")
-    val even = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val cb = Tables.readFit(spark, s"$tmp2/_fit", Tables.PqFit)
-    operators.Ann.pqEncodeForTest(even, cb)
-      .write.mode("overwrite").parquet(evenOnly)
-    cb.coalesce(1).write.mode("overwrite").parquet(s"$evenOnly/_fit")
-    Ann.appendToPqIndex(spark,
-      docs.filter(pmod(col("doc_id"), lit(2)) === 1), evenOnly)
-    rows(Ann.pqIndexed(spark, sfDir, evenOnly)) shouldBe
-      rows(Ann.pqIndexed(spark, sfDir, tmp2))
+    val direct = rows(Ann.pqSearch(spark, sfDir))
+    rows(Ann.pqIndexed(spark, sfDir, tmp)) shouldBe direct
+    direct should not be empty
   }
 
   test("widened nprobe sweep brackets the knee: recall 1.0 at nprobe = NCentroids") {

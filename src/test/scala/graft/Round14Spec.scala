@@ -6,13 +6,9 @@ import org.scalatest.matchers.should.Matchers
 import graft.operators.{Ann, Compaction, Encoders, Knn, KnnGraph}
 
 /** Round-14 pins: staged (atomic) fit-carrying index builds, the
-  * hybridTextStd arm-depth guard, the bands-without-split loud failure,
-  * the incremental-pool walk, and the persisted IVF+PQ layout. */
+  * hybridTextStd arm-depth guard, the incremental-pool walk, and the
+  * persisted IVF+PQ layout. */
 class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
-
-  private def dropGraph(name: String): Unit =
-    Seq("edges", "nodes", "meta", "bands").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS ${name}_$s"))
 
   test("staged index build: a failed rebuild leaves the old index intact and readable") {
     val idx = s"${tempDir("graft-staged")}/codes"
@@ -70,28 +66,6 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
     Encoders.hybridTextStd(spark, sfDir).count() should be > 0L
   }
 
-  test("append with bands but no frozen split fails loudly, not near-unreachably") {
-    val name = "g14m"
-    dropGraph(name)
-    KnnGraph.writeGraphIndex(spark, sfDir, name = name)
-    try {
-      // corrupt the contract: replace _meta with a legacy n-only shape
-      // while _bands still exists (nothing else enforces they travel
-      // together — ADVICE r13)
-      import spark.implicits._
-      val n = KnnGraph.readGraphMeta(spark, name)
-      spark.sql(s"DROP TABLE IF EXISTS ${name}_meta")
-      operators.Bucketing.reclaimOrphanedLocation(spark, s"${name}_meta")
-      Seq(n).toDF("n").write.format("parquet").saveAsTable(s"${name}_meta")
-      val newNodes = Knn.querySet(spark, sfDir)
-        .select(col("q_id").as("id"), col("q_vec").as("vec"))
-      val e = intercept[IllegalArgumentException] {
-        KnnGraph.appendToGraphIndex(spark, newNodes, name)
-      }
-      e.getMessage should include("frozen-split")
-    } finally dropGraph(name)
-  }
-
   test("incremental-pool walk is bit-equal to the cumulative-state walk") {
     // the r14 exactness claim (SURVEY §7.23 cap arithmetic): the pooled
     // walk must reproduce the cumulative walk's results EXACTLY — same
@@ -113,18 +87,9 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
     }
   }
 
-  test("ivf-pq persisted layout: append ≡ rebuild bit-identically; probe is DPP-pruned") {
-    val base = tempDir("graft-ivfpq")
-    val full = s"$base/full"; val half = s"$base/half"
+  test("ivf-pq persisted layout: served ≡ in-plan ivfPq; probe is DPP-pruned") {
+    val full = s"${tempDir("graft-ivfpq")}/full"
     Ann.writeIvfPqIndex(spark, sfDir, full)
-    // frozen-fit append contract: build from the even half, append the
-    // odd half under the stored fits — must equal the full build
-    val docs = Knn.docSet(spark, sfDir)
-    Ann.writeIvfPqIndex(spark, sfDir, half,
-      docs = Some(docs.filter(col("doc_id") % 2 === 0)))
-    Ann.appendToIvfPqIndex(spark, docs.filter(col("doc_id") % 2 === 1), half)
-    spark.read.parquet(half).collect().map(_.toString).sorted shouldBe
-      spark.read.parquet(full).collect().map(_.toString).sorted
     // the served form answers identically to the in-plan composition
     // (the shared-oracle claim), and its probe carries runtime pruning
     val served = Ann.ivfPqIndexed(spark, sfDir, full)
@@ -162,33 +127,5 @@ class Round14Spec extends AnyFunSuite with Matchers with SharedSpark {
       .collect().map(_.toString).sorted shouldBe o1
     val opqT = mean(Eval.annRecallOpqTrained(spark, sfDir))
     withClue(s"opq_trained $opqT: ") { opqT should be >= 0.3 }
-  }
-
-  test("reclaimOrphanedLocation refuses qualified names and non-default databases") {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val fs = new org.apache.hadoop.fs.Path(wh)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a live default-db table whose data dir a foreign-database reclaim
-    // could have deleted (ADVICE r13, medium)
-    val victim = "g14_victim"
-    spark.sql(s"DROP TABLE IF EXISTS $victim")
-    operators.Bucketing.reclaimOrphanedLocation(spark, victim)
-    spark.range(3).write.format("parquet").saveAsTable(victim)
-    val loc = new org.apache.hadoop.fs.Path(s"$wh/$victim")
-    fs.exists(loc) shouldBe true
-    try {
-      spark.sql("CREATE DATABASE IF NOT EXISTS g14db")
-      spark.catalog.setCurrentDatabase("g14db")
-      // from a non-default database the reclaim is a no-op even though
-      // tableExists(victim) is false here
-      operators.Bucketing.reclaimOrphanedLocation(spark, victim)
-      fs.exists(loc) shouldBe true
-    } finally spark.catalog.setCurrentDatabase("default")
-    // qualified names never reclaim either
-    operators.Bucketing.reclaimOrphanedLocation(spark, s"nosuchdb.$victim")
-    fs.exists(loc) shouldBe true
-    spark.table(victim).count() shouldBe 3
-    spark.sql(s"DROP TABLE IF EXISTS $victim")
-    spark.sql("DROP DATABASE IF EXISTS g14db")
   }
 }
